@@ -1,9 +1,9 @@
 package graft.codec
 
 /** A decoded block of postings for one term: parallel arrays sorted by docId.
-  * `positions` is the concatenation of per-doc position lists; doc i owns
-  * positions[posOffset(i) until posOffset(i)+tf(i)] (tf == occurrence count,
-  * mirroring the rid,tf,pos… element layout of
+  * `positions` is the concatenation of per-doc position lists, tf(i) of
+  * them for doc i (tf == occurrence count, mirroring the rid,tf,pos…
+  * element layout of
   * /root/reference/lib/grn_ii.h:45-46).
   */
 final case class DecodedBlock(
@@ -19,11 +19,6 @@ final case class DecodedBlock(
     sids: Array[Int] = Array.emptyIntArray
 ) {
   def count: Int = docIds.length
-  def posOffset(i: Int): Int = {
-    var o = 0; var j = 0
-    while (j < i) { o += tfs(j); j += 1 }
-    o
-  }
 }
 
 /** Posting-block codec: delta + varbyte, with a bit-packed docId-delta path
@@ -71,23 +66,6 @@ object PostingCodec {
     val w = new ByteWriter(n * 4 + 16 + (if (posBlob == null) 0 else posBlob.length))
     writeHeaderAndStreams(w, docIds, tfs, dls, withPos = posBlob != null, sids = sids)
     if (posBlob != null) w.writeRaw(posBlob, 0, posBlob.length)
-    w.result()
-  }
-
-  /** encode a block whose positions are already per-doc varbyte streams
-    * (exactly what encodePositions emits); they are appended verbatim. */
-  def encodeWithPosBytes(
-      docIds: Array[Long], tfs: Array[Int], dls: Array[Int],
-      posBytes: Array[Array[Byte]] // null => no positions
-  ): Array[Byte] = {
-    val n = docIds.length
-    require(n > 0)
-    val w = new ByteWriter(n * 4 + 16)
-    writeHeaderAndStreams(w, docIds, tfs, dls, withPos = posBytes != null)
-    if (posBytes != null) {
-      var i = 0
-      while (i < n) { w.writeRaw(posBytes(i), 0, posBytes(i).length); i += 1 }
-    }
     w.result()
   }
 

@@ -76,7 +76,6 @@ final class IntVec(initial: Int = 8) {
 final class ByteReader(val bytes: Array[Byte]) {
   private var p = 0
   def pos: Int = p
-  def seek(to: Int): Unit = { p = to }
   def readByte(): Int = { val b = bytes(p) & 0xff; p += 1; b }
   def readVarLong(): Long = {
     var shift = 0

@@ -79,48 +79,15 @@ final case class GraftIndex(spark: SparkSession, path: String,
   }
   lazy val terms: DataFrame = spark.read.parquet(tablePaths("terms"): _*)
   /** doc stats with tombstoned rows filtered out (per-generation) */
-  lazy val docs: DataFrame = {
-    val raw = tablePaths("docs").zipWithIndex.map { case (p, i) =>
+  lazy val docs: DataFrame = tombstones.live(
+    tablePaths("docs").zipWithIndex.map { case (p, i) =>
       spark.read.parquet(p).select(col("doc_id"), col("dl"))
         .withColumn("seg_ord", lit(i))
-    }.reduce(_.unionByName(_))
-    deletesDf match {
-      case None => raw.drop("seg_ord")
-      case Some(d) =>
-        val dg = d.groupBy(col("doc_id")).agg(max(col("gen")).as("gen"))
-        raw.join(broadcast(dg), Seq("doc_id"), "left")
-          .where(col("gen").isNull || col("seg_ord") >= col("gen"))
-          .select(col("doc_id"), col("dl"))
-    }
-  }
+    }.reduce(_.unionByName(_))).select(col("doc_id"), col("dl"))
 
-  /** tombstone table, if any deletes were committed */
-  lazy val deletesDf: Option[DataFrame] =
-    if (meta.deleteSegments.isEmpty) None
-    else Some(spark.read.parquet(meta.deleteSegments.map(s => s"$path/$s"): _*))
-
-  /** driver-side tombstones (sorted doc ids + max gen each) consumed by the
-    * match kernel. Bounded: a tombstone set past the cap means the index
-    * needs a compact, not a bigger driver. */
-  @transient lazy val tombstones: (Array[Long], Array[Int]) = deletesDf match {
-    case None => (Array.emptyLongArray, Array.emptyIntArray)
-    case Some(d) =>
-      val rows = d.groupBy($"doc_id").agg(max($"gen").cast("int").as("gen"))
-        .collect()
-      require(rows.length <= GraftIndex.MaxDriverTombstones,
-        s"${rows.length} tombstones exceed the driver cap " +
-          s"(${GraftIndex.MaxDriverTombstones}) — run IncrementalIndex.compact " +
-          s"on $path to fold deletes into the base")
-      val sorted = rows.map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
-      (sorted.map(_._1), sorted.map(_._2))
-  }
-
-  /** tombstones shipped ONCE per executor (broadcast), not serialized into
-    * every task closure — at the driver cap (millions of entries) a
-    * closure-embedded copy would dominate task dispatch. */
-  @transient private lazy val tombBc
-      : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Int])] =
-    spark.sparkContext.broadcast(tombstones)
+  /** this snapshot's generation tombstones (empty without deletes) */
+  @transient lazy val tombstones: Tombstones =
+    new Tombstones(spark, path, meta.deleteSegments)
 
   /** postings cap under which a query runs the kernel driver-side
     * (spark.graft.smallQueryMaxPostings; 0 disables the fast path) */
@@ -128,46 +95,76 @@ final case class GraftIndex(spark: SparkSession, path: String,
     spark.conf.getOption("spark.graft.smallQueryMaxPostings")
       .map(_.toLong).getOrElse(GraftIndex.DefaultSmallQueryMaxPostings)
 
-  /** Run the match kernel per bucket; tombstones are injected from the
-    * broadcast inside the task (the shipped `q` carries empty arrays).
+  /** THE kernel dispatch: every search's posting read runs here, once for a
+    * whole batch of (query_id, query) pairs. It does three things in one
+    * place — the term-IN pruned postings scan, the choice of execution
+    * site, and the tombstone injection — and returns (query_id, doc_id,
+    * score) rows.
     *
     * SMALL-QUERY fast path: a top-k term query costs one Spark job of two
     * stages (pruned scan → bucket shuffle → kernel) — on a warm index
     * that is ~200 ms of scheduling for milliseconds of kernel work
     * (groonga answers the same query in-process, lib/ii.cpp's
     * grn_ii_select runs on the caller's thread). When the DICTIONARY
-    * stats bound the query's total posting footprint under
+    * stats bound the batch's total posting footprint under
     * `smallQueryCap` (known before any scan — Σ df over the resolved
-    * terms), the pruned block scan is collected (bounded: ≤ cap postings
-    * ≈ a few MB) and the SAME kernel runs per bucket on the driver; the
-    * result is a LocalRelation, so downstream top-k never launches a
-    * second stage. At web scale a common term's df blows the cap and the
-    * query takes the distributed path — the fast path is for the
-    * short-posting-list queries where scheduling dominates, and its cap
-    * makes driver memory a constant, not a function of corpus size. */
-  private def runKernel(q: ResolvedQuery, blocks: Dataset[PostingBlockRow]): DataFrame = {
-    val totalDf = q.terms.iterator.map(_.df).sum
-    if (smallQueryCap > 0 && totalDf <= smallQueryCap) {
-      val (td, tg) =
-        if (deletesDf.isEmpty) (Array.emptyLongArray, Array.emptyIntArray)
-        else tombstones
-      val qq = q.copy(tombDocs = td, tombGens = tg)
-      val out = blocks.collect() // one stage, term-IN-pruned, ≤ cap postings
+    * terms; a term shared by two queries counts twice, an upper bound),
+    * the pruned block scan is collected (bounded: ≤ cap postings ≈ a few
+    * MB) and the SAME kernel runs per bucket on the driver against the
+    * driver tombstone arrays; the result is a LocalRelation, so downstream
+    * top-k never launches a second stage. At web scale a common term's df
+    * blows the cap and the batch takes the distributed path — the fast
+    * path is for short-posting-list queries where scheduling dominates,
+    * and its cap makes driver memory a constant, not a function of corpus
+    * size.
+    *
+    * DISTRIBUTED path: per bucket, the kernel runs every query of a chunk
+    * over the bucket's shared in-memory blocks (a query's cursors only
+    * read its own terms); tombstones come from the broadcast inside the
+    * task. Per-bucket memory is the bucket's pruned block set for the
+    * UNION of the chunk's terms, so the batch is split greedily into
+    * chunks of Σ df ≤ DefaultBatchMaxPostings, one scan + shuffle each; a
+    * single query over that cap runs as its own chunk. */
+  private def runKernels(queries: Seq[(Int, ResolvedQuery)]): DataFrame = {
+    def scan(qs: Seq[(Int, ResolvedQuery)]): Dataset[PostingBlockRow] =
+      postings.where($"term".isin(qs.flatMap(_._2.terms.map(_.term)).distinct: _*))
+        .as[PostingBlockRow]
+    def postingsBound(q: ResolvedQuery): Long = q.terms.iterator.map(_.df).sum
+    if (queries.isEmpty)
+      return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
+    if (smallQueryCap > 0 && queries.iterator.map(q => postingsBound(q._2)).sum <= smallQueryCap) {
+      val ts = tombstones.set
+      val byBucket = scan(queries).collect() // one stage, term-IN-pruned, ≤ cap postings
         .groupBy(_.bucket).toSeq.sortBy(_._1)
-        .iterator.flatMap { case (_, rs) => MatchKernel.run(qq, rs.iterator) }
-        .toSeq
-      return spark.createDataset(out).toDF("doc_id", "score")
-    }
-    val bc = if (deletesDf.isEmpty) None else Some(tombBc)
-    blocks.groupByKey(_.bucket)
-      .flatMapGroups { (_, rows) =>
-        val qq = bc match {
-          case Some(b) => val (td, tg) = b.value; q.copy(tombDocs = td, tombGens = tg)
-          case None => q
+      val out = queries.iterator.flatMap { case (qid, q0) =>
+        val q = q0.copy(tombstones = ts)
+        byBucket.iterator.flatMap { case (_, rs) =>
+          MatchKernel.run(q, rs.iterator).map { case (d, s) => (qid, d, s) }
         }
-        MatchKernel.run(qq, rows)
+      }.toSeq
+      return spark.createDataset(out).toDF("query_id", "doc_id", "score")
+    }
+    val bc = tombstones.broadcastSet
+    val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Int, ResolvedQuery)])
+    var acc = 0L
+    queries.foreach { qq =>
+      val qdf = postingsBound(qq._2)
+      if (chunks.last.nonEmpty && acc + qdf > GraftIndex.DefaultBatchMaxPostings) {
+        chunks += Vector.empty; acc = 0L
       }
-      .toDF("doc_id", "score")
+      chunks(chunks.length - 1) :+= qq; acc += qdf
+    }
+    chunks.iterator.map { chunk =>
+      scan(chunk).groupByKey(_.bucket)
+        .flatMapGroups { (_, rows) =>
+          val mat = rows.toArray // one bucket's blocks for THIS chunk's terms
+          chunk.iterator.flatMap { case (qid, q0) =>
+            val q = bc.fold(q0)(b => q0.copy(tombstones = b.value))
+            MatchKernel.run(q, mat.iterator).map { case (d, s) => (qid, d, s) }
+          }
+        }
+        .toDF("query_id", "doc_id", "score")
+    }.reduce(_ union _)
   }
 
   /** empty (doc_id, score) result with the canonical schema */
@@ -192,7 +189,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val missing = qterms.distinct.filterNot(termStatCache.containsKey)
     if (missing.nonEmpty) {
       val fetched =
-        if (deletesDf.isEmpty) dictTermStats(missing)
+        if (tombstones.isEmpty) dictTermStats(missing)
         else exactTermStats(missing)
       missing.foreach(t => termStatCache.put(t, fetched.get(t)))
     }
@@ -222,22 +219,22 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * payloads repeat a doc per sid — distinct, not count). max_tf stays the
     * dictionary upper bound semantics: max over live entries.
     *
-    * SMALL-QUERY fast path (mirror of runKernel's): the dictionary df sums
-    * — known from a driver-side pruned lookup BEFORE any payload moves —
-    * upper-bound the live posting count, so when they fit the small-query
-    * cap the pruned payload blocks are collected (bounded, a few MB) and
-    * decoded on the driver against the already-resident tombstone arrays:
-    * one scan-only stage, no exchange, no second job. Past the cap the
-    * distributed decode+aggregate runs as before. */
+    * SMALL-QUERY fast path (the same cap runKernels applies): the
+    * dictionary df sums — known from a driver-side pruned lookup BEFORE any
+    * payload moves — upper-bound the live posting count, so when they fit
+    * the small-query cap the pruned payload blocks are collected (bounded,
+    * a few MB) and decoded on the driver against the tombstone arrays: one
+    * scan-only stage, no exchange, no second job. Past the cap the
+    * distributed decode (decodedAlive) + aggregate runs. */
   private def exactTermStats(missing: Seq[String]): Map[String, TermStatRow] = {
     val dict = dictTermStats(missing)
     val bound = dict.valuesIterator.map(_.df).sum
+    val blocks = postings.where($"term".isin(missing: _*))
     if (smallQueryCap > 0 && bound <= smallQueryCap) {
-      val (td, tg) = tombstones
+      val ts = tombstones.set
       val acc = scala.collection.mutable.HashMap
         .empty[String, (java.util.HashSet[java.lang.Long], Array[Long])]
-      postings.where($"term".isin(missing: _*))
-        .select($"term", $"seg_ord", $"payload")
+      blocks.select($"term", $"seg_ord", $"payload")
         .as[(String, Int, Array[Byte])]
         .collect() // one stage, term-IN-pruned, ≤ cap postings
         .foreach { case (t, seg, payload) =>
@@ -246,8 +243,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
           val d = graft.codec.PostingCodec.decode(payload)
           var i = 0
           while (i < d.count) {
-            val j = java.util.Arrays.binarySearch(td, d.docIds(i))
-            if (j < 0 || seg >= tg(j)) {
+            if (ts.isLive(d.docIds(i), seg)) {
               docSet.add(d.docIds(i))
               sums(0) += d.tfs(i)                       // total_tf
               if (d.tfs(i) > sums(1)) sums(1) = d.tfs(i) // max_tf
@@ -259,18 +255,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
         t -> TermStatRow(t, docSet.size.toLong, sums(0), sums(1).toInt)
       }.toMap
     } else {
-      val bc = tombBc
-      postings.where($"term".isin(missing: _*))
-        .select($"term", $"seg_ord", $"payload")
-        .as[(String, Int, Array[Byte])]
-        .flatMap { case (t, seg, payload) =>
-          val (td, tg) = bc.value
-          val d = graft.codec.PostingCodec.decode(payload)
-          (0 until d.count).iterator.filter { i =>
-            val j = java.util.Arrays.binarySearch(td, d.docIds(i))
-            j < 0 || seg >= tg(j)
-          }.map(i => (t, d.docIds(i), d.tfs(i)))
-        }.toDF("term", "doc_id", "tf")
+      decodedAlive(blocks.as[PostingBlockRow])
         .groupBy($"term")
         .agg(countDistinct($"doc_id").as("df"),
           sum($"tf").cast("long").as("total_tf"),
@@ -343,22 +328,14 @@ final case class GraftIndex(spark: SparkSession, path: String,
     }
     if (requireAll && !allKnown)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val q = resolve(withPos, mode, score, topK, sectionWeights)
-    val blocks = postings.where($"term".isin(distinctTerms: _*)).as[PostingBlockRow]
-    runKernel(q, blocks)
+    runKernels(Seq(0 -> resolve(withPos, mode, score, topK, sectionWeights)))
+      .drop("query_id")
   }
 
-  /** BATCHED multi-query search: N term queries answered from ONE pruned
-    * postings scan per CHUNK. The union of a chunk's terms is pushed down
-    * as a single term-IN filter, each bucket's blocks are materialized once
-    * and the kernel runs per query over the shared in-memory blocks (the
-    * kernel builds cursors only for its own query's terms, so no
-    * per-query filtering is needed). Per-bucket memory is the bucket's
-    * pruned block set for the UNION of the chunk's terms — it scales with
-    * the chunk's posting footprint, NOT one query's — so the batch is
-    * split greedily into chunks of Σ df ≤ `spark.graft.batchMaxPostings`
-    * (GraftIndex.DefaultBatchMaxPostings); a single query over the cap
-    * runs as its own chunk, which is exactly the single-query bound.
+  /** BATCHED multi-query search: N term queries answered through ONE
+    * runKernels dispatch — one pruned postings scan per chunk (the union of
+    * a chunk's terms pushed down as a single term-IN filter), each bucket's
+    * blocks materialized once and shared by every query of the chunk.
     *
     * This is the Spark-first answer to query throughput: where the
     * reference dispatches each query on its own thread over shared memory
@@ -379,74 +356,17 @@ final case class GraftIndex(spark: SparkSession, path: String,
       sectionWeights: Map[String, Double] = Map.empty): DataFrame = {
     requirePositionsFor(mode)
     val allTerms = batch.flatten.distinct
-    val empty = spark.emptyDataset[(Int, Long, Double)]
-      .toDF("query_id", "doc_id", "score")
-    if (allTerms.isEmpty) return empty
+    if (allTerms.isEmpty) return runKernels(Nil)
     val stats = termStats(allTerms) // one driver lookup for the whole batch
     val requireAll = mode match {
       case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near => true
       case _ => false
     }
-    val resolved: Array[(Int, ResolvedQuery)] = batch.zipWithIndex.flatMap {
-      case (qts, qid) =>
-        if (requireAll && !qts.distinct.forall(stats.contains)) None
-        else {
-          val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
-          Some(qid -> resolve(withPos, mode, score, topK, sectionWeights))
-        }
-    }.toArray
-    if (resolved.isEmpty) return empty
-    val liveTerms = resolved.flatMap(_._2.terms.map(_.term)).distinct.toSeq
-    val blocks = postings.where($"term".isin(liveTerms: _*)).as[PostingBlockRow]
-    val totalDf = resolved.iterator
-      .flatMap(_._2.terms.iterator.map(_.df)).sum // shared terms count once per query: upper bound
-    if (smallQueryCap > 0 && totalDf <= smallQueryCap) {
-      val (td, tg) =
-        if (deletesDf.isEmpty) (Array.emptyLongArray, Array.emptyIntArray)
-        else tombstones
-      val mat = blocks.collect().groupBy(_.bucket).toSeq.sortBy(_._1)
-      val out = resolved.iterator.flatMap { case (qid, q0) =>
-        val qq = q0.copy(tombDocs = td, tombGens = tg)
-        mat.iterator.flatMap { case (_, rs) =>
-          MatchKernel.run(qq, rs.iterator).map { case (d, s) => (qid, d, s) }
-        }
-      }.toSeq
-      return spark.createDataset(out).toDF("query_id", "doc_id", "score")
-    }
-    val bc = if (deletesDf.isEmpty) None else Some(tombBc)
-    // greedy Σ-df chunking: bounds per-bucket materialization to the chunk's
-    // posting footprint (see scaladoc); one scan+shuffle per chunk
-    val chunkCap = spark.conf.getOption("spark.graft.batchMaxPostings")
-      .map(_.toLong).getOrElse(GraftIndex.DefaultBatchMaxPostings)
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      scala.collection.mutable.ArrayBuffer.empty[(Int, ResolvedQuery)])
-    var acc = 0L
-    resolved.foreach { rq =>
-      val qdf = rq._2.terms.iterator.map(_.df).sum
-      if (chunks.last.nonEmpty && acc + qdf > chunkCap) {
-        chunks += scala.collection.mutable.ArrayBuffer.empty; acc = 0L
-      }
-      chunks.last += rq; acc += qdf
-    }
-    chunks.iterator.map { chunk =>
-      val chunkArr = chunk.toArray
-      val chunkTerms = chunkArr.flatMap(_._2.terms.map(_.term)).distinct.toSeq
-      val chunkBlocks =
-        postings.where($"term".isin(chunkTerms: _*)).as[PostingBlockRow]
-      chunkBlocks.groupByKey(_.bucket)
-        .flatMapGroups { (_, rows) =>
-          val mat = rows.toArray // one bucket's blocks for THIS chunk's terms
-          chunkArr.iterator.flatMap { case (qid, q0) =>
-            val qq = bc match {
-              case Some(b) =>
-                val (td, tg) = b.value; q0.copy(tombDocs = td, tombGens = tg)
-              case None => q0
-            }
-            MatchKernel.run(qq, mat.iterator).map { case (d, s) => (qid, d, s) }
-          }
-        }
-        .toDF("query_id", "doc_id", "score")
-    }.reduce(_ union _)
+    runKernels(batch.zipWithIndex.collect {
+      case (qts, qid) if !requireAll || qts.distinct.forall(stats.contains) =>
+        val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
+        qid -> resolve(withPos, mode, score, topK, sectionWeights)
+    })
   }
 
   /** Per-query top-k over a searchTermsBatch result, reference tie order. */
@@ -467,8 +387,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     if (!toks.forall(t => stats.contains(t._1)))
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     val q = resolve(toks.map { case (t, p) => (t, p, 1.0) }, MatchMode.Phrase, score, topK)
-    val blocks = postings.where($"term".isin(toks.map(_._1).distinct: _*)).as[PostingBlockRow]
-    runKernel(q, blocks)
+    runKernels(Seq(0 -> q)).drop("query_id")
   }
 
   /** NEAR_PHRASE / ORDERED_NEAR_PHRASE: every phrase occurs and the phrase
@@ -496,8 +415,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     }
     val q = ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
       sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs)
-    val blocks = postings.where($"term".isin(allTerms: _*)).as[PostingBlockRow]
-    runKernel(q, blocks)
+    runKernels(Seq(0 -> q)).drop("query_id")
   }
 
   /** NEAR_PHRASE_PRODUCT / ORDERED_NEAR_PHRASE_PRODUCT: each group is a
@@ -528,11 +446,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     }
     val liveGroups = rts.map(_.phraseId).distinct
     if (liveGroups.size < groups.size) return emptyResult
-    val queryTerms = rts.map(_.term).distinct
     val q = ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
       sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs)
-    val blocks = postings.where($"term".isin(queryTerms: _*)).as[PostingBlockRow]
-    runKernel(q, blocks)
+    runKernels(Seq(0 -> q)).drop("query_id")
   }
 
   /** rank candidate terms by corpus-wide df and cap: a term present in
@@ -595,23 +511,6 @@ final case class GraftIndex(spark: SparkSession, path: String,
       .select($"pos", $"term").orderBy($"pos", $"term")
   }
 
-  /** greedy longest-match segmentation over termExtract hits (the tag
-    * extraction use of TERM_EXTRACT) */
-  def termExtractSegments(text: String, maxTermLen: Int = 32): Seq[(Int, String)] = {
-    val byPos = termExtract(text, maxTermLen).collect()
-      .map(r => (r.getInt(0), r.getString(1)))
-      .groupBy(_._1).map { case (p, hits) => p -> hits.map(_._2).maxBy(_.length) }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-    var p = 0
-    while (p < text.length) {
-      byPos.get(p) match {
-        case Some(t) => out += ((p, t)); p += t.length
-        case None => p += 1
-      }
-    }
-    out.toSeq
-  }
-
   /** Fuzzy expansion: terms within edit distance (GRN_OP_FUZZY,
     * /root/reference/lib/ii.cpp:11116-11208) — distributed levenshtein over
     * the term dictionary with a cheap length prefilter.
@@ -650,24 +549,15 @@ final case class GraftIndex(spark: SparkSession, path: String,
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("double").as("score"))
 
-  /** decode posting blocks into live (term, doc_id, tf, seg_ord) rows —
-    * the ONE place the block decode meets the tombstone generation filter
-    * (searchTermsTfByJoin and decodedPostings both build on it, so
-    * tombstone semantics cannot diverge between search and export). */
-  private def decodedAlive(blocks: Dataset[PostingBlockRow]): DataFrame = {
-    val per = blocks.flatMap { b =>
+  /** decode posting blocks into live (doc_id, term, tf, dl, seg_ord) rows
+    * under the tombstone filter; search, term stats, export and doc
+    * vectors all build on it */
+  private[graft] def decodedAlive(blocks: Dataset[PostingBlockRow]): DataFrame =
+    tombstones.live(blocks.flatMap { b =>
       val d = graft.codec.PostingCodec.decode(b.payload)
-      (0 until d.count).iterator.map(i => (b.term, d.docIds(i), d.tfs(i).toLong, b.seg_ord))
-    }.toDF("term", "doc_id", "tf", "seg_ord")
-    deletesDf match {
-      case None => per
-      case Some(d) =>
-        val dg = d.groupBy(col("doc_id")).agg(max(col("gen")).as("gen"))
-        per.join(broadcast(dg), Seq("doc_id"), "left")
-          .where(col("gen").isNull || col("seg_ord") >= col("gen"))
-          .drop("gen")
-    }
-  }
+      (0 until d.count).iterator.map(i =>
+        (b.term, d.docIds(i), d.tfs(i).toLong, d.dls(i), b.seg_ord))
+    }.toDF("term", "doc_id", "tf", "dl", "seg_ord"))
 
   /** Full decoded postings view (term, doc_id, tf): tombstone-filtered,
     * section-summed — the export / consistency-audit surface. Distributed
@@ -839,7 +729,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
   }
 
   def idOrderScan(limit: Int): DataFrame = {
-    if (deletesDf.nonEmpty || limit <= 0)
+    if (tombstones.nonEmpty || limit <= 0)
       return docs.select($"doc_id", $"dl").orderBy($"doc_id").limit(math.max(limit, 0))
     // The prefix trick REQUIRES strictly ascending disjoint segment ranges.
     // appendSegment documents append-only ids but cannot enforce them
@@ -870,10 +760,6 @@ final case class GraftIndex(spark: SparkSession, path: String,
 }
 
 object GraftIndex {
-  /** tombstone sets past this size must be compacted away, not shipped to
-    * every task */
-  final val MaxDriverTombstones: Int = 5000000
-
   /** count of parquet footers opened for doc-range fallbacks — observable
     * so tests can prove a stats-bearing manifest serves id-order scans and
     * partial compaction with ZERO per-file metadata IO */
@@ -883,10 +769,10 @@ object GraftIndex {
     * postings ≈ single-digit MB of encoded blocks on the driver */
   final val DefaultSmallQueryMaxPostings: Long = 1L << 18
 
-  /** default Σ-df cap per batched-search CHUNK (spark.graft.batchMaxPostings):
-    * searchTermsBatch materializes, per bucket, the blocks of the UNION of a
-    * chunk's terms — so executor memory scales with the chunk's posting
-    * footprint, and an uncapped batch of common terms could OOM a task. 16M
+  /** Σ-df cap per distributed kernel CHUNK: runKernels materializes, per
+    * bucket, the blocks of the UNION of a chunk's terms — so executor
+    * memory scales with the chunk's posting footprint, and an uncapped
+    * batch of common terms could OOM a task. 16M
     * postings ≈ tens of MB of encoded blocks in the worst (single-bucket
     * skew) case; a single query over the cap still runs, as its own chunk —
     * the same bound the single-query kernel has. */

@@ -20,19 +20,8 @@ object DocVectors {
     * applied, section tf aggregated to doc level */
   private def postingRows(idx: GraftIndex): DataFrame = {
     import idx.spark.implicits._
-    val perPosting = idx.postings.as[PostingBlockRow].flatMap { blk =>
-      val d = graft.codec.PostingCodec.decode(blk.payload)
-      (0 until d.count).iterator.map(i =>
-        (blk.term, d.docIds(i), d.tfs(i), d.dls(i), blk.seg_ord))
-    }.toDF("term", "doc_id", "tf", "dl", "seg_ord")
-    val alive = idx.deletesDf match {
-      case None => perPosting
-      case Some(del) =>
-        val dg = del.groupBy(col("doc_id")).agg(max(col("gen")).as("gen"))
-        perPosting.join(broadcast(dg), Seq("doc_id"), "left")
-          .where(col("gen").isNull || col("seg_ord") >= col("gen"))
-    }
-    alive.groupBy(col("term"), col("doc_id"), col("dl"))
+    idx.decodedAlive(idx.postings.as[PostingBlockRow])
+      .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(sum(col("tf")).cast("int").as("tf"))
   }
 

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.codec.{DecodedBlock, PostingCodec}
-import graft.index.PostingBlockRow
+import graft.index.{PostingBlockRow, TombstoneSet}
 
 import scala.collection.mutable
 
@@ -78,14 +78,12 @@ final case class ResolvedQuery(
       * consecutive entries may share a docId, one per section). WAND still
       * prunes — v2 blocks carry max_gtf, the group-summed tf bound. */
     sectioned: Boolean = false,
-    /** tombstones, sorted by doc id: tombDocs(i) is dead in data segments
-      * with seg_ord < tombGens(i). Buckets touching a tombstone (or with
-      * overlapping segment ranges, i.e. upserts) are decoded, filtered and
-      * re-merged before cursor iteration; untouched buckets stream as
-      * usual. Compact folds tombstones away and restores the fast path
-      * everywhere. */
-    tombDocs: Array[Long] = Array.emptyLongArray,
-    tombGens: Array[Int] = Array.emptyIntArray,
+    /** the index's tombstones (graft.index.Tombstones). Buckets touching a
+      * tombstone (or with overlapping segment ranges, i.e. upserts) are
+      * decoded, filtered and re-merged before cursor iteration; untouched
+      * buckets stream as usual. Compact folds tombstones away and restores
+      * the fast path everywhere. */
+    tombstones: TombstoneSet = TombstoneSet.Empty,
     /** corpus doc count, needed only by ScoreMode.TfIdf's query idf */
     nDocs: Long = 0L) {
   def sectionWeight(sid: Int): Double =
@@ -306,24 +304,12 @@ object MatchKernel {
   /** (blocksSeen, blocksDecoded) since the last resetStats() */
   def readStats(): (Long, Long) = (statBlocksTotal.sum(), statBlocksDecoded.sum())
 
-  /** true iff some tombstoned doc id falls in [lo, hi] */
-  private def rangeHasTombstone(tombDocs: Array[Long], lo: Long, hi: Long): Boolean = {
-    var a = 0
-    var b = tombDocs.length
-    while (a < b) { // lower bound of lo
-      val m = (a + b) >>> 1
-      if (tombDocs(m) < lo) a = m + 1 else b = m
-    }
-    a < tombDocs.length && tombDocs(a) <= hi
-  }
-
   /** decode, tombstone-filter, (doc, sid)-sort and re-encode a term's
     * blocks into ONE block — the slow-but-correct path for buckets touched
     * by deletes/upserts (overlapping segment ranges). None if every
     * posting is dead. */
   private[graft] def filterBlocks(
-      blocks: Array[PostingBlockRow],
-      tombDocs: Array[Long], tombGens: Array[Int]): Option[PostingBlockRow] = {
+      blocks: Array[PostingBlockRow], tombstones: TombstoneSet): Option[PostingBlockRow] = {
     val docs = new graft.codec.LongVec(16)
     val tfs = new graft.codec.IntVec(16)
     val dls = new graft.codec.IntVec(16)
@@ -339,9 +325,7 @@ object MatchKernel {
       var po = 0
       while (i < d.count) {
         val doc = d.docIds(i)
-        val ti = java.util.Arrays.binarySearch(tombDocs, doc)
-        val dead = ti >= 0 && b.seg_ord < tombGens(ti)
-        if (!dead) {
+        if (tombstones.isLive(doc, b.seg_ord)) {
           docs += doc; tfs += d.tfs(i); dls += d.dls(i)
           sds += (if (d.sids.isEmpty) 1 else d.sids(i))
           poss += (if (d.positions.isEmpty) Array.emptyIntArray
@@ -405,13 +389,13 @@ object MatchKernel {
           overlapping = sorted(i).min_doc <= sorted(i - 1).max_doc
           i += 1
         }
-        val touched = q.tombDocs.nonEmpty && {
+        val touched = q.tombstones.nonEmpty && {
           var hi = Long.MinValue
           sorted.foreach(b => if (b.max_doc > hi) hi = b.max_doc)
-          rangeHasTombstone(q.tombDocs, sorted(0).min_doc, hi)
+          q.tombstones.touches(sorted(0).min_doc, hi)
         }
         if (touched || overlapping)
-          filterBlocks(sorted, q.tombDocs, q.tombGens)
+          filterBlocks(sorted, q.tombstones)
             .map(b => new TermCursor(rt, Array(b)))
         else Some(new TermCursor(rt, sorted))
       }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -229,7 +229,6 @@ object IncrementalIndex {
     val fs = SegmentCatalog.fileSystem(spark, indexPath)
     val idx = GraftIndex(spark, indexPath)
     val meta = idx.meta
-    val sectioned = meta.sections.nonEmpty
     val shufflePartitions = if (cfg.numPartitions > 0) cfg.numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
@@ -240,24 +239,7 @@ object IncrementalIndex {
     val dst = s"$indexPath/$dstName"
     fs.delete(new Path(dst), true)
 
-    // broadcast tombstones once per executor — embedding the arrays in the
-    // flatMap closure would ship them with every task
-    val tombBc = spark.sparkContext.broadcast(idx.tombstones)
-    val mergeCfg = cfg.copy(withPositions = meta.withPositions, blockSize = meta.blockSize)
-    // tombstone-filter each block row, then re-merge across segments
-    idx.postings.as[PostingBlockRow]
-      .flatMap { b =>
-        val (td, tg) = tombBc.value
-        val filtered =
-          if (td.isEmpty) Some(b)
-          else MatchKernel.filterBlocks(Array(b), td, tg)
-        filtered.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
-          f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
-      }
-      .repartition(shufflePartitions, $"term", $"bucket")
-      .sortWithinPartitions($"term", $"bucket", $"min_doc")
-      .mapPartitions(IndexBuilder.mergeRuns(mergeCfg, sectioned))
-      .write.mode("overwrite").parquet(s"$dst/postings")
+    writeLivePostings(idx, idx.postings.as[PostingBlockRow], dst, cfg, shufflePartitions)
     IndexBuilder.writeTermStages(spark, fs, dst, shufflePartitions)
     idx.docs.write.mode("overwrite").parquet(s"$dst/docs") // tombstone-filtered
 
@@ -301,6 +283,28 @@ object IncrementalIndex {
     GraftIndex(spark, indexPath)
   }
 
+  /** Tombstone-filter `blocks` block-wise, re-merge them across segments
+    * by (term, bucket) and write the merged runs to `dst`/postings. */
+  private def writeLivePostings(idx: GraftIndex, blocks: Dataset[PostingBlockRow],
+      dst: String, cfg: IndexConfig, shufflePartitions: Int): Unit = {
+    import idx.spark.implicits._
+    // broadcast, not closure-embedded: shipped once per executor
+    val bc = idx.tombstones.broadcastSet
+    val mergeCfg = cfg.copy(withPositions = idx.meta.withPositions,
+      blockSize = idx.meta.blockSize)
+    blocks
+      .flatMap { b =>
+        val ts = bc.fold(TombstoneSet.Empty)(_.value)
+        val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
+        live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
+          f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
+      }
+      .repartition(shufflePartitions, $"term", $"bucket")
+      .sortWithinPartitions($"term", $"bucket", $"min_doc")
+      .mapPartitions(IndexBuilder.mergeRuns(mergeCfg, idx.meta.sections.nonEmpty))
+      .write.mode("overwrite").parquet(s"$dst/postings")
+  }
+
   private case class SegInfo(stats: SegStats, ord: Int, touched: Boolean) {
     def name: String = stats.name
     def nPostings: Long = stats.nPostings
@@ -335,8 +339,7 @@ object IncrementalIndex {
     val fs = SegmentCatalog.fileSystem(spark, indexPath)
     val idx = GraftIndex(spark, indexPath)
     val meta = idx.meta
-    val sectioned = meta.sections.nonEmpty
-    val (td, tg) = idx.tombstones
+    val tombs = idx.tombstones.set
     val shufflePartitions = if (cfg.numPartitions > 0) cfg.numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
@@ -380,16 +383,7 @@ object IncrementalIndex {
         }
       }
     val infos: Seq[SegInfo] = baseStats.zipWithIndex.map { case (ss, i) =>
-      // touched = some tombstone (doc, gen) has gen > ord and doc in range
-      val (lo, hi) = (ss.minDoc, ss.maxDoc)
-      var a = {
-        var x = 0; var y = td.length
-        while (x < y) { val m = (x + y) >>> 1; if (td(m) < lo) x = m + 1 else y = m }
-        x
-      }
-      var hit = false
-      while (!hit && a < td.length && td(a) <= hi) { hit = tg(a) > i; a += 1 }
-      SegInfo(ss, i, hit)
+      SegInfo(ss, i, touched = tombs.hidesAnyIn(ss.minDoc, ss.maxDoc, i))
     }
 
     // contiguous runs of foldable segments; a run folds if it must (touched
@@ -409,38 +403,22 @@ object IncrementalIndex {
     // old max-over-current-segments counter recycled names once folds were
     // themselves folded away — fatal for retained-snapshot validation)
     val gen = SegmentCatalog.nextVersion(fs, indexPath)
-    val tombBc = spark.sparkContext.broadcast((td, tg))
-    val mergeCfg = cfg.copy(withPositions = meta.withPositions, blockSize = meta.blockSize)
 
     val foldNames: Map[Int, String] = folds.zipWithIndex.map { case (run, k) =>
       val dstName = s"fold-m$gen-$k"
       val dst = s"$indexPath/$dstName"
       fs.delete(new Path(dst), true)
       val ords = run.map(_.ord)
-      // postings of just this run, tombstone-filtered block-wise, re-merged
-      idx.postings.where($"seg_ord".isin(ords: _*)).as[PostingBlockRow]
-        .flatMap { b =>
-          val (d, g) = tombBc.value
-          val filtered = if (d.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), d, g)
-          filtered.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
-            f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
-        }
-        .repartition(shufflePartitions, $"term", $"bucket")
-        .sortWithinPartitions($"term", $"bucket", $"min_doc")
-        .mapPartitions(IndexBuilder.mergeRuns(mergeCfg, sectioned))
-        .write.mode("overwrite").parquet(s"$dst/postings")
+      // postings of just this run
+      writeLivePostings(idx, idx.postings.where($"seg_ord".isin(ords: _*)).as[PostingBlockRow],
+        dst, cfg, shufflePartitions)
       IndexBuilder.writeTermStages(spark, fs, dst, shufflePartitions)
       // docs of the run, tombstone-filtered with the run segments' ordinals
-      run.map { si =>
+      idx.tombstones.live(run.map { si =>
         spark.read.parquet(tableP(si.name, "docs"))
           .select($"doc_id", $"dl").withColumn("seg_ord", lit(si.ord))
-      }.reduce(_.unionByName(_))
-        .flatMap { r =>
-          val (d, g) = tombBc.value
-          val id = r.getLong(0)
-          val j = java.util.Arrays.binarySearch(d, id)
-          if (j >= 0 && r.getInt(2) < g(j)) None else Some((id, r.getInt(1)))
-        }.toDF("doc_id", "dl")
+      }.reduce(_.unionByName(_)))
+        .select($"doc_id", $"dl")
         .write.mode("overwrite").parquet(s"$dst/docs")
       run.head.ord -> dstName
     }.toMap

@@ -10,26 +10,45 @@ import org.apache.spark.sql.functions._
   *  - suffix expansion scans terms_rev with a StartsWith pushed filter
   *  - `Select.eval` on a pure-term conjunction plans ONE posting scan
   *  - dimension joins in drilldowns broadcast the small side
-  * Run: sbt "runMain graft.tools.ExplainCheck"
+  * Run: sbt "runMain graft.tools.ExplainCheck" (exit 1 on any failure);
+  * ExplainCheckSpec runs the same checks through [[run]].
   */
 object ExplainCheck {
-  private var failures = 0
-
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
-
-  private def check(name: String, cond: Boolean, detail: => String): Unit = {
-    if (cond) println(s"PLAN-OK   $name")
-    else { failures += 1; println(s"PLAN-FAIL $name\n$detail") }
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      // plan asserts describe the at-scale DISTRIBUTED shapes; the driver
-      // fast path would collapse small queries into a LocalRelation
-      .config("spark.graft.smallQueryMaxPostings", "0")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val results = run(spark)
+    spark.stop()
+    if (results.exists(!_._2)) sys.exit(1)
+  }
+
+  /** Runs every plan check, printing PLAN-OK / PLAN-FAIL lines, and
+    * returns (check name, passed) in check order. The small-query cap is
+    * pinned to 0 for the duration and restored afterwards. */
+  def run(spark: SparkSession): Seq[(String, Boolean)] = {
+    val capKey = "spark.graft.smallQueryMaxPostings"
+    val oldCap = spark.conf.getOption(capKey)
+    // plan asserts describe the at-scale DISTRIBUTED shapes; the driver
+    // fast path would collapse small queries into a LocalRelation
+    spark.conf.set(capKey, "0")
+    try runChecks(spark)
+    finally oldCap match {
+      case Some(v) => spark.conf.set(capKey, v)
+      case None => spark.conf.unset(capKey)
+    }
+  }
+
+  private def runChecks(spark: SparkSession): Seq[(String, Boolean)] = {
+    val results = Seq.newBuilder[(String, Boolean)]
+    def check(name: String, cond: Boolean, detail: => String): Unit = {
+      if (cond) println(s"PLAN-OK   $name")
+      else println(s"PLAN-FAIL $name\n$detail")
+      results += name -> cond
+    }
     val dir = "/root/testdata/sf0.001"
     val idx = graft.api.Tables.documentsIndex(spark, dir)
     println("EXPLAIN-START")
@@ -163,7 +182,6 @@ object ExplainCheck {
       p14.contains("In(term") && p14.contains("￯"), p14)
 
     println("EXPLAIN-END")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+    results.result()
   }
 }

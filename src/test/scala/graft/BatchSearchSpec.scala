@@ -71,13 +71,23 @@ class BatchSearchSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-batch-mut").toString
     IndexBuilder.build(spark, WebCorpus.generate(spark, 400, 4),
       "doc_id", "text", s"$tmp/idx", IndexConfig(bucketBits = 6))
-    val mut = graft.streaming.IncrementalIndex.delete(spark, s"$tmp/idx",
+    graft.streaming.IncrementalIndex.delete(spark, s"$tmp/idx",
       (0L until 400L by 7L).toSeq)
-    val got = collectBatch(mut, MatchMode.Any, ScoreMode.Bm25())
-    batch.zipWithIndex.foreach { case (q, qid) =>
-      val want = single(mut, q, MatchMode.Any, ScoreMode.Bm25())
-      assert(got.getOrElse(qid, Nil) == want, s"mut qid=$qid")
-      assert(want.forall(_._1 % 7 != 0))
+    // both kernel sites: distributed (cap 0) and the driver fast path
+    val perCap = for (cap <- Seq("0", "1000000")) yield {
+      spark.conf.set("spark.graft.smallQueryMaxPostings", cap)
+      try {
+        val mut = GraftIndex(spark, s"$tmp/idx") // fresh handle: re-reads the cap
+        val got = collectBatch(mut, MatchMode.Any, ScoreMode.Bm25())
+        batch.zipWithIndex.foreach { case (q, qid) =>
+          val want = single(mut, q, MatchMode.Any, ScoreMode.Bm25())
+          assert(got.getOrElse(qid, Nil) == want, s"cap=$cap mut qid=$qid")
+          assert(want.forall(_._1 % 7 != 0))
+        }
+        got
+      } finally spark.conf.set("spark.graft.smallQueryMaxPostings", "0")
     }
+    assert(perCap(0) == perCap(1))
+    assert(perCap(0).values.exists(_.nonEmpty))
   }
 }

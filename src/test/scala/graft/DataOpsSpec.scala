@@ -438,6 +438,16 @@ class DataOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("connected components: an Int.MaxValue pair cap takes the driver path without overflow") {
+    // cap + 1 used to wrap to Int.MinValue and reach limit(Int.MinValue)
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    spark.conf.set("spark.graft.ccMaxDriverPairs", Int.MaxValue.toString)
+    val got =
+      try Dedup.connectedComponents(edges, "a", "b").as[(Long, Long)].collect().toMap
+      finally spark.conf.unset("spark.graft.ccMaxDriverPairs")
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
   test("connected components: driver fast path equals the distributed loop") {
     // r7: under spark.graft.ccMaxDriverPairs the pair set is collected and
     // union-found on the driver — must produce the identical (id, min

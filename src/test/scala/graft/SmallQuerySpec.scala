@@ -34,6 +34,21 @@ class SmallQuerySpec extends AnyFunSuite {
     s"$tmp/idx-mut"
   }
 
+  /** deletes, a resurrected id and replaced live docs: two data segments
+    * and two tombstone segments */
+  private lazy val upsertedPath: String = {
+    val p = s"$tmp/idx-ups"
+    IndexBuilder.build(spark, WebCorpus.generate(spark, 1000, 4),
+      "doc_id", "text", p, IndexConfig(bucketBits = 8))
+    IncrementalIndex.delete(spark, p, Seq(3L, 77L, 500L, 640L))
+    import spark.implicits._
+    IncrementalIndex.upsert(spark, p,
+      Seq(77L -> "spark fulltext qqresurrected", 120L -> "spark crawl qqreplaced",
+        900L -> "index crawl spark").toDF("doc_id", "text"),
+      "doc_id", "text", "ups-1")
+    p
+  }
+
   private def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
 
@@ -63,6 +78,22 @@ class SmallQuerySpec extends AnyFunSuite {
     val dist = withCap("0")(run(mutatedPath))
     assert(fast == dist)
     assert(!fast.exists(r => Seq(3L, 77L, 500L).contains(r._1)))
+  }
+
+  test("termStats are identical on both arms over deletes and upserts") {
+    val terms = Seq("spark", "fulltext", "crawl", "index", "qqresurrected",
+      "qqreplaced", "zzznosuchterm")
+    def stats(cap: String) = withCap(cap) {
+      GraftIndex(spark, upsertedPath).termStats(terms) // fresh handle per cap
+    }
+    val dist = stats("0")
+    val fast = stats(GraftIndex.DefaultSmallQueryMaxPostings.toString)
+    assert(fast == dist)
+    assert(fast.keySet == terms.filterNot(_ == "zzznosuchterm").toSet)
+    // the fast arm really ran: the terms' dictionary df fits the cap
+    assert(fast.valuesIterator.map(_.df).sum <= GraftIndex.DefaultSmallQueryMaxPostings)
+    // only the upserted text carries these, in the newest segment
+    assert(fast("qqresurrected").df == 1L && fast("qqreplaced").df == 1L)
   }
 
   test("under the cap the result plans as a LocalRelation; over it, a scan") {
