@@ -12,49 +12,48 @@ import org.apache.spark.sql.functions._
   * in a later segment while its old postings stay dead (grn_ii_delete_one /
   * grn_ii_update_one, lib/grn_ii.h:155-158 in groonga).
   *
-  * Both forms derive from the one max-gen-per-doc table [[maxGen]], so
-  * search, term stats, export, doc vectors and compaction cannot disagree:
-  *  - [[live]]: a broadcast left join + filter, for Catalyst code;
-  *  - [[set]] / [[broadcastSet]]: the table collected into sorted arrays
-  *    ([[TombstoneSet.isLive]]), for typed and kernel code. */
+  * The delete segments are read ONCE per snapshot, into the max-gen-per-doc
+  * table [[set]]; every form of the rule derives from it, so search, term
+  * stats, export, doc vectors and compaction cannot disagree:
+  *  - [[set]]: sorted driver arrays ([[TombstoneSet.isLive]]), for typed
+  *    and kernel code;
+  *  - [[broadcastSet]]: [[set]] shipped once per executor;
+  *  - [[live]]: a DataFrame filter evaluating [[TombstoneSet.isLive]] on
+  *    the broadcast, for Catalyst code (no join, no second read). */
 final class Tombstones(spark: SparkSession, path: String, deleteSegments: Seq[String]) {
   def isEmpty: Boolean = deleteSegments.isEmpty
   def nonEmpty: Boolean = !isEmpty
 
-  /** (doc_id, gen): the highest tombstone generation per deleted doc */
-  lazy val maxGen: Option[DataFrame] =
-    if (isEmpty) None
-    else Some(spark.read.parquet(deleteSegments.map(s => s"$path/$s"): _*)
-      .groupBy(col("doc_id")).agg(max(col("gen")).cast("int").as("gen")))
-
-  /** the live subset of `rows`, which must carry `doc_id` and `seg_ord` */
-  def live(rows: DataFrame): DataFrame = maxGen match {
-    case None => rows
-    case Some(g) =>
-      rows.join(broadcast(g), Seq("doc_id"), "left")
-        .where(col("gen").isNull || col("seg_ord") >= col("gen"))
-        .drop("gen")
-  }
-
-  /** [[maxGen]] as driver arrays. Bounded: a tombstone set past the cap
-    * means the index needs a compact, not a bigger driver. */
-  lazy val set: TombstoneSet = maxGen match {
-    case None => TombstoneSet.Empty
-    case Some(g) =>
-      val rows = g.collect()
+  /** the highest tombstone generation per deleted doc, as driver arrays.
+    * Bounded: a tombstone set past the cap means the index needs a
+    * compact, not a bigger driver. */
+  lazy val set: TombstoneSet =
+    if (isEmpty) TombstoneSet.Empty
+    else {
+      val rows = spark.read.parquet(deleteSegments.map(s => s"$path/$s"): _*)
+        .groupBy(col("doc_id")).agg(max(col("gen")).cast("int").as("gen"))
+        .collect()
       require(rows.length <= Tombstones.MaxDriverTombstones,
         s"${rows.length} tombstones exceed the driver cap " +
           s"(${Tombstones.MaxDriverTombstones}) — run IncrementalIndex.compact " +
           s"on $path to fold deletes into the base")
       val sorted = rows.map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
       TombstoneSet(sorted.map(_._1), sorted.map(_._2))
-  }
+    }
 
   /** [[set]] shipped ONCE per executor, not serialized into every task
     * closure — at the driver cap (millions of entries) a closure-embedded
     * copy would dominate task dispatch. None when there are no deletes. */
   lazy val broadcastSet: Option[Broadcast[TombstoneSet]] =
     if (isEmpty) None else Some(spark.sparkContext.broadcast(set))
+
+  /** the live subset of `rows`, which must carry `doc_id` and `seg_ord` */
+  def live(rows: DataFrame): DataFrame = broadcastSet match {
+    case None => rows
+    case Some(bc) =>
+      val isLive = udf((doc: Long, segOrd: Int) => bc.value.isLive(doc, segOrd))
+      rows.where(isLive(col("doc_id"), col("seg_ord")))
+  }
 }
 
 object Tombstones {
@@ -63,7 +62,7 @@ object Tombstones {
   final val MaxDriverTombstones: Int = 5000000
 }
 
-/** Array form of [[Tombstones.maxGen]]: `docs` ascending, `gens(i)` the max
+/** Array form of the max-gen table: `docs` ascending, `gens(i)` the max
   * generation of `docs(i)`. */
 final case class TombstoneSet(docs: Array[Long], gens: Array[Int]) {
   def isEmpty: Boolean = docs.isEmpty
@@ -75,26 +74,16 @@ final case class TombstoneSet(docs: Array[Long], gens: Array[Int]) {
     j < 0 || segOrd >= gens(j)
   }
 
-  /** index of the first tombstoned doc >= lo */
-  private def lowerBound(lo: Long): Int = {
-    var a = 0
+  /** true iff some doc in [lo, hi] is dead in segment `segOrd`; the
+    * default segOrd (below every generation) asks whether any doc in the
+    * range has a tombstone at all */
+  def hidesAnyIn(lo: Long, hi: Long, segOrd: Int = Int.MinValue): Boolean = {
+    var a = 0 // lower bound: first tombstoned doc >= lo
     var b = docs.length
     while (a < b) {
       val m = (a + b) >>> 1
       if (docs(m) < lo) a = m + 1 else b = m
     }
-    a
-  }
-
-  /** true iff some tombstoned doc id falls in [lo, hi] */
-  def touches(lo: Long, hi: Long): Boolean = {
-    val a = lowerBound(lo)
-    a < docs.length && docs(a) <= hi
-  }
-
-  /** true iff some doc in [lo, hi] is dead in segment `segOrd` */
-  def hidesAnyIn(lo: Long, hi: Long, segOrd: Int): Boolean = {
-    var a = lowerBound(lo)
     while (a < docs.length && docs(a) <= hi) {
       if (segOrd < gens(a)) return true
       a += 1

@@ -392,7 +392,7 @@ object MatchKernel {
         val touched = q.tombstones.nonEmpty && {
           var hi = Long.MinValue
           sorted.foreach(b => if (b.max_doc > hi) hi = b.max_doc)
-          q.tombstones.touches(sorted(0).min_doc, hi)
+          q.tombstones.hidesAnyIn(sorted(0).min_doc, hi)
         }
         if (touched || overlapping)
           filterBlocks(sorted, q.tombstones)

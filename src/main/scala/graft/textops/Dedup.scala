@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -523,12 +523,14 @@ object Dedup {
     // the driver replaces O(log n) distributed rounds of 4 exchanges
     // each; past the cap the pointer-jumping loop below runs unchanged.
     // Output is identical by definition: comp = min id reachable.
-    // One bounded collect decides AND fetches: cap + 1 rows prove the set
-    // is over the cap (the cap is clamped so cap + 1 still fits an Int).
-    val ccCap = math.min(Int.MaxValue - 1L, spark.conf.getOption("spark.graft.ccMaxDriverPairs")
-      .map(_.toLong).getOrElse(1L << 20)).toInt
-    val rows = if (ccCap > 0) e.limit(ccCap + 1).collect() else Array.empty[Row]
-    if (ccCap > 0 && rows.length <= ccCap) {
+    // The decision counts cap + 1 rows without moving them, so a pair set
+    // over the cap ships nothing to the driver (the cap is clamped so
+    // cap + 1 still fits an Int).
+    val ccCap = math.max(0L, math.min(Int.MaxValue - 1L,
+      spark.conf.getOption("spark.graft.ccMaxDriverPairs")
+        .map(_.toLong).getOrElse(1L << 20))).toInt
+    if (ccCap > 0 && e.limit(ccCap + 1).count() <= ccCap) {
+      val rows = e.collect()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x

@@ -399,11 +399,8 @@ class DataOpsSpec extends AnyFunSuite {
     assert(got.toSeq == want)
   }
 
-  test("connected components: convergence rides the checkpoint — no extra action per round") {
-    // the per-round convergence test must be folded into the round's own
-    // checkpoint job (a separate compare-join + isEmpty would double the
-    // per-round action count); assert via a QueryExecutionListener that
-    // the ONLY Dataset actions the loop issues are the checkpoints
+  /** the Dataset action names `f` issues, seen by a QueryExecutionListener */
+  private def actionsOf(f: => Unit): Seq[String] = {
     val actions = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -415,27 +412,51 @@ class DataOpsSpec extends AnyFunSuite {
           exception: Exception): Unit = actions.add(s"FAIL:$funcName")
     }
     spark.listenerManager.register(listener)
+    try {
+      f
+      // listener delivery is async — drain before returning
+      var waited = 0
+      while (waited < 10000 && actions.isEmpty) { Thread.sleep(200); waited += 200 }
+      Thread.sleep(500)
+      actions.toArray.map(_.toString).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("connected components: convergence rides the checkpoint — no extra action per round") {
+    // the per-round convergence test must be folded into the round's own
+    // checkpoint job (a separate compare-join + isEmpty would double the
+    // per-round action count); assert via a QueryExecutionListener that
+    // the ONLY Dataset actions the loop issues are the checkpoints
     // this spec asserts the DISTRIBUTED loop's per-round job shape —
     // disable the small-pair-set driver fast path so the loop runs
     spark.conf.set("spark.graft.ccMaxDriverPairs", "0")
     try {
-      val edges = (0L until 8L).map(i => (i + 1, i)).toDF("a", "b")
-      val comp = Dedup.connectedComponents(edges, "a", "b")
-        .as[(Long, Long)].collect()
-      assert(comp.forall(_._2 == 0L))
-      // listener delivery is async — drain before asserting
-      var waited = 0
-      while (waited < 10000 && actions.isEmpty) { Thread.sleep(200); waited += 200 }
-      Thread.sleep(500)
-      val inLoop = actions.toArray.map(_.toString)
-        .filterNot(_ == "collect") // the final assertion's own action
+      val actions = actionsOf {
+        val edges = (0L until 8L).map(i => (i + 1, i)).toDF("a", "b")
+        val comp = Dedup.connectedComponents(edges, "a", "b")
+          .as[(Long, Long)].collect()
+        assert(comp.forall(_._2 == 0L))
+      }
+      val inLoop = actions.filterNot(_ == "collect") // the assertion's own action
       assert(inLoop.nonEmpty, "listener saw no actions")
       assert(inLoop.forall(_.toLowerCase.contains("checkpoint")),
         s"loop issued non-checkpoint actions: ${inLoop.mkString(", ")}")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.unset("spark.graft.ccMaxDriverPairs")
-    }
+    } finally spark.conf.unset("spark.graft.ccMaxDriverPairs")
+  }
+
+  test("connected components: a pair cap below the Int range disables the driver path") {
+    // -4294967295 used to wrap to cap 1 and take the driver path
+    spark.conf.set("spark.graft.ccMaxDriverPairs", "-4294967295")
+    try {
+      val actions = actionsOf {
+        val got = Dedup.connectedComponents(Seq((1L, 2L)).toDF("a", "b"), "a", "b")
+          .as[(Long, Long)].collect().toMap
+        assert(got == Map(1L -> 1L, 2L -> 1L))
+      }
+      assert(!actions.contains("count"), s"driver path decided: ${actions.mkString(", ")}")
+      assert(actions.exists(_.toLowerCase.contains("checkpoint")),
+        s"distributed loop did not run: ${actions.mkString(", ")}")
+    } finally spark.conf.unset("spark.graft.ccMaxDriverPairs")
   }
 
   test("connected components: an Int.MaxValue pair cap takes the driver path without overflow") {

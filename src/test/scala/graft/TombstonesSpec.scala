@@ -64,4 +64,14 @@ class TombstonesSpec extends AnyFunSuite {
     assert(byFrame.toSet == want && byFrame.size == want.size)
     assert(idx.meta.nDocs == want.size.toLong)
   }
+
+  test("the DataFrame filter reads no delete segment and adds no join") {
+    // the delete segments are read once per snapshot, into `set`; the
+    // Catalyst form evaluates that same table instead of re-reading them
+    for (plan <- Seq(idx.docs, idx.decodedPostings)
+        .map(_.queryExecution.executedPlan.toString)) {
+      assert(!plan.contains("Join"), plan)
+      idx.meta.deleteSegments.foreach(s => assert(!plan.contains(s), plan))
+    }
+  }
 }
