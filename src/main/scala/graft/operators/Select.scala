@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, InterpretedOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.functions._
 
 import graft.index.GraftIndex
@@ -224,23 +226,26 @@ object Select {
     * With `sequentialThreshold` > 0 and a source table, an AND query whose
     * relational legs alone select few enough rows skips the index for its
     * term legs (sequential-scan fallback). */
-  def select(idx: GraftIndex, req: Request): DataFrame = {
-    // --filter alone: script predicate over the source table, score 1
-    if (req.query.trim.isEmpty) {
-      val src = req.source.getOrElse(throw new IllegalArgumentException(
-        "--filter without --query needs a source table (Request.source)"))
-      val script = req.filterScript.getOrElse(throw new IllegalArgumentException(
-        "Request needs a query or a filterScript"))
-      var df = src.where(ScriptParser.compile(script, src.col(_)))
-        .select(col("doc_id"), lit(1.0).as("score"))
-      req.postFilter.foreach(f => df = df.where(f))
-      req.scorer.foreach(fn => df = df.withColumn("score", fn(df)))
-      val sortCols = req.sortKeys.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
-      var out = df.orderBy(sortCols: _*)
-      if (req.offset > 0) out = out.offset(req.offset)
-      if (req.limit >= 0) out = out.limit(req.limit)
-      return out
-    }
+  def select(idx: GraftIndex, req: Request): DataFrame = page(matches(idx, req), req)._1
+
+  /** the unsorted match set: (filter | query) -> post_filter -> scorer */
+  private[graft] def matches(idx: GraftIndex, req: Request): DataFrame = {
+    var df =
+      if (req.query.trim.isEmpty) {
+        // --filter alone: script predicate over the source table, score 1
+        val src = req.source.getOrElse(throw new IllegalArgumentException(
+          "--filter without --query needs a source table (Request.source)"))
+        val script = req.filterScript.getOrElse(throw new IllegalArgumentException(
+          "Request needs a query or a filterScript"))
+        src.where(ScriptParser.compile(script, src.col(_)))
+          .select(col("doc_id"), lit(1.0).as("score"))
+      } else queryMatches(idx, req)
+    req.postFilter.foreach(f => df = df.where(f))
+    req.scorer.foreach(fn => df = df.withColumn("score", fn(df)))
+    df
+  }
+
+  private def queryMatches(idx: GraftIndex, req: Request): DataFrame = {
     val parsed = QueryParser.parse(req.query, req.allowLeadingNot)
     val sequential: Option[DataFrame] =
       if (req.sequentialThreshold <= 0 || req.source.isEmpty ||
@@ -275,22 +280,55 @@ object Select {
           }
         case _ => None
       }
-    var df = sequential.getOrElse(
+    val df = sequential.getOrElse(
       eval(idx, parsed, req.score, req.source))
     // --query + --filter: filter restricts the match result set (AND)
-    req.filterScript.foreach { script =>
+    req.filterScript.fold(df) { script =>
       val src = req.source.getOrElse(throw new IllegalArgumentException(
         "filterScript needs a source table (Request.source)"))
-      df = df.join(src.where(ScriptParser.compile(script, src.col(_)))
+      df.join(src.where(ScriptParser.compile(script, src.col(_)))
         .select("doc_id"), Seq("doc_id"), "left_semi")
     }
-    req.postFilter.foreach(f => df = df.where(f))
-    req.scorer.foreach(fn => df = df.withColumn("score", fn(df)))
-    val sortCols = req.sortKeys.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
-    var out = df.orderBy(sortCols: _*)
-    if (req.offset > 0) out = out.offset(req.offset)
-    if (req.limit >= 0) out = out.limit(req.limit)
-    out
+  }
+
+  /** sort, offset and limit over `matched`; the second value is nHits,
+    * the size of `matched` before offset/limit, when it came for free.
+    * Otherwise the caller counts `matched` itself. nHits is never a
+    * `Dataset.observe` metric on the page: under `orderBy` the
+    * range-partition sort samples its child in a job of its own, which runs
+    * the child a second time, and the observed `count(1)` of a 2-row frame
+    * read 4.
+    *
+    * A term query under the small-query cap evaluates on the driver: its
+    * match set is a LocalRelation whose row count the cap bounds. Spark
+    * folds projections and limits over such a relation but not a sort, so
+    * `orderBy` would plan a range-partition sort (sample + map + result
+    * jobs) over rows already in driver memory. Those rows are sorted here
+    * instead, by Catalyst's own ordering bound to the SortOrders `orderBy`
+    * resolves to, so NaN, -0.0, null and string order are Spark's. */
+  private[graft] def page(matched: DataFrame, req: Request): (DataFrame, Option[Long]) = {
+    val sorted = matched.orderBy(
+      req.sortKeys.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }: _*)
+    // only a plan over driver rows alone can fold to a LocalRelation; any
+    // other plan is left to the optimizer run of the page's own action
+    val driverRows =
+      if (matched.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+        Some(matched.queryExecution.optimizedPlan)
+      else None
+    (driverRows, sorted.queryExecution.analyzed) match {
+      case (Some(rel: LocalRelation), Sort(order, true, _, _))
+          if AttributeSet(order.flatMap(_.references)).subsetOf(rel.outputSet) =>
+        val rows = rel.data.sorted(new InterpretedOrdering(order, rel.output))
+          .drop(math.max(req.offset, 0))
+        val sliced = if (req.limit >= 0) rows.take(req.limit) else rows
+        (GraftColumnBridge.ofRows(matched.sparkSession, rel.copy(data = sliced)),
+          Some(rel.data.length.toLong))
+      case _ =>
+        var out = sorted
+        if (req.offset > 0) out = out.offset(req.offset)
+        if (req.limit >= 0) out = out.limit(req.limit)
+        (out, None)
+    }
   }
 
   /** drilldown over a match result joined with its source table */

@@ -199,9 +199,11 @@ final class GraftHttpServer(
             .getOrElse(Seq(("score", false), ("doc_id", true))),
           offset = args.get("offset").map(_.toInt).getOrElse(0),
           limit = args.get("limit").map(_.toInt).getOrElse(10))
-        val nHits = graft.operators.Select
-          .select(idx, req.copy(offset = 0, limit = Int.MaxValue)).count()
-        val page = graft.operators.Select.select(idx, req)
+        // one match set for nHits, the page and the drilldowns; evaluated
+        // once under the small-query cap, re-run per action above it
+        val matched = graft.operators.Select.matches(idx, req)
+        val (page, freeHits) = graft.operators.Select.page(matched, req)
+        val nHits = freeHits.getOrElse(matched.count())
         // reference default output_columns: _id, _score (ints in TF mode)
         val outCols = args.getOrElse("output_columns", "_id, _score")
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
@@ -214,7 +216,8 @@ final class GraftHttpServer(
         val dds = args.get("drilldown").toSeq.flatMap { dcol =>
           val src = tables.getOrElse(table, throw new IllegalArgumentException(
             s"[select][drilldown] no source table registered for <$table>"))
-          val grouped = src.join(page.select(col("doc_id")), Seq("doc_id"))
+          // over the whole match set, not the page (SURVEY.md §2.5)
+          val grouped = src.join(matched.select(col("doc_id")), Seq("doc_id"))
             .groupBy(col(dcol).as("_key"))
             .agg(count(lit(1)).as("_nsubrecs"))
             .orderBy(desc("_nsubrecs"), asc("_key"))

@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
   *  - suffix expansion scans terms_rev with a StartsWith pushed filter
   *  - `Select.eval` on a pure-term conjunction plans ONE posting scan
   *  - dimension joins in drilldowns broadcast the small side
+  *  - a select under the small-query cap pages a LocalRelation (no
+  *    Exchange, no Sort)
   * Run: sbt "runMain graft.tools.ExplainCheck" (exit 1 on any failure);
   * ExplainCheckSpec runs the same checks through [[run]].
   */
@@ -28,7 +30,8 @@ object ExplainCheck {
 
   /** Runs every plan check, printing PLAN-OK / PLAN-FAIL lines, and
     * returns (check name, passed) in check order. The small-query cap is
-    * pinned to 0 for the duration and restored afterwards. */
+    * pinned to 0 for the duration (check 15 raises it for itself) and
+    * restored afterwards. */
   def run(spark: SparkSession): Seq[(String, Boolean)] = {
     val capKey = "spark.graft.smallQueryMaxPostings"
     val oldCap = spark.conf.getOption(capKey)
@@ -180,6 +183,25 @@ object ExplainCheck {
     val p14 = plan(rxIdx.searchRegexpGrams("\\Aspark").get)
     check("regexp-grams anchored phrase pruned scan",
       p14.contains("In(term") && p14.contains("￯"), p14)
+
+    // 15. under the small-query cap a term select pages on the driver: its
+    //     match set is a LocalRelation already, so is the page — no
+    //     range-partition Exchange and no Sort. The check sets the default
+    //     cap itself, on a fresh handle (the cap is read once per handle).
+    spark.conf.set("spark.graft.smallQueryMaxPostings",
+      graft.index.GraftIndex.DefaultSmallQueryMaxPostings.toString)
+    val q15 =
+      try graft.operators.Select.select(graft.index.GraftIndex(spark, idx.path),
+        graft.operators.Select.Request("spark"))
+      finally spark.conf.set("spark.graft.smallQueryMaxPostings", "0")
+    val p15 = plan(q15)
+    val local15 = q15.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.nonEmpty
+      case _ => false
+    }
+    check("driver-path select pages a LocalRelation",
+      local15 && !p15.contains("Exchange") && !p15.contains("Sort"),
+      s"${q15.queryExecution.optimizedPlan}\n$p15")
 
     println("EXPLAIN-END")
     results.result()

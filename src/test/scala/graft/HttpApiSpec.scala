@@ -14,28 +14,49 @@ import graft.server.GraftHttpServer
 class HttpApiSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private lazy val (srv, idx) = {
+  private val capKey = "spark.graft.smallQueryMaxPostings"
+  private val defaultCap = graft.index.GraftIndex.DefaultSmallQueryMaxPostings.toString
+  private def withCap[A](cap: String)(f: => A): A = {
+    val old = spark.conf.getOption(capKey)
+    spark.conf.set(capKey, cap)
+    try f finally old.foreach(spark.conf.set(capKey, _))
+  }
+
+  private lazy val docs = {
     import spark.implicits._
-    val docs = Seq(
+    Seq(
       (1L, "spark fulltext engine"), (2L, "fast spark joins"),
       (3L, "columnar scan"), (4L, "spark spark spark"),
       (5L, "window functions")).toDF("doc_id", "text")
+  }
+  private def serve(): GraftHttpServer = {
     val dir = java.nio.file.Files.createTempDirectory("graft-http").toString + "/idx"
     val built = graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", dir,
       graft.index.IndexConfig(tokenizer = "TokenBigram"))
-    val s = new GraftHttpServer(spark, Map("docs" -> built),
-      Map("docs" -> docs)).start()
-    (s, built)
+    new GraftHttpServer(spark, Map("docs" -> built), Map("docs" -> docs)).start()
   }
+  /** the spec's server; TestSpark pins cap 0, the distributed kernel */
+  private lazy val srv = serve()
+  /** a second server whose handle only ever runs under the default cap:
+    * its selects take the driver path and page on the driver */
+  private lazy val fastSrv = serve()
   private lazy val client = HttpClient.newHttpClient()
 
-  private def get(pathAndQuery: String): HttpResponse[Array[Byte]] =
+  private def get(pathAndQuery: String): HttpResponse[Array[Byte]] = getFrom(srv, pathAndQuery)
+  private def getFrom(server: GraftHttpServer, pathAndQuery: String): HttpResponse[Array[Byte]] =
     client.send(
       HttpRequest.newBuilder(URI.create(
-        s"http://127.0.0.1:${srv.boundPort}$pathAndQuery")).GET().build(),
+        s"http://127.0.0.1:${server.boundPort}$pathAndQuery")).GET().build(),
       HttpResponse.BodyHandlers.ofByteArray())
 
-  test("select over HTTP returns the v1 envelope with hits and scores") {
+  /** registers `name` against the cap-0 server and `name [driver path]`
+    * against the default-cap server; `body` gets the GET to use */
+  private def bothPaths(name: String)(body: (String => HttpResponse[Array[Byte]]) => Unit): Unit = {
+    test(name)(body(get))
+    test(s"$name [driver path]")(body(p => withCap(defaultCap)(getFrom(fastSrv, p))))
+  }
+
+  bothPaths("select over HTTP returns the v1 envelope with hits and scores") { get =>
     val r = get("/d/select?table=docs&query=spark&limit=10")
     assert(r.statusCode() == 200)
     assert(r.headers().firstValue("Content-Type").get() == "application/json")
@@ -46,7 +67,7 @@ class HttpApiSpec extends AnyFunSuite {
       body.contains("[1,1]") && body.contains("[2,1]"))
   }
 
-  test("msgpack select decodes to the same rows as json") {
+  bothPaths("msgpack select decodes to the same rows as json") { get =>
     val r = get("/d/select.msgpack?table=docs&query=spark&limit=10")
     assert(r.statusCode() == 200)
     assert(r.headers().firstValue("Content-Type").get() == "application/x-msgpack")
@@ -57,7 +78,7 @@ class HttpApiSpec extends AnyFunSuite {
     assert(rs.drop(2) == Vector(Vector(4L, 3L), Vector(1L, 1L), Vector(2L, 1L)))
   }
 
-  test("command_version=3 wraps header/body; xml renders the result page") {
+  bothPaths("command_version=3 wraps header/body; xml renders the result page") { get =>
     val v3 = new String(get("/d/select?table=docs&query=spark&command_version=3").body(), "UTF-8")
     assert(v3.startsWith("""{"header":{"return_code":0"""))
     assert(v3.contains(""""n_hits":3"""))
@@ -82,11 +103,50 @@ class HttpApiSpec extends AnyFunSuite {
     assert(body.contains("_nsubrecs"))
   }
 
-  test("offset/limit page; sort_keys parse the reference syntax") {
+  bothPaths("drilldown groups the whole match set, not the page") { get =>
+    // --limit 0 --drilldown: the facet-only idiom; groups still count all hits
+    val body = new String(
+      get("/d/select?table=docs&query=spark&limit=0&drilldown=text").body(), "UTF-8")
+    assert(body.contains("[[3],"))
+    val groups = """\["[^"]*",(\d+)\]""".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
+    assert(groups.size == 3 && groups.sum == 3L, body)
+  }
+
+  bothPaths("offset/limit page; sort_keys parse the reference syntax") { get =>
     val body = new String(get(
       "/d/select?table=docs&query=spark&sort_keys=%2B_id&offset=1&limit=1").body(), "UTF-8")
     // ascending _id, second page of one row -> doc 2
     assert(body.contains("[[3],") && body.contains("[2,1]") && !body.contains("[1,1]"))
+  }
+
+  test("a driver-path select launches one scan job, plus the resolve when its terms are cold") {
+    withCap(defaultCap) {
+      // a clean index and a handle nothing else uses
+      val server = serve()
+      try {
+        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        }
+        def jobsOf(pathAndQuery: String): Int = {
+          org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+          jobs.set(0)
+          val r = getFrom(server, pathAndQuery)
+          assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+          org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+          jobs.get()
+        }
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          // pays the handle's one-time jobs (parquet schemas, manifest)
+          jobsOf("/d/select?table=docs&query=window&limit=10")
+          val q = "/d/select?table=docs&query=spark+fast&limit=10"
+          assert(jobsOf(q) == 2, "cold terms: the dictionary resolve and one scan")
+          assert(jobsOf(q) == 1, "warm terms: the scan alone")
+        } finally spark.sparkContext.removeSparkListener(listener)
+      } finally server.stop()
+    }
   }
 
   test("status, tokenize, normalize, schema answer") {
