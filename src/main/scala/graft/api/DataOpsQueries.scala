@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.Similarity
+import graft.ml.AnnIndex.Pq
 import graft.textops.{Dedup, Mixing, TextAnalysis}
 
 /** Training-data pipeline operators (dedup / similarity / text analysis /
@@ -434,23 +435,24 @@ object DataOpsQueries {
 
   val annIvfAppendSql: String = annCosineTopKSql
 
-  /** PQ persisted-index search. Re-ranking the WHOLE corpus makes the
+  /** Flat PQ persisted-index search (a Pq payload in one list, so every
+    * code is scored). Re-ranking the WHOLE corpus makes the
     * result exactly the brute-force top-k — which the oracle checks
     * hash-exact, so codebook training, coding, the ADC lookup pass and
     * re-rank plumbing are verified end-to-end; ADC recall at small rerank
     * and the compression shape are PqIndexSpec territory. */
   def annPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val path = cachedArtifact(dir, "pq-idx") { p =>
-      graft.ml.PqIndex.build(Tables.table(spark, dir, "embeddings"),
-        "vec_id", "embedding", p, m = 8, kCent = 16)
+      graft.ml.AnnIndex.build(Tables.table(spark, dir, "embeddings"),
+        "vec_id", "embedding", p, nlist = 1, payload = Pq(8, 16))
     }
     // exactness precondition DERIVED, not assumed: rerank = corpus size
     // (a fixed constant would silently turn the hash-exact gate
     // approximate the day embeddings outgrows it)
     val n = Tables.table(spark, dir, "embeddings").count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.PqIndex.search(spark, path, queryVec(spark, dir),
-      k = 10, rerank = n.toInt, excludeId = Some(0L))
+    graft.ml.AnnIndex.search(spark, path, queryVec(spark, dir),
+      k = 10, nprobe = 1, rerank = n.toInt, excludeId = Some(0L))
   }
 
   val annPqTopKSql: String = annCosineTopKSql
@@ -466,8 +468,8 @@ object DataOpsQueries {
     * the bench harness's pruned-path timing) */
   def ivfPqIndexPath(spark: SparkSession, dir: String): String =
     cachedArtifact(dir, "ivfpq-idx") { p =>
-      graft.ml.IvfPq.build(Tables.table(spark, dir, "embeddings"),
-        "vec_id", "embedding", p, nlist = 16, m = 8, kCent = 16)
+      graft.ml.AnnIndex.build(Tables.table(spark, dir, "embeddings"),
+        "vec_id", "embedding", p, nlist = 16, payload = Pq(8, 16))
     }
 
   def annIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
@@ -475,7 +477,7 @@ object DataOpsQueries {
     // exactness precondition DERIVED, not assumed (see annPqTopK)
     val n = Tables.table(spark, dir, "embeddings").count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.IvfPq.search(spark, path, queryVec(spark, dir),
+    graft.ml.AnnIndex.search(spark, path, queryVec(spark, dir),
       k = 10, nprobe = 16, rerank = n.toInt, excludeId = Some(0L))
   }
 
@@ -489,14 +491,14 @@ object DataOpsQueries {
   def annIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.table(spark, dir, "embeddings")
     val path = cachedArtifact(dir, "ivfpq-idx-append") { p =>
-      graft.ml.IvfPq.build(emb.where(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", p, nlist = 16, m = 8, kCent = 16)
-      graft.ml.IvfPq.append(emb.where(col("vec_id") % 2 === 1),
+      graft.ml.AnnIndex.build(emb.where(col("vec_id") % 2 === 0),
+        "vec_id", "embedding", p, nlist = 16, payload = Pq(8, 16))
+      graft.ml.AnnIndex.append(emb.where(col("vec_id") % 2 === 1),
         "vec_id", "embedding", p)
     }
     val n = emb.count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.IvfPq.search(spark, path, queryVec(spark, dir),
+    graft.ml.AnnIndex.search(spark, path, queryVec(spark, dir),
       k = 10, nprobe = 16, rerank = n.toInt, excludeId = Some(0L))
   }
 
@@ -533,17 +535,17 @@ object DataOpsQueries {
   def annIvfPqDelete(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.table(spark, dir, "embeddings")
     val path = cachedArtifact(dir, "ivfpq-idx-delete") { p =>
-      graft.ml.IvfPq.build(emb.where(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", p, nlist = 16, m = 8, kCent = 16)
-      graft.ml.IvfPq.append(emb.where(col("vec_id") % 2 === 1),
+      graft.ml.AnnIndex.build(emb.where(col("vec_id") % 2 === 0),
+        "vec_id", "embedding", p, nlist = 16, payload = Pq(8, 16))
+      graft.ml.AnnIndex.append(emb.where(col("vec_id") % 2 === 1),
         "vec_id", "embedding", p)
-      graft.ml.IvfPq.delete(spark, p,
+      graft.ml.AnnIndex.delete(spark, p,
         emb.where(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
-      graft.ml.IvfPq.compact(spark, p)
+      graft.ml.AnnIndex.compact(spark, p)
     }
     val n = emb.count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.IvfPq.search(spark, path, queryVec(spark, dir),
+    graft.ml.AnnIndex.search(spark, path, queryVec(spark, dir),
       k = 10, nprobe = 16, rerank = n.toInt, excludeId = Some(0L))
   }
 
@@ -577,24 +579,24 @@ object DataOpsQueries {
 
   /** IVF+PQ REBALANCE: same lifecycle as ann_ivf_rebalance on the composed
     * index — skewed model (32-vector prefix) + append + delete, then
-    * `IvfPq.rebalance` re-lists the survivors against re-trained centroids
+    * `AnnIndex.rebalance` re-lists the survivors against re-trained centroids
     * (codebooks kept — shared-codebook codes are list-independent). Full
     * probe + full rerank must still hash-match brute force over the
     * survivors. */
   def annIvfPqRebalance(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.table(spark, dir, "embeddings")
     val path = cachedArtifact(dir, "ivfpq-idx-rebalance") { p =>
-      graft.ml.IvfPq.build(emb.where(col("vec_id") < 32),
-        "vec_id", "embedding", p, nlist = 8, m = 8, kCent = 16)
-      graft.ml.IvfPq.append(emb.where(col("vec_id") >= 32),
+      graft.ml.AnnIndex.build(emb.where(col("vec_id") < 32),
+        "vec_id", "embedding", p, nlist = 8, payload = Pq(8, 16))
+      graft.ml.AnnIndex.append(emb.where(col("vec_id") >= 32),
         "vec_id", "embedding", p)
-      graft.ml.IvfPq.delete(spark, p,
+      graft.ml.AnnIndex.delete(spark, p,
         emb.where(col("vec_id") % 11 === 5).select("vec_id"), "vec_id")
-      graft.ml.IvfPq.rebalance(spark, p, iters = 3)
+      graft.ml.AnnIndex.rebalance(spark, p, iters = 3)
     }
     val n = emb.count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.IvfPq.search(spark, path, queryVec(spark, dir),
+    graft.ml.AnnIndex.search(spark, path, queryVec(spark, dir),
       k = 10, nprobe = 8, rerank = n.toInt, excludeId = Some(0L))
   }
 
@@ -609,7 +611,7 @@ object DataOpsQueries {
     val e = Tables.table(spark, dir, "embeddings")
     val n = e.count()
     require(n <= Int.MaxValue, s"embeddings rows $n exceed rerank addressability")
-    graft.ml.IvfPq.searchBatch(spark, path,
+    graft.ml.AnnIndex.searchBatch(spark, path,
         e.where(col("vec_id") < 5), "vec_id", "embedding",
         k = 3, nprobe = 16, rerank = n.toInt)
       .orderBy("qid", "rank")

@@ -1,358 +1,11 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** IVF+PQ composed ANN index — the 100-TB shape for embedding search
-  * (Jégou, Douze & Schmid 2011 §IV "IVFADC"; public technique).
-  *
-  * `AnnIndex` (IVF-FLAT) prunes the corpus to nprobe/nlist but scans full
-  * float vectors inside each probed list; `PqIndex` (flat PQ) scores
-  * m-byte codes but scans ALL of them. This index composes the two: PQ
-  * codes are stored INSIDE the IVF lists, so a search
-  *   1. ranks the tiny driver-side centroid set → nprobe list ids,
-  *   2. scans `lists` with a pushed-down `list_id IN (...)` predicate
-  *      projecting ONLY `(vec_id, code)` — the candidate pass reads
-  *      nprobe/nlist of the corpus at m ints per row, never a float,
-  *   3. takes the top-`rerank` ids by codegen'd ADC score,
-  *   4. fetches floats for exactly those ids from the separately-stored
-  *      `vecs` table (vec_id-sorted → pushed-down IN = point lookups) and
-  *      re-ranks by exact cosine.
-  * Cost: (nprobe/nlist)·corpus · m-int IO for candidates + rerank·dim
-  * floats — vs corpus·dim floats for brute force.
-  *
-  * Codes quantize the NORMALIZED RAW vectors with codebooks shared across
-  * lists (not per-list residuals): a shared codebook keeps one ADC lookup
-  * table per query instead of nprobe of them, lets `nprobe = nlist ∧
-  * rerank ≥ corpus` degrade to exact brute force (the hash-gate path, same
-  * trick as IVF-FLAT/PQ), and costs some ADC resolution that the exact
-  * re-rank pass absorbs. Coarse centroids are deterministic
-  * (lowest-id seeds, or pass `centroids` from `AnnIndex.trainCentroids`).
-  *
-  * Layout: `path/centroids` (list_id, centroid — tiny, also readable by
-  * `AnnIndex.probeLists`), `path/codebooks` (sub, cid, centroid — tiny),
-  * `path/lists` (list_id, vec_id, code, gen — partitioned+sorted by
-  * list_id, NO floats), `path/vecs` (vec_id, vec, gen — range-
-  * partitioned+sorted by vec_id), `path/ivfpqmeta.json`, plus the
-  * [[VecStore]] state file + delete tombstones ([[delete]]/[[compact]] —
-  * lifecycle parity with the text index's generation tombstones).
-  */
+/** IVF-PQ search entry point kept for existing callers: an IVF-PQ index is
+  * an [[AnnIndex]] built with an [[AnnIndex.Pq]] payload. */
 object IvfPq {
-
-  /** JVM cache of collected codebooks, fingerprint-keyed like
-    * [[AnnIndex.readCentroids]] (one dir listing instead of a collect job
-    * per search; a rebuilt codebook dir changes the fingerprint) */
-  private val bookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[PqIndex.Codebook]]()
-
-  private def readBooks(spark: SparkSession, dir: String): Array[PqIndex.Codebook] = {
-    import spark.implicits._
-    if (bookCache.size > 64) bookCache.clear()
-    bookCache.computeIfAbsent(AnnIndex.dirFingerprint(spark, dir),
-      _ => spark.read.parquet(dir).as[PqIndex.Codebook].collect())
-  }
-
-  /** Build at `path`. `trainSample` lowest-id rows train the PQ codebooks;
-    * assignment + coding is ONE distributed pass with centroids and
-    * codebooks broadcast. */
-  def build(vecs: DataFrame, idCol: String, vecCol: String, path: String,
-      nlist: Int, m: Int = 8, kCent: Int = 16, iters: Int = 8,
-      trainSample: Int = 10000,
-      centroids: Option[Seq[Array[Float]]] = None,
-      filesPerList: Int = 1): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val data = vecs.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("vec")).as[(Long, Array[Float])]
-
-    // ONE TakeOrdered collect serves both the nlist centroid seeds (raw
-    // prefix) and the codebook training sample (normalized) — previously
-    // two separate ordered-limit jobs over the same data
-    val head = data.orderBy(col("vec_id")).limit(math.max(nlist, trainSample))
-      .map(_._2).collect()
-    val cents: Array[AnnIndex.Centroid] = centroids match {
-      case Some(cs) => cs.zipWithIndex.map { case (c, i) => AnnIndex.Centroid(i, c) }.toArray
-      case None =>
-        head.take(nlist).zipWithIndex.map { case (c, i) => AnnIndex.Centroid(i, c) }
-    }
-    cents.toSeq.toDS().write.mode("overwrite").parquet(s"$path/centroids")
-
-    val sample = head.take(trainSample).map(PqIndex.normalize)
-    require(sample.nonEmpty, "IVF+PQ build needs a non-empty corpus")
-    val dim = sample(0).length
-    val sub = dim / m
-    val books = PqIndex.trainCodebooks(sample, dim, m, kCent, iters)
-    books.toSeq.toDS().write.mode("overwrite").parquet(s"$path/codebooks")
-
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val bcBooks = spark.sparkContext.broadcast(PqIndex.groupBooks(books))
-    val coded = data.map { case (id, v) =>
-      (AnnIndex.assignList(v, bcCents.value), id,
-        PqIndex.encode(v, bcBooks.value, m, sub), 0L)
-    }.toDF("list_id", "vec_id", "code", "gen")
-    coded // hash repartition: no range-sampling pass re-running the encode map
-      .repartition(math.max(1, nlist / math.max(1, filesPerList)), col("list_id"))
-      .sortWithinPartitions("list_id", "vec_id")
-      .write.mode("overwrite").parquet(s"$path/lists")
-
-    data.toDF("vec_id", "vec").withColumn("gen", lit(0L))
-      .repartition(col("vec_id")).sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$path/vecs")
-    VecStore.commit(spark, path, VecStore.Default)
-
-    val fs = graft.index.SegmentCatalog.fileSystem(spark, path)
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val meta = org.json4s.jackson.Serialization.write(
-      Map("dim" -> dim, "m" -> m, "kCent" -> kCent, "nlist" -> nlist))
-    val os = fs.create(new org.apache.hadoop.fs.Path(path, "ivfpqmeta.json"), true)
-    try os.write(meta.getBytes("UTF-8")) finally os.close()
-  }
-
-  /** Incremental add — same frozen-model semantics as [[AnnIndex.append]]:
-    * new vectors are assigned against the persisted centroids, PQ-encoded
-    * with the persisted codebooks, and appended as fresh sorted files to
-    * BOTH the code lists and the exact-rerank vecs table. The model
-    * (centroids + codebooks) is intentionally frozen; re-train + rebuild
-    * is the periodic remedy for distribution drift. */
-  def append(vecs: DataFrame, idCol: String, vecCol: String,
-      path: String, filesPerList: Int = 1): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val st = VecStore.read(spark, path)
-    val (_, m, _, nlist) = readMeta(spark, path)
-    val cents = AnnIndex.readCentroids(spark, s"$path/${st.cents}")
-    val books = readBooks(spark, s"$path/codebooks")
-    require(cents.nonEmpty && books.nonEmpty, s"no model at $path — build() first")
-    val dim = cents(0).centroid.length
-    val sub = dim / m
-    val g = st.gen + 1
-    val data = vecs.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("vec")).as[(Long, Array[Float])]
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val bcBooks = spark.sparkContext.broadcast(PqIndex.groupBooks(books))
-    // vecs FIRST, codes second: a failure between the two jobs must leave
-    // orphan rerank vectors (harmless — nothing references them until their
-    // codes exist), never orphan codes (search's fetch-back join would
-    // silently drop those candidates instead of erroring); the gen-counter
-    // state commit lands only after BOTH writes succeed
-    data.toDF("vec_id", "vec").withColumn("gen", lit(g))
-      .repartition(col("vec_id")).sortWithinPartitions(col("vec_id"))
-      .write.mode("append").parquet(s"$path/${st.vecs}")
-    data.map { case (id, v) =>
-        (AnnIndex.assignList(v, bcCents.value), id,
-          PqIndex.encode(v, bcBooks.value, m, sub), g)
-      }.toDF("list_id", "vec_id", "code", "gen")
-      .repartition(math.max(1, nlist / math.max(1, filesPerList)), col("list_id"))
-      .sortWithinPartitions("list_id", "vec_id")
-      .write.mode("append").parquet(s"$path/${st.lists}")
-    VecStore.commit(spark, path, st.copy(gen = g))
-  }
-
-  /** Retire vectors by id — generation tombstones shared with the IVF-FLAT
-    * index (see [[VecStore]]): every search pass (code-only ADC candidates
-    * AND the float fetch-back) filters them, so a deleted id can neither
-    * surface as a candidate nor resolve a stale vector after its id is
-    * re-appended. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String = "vec_id"): Unit =
-    VecStore.delete(spark, path, ids, idCol)
-
-  /** driver-literal convenience for small takedown lists */
-  def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    delete(spark, path, ids.toDS().toDF("vec_id"), "vec_id")
-  }
-
-  /** Fold tombstones: rewrite code lists AND rerank vecs as fresh
-    * directories of survivors (gen 0), then atomically swap the state —
-    * same discipline as [[AnnIndex.compact]]; the frozen model
-    * (centroids/codebooks) is untouched. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val st = VecStore.read(spark, path)
-    val v = st.gen + 1
-    val zero = lit(0L)
-    VecStore.alive(spark, path, st,
-        VecStore.withGen(spark.read.parquet(s"$path/${st.lists}")))
-      .select(col("list_id"), col("vec_id"), col("code"), zero.as("gen"))
-      .repartition(col("list_id")) // hash: no range-sampling pass
-      .sortWithinPartitions("list_id", "vec_id")
-      .write.mode("overwrite").parquet(s"$path/lists-c$v")
-    VecStore.alive(spark, path, st,
-        VecStore.withGen(spark.read.parquet(s"$path/${st.vecs}")))
-      .select(col("vec_id"), col("vec"), zero.as("gen"))
-      .repartition(col("vec_id")).sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$path/vecs-c$v")
-    VecStore.commit(spark, path, st.copy(gen = 0L,
-      lists = s"lists-c$v", vecs = s"vecs-c$v", deletes = s"deletes-c$v"))
-  }
-
-  /** Re-train the coarse centroids on the SURVIVING corpus (hash-seeded
-    * like [[AnnIndex.rebalance]] — data-proportional seeds split the
-    * skewed mode that motivated the rebalance) and rewrite the code lists
-    * against them, folding tombstones into fresh gen-0 dirs behind the
-    * atomic state swap. The PQ CODEBOOKS are intentionally kept: codes
-    * quantize the normalized raw vectors independently of list assignment
-    * (shared-codebook design, see the layout note), so re-listing does not
-    * invalidate them — only a distribution shift in the vectors themselves
-    * warrants a codebook re-train, which is a full build(). */
-  def rebalance(spark: SparkSession, path: String, iters: Int = 5,
-      filesPerList: Int = 1): Unit = {
-    import spark.implicits._
-    val st = VecStore.read(spark, path)
-    val (dim, m, _, nlist) = readMeta(spark, path)
-    val sub = dim / m
-    val books = readBooks(spark, s"$path/codebooks")
-    val alive = aliveVecs(spark, path, st).persist()
-    try {
-      val v = st.gen + 1
-      val cents = AnnIndex.trainCentroids(alive, "vec_id", "vec", nlist, iters,
-          hashSeeds = true)
-        .zipWithIndex.map { case (c, i) => AnnIndex.Centroid(i, c) }.toArray
-      val (newCents, newLists, newVecs) =
-        (s"centroids-r$v", s"lists-r$v", s"vecs-r$v")
-      cents.toSeq.toDS().write.mode("overwrite").parquet(s"$path/$newCents")
-      alive.withColumn("gen", lit(0L))
-        .repartition(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(s"$path/$newVecs")
-      val bcC = spark.sparkContext.broadcast(cents)
-      val bcB = spark.sparkContext.broadcast(PqIndex.groupBooks(books))
-      alive.as[(Long, Array[Float])].map { case (id, vec) =>
-          (AnnIndex.assignList(vec, bcC.value), id,
-            PqIndex.encode(vec, bcB.value, m, sub), 0L)
-        }.toDF("list_id", "vec_id", "code", "gen")
-        .repartition(math.max(1, nlist / math.max(1, filesPerList)), col("list_id"))
-        .sortWithinPartitions("list_id", "vec_id")
-        .write.mode("overwrite").parquet(s"$path/$newLists")
-      VecStore.commit(spark, path,
-        VecStore.State(0L, newLists, newVecs, s"deletes-r$v", newCents))
-    } finally alive.unpersist()
-  }
-
-  /** surviving rerank vectors (vec_id, vec) — the fetch-back source */
-  private def aliveVecs(spark: SparkSession, path: String,
-      st: VecStore.State): DataFrame =
-    VecStore.alive(spark, path, st,
-        VecStore.withGen(spark.read.parquet(s"$path/${st.vecs}")))
-      .select(col("vec_id"), col("vec"))
-
-  private def readMeta(spark: SparkSession, path: String): (Int, Int, Int, Int) = {
-    val fs = graft.index.SegmentCatalog.fileSystem(spark, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path, "ivfpqmeta.json"))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val j = org.json4s.jackson.JsonMethods.parse(json)
-    ((j \ "dim").extract[Int], (j \ "m").extract[Int],
-      (j \ "kCent").extract[Int], (j \ "nlist").extract[Int])
-  }
-
-  /** The pruned ADC candidate pass as a DataFrame: `(vec_id, adc)` over the
-    * nprobe probed lists only. The `list_id IN` predicate pushes into the
-    * parquet scan (row-group pruning on the list_id-sorted layout) and the
-    * scan's ReadSchema carries no float column — `lists` stores none.
-    * Exposed for plan asserts (ExplainCheck rule 8). */
-  def candidates(spark: SparkSession, path: String, query: Array[Float],
-      nprobe: Int, excludeId: Option[Long] = None): DataFrame =
-    candidates(spark, path, VecStore.read(spark, path), query, nprobe, excludeId)
-
-  /** state-plumbed variant: [[search]] passes its already-read state so a
-    * search costs one state read, not three */
-  private def candidates(spark: SparkSession, path: String, st: VecStore.State,
-      query: Array[Float], nprobe: Int, excludeId: Option[Long]): DataFrame = {
-    val (dim, m, kCent, _) = readMeta(spark, path)
-    require(query.length == dim, s"query dim ${query.length} != index dim $dim")
-    val probed = AnnIndex.probeLists(spark, path, st, query, nprobe)
-    val books = readBooks(spark, s"$path/codebooks")
-    val lut = PqIndex.lutFor(books, query, dim, m, kCent)
-    // tombstone filter BEFORE the projection: costs one narrow gen column
-    // when deletes exist, and is skipped entirely (plan-identical) when not
-    val lists = VecStore.alive(spark, path, st,
-        VecStore.withGen(spark.read.parquet(s"$path/${st.lists}")))
-      .where(col("list_id").isin(probed: _*))
-    val base = excludeId.fold(lists)(id => lists.where(col("vec_id") =!= id))
-    base.select(col("vec_id"),
-      PqIndex.adcColumn(lut, col("code"), m, kCent).as("adc"))
-  }
-
-  /** BATCH IVF+PQ search: top-k per query for a whole query TABLE.
-    * Each query expands to its nprobe nearest lists (driver holds only
-    * centroids), joins the CODE lists on list_id (one pushed-down IN over
-    * the union of probed lists — candidate rows carry m ints, never
-    * floats), scores ADC per (query, candidate) with a pure column
-    * expression over the broadcast codebook literal (the per-query lookup
-    * table becomes a slice-dot against the centroid array — no UDF),
-    * window-ranks to top-`rerank` ids per query, fetches floats ONCE for
-    * the union of candidate ids, and exact-cosine re-ranks to top-k.
-    * A million queries cost two joins and two window ranks, never a
-    * million driver jobs. `nprobe = nlist ∧ rerank ≥ corpus` is exact. */
-  def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
-      qidCol: String, qvecCol: String, k: Int, nprobe: Int,
-      rerank: Int): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val (dim, m, kCent, _) = readMeta(spark, path)
-    val sub = dim / m
-    val st = VecStore.read(spark, path)
-    val cents = AnnIndex.readCentroids(spark, s"$path/${st.cents}")
-    val books = readBooks(spark, s"$path/codebooks")
-    // centroid(s, c) at index s*kCent + c, 1-based for element_at
-    val bookLit = typedLit(
-      books.sortBy(b => (b.sub, b.cid)).map(_.centroid.toSeq).toSeq)
-    val bcC = spark.sparkContext.broadcast(cents)
-    val probes = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (qid, qv) =>
-        val nq = PqIndex.normalize(qv)
-        bcC.value.map(c => (Similarity.l2sqLocal(qv, c.centroid), c.list_id))
-          .sortBy(identity).take(nprobe)
-          .iterator.map { case (_, lid) => (qid, lid, nq.toSeq) }
-      }.toDF("qid", "list_id", "nq")
-    val touched = probes.select($"list_id").distinct().as[Int].collect().toSeq
-    val lists = VecStore.alive(spark, path, st,
-        VecStore.withGen(spark.read.parquet(s"$path/${st.lists}")))
-      .where(col("list_id").isin(touched: _*))
-    // ADC(q, code) = Σ_s dot(q_sub_s, centroid(s, code_s)) — nested
-    // higher-order functions, fully codegen'd, candidate floats untouched
-    val adc = aggregate(
-      zip_with(col("code"), sequence(lit(0), lit(m - 1)), (c, s) =>
-        aggregate(
-          zip_with(slice(col("nq"), (s * sub + 1).cast("int"), lit(sub)),
-            element_at(bookLit, (s * kCent + c + 1).cast("int")),
-            (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, v) => acc + v)),
-      lit(0.0), (acc, x) => acc + x)
-    val wAdc = Window.partitionBy($"qid").orderBy(desc("adc"), asc("vec_id"))
-    val cands = probes.join(lists, Seq("list_id"))
-      .where(col("vec_id") =!= col("qid"))
-      .select($"qid", $"vec_id", adc.as("adc"))
-      .withColumn("arank", row_number().over(wAdc))
-      .where($"arank" <= rerank)
-      .select($"qid", $"vec_id")
-    val wCos = Window.partitionBy($"qid").orderBy(desc("cos"), asc("vec_id"))
-    cands
-      .join(aliveVecs(spark, path, st), Seq("vec_id"))
-      .join(queries.select(col(qidCol).cast("long").as("qid"),
-        col(qvecCol).as("qv0")), Seq("qid"))
-      .select($"qid", $"vec_id", Similarity.cosine($"vec", $"qv0").as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .where($"rank" <= k)
-      .select($"qid", $"rank", $"vec_id", round($"cos", 4).as("cos"))
-  }
-
-  /** Top-k by cosine: centroid probe → code-only ADC scan of nprobe lists →
-    * top-`rerank` ids → exact cosine re-rank over floats fetched for
-    * exactly those ids. `nprobe = nlist ∧ rerank ≥ corpus` degrades to
-    * exact brute force (the oracle-gate path). */
-  def search(spark: SparkSession, path: String, query: Array[Float],
-      k: Int, nprobe: Int, rerank: Int,
-      excludeId: Option[Long] = None): DataFrame = {
-    val st = VecStore.read(spark, path)
-    val topIds = candidates(spark, path, st, query, nprobe, excludeId)
-      .orderBy(desc("adc"), asc("vec_id")).limit(rerank)
-      .select(col("vec_id"))
-    // fetch-back over SURVIVING vecs: candidates are already tombstone-
-    // filtered, but a deleted-then-reappended id would otherwise resolve
-    // both its stale and fresh float rows here
-    PqIndex.rerankExact(aliveVecs(spark, path, st), topIds, rerank, query, k)
-  }
+  def search(spark: SparkSession, path: String, query: Array[Float], k: Int,
+      nprobe: Int, rerank: Int, excludeId: Option[Long] = None): DataFrame =
+    AnnIndex.search(spark, path, query, k, nprobe, rerank, excludeId)
 }

@@ -1,37 +1,34 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Product-quantization (PQ) ANN index — the MEMORY-side scale path for
-  * embedding search (Jégou, Douze & Schmid 2011, "Product Quantization for
-  * Nearest Neighbor Search" — public technique).
+/** The product-quantization (PQ) codec of an [[AnnIndex]] with a
+  * [[AnnIndex.Pq]] payload (Jégou, Douze & Schmid 2011, "Product
+  * Quantization for Nearest Neighbor Search" — public technique).
   *
-  * At 100 TB of float32 embeddings, even IVF-FLAT must scan full vectors
-  * inside each probed list. PQ stores an m-byte CODE per vector instead:
-  * the (normalized) vector is split into m subspaces, each quantized to
-  * its nearest of `kCent` per-subspace centroids. A query then scores a
-  * candidate WITHOUT touching its floats: per subspace, the dot product
-  * of the query sub-vector with every centroid is precomputed into a
-  * lookup table (m x kCent doubles, driver-side), and the asymmetric
-  * distance (ADC) is just m table lookups summed — here a pure codegen'd
-  * column expression over the code array (no UDF). Candidates from the
-  * ADC pass are re-ranked by exact cosine over the stored floats;
-  * `rerank >= corpus size` degrades to exact brute force, which the
-  * oracle gate exploits exactly like the IVF nprobe=nlist path.
+  * A PQ index stores an m-int CODE per vector instead of its floats: the
+  * (normalized) vector is split into m subspaces, each quantized to its
+  * nearest of `kCent` per-subspace centroids. A query then scores a
+  * candidate WITHOUT touching its floats: per subspace, the dot product of
+  * the query sub-vector with every centroid is precomputed into a lookup
+  * table (m x kCent doubles), and the asymmetric distance (ADC) is just m
+  * table lookups summed — a pure codegen'd column expression over the code
+  * array (no UDF). The top ADC candidates are re-ranked by exact cosine
+  * over their fetched floats.
   *
   * Codebooks are trained per subspace with deterministic seeded Lloyd
   * (seeds = the subvectors of the lowest-id sample rows; no RNG), on a
-  * driver-side sample — the codebook is tiny (m·kCent·dim/m floats) and
-  * at scale one trains on a sample anyway.
-  *
-  * Layout: `path/codebooks` (sub, cid, centroid), `path/codes`
-  * (vec_id, vec, code ARRAY<INT> — floats kept for the re-rank pass),
-  * `path/pqmeta.json` (dim, m, kCent).
+  * driver-side sample — the codebook is tiny (m·kCent·dim/m floats) and at
+  * scale one trains on a sample anyway.
   */
 object PqIndex {
 
   final case class Codebook(sub: Int, cid: Int, centroid: Array[Float])
+
+  /** lowest-id rows that train the codebooks, and their Lloyd rounds */
+  private[ml] val TrainSample = 10000
+  private val Iters = 8
 
   private[ml] def normalize(v: Array[Float]): Array[Float] = {
     var s = 0.0; var i = 0
@@ -40,31 +37,18 @@ object PqIndex {
     if (n == 0.0) v else v.map(x => (x / n).toFloat)
   }
 
-  private def l2sq(a: Array[Float], b: Array[Float]): Double = Similarity.l2sqLocal(a, b)
-
-  /** index of the nearest centroid (ties → lowest index) */
-  private[ml] def argmin(v: Array[Float], cents: Array[Array[Float]]): Int = {
-    var best = 0; var bestD = Double.MaxValue; var c = 0
-    while (c < cents.length) {
-      val d = l2sq(v, cents(c))
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** deterministic per-subspace Lloyd on a driver-side sample */
-  private[ml] def trainSubspace(sample: Array[Array[Float]], kCent: Int, iters: Int)
+  private def trainSubspace(sample: Array[Array[Float]], kCent: Int)
       : Array[Array[Float]] = {
     var cents = sample.take(kCent).map(_.clone())
     if (cents.length < kCent) // degenerate tiny corpus: pad with repeats
       cents = Array.tabulate(kCent)(i => sample(i % sample.length).clone())
     val d = sample(0).length
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until Iters) {
       val sums = Array.fill(kCent)(new Array[Double](d))
       val counts = new Array[Long](kCent)
       sample.foreach { v =>
-        val best = argmin(v, cents)
+        val best = Similarity.nearest(v, cents)
         var i = 0
         while (i < d) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
@@ -78,44 +62,43 @@ object PqIndex {
     cents
   }
 
-  /** train the m per-subspace codebooks from a NORMALIZED driver-side
-    * sample — the ONE training kernel shared by flat PQ and IVF+PQ */
-  private[ml] def trainCodebooks(sample: Array[Array[Float]], dim: Int,
-      m: Int, kCent: Int, iters: Int): Array[Codebook] = {
+  /** train the m per-subspace codebooks from a raw driver-side sample
+    * (normalized here, like every coded vector) */
+  private[ml] def trainCodebooks(raw: Array[Array[Float]], m: Int,
+      kCent: Int): Array[Codebook] = {
+    require(raw.nonEmpty, "a PQ build needs a non-empty corpus")
+    val sample = raw.map(normalize)
+    val dim = sample(0).length
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val sub = dim / m
     (0 until m).toArray.flatMap { s =>
       val subSample = sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-      trainSubspace(subSample, kCent, iters).zipWithIndex.map { case (c, cid) =>
+      trainSubspace(subSample, kCent).zipWithIndex.map { case (c, cid) =>
         Codebook(s, cid, c)
       }
     }
   }
 
-  /** m-int PQ code of a vector (normalizes internally) under codebooks
-    * grouped by subspace */
-  private[ml] def encode(v: Array[Float], books: Map[Int, Array[Array[Float]]],
-      m: Int, sub: Int): Array[Int] = {
-    val nv = normalize(v)
-    val code = new Array[Int](m)
-    var s = 0
-    while (s < m) {
-      code(s) = argmin(java.util.Arrays.copyOfRange(nv, s * sub, (s + 1) * sub), books(s))
-      s += 1
-    }
-    code
-  }
+  /** codebooks as `books(sub)(cid)`, the shape [[encode]] reads */
+  private[ml] def groupBooks(books: Array[Codebook]): Array[Array[Array[Float]]] =
+    books.groupBy(_.sub).toArray.sortBy(_._1).map(_._2.sortBy(_.cid).map(_.centroid))
 
-  private[ml] def groupBooks(books: Array[Codebook]): Map[Int, Array[Array[Float]]] =
-    books.groupBy(_.sub).map { case (s, bs) => s -> bs.sortBy(_.cid).map(_.centroid) }
+  /** m-int PQ code of a vector (normalizes internally) */
+  private[ml] def encode(v: Array[Float], books: Array[Array[Array[Float]]]): Array[Int] = {
+    val nv = normalize(v)
+    val sub = books(0)(0).length
+    Array.tabulate(books.length) { s =>
+      Similarity.nearest(java.util.Arrays.copyOfRange(nv, s * sub, (s + 1) * sub), books(s))
+    }
+  }
 
   /** ADC lookup table: LUT(s, c) = dot(normalized-query_sub_s, centroid(s, c)) */
   private[ml] def lutFor(books: Array[Codebook], query: Array[Float],
-      dim: Int, m: Int, kCent: Int): Array[Double] = {
+      kCent: Int): Array[Double] = {
     val nq = normalize(query)
-    val sub = dim / m
-    val lut = new Array[Double](m * kCent)
+    val lut = new Array[Double](books.length)
     books.foreach { b =>
+      val sub = b.centroid.length
       var d = 0.0; var i = 0
       while (i < sub) { d += nq(b.sub * sub + i).toDouble * b.centroid(i); i += 1 }
       lut(b.sub * kCent + b.cid) = d
@@ -124,112 +107,30 @@ object PqIndex {
   }
 
   /** asymmetric distance Σ_s LUT(s, code_s) as a pure codegen'd column over
-    * the m-int `code` array (no UDF, no float vector touched) */
-  private[ml] def adcColumn(lut: Array[Double], codeCol: Column, m: Int,
-      kCent: Int): Column = {
-    val lutLit = typedLit(lut.toSeq)
+    * the m-int `code` array (no UDF, no float vector touched); `lut` is a
+    * literal for one query or a per-row column for a query batch */
+  private[ml] def adcColumn(lut: Column, codeCol: Column, m: Int, kCent: Int): Column =
     aggregate(
       zip_with(codeCol, sequence(lit(0), lit(m - 1)),
-        (c, s) => element_at(lutLit, (s * kCent + c + 1).cast("int"))),
+        (c, s) => element_at(lut, (s * kCent + c + 1).cast("int"))),
       lit(0.0), (acc, x) => acc + x)
-  }
 
   /** Fetch floats for exactly the candidate ids and exact-cosine re-rank to
-    * the final top-k (shared by flat PQ and IVF+PQ — the candidate pass
-    * never projects floats; this is the only pass that does, over ≤ rerank
-    * rows). Below `maxIsinIds` candidates the ids are collected (bounded by
-    * the caller's rerank parameter) and pushed into the float scan as a
-    * `vec_id IN` filter — row-group pruning on the vec_id-sorted layout
-    * makes the fetch a set of point lookups; above, a broadcast semi-join
-    * keeps driver state bounded instead.
-    *
-    * Final order matches the oracle convention exactly: by the ROUNDED
-    * cosine then vec_id (DuckDB's ORDER BY cos refers to the rounded output
-    * alias — ordering by the raw value could flip row order at a round(,4)
-    * tie boundary). */
+    * the final top-k ([[Similarity.cosineTopK]]) — the candidate pass never
+    * projects floats; this is the only pass that does, over ≤ rerank rows.
+    * Up to `maxIsinIds` candidates the ids are collected and pushed into the
+    * float scan as a `vec_id IN` filter — row-group pruning on the
+    * vec_id-sorted layout makes the fetch a set of point lookups; above, a
+    * broadcast semi-join keeps driver state bounded instead. */
   private[ml] def rerankExact(vecSrc: DataFrame, topIds: DataFrame, rerank: Int,
       query: Array[Float], k: Int, maxIsinIds: Int = 4096): DataFrame = {
     val spark = vecSrc.sparkSession
     import spark.implicits._
-    val q = typedLit(query.toSeq)
     val fetched =
       if (rerank <= maxIsinIds) {
         val ids = topIds.as[Long].collect()
         vecSrc.where(col("vec_id").isin(ids.map(Long.box): _*))
       } else vecSrc.join(broadcast(topIds), Seq("vec_id"))
-    fetched.select(col("vec_id"), round(Similarity.cosine(col("vec"), q), 4).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
-  }
-
-  /** Build the PQ artifact. `trainSample` rows (lowest ids, deterministic)
-    * train the codebooks; every vector is then coded in one distributed
-    * pass with the codebooks broadcast. */
-  def build(vecs: DataFrame, idCol: String, vecCol: String, path: String,
-      m: Int = 8, kCent: Int = 16, iters: Int = 8,
-      trainSample: Int = 10000): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val data = vecs.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("vec")).as[(Long, Array[Float])]
-    val sample = data.orderBy(col("vec_id")).limit(trainSample)
-      .map { case (_, v) => normalize(v) }.collect()
-    require(sample.nonEmpty, "PQ build needs a non-empty corpus")
-    val dim = sample(0).length
-    val sub = dim / m
-    val books = trainCodebooks(sample, dim, m, kCent, iters)
-    books.toSeq.toDS().write.mode("overwrite").parquet(s"$path/codebooks")
-    val bc = spark.sparkContext.broadcast(groupBooks(books))
-    data.map { case (id, v) => (id, v, encode(v, bc.value, m, sub)) }
-      .toDF("vec_id", "vec", "code")
-      // hash repartition: repartitionByRange would sample the child, which
-      // runs the encode map twice and costs an extra job; rows stay
-      // vec_id-sorted within each file so IN-filter row-group pruning on
-      // the fetch-back path is unchanged
-      .repartition(col("vec_id")).sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    val fs = graft.index.SegmentCatalog.fileSystem(spark, path)
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val meta = org.json4s.jackson.Serialization.write(
-      Map("dim" -> dim, "m" -> m, "kCent" -> kCent))
-    val os = fs.create(new org.apache.hadoop.fs.Path(path, "pqmeta.json"), true)
-    try os.write(meta.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) = {
-    val fs = graft.index.SegmentCatalog.fileSystem(spark, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path, "pqmeta.json"))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val j = org.json4s.jackson.JsonMethods.parse(json)
-    ((j \ "dim").extract[Int], (j \ "m").extract[Int], (j \ "kCent").extract[Int])
-  }
-
-  /** The ADC candidate pass as a DataFrame: `(vec_id, adc)` ONLY — the scan
-    * must never project the raw float vectors (at 768-dim float32 that
-    * would be ~380× the IO of the m-int codes; the whole point of PQ).
-    * Exposed so plan asserts can verify the scan's ReadSchema is code-only. */
-  def candidates(spark: SparkSession, path: String, query: Array[Float],
-      excludeId: Option[Long] = None): DataFrame = {
-    val (dim, m, kCent) = readMeta(spark, path)
-    require(query.length == dim, s"query dim ${query.length} != index dim $dim")
-    import spark.implicits._
-    val books = spark.read.parquet(s"$path/codebooks").as[Codebook].collect()
-    val lut = lutFor(books, query, dim, m, kCent)
-    val codes = spark.read.parquet(s"$path/codes")
-    val base = excludeId.fold(codes)(id => codes.where(col("vec_id") =!= id))
-    base.select(col("vec_id"), adcColumn(lut, col("code"), m, kCent).as("adc"))
-  }
-
-  /** Top-k by cosine: ADC candidate pass over codes (m array lookups per
-    * row, codegen'd, floats never read) -> top-`rerank` ids -> float fetch
-    * for exactly those ids -> exact cosine re-rank.
-    * `rerank >= corpus` is exact brute force. */
-  def search(spark: SparkSession, path: String, query: Array[Float],
-      k: Int, rerank: Int, excludeId: Option[Long] = None): DataFrame = {
-    val topIds = candidates(spark, path, query, excludeId)
-      .orderBy(desc("adc"), asc("vec_id")).limit(rerank)
-      .select(col("vec_id"))
-    rerankExact(spark.read.parquet(s"$path/codes").select("vec_id", "vec"),
-      topIds, rerank, query, k)
+    Similarity.cosineTopK(fetched, "vec_id", "vec", query, k)
   }
 }

@@ -24,6 +24,18 @@ object Similarity {
     s
   }
 
+  /** index of the nearest centroid (ties → lowest index) — the one
+    * assignment kernel of IVF lists, Lloyd rounds and PQ codes */
+  private[ml] def nearest(v: Array[Float], cents: Array[Array[Float]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = l2sqLocal(v, cents(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
@@ -48,16 +60,18 @@ object Similarity {
       val d = x.cast("double") - y.cast("double"); d * d
     }), lit(0.0), (acc, v) => acc + v)
 
-  /** exact top-k by cosine to one query vector (ties: smaller id first) */
+  /** exact top-k `(vec_id, cos)` by cosine to one query vector — also the
+    * final rank of every persisted-index search. Ranks by the 4-decimal
+    * ROUNDED cosine, then vec_id: the oracles' ORDER BY cos names the
+    * rounded output alias, so ranking by the raw value would flip rows
+    * that tie after rounding. */
   def cosineTopK(vecs: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int, excludeId: Option[Long] = None): DataFrame = {
-    val q = typedLit(query.toSeq)
     val base = excludeId.fold(vecs)(id => vecs.where(col(idCol) =!= id))
     base.select(col(idCol).as("vec_id"),
-        cosine(col(vecCol), q).as("cos"))
+        round(cosine(col(vecCol), typedLit(query.toSeq)), 4).as("cos"))
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(k)
-      .select(col("vec_id"), round(col("cos"), 4).as("cos"))
   }
 
   /** deterministic pseudo-random hyperplane component for (plane j, dim i):

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Crash-atomic artifact state + delete tombstones for the persisted vector
-  * indexes ([[AnnIndex]] IVF-FLAT, [[IvfPq]]) — the parity layer with the
+  * index ([[AnnIndex]], either payload) — the parity layer with the
   * text index's SegmentCatalog (which has generation tombstones + leveled
   * compaction; before this, vectors could be appended but never retired).
   *
@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   *    delete-then-append reuses the id naturally (the re-appended row's gen
   *    is above the tombstone's), exactly like the text index's generation
   *    semantics;
-  *  - compaction/rebalance write FRESH directories and swap the state
-  *    pointer atomically: a reader never sees a half-rewritten index, and a
-  *    crash mid-compact leaves the old state fully intact (the orphan new
-  *    dirs are overwritten by the next compact).
+  *  - build/compaction/rebalance write FRESH directories, named for the
+  *    [[nextVersion]] their commit takes (never reused at a path), and swap
+  *    the state pointer atomically: a reader never sees a half-rewritten
+  *    index, and a crash mid-compact leaves the old state fully intact (the
+  *    orphan new dirs are never referenced).
   *
   * Scale shape: tombstones ride a `vec_id`-keyed aggregate + join — the
   * delete set is takedown-sized (≪ corpus), so AQE broadcasts it; the
@@ -68,12 +69,18 @@ object VecStore {
     org.json4s.jackson.JsonMethods.parse(json).extract[State]
   }
 
+  /** the version the next [[commit]] at `path` takes: versions only grow
+    * (the newest state file is never pruned), so a directory named for one
+    * has never been used */
+  def nextVersion(spark: SparkSession, path: String): Long =
+    states(spark, path).lastOption.map(_._1 + 1).getOrElse(1L)
+
   /** commit a new state: write tmp, rename to the NEXT fresh version name
     * (never pre-exists → the single rename is the commit point on any
     * FileSystem); older state files are pruned best-effort */
   def commit(spark: SparkSession, path: String, st: State): Unit = {
     val f = fs(spark, path)
-    val next = states(spark, path).lastOption.map(_._1 + 1).getOrElse(1L)
+    val next = nextVersion(spark, path)
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     val json = org.json4s.jackson.Serialization.write(st)
     val tmp = new org.apache.hadoop.fs.Path(path, s".vecstate-$next.json.tmp")

@@ -63,17 +63,17 @@ object BenchExtra {
     }
     if (fams("ivfpq")) {
       val p = s"$base/ivfpq"
-      step("ivfpq.build")(graft.ml.IvfPq.build(
+      step("ivfpq.build")(graft.ml.AnnIndex.build(
         emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", p,
-        nlist = 16, m = 8, kCent = 16))
-      step("ivfpq.append")(graft.ml.IvfPq.append(
+        nlist = 16, payload = graft.ml.AnnIndex.Pq(8, 16)))
+      step("ivfpq.append")(graft.ml.AnnIndex.append(
         emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding", p))
-      step("ivfpq.delete")(graft.ml.IvfPq.delete(spark, p,
+      step("ivfpq.delete")(graft.ml.AnnIndex.delete(spark, p,
         emb.where(col("vec_id") % 7 === 3).select("vec_id"), "vec_id"))
-      step("ivfpq.compact")(graft.ml.IvfPq.compact(spark, p))
-      step("ivfpq.search")(noop(graft.ml.IvfPq.search(spark, p,
+      step("ivfpq.compact")(graft.ml.AnnIndex.compact(spark, p))
+      step("ivfpq.search")(noop(graft.ml.AnnIndex.search(spark, p,
         Array.fill(64)(0.1f), k = 10, nprobe = 16, rerank = 512)))
-      step("ivfpq.rebalance")(graft.ml.IvfPq.rebalance(spark, p, iters = 3))
+      step("ivfpq.rebalance")(graft.ml.AnnIndex.rebalance(spark, p, iters = 3))
     }
     if (fams("dedup")) {
       step("dedup.minhash_lsh")(noop(graft.textops.Dedup.minhashLshPairs(

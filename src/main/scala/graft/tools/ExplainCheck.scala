@@ -109,11 +109,11 @@ object ExplainCheck {
     //    NO float column in the ReadSchema — the ADC pass must cost m ints
     //    per row, never dim floats
     val ivfpqDir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString + "/idx"
-    graft.ml.IvfPq.build(
+    graft.ml.AnnIndex.build(
       graft.api.Tables.table(spark, dir, "embeddings"),
-      "vec_id", "embedding", ivfpqDir, nlist = 8, m = 8, kCent = 16)
+      "vec_id", "embedding", ivfpqDir, nlist = 8, payload = graft.ml.AnnIndex.Pq(8, 16))
     val q8 = Array.tabulate(64)(i => (i % 7 - 3).toFloat)
-    val p8 = plan(graft.ml.IvfPq.candidates(spark, ivfpqDir, q8, nprobe = 3))
+    val p8 = plan(graft.ml.AnnIndex.candidates(spark, ivfpqDir, q8, nprobe = 3))
     check("ivfpq code-only pruned candidate scan",
       p8.contains("In(list_id") && !p8.contains("vec:array"), p8)
 
@@ -169,8 +169,8 @@ object ExplainCheck {
     //     must ride as one narrow column + a vec_id-keyed join — floats
     //     still never enter the candidate pass, and the list_id IN
     //     pushdown survives the join
-    graft.ml.IvfPq.delete(spark, ivfpqDir, Seq(2L, 4L))
-    val p13 = plan(graft.ml.IvfPq.candidates(spark, ivfpqDir, q8, nprobe = 3))
+    graft.ml.AnnIndex.delete(spark, ivfpqDir, Seq(2L, 4L))
+    val p13 = plan(graft.ml.AnnIndex.candidates(spark, ivfpqDir, q8, nprobe = 3))
     check("ivfpq tombstoned candidate scan stays code-only",
       p13.contains("In(list_id") && !p13.contains("vec:array") &&
         p13.contains("dgen"), p13)

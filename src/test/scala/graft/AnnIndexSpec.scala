@@ -99,8 +99,15 @@ class AnnIndexSpec extends AnyFunSuite {
         k = 5, nprobe = 32)
       .orderBy($"qid", $"rank")
       .select($"qid", $"vec_id").as[(Long, Long)].collect().toSeq
+    // the batch window ranks by the RAW cosine, like its oracle
+    // (annIvfBatchSql); cosineTopK ranks by the rounded one
+    def bruteRaw(q: Array[Float], k: Int, exclude: Long): Seq[Long] =
+      df.where($"vec_id" =!= exclude)
+        .select($"vec_id", Similarity.cosine($"embedding", typedLit(q.toSeq)).as("cos"))
+        .orderBy(desc("cos"), asc("vec_id")).limit(k)
+        .select($"vec_id").as[Long].collect().toSeq
     val want = (0L until 4L).flatMap { qid =>
-      bruteTop(corpus(qid.toInt)._2, 5, qid).map(qid -> _)
+      bruteRaw(corpus(qid.toInt)._2, 5, qid).map(qid -> _)
     }
     assert(got == want)
   }
@@ -198,6 +205,58 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.85, s"post-rebalance nprobe=4/16 recall $mean < 0.85 ($recalls)")
+  }
+
+  test("a rebuild at a path that had deletes starts with no tombstones (both payloads)") {
+    val small = df.where($"vec_id" < 50)
+    val q = corpus(5)._2
+    for (payload <- Seq(AnnIndex.Flat, AnnIndex.Pq(8, 16)); compact <- Seq(false, true)) {
+      val p = java.nio.file.Files.createTempDirectory("graft-ivf-rebuild").toString + "/idx"
+      def top(): Seq[Long] = AnnIndex.search(spark, p, q, k = 2, nprobe = 4, rerank = 50)
+        .select($"vec_id").as[Long].collect().toSeq
+      AnnIndex.build(small, "vec_id", "embedding", p, nlist = 4, payload = payload)
+      val fresh = top()
+      assert(fresh.head == 5L)
+      AnnIndex.delete(spark, p, Seq(5L))
+      if (compact) AnnIndex.compact(spark, p)
+      AnnIndex.build(small, "vec_id", "embedding", p, nlist = 4, payload = payload)
+      assert(top() == fresh, s"$payload, compact between: $compact")
+    }
+  }
+
+  test("repeated delete + compact cycles: survivors kept, a deleted id can be re-appended") {
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-recompact").toString + "/idx"
+    AnnIndex.build(df.where($"vec_id" < 200), "vec_id", "embedding", p, nlist = 8)
+    for (dead <- Seq(3L, 7L, 11L)) {
+      AnnIndex.delete(spark, p, Seq(dead))
+      AnnIndex.compact(spark, p)
+    }
+    val st = graft.ml.VecStore.read(spark, p)
+    assert(spark.read.parquet(s"$p/${st.lists}").count() == 197)
+    val got = AnnIndex.search(spark, p, corpus(7)._2, k = 200, nprobe = 8)
+      .select($"vec_id").as[Long].collect().toSet
+    assert(got == (0L until 200L).toSet -- Set(3L, 7L, 11L))
+    // each compaction starts an empty deletes dir: an old tombstone must
+    // not outrank the re-appended row
+    AnnIndex.append(Seq((7L, vec(19, 77))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", p)
+    val hit = AnnIndex.search(spark, p, vec(19, 77), k = 1, nprobe = 8)
+      .select($"vec_id").as[Long].collect().toSeq
+    assert(hit == Seq(7L), s"re-appended id must be the top hit: $hit")
+  }
+
+  test("IVF-FLAT single-query search breaks a rounded-cosine tie by vec_id, like its oracle") {
+    // cos to q: id 1 ≈ 0.995; ids 9 (0.81254) and 3 (0.81251) tie at 4
+    // decimals for the k = 2 slot; the raw value would pick 9
+    def at(c: Double) = Seq(c.toFloat, math.sqrt(1 - c * c).toFloat)
+    val vs = Seq(1L -> at(0.995), 9L -> at(0.81254), 3L -> at(0.81251), 4L -> at(0.5))
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-tie").toString + "/idx"
+    AnnIndex.build(vs.toDF("vec_id", "embedding"), "vec_id", "embedding", p, nlist = 2)
+    val got = AnnIndex.search(spark, p, Array(1f, 0f), k = 2, nprobe = 2)
+      .select($"vec_id", $"cos").as[(Long, Double)].collect().toSeq
+    assert(got == Seq(1L -> 0.995, 3L -> 0.8125))
+    assert(Similarity.cosineTopK(vs.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Array(1f, 0f), 2).as[(Long, Double)].collect().toSeq == got)
   }
 
   test("multi-probe recall >= single-probe recall, both subsets of exact") {

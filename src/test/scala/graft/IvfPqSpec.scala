@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.IvfPq
+import graft.ml.AnnIndex
+import graft.ml.AnnIndex.Pq
 
 /** IVF+PQ composed index: the nprobe=nlist ∧ rerank=corpus path must be
   * EXACT (the gate's trick), the pruned ADC pass must carry real recall on
@@ -29,7 +30,7 @@ class IvfPqSpec extends AnyFunSuite {
   private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
   private lazy val built: String = {
     val df = (0L until n).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    IvfPq.build(df, "vec_id", "embedding", s"$tmp/ivfpq", nlist = 12, m = 8, kCent = 16)
+    AnnIndex.build(df, "vec_id", "embedding", s"$tmp/ivfpq", nlist = 12, payload = Pq(8, 16))
     s"$tmp/ivfpq"
   }
 
@@ -52,7 +53,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("nprobe = nlist and rerank = corpus degrades to exact brute force") {
     val q = vec(7L)
-    val got = IvfPq.search(spark, built, q, k = 10, nprobe = 12, rerank = n,
+    val got = AnnIndex.search(spark, built, q, k = 10, nprobe = 12, rerank = n,
       excludeId = Some(7L)).collect().map(_.getLong(0)).toSeq
     assert(got == bruteTop(q, 10, 7L))
   }
@@ -60,11 +61,11 @@ class IvfPqSpec extends AnyFunSuite {
   test("incremental append with frozen model stays exact at full probe + rerank") {
     val p = s"$tmp/ivfpq-append"
     val df = (0L until n).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    IvfPq.build(df.where($"vec_id" % 2 === 0), "vec_id", "embedding", p,
-      nlist = 12, m = 8, kCent = 16)
-    IvfPq.append(df.where($"vec_id" % 2 === 1), "vec_id", "embedding", p)
+    AnnIndex.build(df.where($"vec_id" % 2 === 0), "vec_id", "embedding", p,
+      nlist = 12, payload = Pq(8, 16))
+    AnnIndex.append(df.where($"vec_id" % 2 === 1), "vec_id", "embedding", p)
     val q = vec(7L)
-    val got = IvfPq.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
+    val got = AnnIndex.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
       excludeId = Some(7L)).collect().map(_.getLong(0)).toSeq
     assert(got == bruteTop(q, 10, 7L))
   }
@@ -74,7 +75,7 @@ class IvfPqSpec extends AnyFunSuite {
     for (qid <- Seq(3L, 14L, 25L, 101L)) {
       val q = vec(qid)
       val truth = bruteTop(q, 10, qid).toSet
-      val got = IvfPq.search(spark, built, q, k = 10, nprobe = 4, rerank = 40,
+      val got = AnnIndex.search(spark, built, q, k = 10, nprobe = 4, rerank = 40,
         excludeId = Some(qid)).collect().map(_.getLong(0)).toSet
       hits += got.intersect(truth).size
       total += truth.size
@@ -87,7 +88,7 @@ class IvfPqSpec extends AnyFunSuite {
     val lists = spark.read.parquet(s"$built/lists")
     assert(lists.columns.toSeq == Seq("list_id", "vec_id", "code", "gen"),
       "the IVF+PQ lists table must not carry float vectors")
-    val plan = IvfPq.candidates(spark, built, vec(7L), nprobe = 3)
+    val plan = AnnIndex.candidates(spark, built, vec(7L), nprobe = 3)
       .queryExecution.executedPlan.toString
     assert(plan.contains("In(list_id"), s"list_id IN not pushed down:\n$plan")
     assert(!plan.contains("vec:array"), s"candidate scan projects floats:\n$plan")
@@ -103,7 +104,7 @@ class IvfPqSpec extends AnyFunSuite {
         .map(id => (cos(q, vec(id)), id))
         .sortBy { case (c, id) => (-c, id) }.take(k).map(_._2)
     val qdf = Seq(3L, 14L, 101L).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    val batch = IvfPq.searchBatch(spark, built, qdf, "vec_id", "embedding",
+    val batch = AnnIndex.searchBatch(spark, built, qdf, "vec_id", "embedding",
         k = 5, nprobe = 12, rerank = n)
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rows) => qid -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
@@ -114,8 +115,8 @@ class IvfPqSpec extends AnyFunSuite {
   test("delete + id reuse: stale floats never resolve; compact preserves results") {
     val p = s"$tmp/ivfpq-delete"
     val df = (0L until n).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    IvfPq.build(df, "vec_id", "embedding", p, nlist = 12, m = 8, kCent = 16)
-    IvfPq.delete(spark, p, (0L until n.toLong).filter(_ % 7 == 3))
+    AnnIndex.build(df, "vec_id", "embedding", p, nlist = 12, payload = Pq(8, 16))
+    AnnIndex.delete(spark, p, (0L until n.toLong).filter(_ % 7 == 3))
     def survivorsTop(q: Array[Float], k: Int, exclude: Long): Seq[Long] =
       (0L until n).filter(id => id != exclude && id % 7 != 3)
         .map { id =>
@@ -124,28 +125,28 @@ class IvfPqSpec extends AnyFunSuite {
           (r, id)
         }.sortBy { case (c, id) => (-c, id) }.take(k).map(_._2)
     val q = vec(8L)
-    val got = IvfPq.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
+    val got = AnnIndex.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
       excludeId = Some(8L)).collect().map(_.getLong(0)).toSeq
     assert(got == survivorsTop(q, 10, 8L))
     assert(got.forall(_ % 7 != 3))
     // id reuse: re-append id 10 (deleted above) with cluster-9 geometry —
     // the fetch-back must resolve the FRESH floats, not the tombstoned ones
     val fresh = vec(9L * 100 + 901L)
-    IvfPq.append(Seq((10L, fresh.toSeq)).toDF("vec_id", "embedding"),
+    AnnIndex.append(Seq((10L, fresh.toSeq)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", p)
-    val hit = IvfPq.search(spark, p, fresh, k = 1, nprobe = 12, rerank = n)
+    val hit = AnnIndex.search(spark, p, fresh, k = 1, nprobe = 12, rerank = n)
       .collect().map(_.getLong(0)).toSeq
     assert(hit == Seq(10L), s"re-appended id must top its own query: $hit")
     val staleQ = vec(10L)
-    val stale = IvfPq.search(spark, p, staleQ, k = 3, nprobe = 12, rerank = n)
+    val stale = AnnIndex.search(spark, p, staleQ, k = 3, nprobe = 12, rerank = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(!stale.exists { case (id, c) => id == 10L && c > 0.99 },
       s"stale floats resolved for the reused id: $stale")
     // compact folds tombstones; results byte-identical before/after
-    val before = IvfPq.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
+    val before = AnnIndex.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
       excludeId = Some(8L)).collect().toSeq
-    IvfPq.compact(spark, p)
-    val after = IvfPq.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
+    AnnIndex.compact(spark, p)
+    val after = AnnIndex.search(spark, p, q, k = 10, nprobe = 12, rerank = n,
       excludeId = Some(8L)).collect().toSeq
     assert(after == before)
     val st = graft.ml.VecStore.read(spark, p)
@@ -157,17 +158,16 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("rebalance: skewed appends re-listed, codebooks kept, exactness preserved") {
-    import graft.ml.AnnIndex
     val p = s"$tmp/ivfpq-rebalance"
     val df = (0L until n).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    IvfPq.build(df, "vec_id", "embedding", p, nlist = 12, m = 8, kCent = 16)
+    AnnIndex.build(df, "vec_id", "embedding", p, nlist = 12, payload = Pq(8, 16))
     // flood one region: 600 fresh cluster-3 vectors pile into few lists
     val flood = (1000L until 1600L).map(id => (id, vec(3L + (id % 7) * 70).toSeq))
-    IvfPq.append(flood.toDF("vec_id", "embedding"), "vec_id", "embedding", p)
-    IvfPq.delete(spark, p, (0L until n.toLong).filter(_ % 9 == 4))
+    AnnIndex.append(flood.toDF("vec_id", "embedding"), "vec_id", "embedding", p)
+    AnnIndex.delete(spark, p, (0L until n.toLong).filter(_ % 9 == 4))
     val skewed = AnnIndex.imbalance(spark, p)
     assert(skewed > 2.0, s"flood should skew the code lists: $skewed")
-    IvfPq.rebalance(spark, p, iters = 3)
+    AnnIndex.rebalance(spark, p, iters = 3)
     val balanced = AnnIndex.imbalance(spark, p)
     assert(balanced < skewed / 1.5, s"imbalance: $skewed -> $balanced")
     // full probe + full rerank stays exact over base+flood survivors
@@ -179,7 +179,7 @@ class IvfPqSpec extends AnyFunSuite {
           (BigDecimal(cos(q, v)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, id)
         }.sortBy { case (c, id) => (-c, id) }.take(k).map(_._2)
     val q = vec(5L)
-    val got = IvfPq.search(spark, p, q, k = 10, nprobe = 12,
+    val got = AnnIndex.search(spark, p, q, k = 10, nprobe = 12,
       rerank = n + flood.size).collect().map(_.getLong(0)).toSeq
     assert(got == top(q, 10))
   }
@@ -188,7 +188,7 @@ class IvfPqSpec extends AnyFunSuite {
     // small rerank → driver collects ≤ rerank ids and the float fetch is a
     // pushed-down vec_id IN over the vec_id-sorted vecs table
     val q = vec(3L)
-    val df = IvfPq.search(spark, built, q, k = 5, nprobe = 12, rerank = 20,
+    val df = AnnIndex.search(spark, built, q, k = 5, nprobe = 12, rerank = 20,
       excludeId = Some(3L))
     val rows = df.collect()
     assert(rows.length == 5)

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.PqIndex
+import graft.ml.AnnIndex
+import graft.ml.AnnIndex.Pq
 
 /** PQ index: the full-rerank path must be EXACT (the gate's trick), the
   * ADC pass must carry real recall on clusterable data, and the artifact
@@ -27,7 +28,7 @@ class PqIndexSpec extends AnyFunSuite {
   private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-pq").toString
   private lazy val built: String = {
     val df = (0L until n).map(id => (id, vec(id).toSeq)).toDF("vec_id", "embedding")
-    PqIndex.build(df, "vec_id", "embedding", s"$tmp/pq", m = 8, kCent = 16)
+    AnnIndex.build(df, "vec_id", "embedding", s"$tmp/pq", nlist = 1, payload = Pq(8, 16))
     s"$tmp/pq"
   }
 
@@ -50,7 +51,7 @@ class PqIndexSpec extends AnyFunSuite {
 
   test("rerank >= corpus degrades to exact brute force") {
     val q = vec(7L)
-    val got = PqIndex.search(spark, built, q, k = 10, rerank = n, excludeId = Some(7L))
+    val got = AnnIndex.search(spark, built, q, k = 10, nprobe = 1, rerank = n, excludeId = Some(7L))
       .collect().map(_.getLong(0)).toSeq
     assert(got == bruteTop(q, 10, 7L))
   }
@@ -60,7 +61,7 @@ class PqIndexSpec extends AnyFunSuite {
     for (qid <- Seq(3L, 14L, 25L, 101L)) {
       val q = vec(qid)
       val truth = bruteTop(q, 10, qid).toSet
-      val got = PqIndex.search(spark, built, q, k = 10, rerank = 40,
+      val got = AnnIndex.search(spark, built, q, k = 10, nprobe = 1, rerank = 40,
         excludeId = Some(qid)).collect().map(_.getLong(0)).toSet
       hits += got.intersect(truth).size
       total += truth.size
@@ -70,10 +71,11 @@ class PqIndexSpec extends AnyFunSuite {
   }
 
   test("the artifact compresses: m ints per vector, codebooks tiny") {
-    val codes = spark.read.parquet(s"$built/codes")
-    val row = codes.select("code", "vec").head()
-    assert(row.getSeq[Int](0).length == 8, "8 subspace codes per vector")
-    assert(row.getSeq[Float](1).length == dim)
+    val codes = spark.read.parquet(s"$built/lists")
+    assert(codes.select("code").head().getSeq[Int](0).length == 8,
+      "8 subspace codes per vector")
+    assert(spark.read.parquet(s"$built/vecs").select("vec").head()
+      .getSeq[Float](0).length == dim)
     assert(spark.read.parquet(s"$built/codebooks").count() == 8 * 16)
     // every code addresses a real centroid
     import org.apache.spark.sql.functions._
