@@ -36,21 +36,16 @@ final case class GraftIndex(spark: SparkSession, path: String,
       SegmentCatalog.snapshotVersion(SegmentCatalog.fileSystem(spark, path), path)
   }
 
-  /** segment dirs: "." is the base build; incremental appends add seg-N
-    * dirs (append-only docIds keep segment doc ranges disjoint) */
-  private def segDirs: Seq[String] = {
-    val segs = if (meta.segments.isEmpty) Seq(".") else meta.segments
-    // base-build manifests list table names; treat those as base-only
-    if (segs.exists(s => s == "postings" || s == "terms" || s == "docs")) Seq(".")
-    else segs
-  }
+  /** `table` of each data segment: "." is the base build; incremental
+    * appends add seg-N dirs (append-only docIds keep segment doc ranges
+    * disjoint) */
   private def tablePaths(table: String): Seq[String] =
-    segDirs.map(s => if (s == ".") s"$path/$table" else s"$path/$s/$table")
+    meta.dataSegments.map(s => s"${SegmentCatalog.segmentDir(path, s)}/$table")
 
   /** true when the snapshot reads exactly one segment — consumers may then
     * rely on a (term, doc) posting entry appearing at most once globally
     * (sectioned payloads still repeat a doc per sid) */
-  def isSingleSegment: Boolean = segDirs.size == 1
+  def isSingleSegment: Boolean = meta.dataSegments.size == 1
 
   /** every directory this snapshot reads — existence-checked by
     * GraftIndex.atVersion so an expired snapshot fails at open time */
@@ -723,7 +718,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * manifests only: O(segment files) of driver-sequential metadata IO) */
   @transient private lazy val segDocRanges: Seq[Option[(Long, Long, Long)]] = {
     val ss = meta.segStats
-    if (ss.nonEmpty && ss.map(_.name) == segDirs)
+    if (ss.nonEmpty && ss.map(_.name) == meta.dataSegments)
       ss.map(s => Some((s.minDoc, s.maxDoc, s.nDocs)))
     else tablePaths("docs").map(footerDocRange)
   }

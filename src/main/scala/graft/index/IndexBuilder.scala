@@ -29,6 +29,11 @@ import scala.collection.mutable
   *   stage 3  doc stats: map-only tokenize-count pass
   *   stage 4  manifest commit (atomic rename)
   *
+  * This object owns the text front (the map side of stage 1, the
+  * tokenize-count pass of stage 3) and the run merge. The shuffle, the
+  * stage writes and the stats behind the commit are SegmentWriter's, the
+  * one writer that token-column builds, appends and compactions share.
+  *
   * Skew: `bucket = docId >> bucketBits` (auto-sized from corpus size) salts
   * head terms — a bigram lexicon over web text is extremely Zipf-skewed, so
   * without the salt one reducer would own all of "th". docId order is
@@ -341,37 +346,6 @@ object IndexBuilder {
       def next(): PostingBlockRow = { fill(); out.dequeue() }
     }
 
-  /** Stages 2/2b shared by the text and token-column builders: the term
-    * dictionary (df/total_tf/max_tf, term-sorted for prefix row-group
-    * pruning) and the reversed-term dictionary (rterm-sorted — the role of
-    * groonga's reversed-key patricia trie, lib/ii.cpp:10989 suffix
-    * cursor), both derived from a committed postings stage. ONE definition
-    * so the two build fronts can never drift. */
-  private[graft] def writeTermStages(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      outPath: String,
-      shufflePartitions: Int): Unit = {
-    val termsPath = s"$outPath/terms"
-    SegmentCatalog.writeStageIfAbsent(fs, termsPath) {
-      spark.read.parquet(s"$outPath/postings")
-        .groupBy(col("term"))
-        .agg(sum(col("cnt")).as("df"), sum(col("tf_sum")).as("total_tf"),
-          max(col("max_tf")).cast("int").as("max_tf"))
-        .repartition(math.max(1, shufflePartitions / 4))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").parquet(termsPath)
-    }
-    val termsRevPath = s"$outPath/terms_rev"
-    SegmentCatalog.writeStageIfAbsent(fs, termsRevPath) {
-      spark.read.parquet(termsPath)
-        .select(reverse(col("term")).as("rterm"), col("term"), col("df"))
-        .repartition(math.max(1, shufflePartitions / 4))
-        .sortWithinPartitions(col("rterm"))
-        .write.mode("overwrite").parquet(termsRevPath)
-    }
-  }
-
   /** Build the index from `docs` (must expose a unique long id + text) and
     * commit it under `outPath`. Returns the opened index. */
   def build(
@@ -397,10 +371,7 @@ object IndexBuilder {
       textCols: Seq[String],
       outPath: String,
       cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    import spark.implicits._
     require(textCols.nonEmpty, "at least one text column")
-    val sectioned = textCols.length > 1
-
     val fs = SegmentCatalog.fileSystem(spark, outPath)
     if (SegmentCatalog.isCommitted(fs, outPath)) {
       // resume short-circuit. A committed v1 SECTIONED artifact is rebuilt
@@ -412,14 +383,10 @@ object IndexBuilder {
       // max_gtf (= max_tf sid-less, sound; -1 sectioned, WAND off as
       // before) and compact()/compactPartial-of-everything migrate them.
       val m = SegmentCatalog.readMeta(fs, outPath)
-      // exact match on the two base-only manifest shapes — an exists()
-      // check would misclassify a mutated index whose appended segment
-      // happened to be named like a table (appendSegment also rejects
-      // those names now, but don't rely on it for a DELETE decision)
-      val baseOnly = m.deleteSegments.isEmpty &&
-        (m.segments.isEmpty ||
-          m.segments == Seq(".") ||
-          m.segments.toSet.subsetOf(Set("postings", "terms", "docs")))
+      // dataSegments reads only an all-table-names list (or ".") as the
+      // root base alone, so a mutated index whose appended segment is
+      // named like a table never qualifies for this DELETE
+      val baseOnly = m.deleteSegments.isEmpty && m.dataSegments == Seq(".")
       if (m.formatVersion >= CurrentFormatVersion || m.sections.isEmpty || !baseOnly)
         return GraftIndex(spark, outPath)
       // DESTRUCTIVE format migration: the committed v1 artifact is deleted
@@ -435,116 +402,71 @@ object IndexBuilder {
       fs.delete(new org.apache.hadoop.fs.Path(outPath), true)
     }
 
-    val shufflePartitions =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    // per-stage lineage (task counts, skew, shuffle/spill volume) rides
+    // with the artifact as build_metrics.json
+    val lineage = new BuildListener
+    spark.sparkContext.addSparkListener(lineage)
+    val idx = try {
+      val (bucketBits, counters) = writeTextSegment(spark, docs, idCol, textCols, outPath, cfg)
+      SegmentWriter.commitBase(spark, outPath, cfg, bucketBits, textCols, counters)
+    } finally spark.sparkContext.removeSparkListener(lineage)
+    try {
+      val os = fs.create(new org.apache.hadoop.fs.Path(outPath, "build_metrics.json"), true)
+      try os.write(lineage.reportJson().getBytes("UTF-8")) finally os.close()
+    } catch { case e: Exception =>
+      System.err.println(s"[graft-build] build_metrics.json not written: ${e.getMessage}")
+    }
+    idx
+  }
 
+  /** The text front of every build and append: tokenize `textCols` of
+    * `docs` into posting runs (stage 1) and doc lengths (stage 3, a
+    * map-only tokenize-count pass) and write them as the segment at `dir`.
+    * Returns the segment's bucketBits and its docsRead/tokens/spilledRuns
+    * counters (zero for stages a resumed write skipped). */
+  private[graft] def writeTextSegment(
+      spark: SparkSession,
+      docs: DataFrame,
+      idCol: String,
+      textCols: Seq[String],
+      dir: String,
+      cfg: IndexConfig): (Int, Map[String, String]) = {
+    import spark.implicits._
+    val sectioned = textCols.length > 1
     val docsAcc = spark.sparkContext.longAccumulator("graft.index.docs")
     val tokensAcc = spark.sparkContext.longAccumulator("graft.index.tokens")
     val runsAcc = spark.sparkContext.longAccumulator("graft.index.runs")
 
-    // per-stage lineage (task counts, skew, shuffle/spill volume) rides
-    // with the artifact: written as build_metrics.json before the commit
-    val lineage = new BuildListener
-    spark.sparkContext.addSparkListener(lineage)
-
-    def timed[A](stage: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[graft-build] $stage: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
     // salt granularity needs the corpus size (hint, or a cheap parquet
     // row-count metadata job)
     val nInputDocs = if (cfg.nDocsHint > 0) cfg.nDocsHint else docs.count()
-    val bucketBits = cfg.resolveBucketBits(nInputDocs, shufflePartitions)
+    val bucketBits = cfg.resolveBucketBits(nInputDocs, cfg.shufflePartitions(spark))
 
     val rawDocs = docs
       .select(col(idCol).cast("long"),
         array(textCols.map(c => col(c).cast("string")): _*))
       .as[(Long, Array[String])]
-
-    // ---- stage 1: postings (tokenize + spill runs fused into the shuffle) ----
-    val postingsPath = s"$outPath/postings"
-    SegmentCatalog.writeStageIfAbsent(fs, postingsPath) {
-      timed("postings") {
-        val counted = rawDocs.mapPartitions { it => it.map { d => docsAcc.add(1L); d } }
-        tokenizeToRuns(counted, cfg, bucketBits, sectioned, Some(tokensAcc), Some(runsAcc))
-          .repartition(shufflePartitions, $"term", $"bucket")
-          .sortWithinPartitions($"term", $"bucket", $"min_doc")
-          .mapPartitions(mergeRuns(cfg, sectioned))
-          .write.mode("overwrite").parquet(postingsPath)
+    val counted = rawDocs.mapPartitions { it => it.map { d => docsAcc.add(1L); d } }
+    val tokenizerName = cfg.tokenizer
+    val lengths = rawDocs.mapPartitions { it =>
+      val tokenizer = Analyzers.byName(tokenizerName)
+      it.flatMap { case (docId, texts) =>
+        var dl = 0
+        var s = 0
+        while (s < texts.length) {
+          val t = texts(s)
+          dl += tokenizer.countTokens(if (t == null) "" else t)
+          s += 1
+        }
+        if (dl == 0) None else Some((docId, dl))
       }
-    }
-
-    // ---- stages 2/2b: term stats + reversed-term dictionary ----
-    timed("terms+terms_rev") {
-      writeTermStages(spark, fs, outPath, shufflePartitions)
-    }
-
-    // ---- stage 3: doc stats (map-only tokenize-count pass) ----
-    val docsPath = s"$outPath/docs"
-    SegmentCatalog.writeStageIfAbsent(fs, docsPath) {
-      timed("docs") {
-        val tokenizerName = cfg.tokenizer
-        rawDocs.mapPartitions { it =>
-          val tokenizer = Analyzers.byName(tokenizerName)
-          it.flatMap { case (docId, texts) =>
-            var dl = 0
-            var s = 0
-            while (s < texts.length) {
-              val t = texts(s)
-              dl += tokenizer.countTokens(if (t == null) "" else t)
-              s += 1
-            }
-            if (dl == 0) None else Some((docId, dl))
-          }
-        }.toDF("doc_id", "dl")
-          .write.mode("overwrite").parquet(docsPath)
-      }
-    }
-
-    // ---- stage 4: manifest (atomic commit) ----
-    val docStats = spark.read.parquet(docsPath)
-      .agg(count(lit(1)), avg($"dl"),
-        coalesce(min($"doc_id"), lit(Long.MaxValue)),
-        coalesce(max($"doc_id"), lit(Long.MinValue)))
-      .as[(Long, Double, Long, Long)].head()
-    val blockStats = spark.read.parquet(postingsPath)
-      .agg(coalesce(sum($"cnt"), lit(0L)), count(lit(1)),
-        coalesce(sum($"payload_len"), lit(0L)))
-      .as[(Long, Long, Long)].head()
-    val meta = IndexMeta(
-      formatVersion = CurrentFormatVersion,
-      tokenizer = cfg.tokenizer,
-      withPositions = cfg.withPositions,
-      blockSize = cfg.blockSize,
-      bucketBits = bucketBits,
-      nDocs = docStats._1,
-      avgdl = docStats._2,
-      totalPostings = blockStats._1,
-      totalPayloadBytes = blockStats._3,
-      segments = Seq("postings", "terms", "docs"),
-      sections = if (sectioned) textCols else Nil,
-      segStats = Seq(SegStats(".", docStats._1, docStats._3, docStats._4,
-        blockStats._1, blockStats._3)))
-    spark.sparkContext.removeSparkListener(lineage)
-    try {
-      val os = fs.create(new org.apache.hadoop.fs.Path(outPath, "build_metrics.json"), true)
-      os.write(lineage.reportJson().getBytes("UTF-8"))
-      os.close()
-    } catch { case e: Exception =>
-      System.err.println(s"[graft-build] build_metrics.json not written: ${e.getMessage}")
-    }
-    SegmentCatalog.commit(fs, outPath, meta,
-      Map(
-        "docsRead" -> docsAcc.value.toString,
-        "tokens" -> tokensAcc.value.toString,
-        "spilledRuns" -> runsAcc.value.toString,
-        "postings" -> blockStats._1.toString,
-        "blocks" -> blockStats._2.toString,
-        "payloadBytes" -> blockStats._3.toString))
-    GraftIndex(spark, outPath)
+    }.toDF("doc_id", "dl")
+    SegmentWriter.write(spark, dir,
+      tokenizeToRuns(counted, cfg, bucketBits, sectioned, Some(tokensAcc), Some(runsAcc)),
+      lengths, cfg, sectioned)
+    (bucketBits, Map(
+      "docsRead" -> docsAcc.value.toString,
+      "tokens" -> tokensAcc.value.toString,
+      "spilledRuns" -> runsAcc.value.toString))
   }
 }

@@ -71,6 +71,17 @@ object SegmentCatalog {
   def snapshotVersion(fs: FileSystem, outPath: String): String =
     manifests(fs, outPath).lastOption.map(_._2.getName).getOrElse("uncommitted")
 
+  /** directory of data segment `seg` ("." = the root base) */
+  def segmentDir(outPath: String, seg: String): String =
+    if (seg == ".") outPath else s"$outPath/$seg"
+
+  /** delete data segment `seg`: the root base's tables, or the seg dir */
+  def dropSegment(fs: FileSystem, outPath: String, seg: String): Unit =
+    if (seg == ".")
+      Seq("postings", "terms", "terms_rev", "docs")
+        .foreach(t => fs.delete(new Path(outPath, t), true))
+    else fs.delete(new Path(outPath, seg), true)
+
   def stageComplete(fs: FileSystem, stagePath: String): Boolean =
     fs.exists(new Path(stagePath, "_SUCCESS"))
 

@@ -86,9 +86,7 @@ object TokenColumn {
     val fs = SegmentCatalog.fileSystem(spark, outPath)
     if (SegmentCatalog.isCommitted(fs, outPath)) return GraftIndex(spark, outPath)
 
-    val shufflePartitions =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val shufflePartitions = cfg.shufflePartitions(spark)
 
     val tokens = spark.read.parquet(s"$tokenPath/tokens")
     // salt sizing needs only the corpus magnitude: the (doc,section) row
@@ -107,82 +105,42 @@ object TokenColumn {
       .as[(Long, Int, Seq[String], Seq[Int])]
 
     val nSections = math.max(1, sections.length)
-    val postingsPath = s"$outPath/postings"
-    SegmentCatalog.writeStageIfAbsent(fs, postingsPath) {
-      analyzed.mapPartitions { it =>
-        val byDoc = new Iterator[(Long, Array[Array[Token]])] {
-          private val in = it.buffered
-          def hasNext: Boolean = in.hasNext
-          def next(): (Long, Array[Array[Token]]) = {
-            val docId = in.head._1
-            val secs = new Array[Array[Token]](nSections)
-            while (in.hasNext && in.head._1 == docId) {
-              val (_, sid, terms, poss) = in.next()
-              // fail fast on a corrupt/mismatched cache row — a clamp would
-              // silently assign it to the last section and overwrite
-              // whatever was already there
-              require(sid >= 1 && sid <= nSections,
-                s"token-cache row (doc_id=$docId, sid=$sid) out of range for " +
-                  s"$nSections section(s) — cache does not match the index schema")
-              val toks = new Array[Token](terms.length)
-              var i = 0
-              while (i < toks.length) { toks(i) = Token(terms(i), poss(i), 0); i += 1 }
-              secs(sid - 1) = toks
-            }
-            var s = 0
-            while (s < nSections) {
-              if (secs(s) == null) secs(s) = Array.empty[Token]
-              s += 1
-            }
-            (docId, secs)
+    val runs = analyzed.mapPartitions { it =>
+      val byDoc = new Iterator[(Long, Array[Array[Token]])] {
+        private val in = it.buffered
+        def hasNext: Boolean = in.hasNext
+        def next(): (Long, Array[Array[Token]]) = {
+          val docId = in.head._1
+          val secs = new Array[Array[Token]](nSections)
+          while (in.hasNext && in.head._1 == docId) {
+            val (_, sid, terms, poss) = in.next()
+            // fail fast on a corrupt/mismatched cache row — a clamp would
+            // silently assign it to the last section and overwrite
+            // whatever was already there
+            require(sid >= 1 && sid <= nSections,
+              s"token-cache row (doc_id=$docId, sid=$sid) out of range for " +
+                s"$nSections section(s) — cache does not match the index schema")
+            val toks = new Array[Token](terms.length)
+            var i = 0
+            while (i < toks.length) { toks(i) = Token(terms(i), poss(i), 0); i += 1 }
+            secs(sid - 1) = toks
           }
+          var s = 0
+          while (s < nSections) {
+            if (secs(s) == null) secs(s) = Array.empty[Token]
+            s += 1
+          }
+          (docId, secs)
         }
-        IndexBuilder.runsFromAnalyzed(byDoc, buildCfg, bucketBits, sectioned, None, None)
       }
-        .repartition(shufflePartitions, $"term", $"bucket")
-        .sortWithinPartitions($"term", $"bucket", $"min_doc")
-        .mapPartitions(IndexBuilder.mergeRuns(buildCfg, sectioned))
-        .write.mode("overwrite").parquet(postingsPath)
+      IndexBuilder.runsFromAnalyzed(byDoc, buildCfg, bucketBits, sectioned, None, None)
     }
-
-    IndexBuilder.writeTermStages(spark, fs, outPath, shufflePartitions)
-
     // doc stats straight from the token table — dl = Σ section token counts
-    val docsPath = s"$outPath/docs"
-    SegmentCatalog.writeStageIfAbsent(fs, docsPath) {
-      tokens.groupBy($"doc_id")
-        .agg(sum(size($"terms")).cast("int").as("dl"))
-        .where($"dl" > 0)
-        .write.mode("overwrite").parquet(docsPath)
-    }
-
-    val docStats = spark.read.parquet(docsPath)
-      .agg(count(lit(1)), coalesce(avg($"dl"), lit(0.0)),
-        coalesce(min($"doc_id"), lit(Long.MaxValue)),
-        coalesce(max($"doc_id"), lit(Long.MinValue)))
-      .as[(Long, Double, Long, Long)].head()
-    val blockStats = spark.read.parquet(postingsPath)
-      .agg(coalesce(sum($"cnt"), lit(0L)), count(lit(1)),
-        coalesce(sum($"payload_len"), lit(0L)))
-      .as[(Long, Long, Long)].head()
-    val meta = IndexMeta(
-      formatVersion = IndexBuilder.CurrentFormatVersion,
-      tokenizer = tokenizerName,
-      withPositions = buildCfg.withPositions,
-      blockSize = buildCfg.blockSize,
-      bucketBits = bucketBits,
-      nDocs = docStats._1,
-      avgdl = docStats._2,
-      totalPostings = blockStats._1,
-      totalPayloadBytes = blockStats._3,
-      segments = Seq("postings", "terms", "docs"),
-      sections = if (sectioned) sections else Nil,
-      segStats = Seq(SegStats(".", docStats._1, docStats._3, docStats._4,
-        blockStats._1, blockStats._3)))
-    SegmentCatalog.commit(fs, outPath, meta,
-      Map("builtFromTokenColumn" -> tokenPath,
-        "postings" -> blockStats._1.toString,
-        "blocks" -> blockStats._2.toString))
-    GraftIndex(spark, outPath)
+    val lengths = tokens.groupBy($"doc_id")
+      .agg(sum(size($"terms")).cast("int").as("dl"))
+      .where($"dl" > 0)
+    SegmentWriter.write(spark, outPath, runs, lengths, buildCfg, sectioned)
+    SegmentWriter.commitBase(spark, outPath, buildCfg, bucketBits, sections,
+      Map("builtFromTokenColumn" -> tokenPath))
   }
 }

@@ -95,15 +95,29 @@ final case class IndexMeta(
       * dead in all data segments with seg_ord < gen. Folded away by
       * compact. (delete path of grn_ii_delete_one, lib/grn_ii.h:158) */
     deleteSegments: Seq[String] = Nil,
-    /** per-data-segment statistics, aligned by `name` with the NORMALIZED
-      * segment list ("." = root base). Persisted at every commit so a
-      * reader/compactor gets doc ranges and footprints from ONE manifest
-      * read — at 10k+ segments the previous per-file parquet-footer loop
-      * was minutes of driver-sequential metadata IO per index open.
+    /** per-data-segment statistics, aligned by `name` with
+      * `dataSegments`, the NORMALIZED segment list ("." = root base).
+      * Persisted at every commit so a reader/compactor gets doc ranges
+      * and footprints from ONE manifest read — at 10k+ segments the
+      * previous per-file parquet-footer loop was minutes of
+      * driver-sequential metadata IO per index open.
       * Empty on legacy manifests: readers fall back to footer stats /
       * a stats job (the reference keeps chunk stats inline in the buffer
       * headers for the same reason, /root/reference/lib/ii.cpp:16200). */
-    segStats: Seq[SegStats] = Nil)
+    segStats: Seq[SegStats] = Nil) {
+
+  /** data segment dirs in manifest order, "." = the root base. A base
+    * build lists its table names as its segments; that list reads as ".".
+    * Only a list made of table names alone does, so a mixed list fails
+    * loudly on read instead of silently hiding segments. */
+  def dataSegments: Seq[String] =
+    if (segments.forall(IndexMeta.BaseTables.contains)) Seq(".") else segments
+}
+
+object IndexMeta {
+  /** the segment list a fresh base build commits */
+  val BaseTables: Seq[String] = Seq("postings", "terms", "docs")
+}
 
 /** One data segment's manifest-persisted statistics. `minDoc`/`maxDoc` are
   * the DOCS-table id range (Long.MaxValue/MinValue when empty) — a superset
@@ -142,4 +156,9 @@ final case class IndexConfig(
       val bucketSize = math.max(1L, nDocs / targetBuckets)
       math.max(0, 63 - java.lang.Long.numberOfLeadingZeros(bucketSize))
     }
+
+  /** shuffle width of every index write: `numPartitions`, else the
+    * session's spark.sql.shuffle.partitions */
+  def shufflePartitions(spark: org.apache.spark.sql.SparkSession): Int =
+    if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -38,32 +38,27 @@ object IncrementalIndex {
       s"append requires a committed base index at $indexPath")
     val base = SegmentCatalog.readMeta(fs, indexPath)
 
-    val segPath = s"$indexPath/$segmentName"
     // a sectioned base appends with the SAME section columns (docs must
-    // expose them); single-column bases use textCol
+    // expose them); single-column bases use textCol. The segment's
+    // bucketBits are sized from the batch, as for a fresh build.
     val textCols = if (base.sections.nonEmpty) base.sections else Seq(textCol)
-    val seg = IndexBuilder.buildSectioned(spark, docs, idCol, textCols, segPath,
+    val segPath = s"$indexPath/$segmentName"
+    IndexBuilder.writeTextSegment(spark, docs, idCol, textCols, segPath,
       cfg.copy(tokenizer = base.tokenizer, withPositions = base.withPositions))
-    val segMeta = seg.meta
+    val seg = SegmentWriter.measure(spark, Seq(segmentName -> segPath))
 
-    val oldSegs =
-      if (base.segments.isEmpty ||
-        base.segments.exists(s => s == "postings" || s == "terms" || s == "docs")) Seq(".")
-      else base.segments
-    val nDocs = base.nDocs + segMeta.nDocs
-    val totalTokens = base.avgdl * base.nDocs + segMeta.avgdl * segMeta.nDocs
-    // segment stats ride the manifest forward: the sub-build's own stats
-    // (committed under name ".") take the new segment's name. A legacy base
-    // without aligned stats stays legacy (readers fall back) until compact.
+    val oldSegs = base.dataSegments
+    val nDocs = base.nDocs + seg.nDocs
+    val totalTokens = base.avgdl * base.nDocs + seg.avgdl * seg.nDocs
+    // segment stats ride the manifest forward. A legacy base without
+    // aligned stats stays legacy (readers fall back) until compact.
     val newStats =
-      if (base.segStats.map(_.name) == oldSegs && segMeta.segStats.nonEmpty)
-        base.segStats ++ segMeta.segStats.map(_.copy(name = segmentName))
-      else Nil
+      if (base.segStats.map(_.name) == oldSegs) base.segStats ++ seg.segs else Nil
     val merged = base.copy(
       nDocs = nDocs,
       avgdl = if (nDocs == 0) 0.0 else totalTokens / nDocs,
-      totalPostings = base.totalPostings + segMeta.totalPostings,
-      totalPayloadBytes = base.totalPayloadBytes + segMeta.totalPayloadBytes,
+      totalPostings = base.totalPostings + seg.nPostings,
+      totalPayloadBytes = base.totalPayloadBytes + seg.payloadBytes,
       segments = oldSegs :+ segmentName,
       segStats = newStats)
     SegmentCatalog.commit(fs, indexPath, merged,
@@ -96,15 +91,6 @@ object IncrementalIndex {
     q.awaitTermination()
   }
 
-  /** number of data segments (tombstone generations count against it) */
-  private def dataSegCount(meta: IndexMeta): Int = {
-    val segs =
-      if (meta.segments.isEmpty ||
-        meta.segments.exists(s => s == "postings" || s == "terms" || s == "docs")) Seq(".")
-      else meta.segments
-    segs.length
-  }
-
   /** Delete documents: commits a tombstone segment of (doc_id, gen) rows;
     * gen = current data-segment count, so the tombstone covers every
     * EXISTING segment but not segments appended later (that is what lets
@@ -118,7 +104,8 @@ object IncrementalIndex {
     require(SegmentCatalog.isCommitted(fs, indexPath),
       s"delete requires a committed index at $indexPath")
     val meta = SegmentCatalog.readMeta(fs, indexPath)
-    val gen = dataSegCount(meta)
+    // tombstone generation = data-segment count
+    val gen = meta.dataSegments.length
     // name carries the next manifest version: unique across the index's
     // WHOLE history (a count-derived name recycles after a compaction
     // resets the list, which would let an expired snapshot read a
@@ -225,12 +212,9 @@ object IncrementalIndex {
     * a crash at any point leaves the previous committed state readable.
     * Old dirs are removed only after the commit. */
   def compact(spark: SparkSession, indexPath: String, cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    import spark.implicits._
     val fs = SegmentCatalog.fileSystem(spark, indexPath)
     val idx = GraftIndex(spark, indexPath)
     val meta = idx.meta
-    val shufflePartitions = if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
 
     // manifest-version-derived: never recycled across the index's history
     // (a count-derived base-vN could be recreated after later compactions,
@@ -238,25 +222,9 @@ object IncrementalIndex {
     val dstName = s"base-m${SegmentCatalog.nextVersion(fs, indexPath)}"
     val dst = s"$indexPath/$dstName"
     fs.delete(new Path(dst), true)
-
-    writeLivePostings(idx, idx.postings.as[PostingBlockRow], dst, cfg, shufflePartitions)
-    IndexBuilder.writeTermStages(spark, fs, dst, shufflePartitions)
-    idx.docs.write.mode("overwrite").parquet(s"$dst/docs") // tombstone-filtered
-
+    writeLive(idx, idx.postings, idx.docs, dst, cfg) // tombstone-filtered
     // fresh corpus stats (delete/upsert drift folds away here)
-    val docStats = spark.read.parquet(s"$dst/docs")
-      .agg(count(lit(1)), coalesce(avg($"dl"), lit(0.0)),
-        coalesce(min($"doc_id"), lit(Long.MaxValue)),
-        coalesce(max($"doc_id"), lit(Long.MinValue)))
-      .as[(Long, Double, Long, Long)].head()
-    val blockStats = spark.read.parquet(s"$dst/postings")
-      .agg(coalesce(sum($"cnt"), lit(0L)), coalesce(sum($"payload_len"), lit(0L)))
-      .as[(Long, Long)].head()
-
-    val oldSegDirs = meta.segments.filterNot(s =>
-      s == "postings" || s == "terms" || s == "docs" || s == ".")
-    val hadRootBase = meta.segments.isEmpty || meta.segments.exists(s =>
-      s == "postings" || s == "terms" || s == "docs") || meta.segments.contains(".")
+    val st = SegmentWriter.measure(spark, Seq(dstName -> dst))
 
     // COMMIT: atomic manifest pointer flip to the new versioned base
     SegmentCatalog.commit(fs, indexPath,
@@ -264,51 +232,44 @@ object IncrementalIndex {
         // compact re-derives every block (incl. max_gtf), so the artifact
         // is current-format even if the input base predated it
         formatVersion = IndexBuilder.CurrentFormatVersion,
-        nDocs = docStats._1,
-        avgdl = docStats._2,
-        totalPostings = blockStats._1,
-        totalPayloadBytes = blockStats._2,
+        nDocs = st.nDocs,
+        avgdl = st.avgdl,
+        totalPostings = st.nPostings,
+        totalPayloadBytes = st.payloadBytes,
         segments = Seq(dstName),
         deleteSegments = Nil,
-        segStats = Seq(SegStats(dstName, docStats._1, docStats._3, docStats._4,
-          blockStats._1, blockStats._2))),
+        segStats = st.segs),
       Map("compacted" -> dstName))
 
     // cleanup after commit (crash here only leaves unreferenced garbage)
-    if (hadRootBase)
-      Seq("postings", "terms", "terms_rev", "docs")
-        .foreach(t => fs.delete(new Path(s"$indexPath/$t"), true))
-    oldSegDirs.foreach(s => fs.delete(new Path(s"$indexPath/$s"), true))
+    meta.dataSegments.foreach(SegmentCatalog.dropSegment(fs, indexPath, _))
     meta.deleteSegments.foreach(s => fs.delete(new Path(s"$indexPath/$s"), true))
     GraftIndex(spark, indexPath)
   }
 
-  /** Tombstone-filter `blocks` block-wise, re-merge them across segments
-    * by (term, bucket) and write the merged runs to `dst`/postings. */
-  private def writeLivePostings(idx: GraftIndex, blocks: Dataset[PostingBlockRow],
-      dst: String, cfg: IndexConfig, shufflePartitions: Int): Unit = {
+  /** Write `blocks` and `docs` of `idx` as a new segment at `dst`: blocks
+    * are tombstone-filtered block-wise and fed back to the segment writer
+    * as runs, which re-merges them across segments by (term, bucket) in
+    * the index's own block layout. `docs` must already be live. */
+  private def writeLive(idx: GraftIndex, blocks: DataFrame, docs: DataFrame,
+      dst: String, cfg: IndexConfig): Unit = {
     import idx.spark.implicits._
     // broadcast, not closure-embedded: shipped once per executor
     val bc = idx.tombstones.broadcastSet
-    val mergeCfg = cfg.copy(withPositions = idx.meta.withPositions,
-      blockSize = idx.meta.blockSize)
-    blocks
-      .flatMap { b =>
-        val ts = bc.fold(TombstoneSet.Empty)(_.value)
-        val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
-        live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
-          f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
-      }
-      .repartition(shufflePartitions, $"term", $"bucket")
-      .sortWithinPartitions($"term", $"bucket", $"min_doc")
-      .mapPartitions(IndexBuilder.mergeRuns(mergeCfg, idx.meta.sections.nonEmpty))
-      .write.mode("overwrite").parquet(s"$dst/postings")
+    val runs = blocks.as[PostingBlockRow].flatMap { b =>
+      val ts = bc.fold(TombstoneSet.Empty)(_.value)
+      val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
+      live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
+        f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
+    }
+    SegmentWriter.write(idx.spark, dst, runs, docs,
+      cfg.copy(withPositions = idx.meta.withPositions, blockSize = idx.meta.blockSize),
+      idx.meta.sections.nonEmpty)
   }
 
   private case class SegInfo(stats: SegStats, ord: Int, touched: Boolean) {
     def name: String = stats.name
     def nPostings: Long = stats.nPostings
-    def payloadBytes: Long = stats.payloadBytes
   }
 
   /** LEVELED (partial) compaction — the scale path. `compact` rewrites the
@@ -340,48 +301,18 @@ object IncrementalIndex {
     val idx = GraftIndex(spark, indexPath)
     val meta = idx.meta
     val tombs = idx.tombstones.set
-    val shufflePartitions = if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-
-    val segs =
-      if (meta.segments.isEmpty ||
-        meta.segments.exists(s => s == "postings" || s == "terms" || s == "docs")) Seq(".")
-      else meta.segments
-    def tableP(s: String, t: String) =
-      if (s == ".") s"$indexPath/$t" else s"$indexPath/$s/$t"
+    val segs = meta.dataSegments
 
     // Per-segment footprint + doc range: straight from the MANIFEST when
     // this index has committed segment stats (zero jobs, zero file IO — the
     // 100-TB path: a 0.1%-tombstone compaction must not pay a metadata scan
-    // of every segment first). Legacy manifests without stats pay ONE
-    // postings + ONE docs union job (never a per-segment driver loop) and
-    // come out of this compaction with stats persisted.
+    // of every segment first). Legacy manifests without stats pay one
+    // measure (one postings + one docs query, never a per-segment driver
+    // loop) and come out of this compaction with stats persisted.
     val baseStats: Seq[SegStats] =
       if (meta.segStats.map(_.name) == segs) meta.segStats
-      else {
-        val pStats = segs.zipWithIndex.map { case (s, i) =>
-          spark.read.parquet(tableP(s, "postings"))
-            .select(lit(i).as("ord"), $"cnt", $"payload_len")
-        }.reduce(_.unionByName(_))
-          .groupBy($"ord")
-          .agg(coalesce(sum($"cnt"), lit(0L)), coalesce(sum($"payload_len"), lit(0L)))
-          .as[(Int, Long, Long)]
-          .collect().map(r => r._1 -> r).toMap
-        val dStats = segs.zipWithIndex.map { case (s, i) =>
-          spark.read.parquet(tableP(s, "docs")).select(lit(i).as("ord"), $"doc_id")
-        }.reduce(_.unionByName(_))
-          .groupBy($"ord")
-          .agg(count(lit(1)),
-            coalesce(min($"doc_id"), lit(Long.MaxValue)),
-            coalesce(max($"doc_id"), lit(Long.MinValue)))
-          .as[(Int, Long, Long, Long)]
-          .collect().map(r => r._1 -> r).toMap
-        segs.zipWithIndex.map { case (s, i) =>
-          val (_, np, pb) = pStats.getOrElse(i, (i, 0L, 0L))
-          val (_, nd, lo, hi) = dStats.getOrElse(i, (i, 0L, Long.MaxValue, Long.MinValue))
-          SegStats(s, nd, lo, hi, np, pb)
-        }
-      }
+      else SegmentWriter.measure(spark,
+        segs.map(s => s -> SegmentCatalog.segmentDir(indexPath, s))).segs
     val infos: Seq[SegInfo] = baseStats.zipWithIndex.map { case (ss, i) =>
       SegInfo(ss, i, touched = tombs.hidesAnyIn(ss.minDoc, ss.maxDoc, i))
     }
@@ -408,56 +339,25 @@ object IncrementalIndex {
       val dstName = s"fold-m$gen-$k"
       val dst = s"$indexPath/$dstName"
       fs.delete(new Path(dst), true)
+      // postings and docs of just this run, tombstone-filtered with the
+      // run segments' ordinals
       val ords = run.map(_.ord)
-      // postings of just this run
-      writeLivePostings(idx, idx.postings.where($"seg_ord".isin(ords: _*)).as[PostingBlockRow],
-        dst, cfg, shufflePartitions)
-      IndexBuilder.writeTermStages(spark, fs, dst, shufflePartitions)
-      // docs of the run, tombstone-filtered with the run segments' ordinals
-      idx.tombstones.live(run.map { si =>
-        spark.read.parquet(tableP(si.name, "docs"))
-          .select($"doc_id", $"dl").withColumn("seg_ord", lit(si.ord))
-      }.reduce(_.unionByName(_)))
-        .select($"doc_id", $"dl")
-        .write.mode("overwrite").parquet(s"$dst/docs")
+      writeLive(idx, idx.postings.where($"seg_ord".isin(ords: _*)),
+        idx.tombstones.live(run.map { si =>
+          spark.read.parquet(s"${SegmentCatalog.segmentDir(indexPath, si.name)}/docs")
+            .select($"doc_id", $"dl").withColumn("seg_ord", lit(si.ord))
+        }.reduce(_.unionByName(_))).select($"doc_id", $"dl"),
+        dst, cfg)
       run.head.ord -> dstName
     }.toMap
 
     val foldedOrds = folds.flatMap(_.map(_.ord)).toSet
-    val newSegments = infos.flatMap { si =>
-      if (!foldedOrds.contains(si.ord)) Some(si.name)
-      else foldNames.get(si.ord) // fold dir takes the run head's slot
-    }
-
-    // exact new totals + full stats for the fold dirs: ONE postings + ONE
-    // docs union job across all folds (kept segments keep their measured
-    // footprint from the manifest — no IO for them at all)
-    val foldDirs = foldNames.values.toSeq
-    val foldP = if (foldDirs.isEmpty) Map.empty[String, (Long, Long)] else foldDirs.map { n =>
-      spark.read.parquet(s"$indexPath/$n/postings")
-        .select(lit(n).as("seg"), $"cnt", $"payload_len")
-    }.reduce(_.unionByName(_))
-      .groupBy($"seg")
-      .agg(coalesce(sum($"cnt"), lit(0L)), coalesce(sum($"payload_len"), lit(0L)))
-      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val foldD = if (foldDirs.isEmpty) Map.empty[String, (Long, Long, Long)] else foldDirs.map { n =>
-      spark.read.parquet(s"$indexPath/$n/docs").select(lit(n).as("seg"), $"doc_id")
-    }.reduce(_.unionByName(_))
-      .groupBy($"seg")
-      .agg(count(lit(1)),
-        coalesce(min($"doc_id"), lit(Long.MaxValue)),
-        coalesce(max($"doc_id"), lit(Long.MinValue)))
-      .as[(String, Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    val foldStatsByName: Map[String, SegStats] = foldDirs.map { n =>
-      val (np, pb) = foldP.getOrElse(n, (0L, 0L))
-      val (nd, lo, hi) = foldD.getOrElse(n, (0L, Long.MaxValue, Long.MinValue))
-      n -> SegStats(n, nd, lo, hi, np, pb)
-    }.toMap
-    val kept = infos.filterNot(si => foldedOrds.contains(si.ord))
-    val totalPostings = kept.map(_.nPostings).sum + foldStatsByName.values.map(_.nPostings).sum
-    val totalPayload = kept.map(_.payloadBytes).sum + foldStatsByName.values.map(_.payloadBytes).sum
-    // manifest stats for the new segment list, in order (kept stats ride
-    // through untouched; fold dirs take the run head's slot)
+    // full stats for the fold dirs: ONE measure across all folds (kept
+    // segments keep their measured footprint from the manifest — no IO)
+    val foldStatsByName: Map[String, SegStats] = SegmentWriter.measure(spark,
+      foldNames.values.toSeq.map(n => n -> s"$indexPath/$n")).segs.map(s => s.name -> s).toMap
+    // the new segment list with its stats, in order: kept segments ride
+    // through untouched, a fold dir takes its run head's slot
     val newSegStats = infos.flatMap { si =>
       if (!foldedOrds.contains(si.ord)) Some(si.stats)
       else foldNames.get(si.ord).map(foldStatsByName)
@@ -471,21 +371,17 @@ object IncrementalIndex {
     SegmentCatalog.commit(fs, indexPath,
       meta.copy(
         formatVersion =
-          if (kept.isEmpty) IndexBuilder.CurrentFormatVersion else meta.formatVersion,
-        totalPostings = totalPostings,
-        totalPayloadBytes = totalPayload,
-        segments = newSegments,
+          if (foldedOrds.size == infos.size) IndexBuilder.CurrentFormatVersion
+          else meta.formatVersion,
+        totalPostings = newSegStats.map(_.nPostings).sum,
+        totalPayloadBytes = newSegStats.map(_.payloadBytes).sum,
+        segments = newSegStats.map(_.name),
         deleteSegments = Nil,
         segStats = newSegStats),
       Map("partialCompacted" -> foldNames.values.mkString(",")))
 
     // cleanup after commit (crash here only leaves unreferenced garbage)
-    folds.flatten.foreach { si =>
-      if (si.name == ".")
-        Seq("postings", "terms", "terms_rev", "docs")
-          .foreach(t => fs.delete(new Path(s"$indexPath/$t"), true))
-      else fs.delete(new Path(s"$indexPath/${si.name}"), true)
-    }
+    folds.flatten.foreach(si => SegmentCatalog.dropSegment(fs, indexPath, si.name))
     meta.deleteSegments.foreach(s => fs.delete(new Path(s"$indexPath/$s"), true))
     GraftIndex(spark, indexPath)
   }

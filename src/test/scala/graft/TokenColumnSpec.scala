@@ -20,6 +20,15 @@ class TokenColumnSpec extends AnyFunSuite {
   private def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
+  /** the two index dirs hold the same rows in every table the writer writes */
+  private def assertSameRows(a: String, b: String): Unit =
+    for (t <- Seq("postings", "terms", "terms_rev", "docs")) {
+      val x = spark.read.parquet(s"$a/$t")
+      val y = spark.read.parquet(s"$b/$t").select(x.columns.map(col): _*)
+      assert(x.count() == y.count() && x.count() > 0, t)
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, t)
+    }
+
   test("token-column build equals a direct build (single column)") {
     val docs = WebCorpus.generate(spark, 300, 4)
     val direct = IndexBuilder.build(spark, docs, "doc_id", "text", s"$tmp/direct", cfg)
@@ -44,6 +53,7 @@ class TokenColumnSpec extends AnyFunSuite {
     val ph = "spark fulltext search engine"
     assert(scores(fromTok.searchPhrase(ph)) == scores(direct.searchPhrase(ph)))
     assert(fromTok.searchPhrase(ph).count() > 0)
+    assertSameRows(s"$tmp/direct", s"$tmp/fromtok")
   }
 
   test("token-column build equals a direct build (sectioned + weights)") {
@@ -62,6 +72,7 @@ class TokenColumnSpec extends AnyFunSuite {
       sectionWeights = w))
     assert(a == b)
     assert(a.nonEmpty)
+    assertSameRows(s"$tmp/sdirect", s"$tmp/sfromtok")
   }
 
   test("rebuild-many: different physical params from ONE token column") {
