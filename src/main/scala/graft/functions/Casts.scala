@@ -54,18 +54,11 @@ object Casts {
   /** text→intN: parse wide (above), then static_cast wrap */
   def textToInt(c: Column, bits: Int): Column = wrapBits(textToLong(c), bits)
 
-  /** text→float64; NULL when not grn_aton-numeric */
-  def textToDouble(c: Column): Column =
-    when(c.rlike(NumRe), c.try_cast("double"))
-
   /** text→bool: non-empty (even "false" / "0") */
   def textToBool(c: Column): Column = length(c) > 0
 
   /** bool→text "true"/"false" */
   def boolToText(c: Column): Column = when(c, lit("true")).otherwise(lit("false"))
-
-  /** bool→num 1/0 */
-  def boolToLong(c: Column): Column = when(c, lit(1L)).otherwise(lit(0L))
 
   /** num→bool: static_cast<bool> = (v != 0) */
   def numToBool(c: Column): Column = c =!= lit(0)

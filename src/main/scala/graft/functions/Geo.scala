@@ -17,14 +17,6 @@ object Geo {
 
   private def rad(deg: Column): Column = deg * math.Pi / 180.0
 
-  /** rectangular (flat) approximation: longitude scaled by cos(mean lat) —
-    * geo_distance's default GRN_GEO_APPROXIMATE_RECTANGLE (lib/geo.c:2242) */
-  def distanceRect(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val dlat = rad(lat2 - lat1)
-    val dlon = rad(lon2 - lon1) * cos(rad((lat1 + lat2) / 2.0))
-    sqrt(dlat * dlat + dlon * dlon) * EarthRadiusM
-  }
-
   /** great-circle (haversine) distance in meters —
     * GRN_GEO_APPROXIMATE_SPHERE (lib/geo.c:2268) */
   def distanceSphere(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
@@ -39,10 +31,6 @@ object Geo {
   final val GrsC1: Double = 6335439.0
   final val GrsC2: Double = 6378137.0
   final val GrsC3: Double = 0.006694
-  /** Bessel (Tokyo datum) constants (GRN_GEO_BES_C1/C2/C3, lib/grn_geo.h:31-33) */
-  final val BesC1: Double = 6334834.0
-  final val BesC2: Double = 6377397.0
-  final val BesC3: Double = 0.006674
 
   /** geo_distance2 (deprecated reference proc, lib/proc.c:3141): spherical
     * distance on the reference's OWN radius constant —
@@ -71,11 +59,6 @@ object Geo {
     * ellipsoid approximation. */
   def distance3(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     distanceEllipsoid(lat1, lon1, lat2, lon2, GrsC1, GrsC2, GrsC3)
-
-  /** Tokyo-datum (Bessel) ellipsoid variant
-    * (grn_geo_distance_ellipsoid_raw_tokyo, lib/geo.c:2943). */
-  def distance3Tokyo(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    distanceEllipsoid(lat1, lon1, lat2, lon2, BesC1, BesC2, BesC3)
 
   /** grn_geo_in_circle: point within `radiusM` meters of the center
     * (spherical distance) */

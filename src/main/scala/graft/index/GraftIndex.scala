@@ -73,12 +73,15 @@ final case class GraftIndex(spark: SparkSession, path: String,
     }.reduce(_.unionByName(_))
   }
   lazy val terms: DataFrame = spark.read.parquet(tablePaths("terms"): _*)
-  /** doc stats with tombstoned rows filtered out (per-generation) */
-  lazy val docs: DataFrame = tombstones.live(
+  /** doc stats with tombstoned rows filtered out (per-generation), each
+    * row with its segment's seg_ord. The read schema is given: no
+    * schema-inference job per segment. */
+  lazy val segDocs: DataFrame = tombstones.live(
     tablePaths("docs").zipWithIndex.map { case (p, i) =>
-      spark.read.parquet(p).select(col("doc_id"), col("dl"))
-        .withColumn("seg_ord", lit(i))
-    }.reduce(_.unionByName(_))).select(col("doc_id"), col("dl"))
+      spark.read.schema(SegmentWriter.DocsSchema).parquet(p).withColumn("seg_ord", lit(i))
+    }.reduce(_.unionByName(_)))
+  /** doc stats with tombstoned rows filtered out (per-generation) */
+  lazy val docs: DataFrame = segDocs.select(col("doc_id"), col("dl"))
 
   /** this snapshot's generation tombstones (empty without deletes) */
   @transient lazy val tombstones: Tombstones =

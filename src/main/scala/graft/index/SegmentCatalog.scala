@@ -56,16 +56,6 @@ object SegmentCatalog {
   def listVersions(fs: FileSystem, outPath: String): Seq[Long] =
     manifests(fs, outPath).map(_._1)
 
-  /** The version the NEXT commit will get. Strictly monotonic over an
-    * index's whole life (the newest manifest is always retained, so the
-    * counter never resets) — mutation code derives generated segment
-    * names from it so a name is NEVER recycled: a retained historical
-    * manifest can then trust that an existing directory with the name it
-    * recorded still holds the bytes it recorded (the soundness basis of
-    * GraftIndex.atVersion's open-time validation). */
-  def nextVersion(fs: FileSystem, outPath: String): Long =
-    manifests(fs, outPath).lastOption.map(_._1 + 1).getOrElse(0L)
-
   /** opaque snapshot marker: changes with every commit (the latest manifest
     * file name) — cache-invalidation key for query-result caches */
   def snapshotVersion(fs: FileSystem, outPath: String): String =
@@ -89,8 +79,12 @@ object SegmentCatalog {
   def writeStageIfAbsent(fs: FileSystem, stagePath: String)(write: => Unit): Unit =
     if (!stageComplete(fs, stagePath)) write
 
+  /** Publish `meta` as the next manifest version. With `readAt`, the
+    * version the write read its base at, the commit refuses when another
+    * commit landed since: its manifest, derived from the older base,
+    * would silently drop that commit. */
   def commit(fs: FileSystem, outPath: String, meta: IndexMeta,
-      metrics: Map[String, String]): Unit = {
+      metrics: Map[String, String], readAt: Option[Long] = None): Unit = {
     val json = Serialization.writePretty(Map(
       "formatVersion" -> meta.formatVersion,
       "tokenizer" -> meta.tokenizer,
@@ -110,8 +104,13 @@ object SegmentCatalog {
         "nPostings" -> s.nPostings, "payloadBytes" -> s.payloadBytes)),
       "metrics" -> metrics))
     val existing = manifests(fs, outPath)
-    val ver = existing.lastOption.map(_._1 + 1).getOrElse(0L)
-    val tmp = new Path(outPath, f"manifest-$ver%06d.json.tmp")
+    val head = existing.lastOption.map(_._1)
+    if (readAt.exists(v => !head.contains(v)))
+      throw new java.util.ConcurrentModificationException(s"$outPath moved from manifest " +
+        s"version ${readAt.get} to ${head.getOrElse("none")} while a write was staged on it")
+    val ver = head.fold(0L)(_ + 1)
+    // a tmp name per attempt: racing commits never write into one file
+    val tmp = new Path(outPath, f"manifest-$ver%06d.json.${java.util.UUID.randomUUID()}.tmp")
     val dst = new Path(outPath, f"manifest-$ver%06d.json")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()

@@ -16,7 +16,8 @@ final case class Measured(segs: Seq[SegStats], sumDl: Long, blocks: Long) {
 /** The one segment writer and the one stats pass behind every index
   * write: a base build, a token-column build, an append, a compact and
   * each fold of a partial compact. A caller only chooses where its posting
-  * runs and doc lengths come from, and how it commits the manifest.
+  * runs and doc lengths come from. A fresh base commits through
+  * [[commitBase]], every other write through IncrementalIndex.commit.
   *
   * A segment dir holds four tables, written in this order, each behind
   * its own _SUCCESS marker so a re-run skips what already committed:
@@ -30,6 +31,9 @@ final case class Measured(segs: Seq[SegStats], sumDl: Long, blocks: Long) {
   *   docs       (doc_id, dl)
   */
 object SegmentWriter {
+
+  /** read schema of a segment's docs table */
+  final val DocsSchema = "doc_id BIGINT, dl INT"
 
   /** Write the segment at `dir`. `runs` and `docs` are lazy plans: a stage
     * that already committed never evaluates its input. `cfg` carries the
@@ -93,7 +97,7 @@ object SegmentWriter {
     val p = byDir("postings", "cnt INT, payload_len INT")
       .agg(sum($"cnt"), count(lit(1)), sum($"payload_len"))
       .as[(Int, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val d = byDir("docs", "doc_id BIGINT, dl INT")
+    val d = byDir("docs", DocsSchema)
       .agg(count(lit(1)), min($"doc_id"), max($"doc_id"), sum($"dl"))
       .as[(Int, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     val segs = dirs.zipWithIndex.map { case ((name, _), i) =>

@@ -4,9 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.index.{GraftIndex, PostingBlockRow}
-import graft.query.Bm25
 
-/** TokenDocumentVectorTFIDF / TokenDocumentVectorBM25 — per-document
+/** TokenDocumentVectorBM25 — per-document
   * weighted term vectors emitted straight from the index
   * (/root/reference/lib/tokenizers.c:2316-2652: df/avgdl from the ii
   * cursor scan, Okapi weights at :2637-2652). Where the reference streams
@@ -42,13 +41,5 @@ object DocVectors {
       .select(col("doc_id"), col("term"),
         (idfCol(n) * col("tf") * (k1 + 1.0) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))).as("w"))
-  }
-
-  /** TFIDF vectors: tf x idf (same idf form the BM25 variant uses) */
-  def tfidf(idx: GraftIndex): DataFrame = {
-    val n = idx.meta.nDocs
-    postingRows(idx)
-      .join(termDf(idx), Seq("term"))
-      .select(col("doc_id"), col("term"), (idfCol(n) * col("tf")).as("w"))
   }
 }

@@ -203,15 +203,6 @@ object Suggest {
       .orderBy(desc("freq"), desc("df"), asc("term")).limit(k)
       .select(col("term"), col("freq"), col("df"))
 
-  /** completion for a romaji prefix over a kana dictionary */
-  def completeRk(idx: GraftIndex, romajiPrefix: String, k: Int = 10): DataFrame = {
-    val cands = graft.analyzer.Romaji.candidates(romajiPrefix)
-    if (cands.isEmpty) return idx.terms.select(col("term"), col("df")).limit(0)
-    idx.terms.where(cands.map(c => col("term").startsWith(c)).reduce(_ || _))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .orderBy(desc("df"), asc("term")).limit(k)
-  }
-
   /** correction: terms within `maxDistance` edits, nearest + most frequent
     * first (deterministic ties by term) */
   def correct(idx: GraftIndex, term: String, maxDistance: Int = 2, k: Int = 10): DataFrame =

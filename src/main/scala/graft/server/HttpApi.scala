@@ -46,6 +46,7 @@ final class GraftHttpServer(
     indexes.foreach { case (k, v) => m.put(k, v) }
     m
   }
+  private val loadLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   private val server = com.sun.net.httpserver.HttpServer.create(
     new InetSocketAddress("127.0.0.1", port), 0)
@@ -236,11 +237,17 @@ final class GraftHttpServer(
         require(rows.columns.contains("doc_id") && rows.columns.contains("text"),
           "[load] body rows need doc_id and text")
         val n = rows.count()
-        graft.streaming.IncrementalIndex.upsert(spark, idx.path,
-          rows.select(col("doc_id").cast("long"), col("text").cast("string")),
-          "doc_id", "text", s"seg-http-${System.nanoTime()}",
-          graft.index.IndexConfig(tokenizer = idx.meta.tokenizer))
-        live.put(table, GraftIndex(spark, idx.path)) // serve the new snapshot
+        // loads to one table run one at a time, as groonga's do: each
+        // commits over the one before. Body rows may come in any order; the
+        // segment builder wants ascending ids per partition.
+        loadLocks.computeIfAbsent(table, _ => new Object).synchronized {
+          graft.streaming.IncrementalIndex.upsert(spark, idx.path,
+            rows.select(col("doc_id").cast("long"), col("text").cast("string"))
+              .sortWithinPartitions("doc_id"),
+            "doc_id", "text", s"seg-http-${System.nanoTime()}",
+            graft.index.IndexConfig(tokenizer = idx.meta.tokenizer))
+          live.put(table, GraftIndex(spark, idx.path)) // serve the new snapshot
+        }
         send(ex, 200, contentTypeOf("json"),
           s"[[0,$startSec,$elapsed],$n]".getBytes(UTF_8))
 

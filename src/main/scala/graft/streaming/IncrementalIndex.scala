@@ -20,8 +20,139 @@ import graft.query.MatchKernel
   */
 object IncrementalIndex {
 
+  /** What one write adds to and removes from the manifest it read. Every
+    * write publishes through [[commit]], which derives the new manifest
+    * from the base plus this delta:
+    *  - `added`: the data segments the write staged, with their SegStats
+    *    and Σdl;
+    *  - `replaces`: for an added segment that rewrites a run of base data
+    *    segments, that run (it takes the run head's slot); every other
+    *    added segment is appended;
+    *  - `deleted`: a staged delete segment and the live docs it removes;
+    *  - `consumesTombstones`: the write folded every existing tombstone;
+    *  - `baseStats`: stats measured for base segments when the base
+    *    manifest carries none. */
+  private[graft] final case class Delta(
+      added: Measured = Measured(Nil, 0L, 0L),
+      replaces: Map[String, Seq[String]] = Map.empty,
+      deleted: Option[StagedDelete] = None,
+      consumesTombstones: Boolean = false,
+      baseStats: Seq[SegStats] = Nil)
+
+  /** a written, uncommitted delete segment: `docs` live docs of Σdl `sumDl` */
+  private[graft] final case class StagedDelete(name: String, docs: Long, sumDl: Long)
+
+  /** The head snapshot a write reads, pinned: the manifest, docs,
+    * tombstones and postings it reads are all of this one version. */
+  private def readBase(spark: SparkSession, indexPath: String, op: String): GraftIndex = {
+    val versions = SegmentCatalog.listVersions(SegmentCatalog.fileSystem(spark, indexPath), indexPath)
+    require(versions.nonEmpty, s"$op requires a committed index at $indexPath")
+    GraftIndex(spark, indexPath, versions.lastOption)
+  }
+
+  /** The version `base`'s commit gets. Versions only grow over an index's
+    * whole life (the newest manifest is always retained), and generated
+    * dir names carry this one, so a name is never recycled: a retained
+    * snapshot can trust that a dir it names still holds what it recorded
+    * (the basis of GraftIndex.atVersion's open-time validation). */
+  private def commitVersion(base: GraftIndex): Long = base.pinnedVersion.fold(0L)(_ + 1)
+
+  /** The one commit of every write: derive the manifest from `base` and
+    * `d`, publish it in one atomic manifest flip, then drop the replaced
+    * dirs (a crash before the flip leaves the base readable, after it only
+    * unreferenced garbage). Refuses, leaving the head as it was, when
+    * another commit landed after `base` was read. */
+  private[graft] def commit(base: GraftIndex, d: Delta, metrics: Map[String, String]): GraftIndex = {
+    val fs = SegmentCatalog.fileSystem(base.spark, base.path)
+    SegmentCatalog.commit(fs, base.path, derive(base.meta, d), metrics, base.pinnedVersion)
+    d.replaces.values.flatten.foreach(SegmentCatalog.dropSegment(fs, base.path, _))
+    if (d.consumesTombstones)
+      base.meta.deleteSegments.foreach(s => fs.delete(new Path(s"${base.path}/$s"), true))
+    GraftIndex(base.spark, base.path)
+  }
+
+  /** The manifest `d` makes of `meta`. Corpus stats stay exact through
+    * every write: a delete subtracts the live docs it hides, then an
+    * append adds its own (the order the avgdl arithmetic runs in); a
+    * rewrite of some segments keeps them, and a rewrite of every segment
+    * re-measures them, folding any rounding drift away. */
+  private def derive(meta: IndexMeta, d: Delta): IndexMeta = {
+    val replaced = d.replaces.values.flatten.toSet
+    val runHead = d.replaces.map { case (n, run) => run.head -> n }
+    val appended = d.added.segs.map(_.name).filterNot(d.replaces.contains)
+    val names = meta.dataSegments.flatMap(s =>
+      if (replaced(s)) runHead.get(s) else Some(s)) ++ appended
+    val known = ((if (meta.segStats.map(_.name) == meta.dataSegments) meta.segStats
+      else d.baseStats) ++ d.added.segs).map(s => s.name -> s).toMap
+    // a legacy base without aligned stats stays legacy (readers fall back)
+    val segStats = if (names.forall(known.contains)) names.map(known) else Nil
+    def total(f: SegStats => Long, base: Long) =
+      if (segStats.nonEmpty) segStats.map(f).sum else base + d.added.segs.map(f).sum
+    val rewritesAll = replaced == meta.dataSegments.toSet
+    val (n, a) = d.deleted.fold((meta.nDocs, meta.avgdl)) { del =>
+      val n = meta.nDocs - del.docs
+      (n, if (n <= 0) 0.0 else (meta.avgdl * meta.nDocs - del.sumDl.toDouble) / n)
+    }
+    val m = n + d.added.nDocs
+    val (nDocs, avgdl) =
+      if (rewritesAll) (d.added.nDocs, d.added.avgdl)
+      else if (appended.isEmpty) (n, a)
+      else (m, if (m == 0) 0.0 else (a * n + d.added.avgdl * d.added.nDocs) / m)
+    meta.copy(
+      // a rewrite re-derives every block (incl. max_gtf); a partial one
+      // leaves old blocks, and the version is a whole-artifact guarantee
+      formatVersion = if (rewritesAll) IndexBuilder.CurrentFormatVersion else meta.formatVersion,
+      nDocs = nDocs,
+      avgdl = avgdl,
+      totalPostings = total(_.nPostings, meta.totalPostings),
+      totalPayloadBytes = total(_.payloadBytes, meta.totalPayloadBytes),
+      segments = if (names == meta.dataSegments) meta.segments else names,
+      deleteSegments =
+        (if (d.consumesTombstones) Nil else meta.deleteSegments) ++ d.deleted.map(_.name),
+      segStats = segStats)
+  }
+
+  /** Write `docs` as data segment `name` of `base` and measure it. None
+    * when `base` already lists `name`: that write committed, and a re-run
+    * (a replayed stream batch, a retried call) must not add it twice. A
+    * re-run after a LOST commit finds the name unlisted and resumes. */
+  private def stageSegment(base: GraftIndex, docs: DataFrame, idCol: String,
+      textCol: String, name: String, cfg: IndexConfig): Option[Measured] = {
+    require(!Set("postings", "terms", "terms_rev", "docs", ".").contains(name) &&
+        !name.contains("/"),
+      s"segment name '$name' collides with reserved table/dir names")
+    if (base.meta.dataSegments.contains(name)) return None
+    // a sectioned base appends with the SAME section columns (docs must
+    // expose them); single-column bases use textCol. The segment's
+    // bucketBits are sized from the batch, as for a fresh build.
+    val textCols = if (base.meta.sections.nonEmpty) base.meta.sections else Seq(textCol)
+    val dir = s"${base.path}/$name"
+    IndexBuilder.writeTextSegment(base.spark, docs, idCol, textCols, dir,
+      cfg.copy(tokenizer = base.meta.tokenizer, withPositions = base.meta.withPositions))
+    Some(SegmentWriter.measure(base.spark, Seq(name -> dir)))
+  }
+
+  /** Write a tombstone segment of (doc_id, gen) rows for `docIds`, gen =
+    * the base's data-segment count: it covers every EXISTING segment but
+    * not segments appended later (that is what lets upsert re-add the
+    * same doc id). Counts the docs it hides that are still live, so
+    * corpus stats stay exact until compact (idempotent: the base's docs
+    * already exclude earlier tombstones). */
+  private def stageDelete(base: GraftIndex, docIds: DataFrame, idCol: String): StagedDelete = {
+    import base.spark.implicits._
+    val name = f"del-m${commitVersion(base)}%06d"
+    val ids = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
+    val (n, sumDl) = base.docs.join(ids, Seq("doc_id"))
+      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).as[(Long, Long)].head()
+    ids.withColumn("gen", lit(base.meta.dataSegments.length))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"${base.path}/$name")
+    StagedDelete(name, n, sumDl)
+  }
+
   /** Append `docs` as a new segment of a committed index; returns the
-    * updated handle. DocIds MUST exceed all existing docIds (append-only). */
+    * updated handle. DocIds MUST exceed all existing docIds (append-only).
+    * Idempotent per name: appending a name the head lists writes nothing. */
   def appendSegment(
       spark: SparkSession,
       indexPath: String,
@@ -30,45 +161,19 @@ object IncrementalIndex {
       textCol: String,
       segmentName: String,
       cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    require(!Set("postings", "terms", "terms_rev", "docs", ".").contains(segmentName) &&
-        !segmentName.contains("/"),
-      s"segment name '$segmentName' collides with reserved table/dir names")
-    val fs = SegmentCatalog.fileSystem(spark, indexPath)
-    require(SegmentCatalog.isCommitted(fs, indexPath),
-      s"append requires a committed base index at $indexPath")
-    val base = SegmentCatalog.readMeta(fs, indexPath)
-
-    // a sectioned base appends with the SAME section columns (docs must
-    // expose them); single-column bases use textCol. The segment's
-    // bucketBits are sized from the batch, as for a fresh build.
-    val textCols = if (base.sections.nonEmpty) base.sections else Seq(textCol)
-    val segPath = s"$indexPath/$segmentName"
-    IndexBuilder.writeTextSegment(spark, docs, idCol, textCols, segPath,
-      cfg.copy(tokenizer = base.tokenizer, withPositions = base.withPositions))
-    val seg = SegmentWriter.measure(spark, Seq(segmentName -> segPath))
-
-    val oldSegs = base.dataSegments
-    val nDocs = base.nDocs + seg.nDocs
-    val totalTokens = base.avgdl * base.nDocs + seg.avgdl * seg.nDocs
-    // segment stats ride the manifest forward. A legacy base without
-    // aligned stats stays legacy (readers fall back) until compact.
-    val newStats =
-      if (base.segStats.map(_.name) == oldSegs) base.segStats ++ seg.segs else Nil
-    val merged = base.copy(
-      nDocs = nDocs,
-      avgdl = if (nDocs == 0) 0.0 else totalTokens / nDocs,
-      totalPostings = base.totalPostings + seg.nPostings,
-      totalPayloadBytes = base.totalPayloadBytes + seg.payloadBytes,
-      segments = oldSegs :+ segmentName,
-      segStats = newStats)
-    SegmentCatalog.commit(fs, indexPath, merged,
-      Map("appendedSegment" -> segmentName))
-    GraftIndex(spark, indexPath)
+    val base = readBase(spark, indexPath, "append")
+    stageSegment(base, docs, idCol, textCol, segmentName, cfg).fold(GraftIndex(spark, indexPath)) {
+      seg => commit(base, Delta(added = seg), Map("appendedSegment" -> segmentName))
+    }
   }
 
   /** Structured-Streaming ingestion front: micro-batches from a streaming
     * DataFrame are appended as segments (one per non-empty batch).
-    * `Trigger.AvailableNow` drains a directory batch-style. */
+    * `Trigger.AvailableNow` drains a directory batch-style. A segment is
+    * named by the query id (kept in the checkpoint, stable across its
+    * restarts) and the batch id: a batch replayed after its commit is a
+    * no-op append, and a stream under a new checkpoint never meets an
+    * earlier stream's names. */
   def streamAppend(
       spark: SparkSession,
       stream: DataFrame,
@@ -82,8 +187,9 @@ object IncrementalIndex {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
+          val queryId = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
           appendSegment(spark, indexPath, batch, idCol, textCol,
-            f"seg-$batchId%05d", cfg)
+            f"seg-$queryId-$batchId%05d", cfg)
           ()
         }
       }
@@ -91,44 +197,14 @@ object IncrementalIndex {
     q.awaitTermination()
   }
 
-  /** Delete documents: commits a tombstone segment of (doc_id, gen) rows;
-    * gen = current data-segment count, so the tombstone covers every
-    * EXISTING segment but not segments appended later (that is what lets
-    * upsert re-add the same doc id). Readers apply tombstones at posting
-    * level; compact folds them away physically
-    * (grn_ii_delete_one, /root/reference/lib/grn_ii.h:158). */
+  /** Delete documents: commits a tombstone segment (see [[stageDelete]]).
+    * Readers apply tombstones at posting level; compact folds them away
+    * physically (groonga grn_ii_delete_one, lib/grn_ii.h:158). */
   def delete(spark: SparkSession, indexPath: String, docIds: DataFrame,
       idCol: String = "doc_id"): GraftIndex = {
-    import spark.implicits._
-    val fs = SegmentCatalog.fileSystem(spark, indexPath)
-    require(SegmentCatalog.isCommitted(fs, indexPath),
-      s"delete requires a committed index at $indexPath")
-    val meta = SegmentCatalog.readMeta(fs, indexPath)
-    // tombstone generation = data-segment count
-    val gen = meta.dataSegments.length
-    // name carries the next manifest version: unique across the index's
-    // WHOLE history (a count-derived name recycles after a compaction
-    // resets the list, which would let an expired snapshot read a
-    // recreated dir with different tombstones — see GraftIndex.atVersion)
-    val name = f"del-m${SegmentCatalog.nextVersion(fs, indexPath)}%06d"
-    val ids = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
-    // corpus stats stay EXACT across deletes: subtract only docs that are
-    // currently LIVE (idempotent — GraftIndex.docs already excludes
-    // earlier tombstones), so BM25 avgdl/idf don't drift until compact
-    val live = GraftIndex(spark, indexPath).docs.join(ids, Seq("doc_id"))
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).as[(Long, Long)].head()
-    ids.withColumn("gen", lit(gen))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/$name")
-    val newN = meta.nDocs - live._1
-    val newAvgdl =
-      if (newN <= 0) 0.0
-      else (meta.avgdl * meta.nDocs - live._2.toDouble) / newN
-    SegmentCatalog.commit(fs, indexPath,
-      meta.copy(nDocs = newN, avgdl = newAvgdl,
-        deleteSegments = meta.deleteSegments :+ name),
-      Map("deleted" -> name))
-    GraftIndex(spark, indexPath)
+    val base = readBase(spark, indexPath, "delete")
+    val del = stageDelete(base, docIds, idCol)
+    commit(base, Delta(deleted = Some(del)), Map("deleted" -> del.name))
   }
 
   def delete(spark: SparkSession, indexPath: String, docIds: Seq[Long]): GraftIndex = {
@@ -137,8 +213,9 @@ object IncrementalIndex {
   }
 
   /** Upsert (groonga `load` key-merge, /root/reference/lib/load.c:794-1203):
-    * tombstone the incoming ids across all existing segments, then append
-    * the new versions as a fresh segment. Buckets touched by the upsert pay
+    * tombstone the incoming ids across all existing segments and append
+    * the new versions as a fresh segment, in ONE commit — a failed append
+    * leaves the index as it was. Buckets touched by the upsert pay
     * a decode-merge at query time until the next compact; untouched buckets
     * keep the streaming fast path. Corpus stats (nDocs/avgdl) are exact at
     * commit time, and per-term df/idf are recomputed exactly at resolve
@@ -152,8 +229,12 @@ object IncrementalIndex {
       textCol: String,
       segmentName: String,
       cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    delete(spark, indexPath, docs.select(col(idCol)), idCol)
-    appendSegment(spark, indexPath, docs, idCol, textCol, segmentName, cfg)
+    val base = readBase(spark, indexPath, "upsert")
+    stageSegment(base, docs, idCol, textCol, segmentName, cfg).fold(GraftIndex(spark, indexPath)) { seg =>
+      val del = stageDelete(base, docs.select(col(idCol)), idCol)
+      commit(base, Delta(added = seg, deleted = Some(del)),
+        Map("deleted" -> del.name, "appendedSegment" -> segmentName))
+    }
   }
 
   /** `load` with the reference's full record-merge controls
@@ -205,72 +286,50 @@ object IncrementalIndex {
   /** Fold all segments AND tombstones into a fresh base. Posting blocks
     * already have the run layout, so compaction is: (tombstone-filter) →
     * union block rows → shuffle by (term, bucket) → merge/re-chunk → new
-    * base; no re-tokenization.
-    *
-    * Crash-atomic: everything is written under a fresh versioned dir
-    * (base-vN) and the manifest pointer is flipped in one atomic rename —
-    * a crash at any point leaves the previous committed state readable.
-    * Old dirs are removed only after the commit. */
+    * base; no re-tokenization. Crash-atomic: the base is written under a
+    * fresh versioned dir (base-mN) and published by [[commit]]. */
   def compact(spark: SparkSession, indexPath: String, cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    val fs = SegmentCatalog.fileSystem(spark, indexPath)
-    val idx = GraftIndex(spark, indexPath)
-    val meta = idx.meta
-
-    // manifest-version-derived: never recycled across the index's history
-    // (a count-derived base-vN could be recreated after later compactions,
-    // silently invalidating retained snapshots that referenced the old one)
-    val dstName = s"base-m${SegmentCatalog.nextVersion(fs, indexPath)}"
-    val dst = s"$indexPath/$dstName"
-    fs.delete(new Path(dst), true)
-    writeLive(idx, idx.postings, idx.docs, dst, cfg) // tombstone-filtered
-    // fresh corpus stats (delete/upsert drift folds away here)
-    val st = SegmentWriter.measure(spark, Seq(dstName -> dst))
-
-    // COMMIT: atomic manifest pointer flip to the new versioned base
-    SegmentCatalog.commit(fs, indexPath,
-      meta.copy(
-        // compact re-derives every block (incl. max_gtf), so the artifact
-        // is current-format even if the input base predated it
-        formatVersion = IndexBuilder.CurrentFormatVersion,
-        nDocs = st.nDocs,
-        avgdl = st.avgdl,
-        totalPostings = st.nPostings,
-        totalPayloadBytes = st.payloadBytes,
-        segments = Seq(dstName),
-        deleteSegments = Nil,
-        segStats = st.segs),
-      Map("compacted" -> dstName))
-
-    // cleanup after commit (crash here only leaves unreferenced garbage)
-    meta.dataSegments.foreach(SegmentCatalog.dropSegment(fs, indexPath, _))
-    meta.deleteSegments.foreach(s => fs.delete(new Path(s"$indexPath/$s"), true))
-    GraftIndex(spark, indexPath)
+    val base = readBase(spark, indexPath, "compact")
+    fold(base, Seq(base.meta.dataSegments.indices), cfg,
+      _ => s"base-m${commitVersion(base)}", "compacted")
   }
 
-  /** Write `blocks` and `docs` of `idx` as a new segment at `dst`: blocks
-    * are tombstone-filtered block-wise and fed back to the segment writer
-    * as runs, which re-merges them across segments by (term, bucket) in
-    * the index's own block layout. `docs` must already be live. */
-  private def writeLive(idx: GraftIndex, blocks: DataFrame, docs: DataFrame,
-      dst: String, cfg: IndexConfig): Unit = {
-    import idx.spark.implicits._
+  /** Rewrite each run of `base`'s data segments (manifest ordinals) as one
+    * new segment `name(k)`, tombstone-filtered, and commit them all in
+    * one delta that consumes every tombstone: each new segment takes its
+    * run head's slot. Blocks are filtered block-wise and fed back to the
+    * segment writer as runs, which re-merges them across segments by
+    * (term, bucket) in the index's own block layout. */
+  private def fold(base: GraftIndex, runs: Seq[Seq[Int]], cfg: IndexConfig,
+      name: Int => String, metric: String, baseStats: Seq[SegStats] = Nil): GraftIndex = {
+    import base.spark.implicits._
+    val fs = SegmentCatalog.fileSystem(base.spark, base.path)
+    val segs = base.meta.dataSegments
     // broadcast, not closure-embedded: shipped once per executor
-    val bc = idx.tombstones.broadcastSet
-    val runs = blocks.as[PostingBlockRow].flatMap { b =>
-      val ts = bc.fold(TombstoneSet.Empty)(_.value)
-      val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
-      live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
-        f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
+    val bc = base.tombstones.broadcastSet
+    val dirs = runs.zipWithIndex.map { case (ords, k) =>
+      val dir = s"${base.path}/${name(k)}"
+      fs.delete(new Path(dir), true)
+      val inRun = $"seg_ord".isin(ords: _*)
+      val blocks = base.postings.where(inRun).as[PostingBlockRow].flatMap { b =>
+        val ts = bc.fold(TombstoneSet.Empty)(_.value)
+        val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
+        live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
+          f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
+      }
+      SegmentWriter.write(base.spark, dir, blocks,
+        base.segDocs.where(inRun).select($"doc_id", $"dl"),
+        cfg.copy(withPositions = base.meta.withPositions, blockSize = base.meta.blockSize),
+        base.meta.sections.nonEmpty)
+      name(k) -> dir
     }
-    SegmentWriter.write(idx.spark, dst, runs, docs,
-      cfg.copy(withPositions = idx.meta.withPositions, blockSize = idx.meta.blockSize),
-      idx.meta.sections.nonEmpty)
+    commit(base, Delta(SegmentWriter.measure(base.spark, dirs),
+        dirs.map(_._1).zip(runs.map(_.map(segs))).toMap,
+        consumesTombstones = true, baseStats = baseStats),
+      Map(metric -> dirs.map(_._1).mkString(",")))
   }
 
-  private case class SegInfo(stats: SegStats, ord: Int, touched: Boolean) {
-    def name: String = stats.name
-    def nPostings: Long = stats.nPostings
-  }
+  private case class SegInfo(stats: SegStats, ord: Int, touched: Boolean)
 
   /** LEVELED (partial) compaction — the scale path. `compact` rewrites the
     * whole base; at 100 TB a compaction triggered by a 0.1% tombstone set
@@ -289,18 +348,15 @@ object IncrementalIndex {
     *
     * All tombstones are consumed (a tombstone's segment is by definition
     * touched, hence folded), so the commit drops deleteSegments entirely.
-    * Crash-atomic like compact: folds land in fresh `fold-G-K` dirs, the
-    * manifest flip is one atomic rename, replaced dirs are deleted after. */
+    * Crash-atomic like compact: folds land in fresh `fold-mN-K` dirs. */
   def compactPartial(
       spark: SparkSession,
       indexPath: String,
       cfg: IndexConfig = IndexConfig(),
       minKeepPostings: Long = 1L << 20): GraftIndex = {
-    import spark.implicits._
-    val fs = SegmentCatalog.fileSystem(spark, indexPath)
-    val idx = GraftIndex(spark, indexPath)
-    val meta = idx.meta
-    val tombs = idx.tombstones.set
+    val base = readBase(spark, indexPath, "compactPartial")
+    val meta = base.meta
+    val tombs = base.tombstones.set
     val segs = meta.dataSegments
 
     // Per-segment footprint + doc range: straight from the MANIFEST when
@@ -319,70 +375,13 @@ object IncrementalIndex {
 
     // contiguous runs of foldable segments; a run folds if it must (touched
     // tombstones) or if it actually merges something (>= 2 segments)
-    def foldableSeg(si: SegInfo) = si.touched || si.nPostings < minKeepPostings
-    val runs = scala.collection.mutable.ArrayBuffer.empty[Vector[SegInfo]]
-    var cur = Vector.empty[SegInfo]
-    infos.foreach { si =>
-      if (foldableSeg(si)) cur :+= si
-      else { if (cur.nonEmpty) { runs += cur; cur = Vector.empty } }
+    val runs = infos.foldLeft(Vector(Vector.empty[SegInfo])) { (acc, si) =>
+      if (si.touched || si.stats.nPostings < minKeepPostings) acc.init :+ (acc.last :+ si)
+      else acc :+ Vector.empty
     }
-    if (cur.nonEmpty) runs += cur
-    val folds = runs.filter(r => r.exists(_.touched) || r.length >= 2).toSeq
-    if (folds.isEmpty && meta.deleteSegments.isEmpty) return idx // nothing to do
-
-    // generation = next manifest version: globally unique fold names (the
-    // old max-over-current-segments counter recycled names once folds were
-    // themselves folded away — fatal for retained-snapshot validation)
-    val gen = SegmentCatalog.nextVersion(fs, indexPath)
-
-    val foldNames: Map[Int, String] = folds.zipWithIndex.map { case (run, k) =>
-      val dstName = s"fold-m$gen-$k"
-      val dst = s"$indexPath/$dstName"
-      fs.delete(new Path(dst), true)
-      // postings and docs of just this run, tombstone-filtered with the
-      // run segments' ordinals
-      val ords = run.map(_.ord)
-      writeLive(idx, idx.postings.where($"seg_ord".isin(ords: _*)),
-        idx.tombstones.live(run.map { si =>
-          spark.read.parquet(s"${SegmentCatalog.segmentDir(indexPath, si.name)}/docs")
-            .select($"doc_id", $"dl").withColumn("seg_ord", lit(si.ord))
-        }.reduce(_.unionByName(_))).select($"doc_id", $"dl"),
-        dst, cfg)
-      run.head.ord -> dstName
-    }.toMap
-
-    val foldedOrds = folds.flatMap(_.map(_.ord)).toSet
-    // full stats for the fold dirs: ONE measure across all folds (kept
-    // segments keep their measured footprint from the manifest — no IO)
-    val foldStatsByName: Map[String, SegStats] = SegmentWriter.measure(spark,
-      foldNames.values.toSeq.map(n => n -> s"$indexPath/$n")).segs.map(s => s.name -> s).toMap
-    // the new segment list with its stats, in order: kept segments ride
-    // through untouched, a fold dir takes its run head's slot
-    val newSegStats = infos.flatMap { si =>
-      if (!foldedOrds.contains(si.ord)) Some(si.stats)
-      else foldNames.get(si.ord).map(foldStatsByName)
-    }
-
-    // COMMIT (atomic manifest flip); nDocs/avgdl are already exact through
-    // mutations, tombstones are now folded away physically. The format
-    // version only advances when EVERY segment was re-derived (kept
-    // segments' blocks are untouched, so a partial fold of a v1 index must
-    // stay v1 — the version is a whole-artifact per-block guarantee).
-    SegmentCatalog.commit(fs, indexPath,
-      meta.copy(
-        formatVersion =
-          if (foldedOrds.size == infos.size) IndexBuilder.CurrentFormatVersion
-          else meta.formatVersion,
-        totalPostings = newSegStats.map(_.nPostings).sum,
-        totalPayloadBytes = newSegStats.map(_.payloadBytes).sum,
-        segments = newSegStats.map(_.name),
-        deleteSegments = Nil,
-        segStats = newSegStats),
-      Map("partialCompacted" -> foldNames.values.mkString(",")))
-
-    // cleanup after commit (crash here only leaves unreferenced garbage)
-    folds.flatten.foreach(si => SegmentCatalog.dropSegment(fs, indexPath, si.name))
-    meta.deleteSegments.foreach(s => fs.delete(new Path(s"$indexPath/$s"), true))
-    GraftIndex(spark, indexPath)
+    val folds = runs.filter(r => r.exists(_.touched) || r.length >= 2)
+    if (folds.isEmpty && meta.deleteSegments.isEmpty) return GraftIndex(spark, indexPath)
+    fold(base, folds.map(_.map(_.ord)), cfg, k => s"fold-m${commitVersion(base)}-$k",
+      "partialCompacted", baseStats)
   }
 }

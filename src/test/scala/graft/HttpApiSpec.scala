@@ -29,8 +29,9 @@ class HttpApiSpec extends AnyFunSuite {
       (3L, "columnar scan"), (4L, "spark spark spark"),
       (5L, "window functions")).toDF("doc_id", "text")
   }
-  private def serve(): GraftHttpServer = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-http").toString + "/idx"
+  private def freshDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-http").toString + "/idx"
+  private def serve(dir: String = freshDir()): GraftHttpServer = {
     val built = graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", dir,
       graft.index.IndexConfig(tokenizer = "TokenBigram"))
     new GraftHttpServer(spark, Map("docs" -> built), Map("docs" -> docs)).start()
@@ -189,5 +190,60 @@ class HttpApiSpec extends AnyFunSuite {
     val body = new String(
       get("/d/select?table=docs&query=freshly&limit=5").body(), "UTF-8")
     assert(body.contains("[9,1]"))
+  }
+
+  private def load(server: GraftHttpServer, body: String) =
+    client.sendAsync(
+      HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${server.boundPort}/d/load?table=docs"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def selectBody(server: GraftHttpServer, query: String): String =
+    new String(getFrom(server, s"/d/select?table=docs&query=$query&limit=10").body(), "UTF-8")
+
+  test("POST /d/load takes body rows in any order") {
+    val dir = freshDir()
+    val s = serve(dir)
+    try {
+      assert(selectBody(s, "columnar").contains("[3,1]"))
+      val post = load(s,
+        """[{"doc_id": 5, "text": "zzqa reloaded"}, {"doc_id": 3, "text": "zzqb reloaded"}]""").join()
+      assert(post.statusCode() == 200 && post.body().endsWith(",2]"), post.body())
+      assert(graft.index.GraftIndex(spark, dir).meta.nDocs == 5)
+      assert(!selectBody(s, "columnar").contains("[3,"), "old terms of doc 3 still match")
+      assert(!selectBody(s, "window").contains("[5,"), "old terms of doc 5 still match")
+      assert(selectBody(s, "zzqa").contains("[5,1]") && selectBody(s, "zzqb").contains("[3,1]"))
+    } finally s.stop()
+  }
+
+  test("POST /d/load of a duplicate id fails with the error envelope and commits nothing") {
+    val dir = freshDir()
+    val s = serve(dir)
+    try {
+      val fs = graft.index.SegmentCatalog.fileSystem(spark, dir)
+      val versions = graft.index.SegmentCatalog.listVersions(fs, dir)
+      val head = graft.index.SegmentCatalog.readMeta(fs, dir)
+      val post = load(s,
+        """[{"doc_id": 2, "text": "zzqc one"}, {"doc_id": 2, "text": "zzqc two"}]""").join()
+      assert(post.statusCode() == 400 && post.body().startsWith("[[-22,"), post.body())
+      assert(graft.index.SegmentCatalog.listVersions(fs, dir) == versions)
+      assert(graft.index.SegmentCatalog.readMeta(fs, dir) == head)
+      assert(selectBody(s, "joins").contains("[2,1]"))
+    } finally s.stop()
+  }
+
+  test("concurrent POST /d/load to one table both land") {
+    val dir = freshDir()
+    val s = serve(dir)
+    try {
+      val posts = Seq(7 -> "zzqd", 8 -> "zzqe").map { case (id, t) =>
+        load(s, s"""[{"doc_id": $id, "text": "$t concurrent"}]""")
+      }.map(_.join())
+      posts.foreach(p => assert(p.statusCode() == 200, p.body()))
+      assert(graft.index.GraftIndex(spark, dir).meta.nDocs == 7)
+      assert(selectBody(s, "zzqd").contains("[7,1]") && selectBody(s, "zzqe").contains("[8,1]"))
+      assert(selectBody(s, "concurrent").contains("[7,") && selectBody(s, "concurrent").contains("[8,"))
+    } finally s.stop()
   }
 }

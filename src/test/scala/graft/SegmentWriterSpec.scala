@@ -93,7 +93,7 @@ class SegmentWriterSpec extends AnyFunSuite {
     assert(searchIds(app, term) == hits)
     assertExactStats(app)
 
-    // upsert of doc 5 to "": the delete and the (empty) append both commit
+    // upsert of doc 5 to "": the delete and the (empty) append commit together
     val victim = 5L
     val oldTerms = Analyzers.byName(cfg.tokenizer).tokenize(corpus(victim.toInt)._2)
       .map(_.term).distinct.toSeq
@@ -163,6 +163,24 @@ class SegmentWriterSpec extends AnyFunSuite {
     assert(fileStamps(s"$p/seg-a/postings") == segPostings, "segment postings rewritten")
     assert(again.meta.segments == Seq(".", "seg-a"))
     assert(again.meta.nDocs == nBase + 30)
+    assertExactStats(again)
+  }
+
+  test("an append under a name the head already lists commits nothing") {
+    val all = WebCorpus.generate(spark, 120, 4)
+    val p = s"$tmp/append-twice"
+    IndexBuilder.build(spark, all.where($"doc_id" < 100), "doc_id", "text", p, cfg)
+    val batch = all.where($"doc_id" >= 100)
+    IncrementalIndex.appendSegment(spark, p, batch, "doc_id", "text", "seg-a", cfg)
+    val fs = SegmentCatalog.fileSystem(spark, p)
+    val versions = SegmentCatalog.listVersions(fs, p)
+    val segPostings = fileStamps(s"$p/seg-a/postings")
+
+    val again = IncrementalIndex.appendSegment(spark, p, batch, "doc_id", "text", "seg-a", cfg)
+    assert(SegmentCatalog.listVersions(fs, p) == versions, "no commit")
+    assert(fileStamps(s"$p/seg-a/postings") == segPostings, "segment postings rewritten")
+    assert(again.meta.segments == Seq(".", "seg-a"))
+    assert(again.meta.nDocs == 120 && again.docs.count() == 120)
     assertExactStats(again)
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.corpus.WebCorpus
-import graft.index.{GraftIndex, IndexBuilder, IndexConfig}
+import graft.index.{GraftIndex, IndexBuilder, IndexConfig, SegmentCatalog}
 import graft.query.{MatchMode, ScoreMode}
 import graft.streaming.IncrementalIndex
 
@@ -376,5 +376,116 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("expired") || e.getMessage.contains("not retained"))
     assert(collectScores(GraftIndex(spark, p)
       .searchTerms(Seq(term), MatchMode.Any, ScoreMode.Tf)) == live)
+  }
+
+  /** a fresh index of docs 0 until 100 at `p` */
+  private def small(p: String): GraftIndex =
+    IndexBuilder.build(spark, WebCorpus.generate(spark, 100, 2), "doc_id", "text", p, cfg)
+
+  private def hits(idx: GraftIndex, term: String): Set[Long] =
+    collectScores(idx.searchTerms(Seq(term), MatchMode.Any, ScoreMode.Tf)).keySet
+
+  /** an indexed term of corpus doc `i` */
+  private def termOf(i: Long): String =
+    graft.analyzer.Analyzers.byName(cfg.tokenizer).tokenize(corpus(i.toInt)._2).head.term
+
+  test("an upsert whose append fails leaves the previous manifest as head") {
+    val p = s"$tmp/upsert-fail"
+    val base = small(p)
+    val fs = SegmentCatalog.fileSystem(spark, p)
+    val versions = SegmentCatalog.listVersions(fs, p)
+    val victims = Seq(7L, 3L)
+    val victimTerm = victims.map(v => v -> termOf(v)).toMap
+    victimTerm.foreach { case (v, t) => assert(hits(base, t).contains(v)) }
+    // ids 7 then 3 in one partition break the builder's ascending-ids rule
+    val bad = victims.map(v => (v, "replacement text")).toDF("doc_id", "text").coalesce(1)
+    intercept[Exception] {
+      IncrementalIndex.upsert(spark, p, bad, "doc_id", "text", "seg-bad", cfg)
+    }
+    val head = GraftIndex(spark, p)
+    assert(SegmentCatalog.listVersions(fs, p) == versions)
+    assert(head.meta.nDocs == 100)
+    assert(!head.meta.deleteSegments.exists(_.startsWith("del-")))
+    victimTerm.foreach { case (v, t) => assert(hits(head, t).contains(v), s"doc $v lost") }
+  }
+
+  test("an upsert is one manifest commit") {
+    val p = s"$tmp/upsert-once"
+    small(p)
+    val fs = SegmentCatalog.fileSystem(spark, p)
+    val before = SegmentCatalog.listVersions(fs, p)
+    val up = IncrementalIndex.upsert(spark, p, Seq((5L, "zzzonce text")).toDF("doc_id", "text"),
+      "doc_id", "text", "seg-once", cfg)
+    assert(SegmentCatalog.listVersions(fs, p) == before :+ (before.last + 1))
+    assert(up.meta.segments == Seq(".", "seg-once") && up.meta.deleteSegments.length == 1)
+    assert(up.meta.nDocs == 100 && hits(up, "zzzonce") == Set(5L))
+  }
+
+  test("a commit staged on a stale base throws and leaves the head unchanged") {
+    val p = s"$tmp/stale"
+    small(p)
+    val fs = SegmentCatalog.fileSystem(spark, p)
+    val stale = GraftIndex(spark, p, SegmentCatalog.listVersions(fs, p).lastOption)
+    IncrementalIndex.delete(spark, p, Seq(1L))
+    val versions = SegmentCatalog.listVersions(fs, p)
+    val head = SegmentCatalog.readMeta(fs, p)
+    intercept[java.util.ConcurrentModificationException] {
+      IncrementalIndex.commit(stale, IncrementalIndex.Delta(), Map.empty)
+    }
+    assert(SegmentCatalog.listVersions(fs, p) == versions)
+    assert(SegmentCatalog.readMeta(fs, p) == head)
+  }
+
+  /** stream the parquet files under `in` into `p`, one batch per file */
+  private def stream(p: String, in: String, checkpoint: String): GraftIndex = {
+    IncrementalIndex.streamAppend(spark, spark.readStream
+      .schema(spark.read.parquet(in).schema).option("maxFilesPerTrigger", "1").parquet(in),
+      p, "doc_id", "text", checkpoint, cfg)
+    GraftIndex(spark, p)
+  }
+
+  /** docs [lo, hi) as parquet files of 20 docs each under `in`, written
+    * in id order */
+  private def streamInput(in: String, lo: Long, hi: Long): String = {
+    (lo until hi by 20L).foreach { a =>
+      WebCorpus.generate(spark, a + 20, 1).where(col("doc_id") >= a)
+        .write.mode("append").parquet(in)
+    }
+    in
+  }
+
+  private def docIds(idx: GraftIndex): Seq[Long] =
+    idx.docs.select("doc_id").as[Long].collect().sorted.toSeq
+
+  test("a stream batch replayed after its commit adds nothing") {
+    val p = s"$tmp/replay"
+    small(p)
+    val in = streamInput(s"$tmp/replay-in", 100, 160)
+    val first = stream(p, in, s"$tmp/replay-ck")
+    assert(first.meta.segments.length == 4 && docIds(first) == (0L until 160L))
+    val versions = SegmentCatalog.listVersions(SegmentCatalog.fileSystem(spark, p), p)
+    // lose the checkpoint's newest batch commit: that batch is replayed
+    val commits = new java.io.File(s"$tmp/replay-ck/commits")
+    val newest = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    new java.io.File(commits, newest).delete()
+    new java.io.File(commits, s".$newest.crc").delete()
+    val replayed = stream(p, in, s"$tmp/replay-ck")
+    assert(new java.io.File(commits, newest).exists(), "the batch was not replayed")
+    assert(SegmentCatalog.listVersions(SegmentCatalog.fileSystem(spark, p), p) == versions)
+    assert(replayed.meta.segments == first.meta.segments)
+    assert(replayed.meta.nDocs == 160 && docIds(replayed) == (0L until 160L))
+  }
+
+  test("a second stream under a fresh checkpoint lands all its rows") {
+    val p = s"$tmp/restream"
+    small(p)
+    val first = stream(p, streamInput(s"$tmp/restream-in1", 100, 160), s"$tmp/restream-ck1")
+      .meta.segments
+    // batch ids restart at 0 under the new checkpoint
+    val second = stream(p, streamInput(s"$tmp/restream-in2", 160, 220), s"$tmp/restream-ck2")
+    assert(first.length == 4 && second.meta.segments.length == 7)
+    assert(second.meta.segments.take(4) == first)
+    assert(second.meta.nDocs == 220 && docIds(second) == (0L until 220L))
+    assert(hits(second, termOf(200)).contains(200L))
   }
 }
