@@ -382,7 +382,7 @@ object FulltextQueries {
       |WHERE term = 'spark' ORDER BY doc_id""".stripMargin
 
   /** BM25 over the mutated, UNCOMPACTED index: exercises the resolve-time
-    * exact df/idf recomputation under tombstones (GraftIndex.exactTermStats)
+    * exact df/idf recomputation under tombstones (GraftIndex.termStats)
     * — the oracle computes BM25 from a from-scratch mutated corpus, so any
     * df/avgdl drift would flip the hash. */
   def afterUpdateBm25(spark: SparkSession, dir: String): DataFrame =

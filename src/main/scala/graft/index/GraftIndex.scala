@@ -94,26 +94,26 @@ final case class GraftIndex(spark: SparkSession, path: String,
       .map(_.toLong).getOrElse(GraftIndex.DefaultSmallQueryMaxPostings)
 
   /** THE kernel dispatch: every search's posting read runs here, once for a
-    * whole batch of (query_id, query) pairs. It does three things in one
-    * place — the term-IN pruned postings scan, the choice of execution
-    * site, and the tombstone injection — and returns (query_id, doc_id,
-    * score) rows.
+    * whole batch of queries over `terms`. `plan` turns the terms' exact
+    * stats into the (query_id, query) pairs to run; a query it leaves out
+    * (a conjunction with an unknown term) matches nothing. Returns
+    * (query_id, doc_id, score) rows.
     *
-    * SMALL-QUERY fast path: a top-k term query costs one Spark job of two
+    * SMALL-QUERY path: a top-k term query costs one Spark job of two
     * stages (pruned scan → bucket shuffle → kernel) — on a warm index
     * that is ~200 ms of scheduling for milliseconds of kernel work
     * (groonga answers the same query in-process, lib/ii.cpp's
-    * grn_ii_select runs on the caller's thread). When the DICTIONARY
-    * stats bound the batch's total posting footprint under
-    * `smallQueryCap` (known before any scan — Σ df over the resolved
-    * terms; a term shared by two queries counts twice, an upper bound),
-    * the pruned block scan is collected (bounded: ≤ cap postings ≈ a few
-    * MB) and the SAME kernel runs per bucket on the driver against the
-    * driver tombstone arrays; the result is a LocalRelation, so downstream
-    * top-k never launches a second stage. At web scale a common term's df
-    * blows the cap and the batch takes the distributed path — the fast
-    * path is for short-posting-list queries where scheduling dominates,
-    * and its cap makes driver memory a constant, not a function of corpus
+    * grn_ii_select runs on the caller's thread). So the terms' pruned
+    * block scan is collected by [[scanBlocks]], bounded by
+    * `smallQueryCap` postings, and the SAME kernel runs per bucket on the
+    * driver against the driver tombstone arrays. That one job also yields
+    * the stats of every cold term, so a select under the cap is exactly
+    * one Spark job, and its result is a LocalRelation: downstream top-k
+    * never launches another stage. With every term warm, the cached df
+    * decide up front whether the scan can fit the cap (on a clean index
+    * their sum is exactly the scan's postings). At web scale a
+    * common term blows the cap and the batch takes the distributed path;
+    * the cap makes driver memory a constant, not a function of corpus
     * size.
     *
     * DISTRIBUTED path: per bucket, the kernel runs every query of a chunk
@@ -123,47 +123,157 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * UNION of the chunk's terms, so the batch is split greedily into
     * chunks of Σ df ≤ DefaultBatchMaxPostings, one scan + shuffle each; a
     * single query over that cap runs as its own chunk. */
-  private def runKernels(queries: Seq[(Int, ResolvedQuery)]): DataFrame = {
-    def scan(qs: Seq[(Int, ResolvedQuery)]): Dataset[PostingBlockRow] =
-      postings.where($"term".isin(qs.flatMap(_._2.terms.map(_.term)).distinct: _*))
-        .as[PostingBlockRow]
-    def postingsBound(q: ResolvedQuery): Long = q.terms.iterator.map(_.df).sum
+  private def runKernels(terms: Seq[String])(
+      plan: Map[String, TermStatRow] => Seq[(Int, ResolvedQuery)]): DataFrame = {
+    val ts = terms.distinct
+    val missing = ts.filterNot(termStatCache.containsKey)
+    val cap = smallQueryCap
+    val coldBlocks =
+      if (missing.isEmpty) None else scanBlocks(if (cap > 0) ts else missing, missing, cap)
+    val stats = cachedStats(ts)
+    val queries = plan(stats)
     if (queries.isEmpty)
       return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
-    if (smallQueryCap > 0 && queries.iterator.map(q => postingsBound(q._2)).sum <= smallQueryCap) {
-      val ts = tombstones.set
-      val byBucket = scan(queries).collect() // one stage, term-IN-pruned, ≤ cap postings
-        .groupBy(_.bucket).toSeq.sortBy(_._1)
-      val out = queries.iterator.flatMap { case (qid, q0) =>
-        val q = q0.copy(tombstones = ts)
-        byBucket.iterator.flatMap { case (_, rs) =>
-          MatchKernel.run(q, rs.iterator).map { case (d, s) => (qid, d, s) }
-        }
-      }.toSeq
-      return spark.createDataset(out).toDF("query_id", "doc_id", "score")
-    }
-    val bc = tombstones.broadcastSet
-    val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Int, ResolvedQuery)])
-    var acc = 0L
-    queries.foreach { qq =>
-      val qdf = postingsBound(qq._2)
-      if (chunks.last.nonEmpty && acc + qdf > GraftIndex.DefaultBatchMaxPostings) {
-        chunks += Vector.empty; acc = 0L
-      }
-      chunks(chunks.length - 1) :+= qq; acc += qdf
-    }
-    chunks.iterator.map { chunk =>
-      scan(chunk).groupByKey(_.bucket)
-        .flatMapGroups { (_, rows) =>
-          val mat = rows.toArray // one bucket's blocks for THIS chunk's terms
-          chunk.iterator.flatMap { case (qid, q0) =>
-            val q = bc.fold(q0)(b => q0.copy(tombstones = b.value))
-            MatchKernel.run(q, mat.iterator).map { case (d, s) => (qid, d, s) }
+    val blocks =
+      if (missing.nonEmpty || cap <= 0 || stats.valuesIterator.map(_.df).sum > cap) coldBlocks
+      else scanBlocks(ts, Nil, cap)
+    blocks match {
+      case Some(bs) =>
+        val tset = tombstones.set
+        val byBucket = bs.groupBy(_.bucket).toSeq.sortBy(_._1)
+        val out = queries.iterator.flatMap { case (qid, q0) =>
+          val q = q0.copy(tombstones = tset)
+          byBucket.iterator.flatMap { case (_, rs) =>
+            MatchKernel.run(q, rs.iterator).map { case (d, s) => (qid, d, s) }
           }
+        }.toSeq
+        spark.createDataset(out).toDF("query_id", "doc_id", "score")
+      case None =>
+        val bc = tombstones.broadcastSet
+        val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Int, ResolvedQuery)])
+        var acc = 0L
+        queries.foreach { qq =>
+          val qdf = qq._2.terms.iterator.map(_.df).sum
+          if (chunks.last.nonEmpty && acc + qdf > GraftIndex.DefaultBatchMaxPostings) {
+            chunks += Vector.empty; acc = 0L
+          }
+          chunks(chunks.length - 1) :+= qq; acc += qdf
         }
-        .toDF("query_id", "doc_id", "score")
-    }.reduce(_ union _)
+        chunks.iterator.map { chunk =>
+          blockScan(chunk.flatMap(_._2.terms.map(_.term)).distinct)
+            .groupByKey(_.bucket)
+            .flatMapGroups { (_, rows) =>
+              val mat = rows.toArray // one bucket's blocks for THIS chunk's terms
+              chunk.iterator.flatMap { case (qid, q0) =>
+                val q = bc.fold(q0)(b => q0.copy(tombstones = b.value))
+                MatchKernel.run(q, mat.iterator).map { case (d, s) => (qid, d, s) }
+              }
+            }
+            .toDF("query_id", "doc_id", "score")
+        }.reduce(_ union _)
+    }
   }
+
+  /** the term-IN-pruned posting block scan: parquet row-group stats prune
+    * everything but the terms' blocks */
+  private def blockScan(terms: Seq[String]): Dataset[PostingBlockRow] =
+    postings.where($"term".isin(terms: _*)).as[PostingBlockRow]
+
+  /** ONE bounded collect of the block scan of `terms` — the one Spark job
+    * of a small select. Each scan task returns its blocks when their Σcnt
+    * fits `cap`, else only per-term partial stats (Σcnt, Σtf_sum,
+    * max max_tf); the driver keeps blocks while the running Σcnt fits and
+    * drops them all once it passes the cap. So the driver never holds more
+    * than `cap` postings of payload (cap ≤ 0: none).
+    *
+    * The stats of the `missing` terms go into termStatCache from the same
+    * rows:
+    *  - clean index: the partials summed, exactly how the segment writer
+    *    builds the dictionary and how its rows sum across segments;
+    *  - tombstones, under the cap: the held blocks decoded under the
+    *    tombstone rule ([[liveStats]]);
+    *  - tombstones, over the cap: the distributed exact aggregate.
+    * A term with no blocks is unknown (cached as None).
+    *
+    * Returns the blocks, in scan order, when the whole scan fit the cap. */
+  private def scanBlocks(terms: Seq[String], missing: Seq[String],
+      cap: Long): Option[Array[PostingBlockRow]] = {
+    val scan = blockScan(terms).rdd
+    val parts = new Array[Array[PostingBlockRow]](scan.getNumPartitions)
+    val partials = scala.collection.mutable.HashMap.empty[String, TermStatRow]
+    var fits = cap > 0
+    var held = 0L
+    def drop(): Unit = {
+      fits = false; held = 0L
+      parts.indices.foreach(parts(_) = null)
+    }
+    spark.sparkContext.runJob(scan, GraftIndex.scanTask(cap) _,
+      (i: Int, r: Either[Array[PostingBlockRow], Array[TermStatRow]]) => {
+        r match {
+          case Left(bs) =>
+            bs.foreach(b => GraftIndex.foldStat(partials, GraftIndex.blockStat(b)))
+            val n = bs.iterator.map(_.cnt.toLong).sum
+            if (fits && held + n <= cap) { parts(i) = bs; held += n } else drop()
+          case Right(ps) =>
+            ps.foreach(GraftIndex.foldStat(partials, _))
+            drop()
+        }
+        peakHeldPostings = math.max(peakHeldPostings, held)
+      })
+    val blocks = if (fits) Some(parts.flatten) else None
+    if (missing.nonEmpty) {
+      val stats =
+        if (tombstones.isEmpty) partials
+        else {
+          val want = missing.toSet
+          blocks.fold(distributedLiveStats(missing))(bs =>
+            liveStats(bs.iterator.filter(b => want(b.term))))
+        }
+      missing.foreach(t => termStatCache.put(t, stats.get(t)))
+    }
+    blocks
+  }
+
+  /** the most postings of payload [[scanBlocks]] held on the driver at
+    * once, over this handle's life; never above the cap */
+  @transient @volatile private[graft] var peakHeldPostings: Long = 0L
+
+  /** exact live stats of `blocks` on the driver, under the tombstone rule:
+    * df counts distinct live docs (sectioned payloads repeat a doc per
+    * sid), total_tf and max_tf range over live postings. A term with no
+    * live posting is absent. */
+  private def liveStats(blocks: Iterator[PostingBlockRow]): Map[String, TermStatRow] = {
+    val tset = tombstones.set
+    val acc = scala.collection.mutable.HashMap
+      .empty[String, (java.util.HashSet[java.lang.Long], Array[Long])]
+    blocks.foreach { b =>
+      val (docSet, sums) = acc.getOrElseUpdate(b.term,
+        (new java.util.HashSet[java.lang.Long](), Array(0L, 0L)))
+      val d = graft.codec.PostingCodec.decode(b.payload)
+      var i = 0
+      while (i < d.count) {
+        if (tset.isLive(d.docIds(i), b.seg_ord)) {
+          docSet.add(d.docIds(i))
+          sums(0) += d.tfs(i)                       // total_tf
+          if (d.tfs(i) > sums(1)) sums(1) = d.tfs(i) // max_tf
+        }
+        i += 1
+      }
+    }
+    acc.iterator.collect { case (t, (docSet, sums)) if !docSet.isEmpty =>
+      t -> TermStatRow(t, docSet.size.toLong, sums(0), sums(1).toInt)
+    }.toMap
+  }
+
+  /** [[liveStats]] as a distributed aggregate, for term sets past the cap */
+  private def distributedLiveStats(terms: Seq[String]): Map[String, TermStatRow] =
+    decodedAlive(blockScan(terms))
+      .groupBy($"term")
+      .agg(countDistinct($"doc_id").as("df"),
+        sum($"tf").cast("long").as("total_tf"),
+        max($"tf").cast("int").as("max_tf"))
+      .as[TermStatRow]
+      .collect().map(t => t.term -> t).toMap
 
   /** empty (doc_id, score) result with the canonical schema */
   def emptyResult: DataFrame = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
@@ -171,96 +281,23 @@ final case class GraftIndex(spark: SparkSession, path: String,
   @transient private lazy val termStatCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[TermStatRow]]()
 
-  /** driver-side stats lookup for a small set of query terms (tiny result;
-    * the IN filter prunes parquet row groups). Aggregates across segments;
-    * memoized per index instance (term stats are immutable per snapshot).
-    *
-    * On an index with UNCOMPACTED mutations the per-segment dictionary rows
-    * overcount: a deleted doc still sits in its segment's df, and an
-    * upserted doc counts once per segment that carries it. nDocs/avgdl are
-    * kept exact through mutations at commit time; per-term df/total_tf are
-    * made exact here at resolve time instead, by decoding just the query
-    * terms' postings (the same blocks the kernel is about to scan) under
-    * the tombstone generation filter — so BM25 idf over a mutated index
-    * matches a from-scratch rebuild exactly. */
+  private def cachedStats(ts: Seq[String]): Map[String, TermStatRow] =
+    ts.flatMap(t => Option(termStatCache.get(t)).flatten.map(t -> _)).toMap
+
+  /** exact per-term stats of a small set of query terms, memoized per
+    * index instance (term stats are immutable per snapshot). They come
+    * from the block scan a search runs ([[scanBlocks]]), so on an index
+    * with UNCOMPACTED mutations they are exact too: a deleted doc, or an
+    * upserted doc's old postings, do not count, and BM25 idf over a
+    * mutated index matches a from-scratch rebuild exactly. */
   def termStats(qterms: Seq[String]): Map[String, TermStatRow] = {
-    val missing = qterms.distinct.filterNot(termStatCache.containsKey)
-    if (missing.nonEmpty) {
-      val fetched =
-        if (tombstones.isEmpty) dictTermStats(missing)
-        else exactTermStats(missing)
-      missing.foreach(t => termStatCache.put(t, fetched.get(t)))
-    }
-    qterms.distinct.flatMap(t =>
-      Option(termStatCache.get(t)).flatten.map(t -> _)).toMap
-  }
-
-  /** dictionary stats folded on the DRIVER: the term-IN-pruned scan returns
-    * at most |terms| x |segments| dictionary rows (a handful), so collecting
-    * them and summing per term replaces the groupBy exchange — every cold
-    * term resolve costs one single-stage job instead of a two-stage shuffle
-    * job. Long/int arithmetic only: bit-identical to the aggregate it
-    * replaces. */
-  private def dictTermStats(missing: Seq[String]): Map[String, TermStatRow] = {
-    val rows = terms.where($"term".isin(missing: _*))
-      .select($"term", $"df", $"total_tf", $"max_tf")
-      .as[(String, Long, Long, Int)]
-      .collect()
-    rows.groupBy(_._1).map { case (t, rs) =>
-      t -> TermStatRow(t, rs.iterator.map(_._2).sum,
-        rs.iterator.map(_._3).sum, rs.iterator.map(_._4).max)
-    }
-  }
-
-  /** exact per-term stats under tombstones: decode the terms' postings,
-    * drop generations a tombstone hides, count distinct live docs (sectioned
-    * payloads repeat a doc per sid — distinct, not count). max_tf stays the
-    * dictionary upper bound semantics: max over live entries.
-    *
-    * SMALL-QUERY fast path (the same cap runKernels applies): the
-    * dictionary df sums — known from a driver-side pruned lookup BEFORE any
-    * payload moves — upper-bound the live posting count, so when they fit
-    * the small-query cap the pruned payload blocks are collected (bounded,
-    * a few MB) and decoded on the driver against the tombstone arrays: one
-    * scan-only stage, no exchange, no second job. Past the cap the
-    * distributed decode (decodedAlive) + aggregate runs. */
-  private def exactTermStats(missing: Seq[String]): Map[String, TermStatRow] = {
-    val dict = dictTermStats(missing)
-    val bound = dict.valuesIterator.map(_.df).sum
-    val blocks = postings.where($"term".isin(missing: _*))
-    if (smallQueryCap > 0 && bound <= smallQueryCap) {
-      val ts = tombstones.set
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, (java.util.HashSet[java.lang.Long], Array[Long])]
-      blocks.select($"term", $"seg_ord", $"payload")
-        .as[(String, Int, Array[Byte])]
-        .collect() // one stage, term-IN-pruned, ≤ cap postings
-        .foreach { case (t, seg, payload) =>
-          val (docSet, sums) = acc.getOrElseUpdate(t,
-            (new java.util.HashSet[java.lang.Long](), Array(0L, 0L)))
-          val d = graft.codec.PostingCodec.decode(payload)
-          var i = 0
-          while (i < d.count) {
-            if (ts.isLive(d.docIds(i), seg)) {
-              docSet.add(d.docIds(i))
-              sums(0) += d.tfs(i)                       // total_tf
-              if (d.tfs(i) > sums(1)) sums(1) = d.tfs(i) // max_tf
-            }
-            i += 1
-          }
-        }
-      acc.iterator.collect { case (t, (docSet, sums)) if !docSet.isEmpty =>
-        t -> TermStatRow(t, docSet.size.toLong, sums(0), sums(1).toInt)
-      }.toMap
-    } else {
-      decodedAlive(blocks.as[PostingBlockRow])
-        .groupBy($"term")
-        .agg(countDistinct($"doc_id").as("df"),
-          sum($"tf").cast("long").as("total_tf"),
-          max($"tf").cast("int").as("max_tf"))
-        .as[TermStatRow]
-        .collect().map(t => t.term -> t).toMap
-    }
+    val ts = qterms.distinct
+    val missing = ts.filterNot(termStatCache.containsKey)
+    // no kernel runs here: a clean index needs only the partial stats,
+    // tombstones need the blocks to decode
+    if (missing.nonEmpty)
+      scanBlocks(missing, missing, if (tombstones.isEmpty) 0L else smallQueryCap)
+    cachedStats(ts)
   }
 
   /** Position-dependent match modes need an index built withPositions —
@@ -284,13 +321,19 @@ final case class GraftIndex(spark: SparkSession, path: String,
     if (w.isEmpty || meta.sections.isEmpty) Array.emptyDoubleArray
     else meta.sections.map(c => w.getOrElse(c, 1.0)).toArray
 
+  /** a conjunctive mode matches nothing when a term is unknown */
+  private def requiresAll(mode: MatchMode): Boolean = mode match {
+    case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near => true
+    case _ => false
+  }
+
   private def resolve(
+      stats: Map[String, TermStatRow],
       termsWithPos: Seq[(String, Int, Double)],
       mode: MatchMode,
       score: ScoreMode,
       topK: Int,
       sectionWeights: Map[String, Double] = Map.empty): ResolvedQuery = {
-    val stats = termStats(termsWithPos.map(_._1).distinct)
     val rts = termsWithPos.map { case (t, qpos, w) =>
       val st = stats.get(t)
       ResolvedTerm(t, st.map(_.df).getOrElse(0L),
@@ -316,18 +359,10 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val withPos = qterms.zipWithIndex.map { case (t, i) =>
       (t, i, weights.getOrElse(t, 1.0))
     }
-    val distinctTerms = qterms.distinct
-    // conjunctive query with an unknown term can match nothing — skip the scan
-    val stats = termStats(distinctTerms)
-    val allKnown = distinctTerms.forall(stats.contains)
-    val requireAll = mode match {
-      case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near => true
-      case _ => false
-    }
-    if (requireAll && !allKnown)
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    runKernels(Seq(0 -> resolve(withPos, mode, score, topK, sectionWeights)))
-      .drop("query_id")
+    runKernels(qterms) { stats =>
+      if (requiresAll(mode) && !qterms.forall(stats.contains)) Nil
+      else Seq(0 -> resolve(stats, withPos, mode, score, topK, sectionWeights))
+    }.drop("query_id")
   }
 
   /** BATCHED multi-query search: N term queries answered through ONE
@@ -339,9 +374,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * reference dispatches each query on its own thread over shared memory
     * (grn_ii_select per caller), here a query BATCH becomes one job whose
     * scan/shuffle cost is shared — at 1000 executors, k queries cost one
-    * scan, not k. Driver stats for the whole batch are fetched in one
-    * dictionary lookup, and a batch whose total posting footprint fits
-    * `smallQueryCap` runs driver-side in a single stage.
+    * scan, not k. The stats of the whole batch come from the same scan,
+    * and a batch whose blocks fit `smallQueryCap` runs driver-side in one
+    * job.
     *
     * Output: (query_id, doc_id, score); query_id = position in `batch`.
     * Conjunctive queries containing an unknown term match nothing, same
@@ -354,17 +389,14 @@ final case class GraftIndex(spark: SparkSession, path: String,
       sectionWeights: Map[String, Double] = Map.empty): DataFrame = {
     requirePositionsFor(mode)
     val allTerms = batch.flatten.distinct
-    if (allTerms.isEmpty) return runKernels(Nil)
-    val stats = termStats(allTerms) // one driver lookup for the whole batch
-    val requireAll = mode match {
-      case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near => true
-      case _ => false
+    if (allTerms.isEmpty) return runKernels(Nil)(_ => Nil)
+    runKernels(allTerms) { stats =>
+      batch.zipWithIndex.collect {
+        case (qts, qid) if !requiresAll(mode) || qts.forall(stats.contains) =>
+          val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
+          qid -> resolve(stats, withPos, mode, score, topK, sectionWeights)
+      }
     }
-    runKernels(batch.zipWithIndex.collect {
-      case (qts, qid) if !requireAll || qts.distinct.forall(stats.contains) =>
-        val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
-        qid -> resolve(withPos, mode, score, topK, sectionWeights)
-    })
   }
 
   /** Per-query top-k over a searchTermsBatch result, reference tie order. */
@@ -380,12 +412,12 @@ final case class GraftIndex(spark: SparkSession, path: String,
   def searchPhrase(phrase: String, score: ScoreMode = ScoreMode.Tf, topK: Int = 0): DataFrame = {
     requirePositionsFor(MatchMode.Phrase)
     val toks = analyzeQuery(phrase)
-    if (toks.isEmpty) return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val stats = termStats(toks.map(_._1).distinct)
-    if (!toks.forall(t => stats.contains(t._1)))
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val q = resolve(toks.map { case (t, p) => (t, p, 1.0) }, MatchMode.Phrase, score, topK)
-    runKernels(Seq(0 -> q)).drop("query_id")
+    if (toks.isEmpty) return emptyResult
+    runKernels(toks.map(_._1)) { stats =>
+      if (!toks.forall(t => stats.contains(t._1))) Nil
+      else Seq(0 -> resolve(stats, toks.map { case (t, p) => (t, p, 1.0) },
+        MatchMode.Phrase, score, topK))
+    }.drop("query_id")
   }
 
   /** NEAR_PHRASE / ORDERED_NEAR_PHRASE: every phrase occurs and the phrase
@@ -404,16 +436,18 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val toksByPhrase = phrases.map(analyzeQuery)
     if (toksByPhrase.isEmpty || toksByPhrase.exists(_.isEmpty)) return emptyResult
     val allTerms = toksByPhrase.flatten.map(_._1).distinct
-    val stats = termStats(allTerms)
-    if (!allTerms.forall(stats.contains)) return emptyResult
-    val rts = toksByPhrase.zipWithIndex.flatMap { case (toks, pid) =>
-      toks.map { case (t, p) =>
-        ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, pid)
+    runKernels(allTerms) { stats =>
+      if (!allTerms.forall(stats.contains)) Nil
+      else {
+        val rts = toksByPhrase.zipWithIndex.flatMap { case (toks, pid) =>
+          toks.map { case (t, p) =>
+            ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, pid)
+          }
+        }
+        Seq(0 -> ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
+          sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs))
       }
-    }
-    val q = ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
-      sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs)
-    runKernels(Seq(0 -> q)).drop("query_id")
+    }.drop("query_id")
   }
 
   /** NEAR_PHRASE_PRODUCT / ORDERED_NEAR_PHRASE_PRODUCT: each group is a
@@ -432,21 +466,20 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val analyzed: Seq[Seq[Seq[(String, Int)]]] = groups.map(_.map(analyzeQuery))
     if (analyzed.isEmpty || analyzed.exists(_.forall(_.isEmpty))) return emptyResult
     val allTerms = analyzed.flatten.flatten.map(_._1).distinct
-    val stats = termStats(allTerms)
-    val rts = analyzed.zipWithIndex.flatMap { case (alts, gid) =>
-      alts.zipWithIndex.flatMap { case (toks, aid) =>
-        // drop alternatives containing unknown terms entirely
-        if (toks.isEmpty || !toks.forall(t => stats.contains(t._1))) Nil
-        else toks.map { case (t, p) =>
-          ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, gid, aid)
+    runKernels(allTerms) { stats =>
+      val rts = analyzed.zipWithIndex.flatMap { case (alts, gid) =>
+        alts.zipWithIndex.flatMap { case (toks, aid) =>
+          // drop alternatives containing unknown terms entirely
+          if (toks.isEmpty || !toks.forall(t => stats.contains(t._1))) Nil
+          else toks.map { case (t, p) =>
+            ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, gid, aid)
+          }
         }
       }
-    }
-    val liveGroups = rts.map(_.phraseId).distinct
-    if (liveGroups.size < groups.size) return emptyResult
-    val q = ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
-      sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs)
-    runKernels(Seq(0 -> q)).drop("query_id")
+      if (rts.map(_.phraseId).distinct.size < groups.size) Nil
+      else Seq(0 -> ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
+        sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs))
+    }.drop("query_id")
   }
 
   /** rank candidate terms by corpus-wide df and cap: a term present in
@@ -766,6 +799,33 @@ object GraftIndex {
   /** default Σ-df cap for the driver-side small-query kernel path: ~256k
     * postings ≈ single-digit MB of encoded blocks on the driver */
   final val DefaultSmallQueryMaxPostings: Long = 1L << 18
+
+  /** one scan task of `scanBlocks`: its blocks when their Σcnt fits
+    * `cap`, else only their per-term partial stats */
+  private def scanTask(cap: Long)(
+      it: Iterator[PostingBlockRow]): Either[Array[PostingBlockRow], Array[TermStatRow]] = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[PostingBlockRow]
+    var n = 0L
+    while (n <= cap && it.hasNext) { val b = it.next(); held += b; n += b.cnt }
+    if (n <= cap) Left(held.toArray)
+    else {
+      val acc = scala.collection.mutable.HashMap.empty[String, TermStatRow]
+      (held.iterator ++ it).foreach(b => foldStat(acc, blockStat(b)))
+      Right(acc.valuesIterator.toArray)
+    }
+  }
+
+  /** a block's share of its term's dictionary row */
+  private def blockStat(b: PostingBlockRow): TermStatRow =
+    TermStatRow(b.term, b.cnt.toLong, b.tf_sum, b.max_tf)
+
+  /** df and total_tf add up, max_tf is the max: how the segment writer
+    * builds the dictionary from the blocks, and how its rows sum across
+    * segments */
+  private def foldStat(acc: scala.collection.mutable.HashMap[String, TermStatRow],
+      s: TermStatRow): Unit =
+    acc.update(s.term, acc.get(s.term).fold(s)(a =>
+      TermStatRow(s.term, a.df + s.df, a.total_tf + s.total_tf, math.max(a.max_tf, s.max_tf))))
 
   /** Σ-df cap per distributed kernel CHUNK: runKernels materializes, per
     * bucket, the blocks of the UNION of a chunk's terms — so executor

@@ -34,6 +34,10 @@ object SegmentWriter {
 
   /** read schema of a segment's docs table */
   final val DocsSchema = "doc_id BIGINT, dl INT"
+  /** the postings columns the terms stage reads back */
+  private val TermsInputSchema = "term STRING, cnt INT, max_tf INT, tf_sum BIGINT"
+  /** the terms columns the terms_rev stage reads back */
+  private val TermsRevInputSchema = "term STRING, df BIGINT"
 
   /** Write the segment at `dir`. `runs` and `docs` are lazy plans: a stage
     * that already committed never evaluates its input. `cfg` carries the
@@ -61,8 +65,9 @@ object SegmentWriter {
         .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
         .write.mode("overwrite").parquet(s"$dir/postings")
     }
+    // the read-backs give their schema: no schema-inference job per stage
     stage("terms") {
-      spark.read.parquet(s"$dir/postings")
+      spark.read.schema(TermsInputSchema).parquet(s"$dir/postings")
         .groupBy($"term")
         .agg(sum($"cnt").as("df"), sum($"tf_sum").as("total_tf"),
           max($"max_tf").cast("int").as("max_tf"))
@@ -71,7 +76,7 @@ object SegmentWriter {
         .write.mode("overwrite").parquet(s"$dir/terms")
     }
     stage("terms_rev") {
-      spark.read.parquet(s"$dir/terms")
+      spark.read.schema(TermsRevInputSchema).parquet(s"$dir/terms")
         .select(reverse($"term").as("rterm"), $"term", $"df")
         .repartition(math.max(1, partitions / 4))
         .sortWithinPartitions($"rterm")

@@ -61,8 +61,12 @@ object Select {
   private def andCombine(a: DataFrame, b: DataFrame): DataFrame =
     a.join(b.withColumnRenamed("score", "score_r"), Seq("doc_id"))
       .select(col("doc_id"), (col("score") + col("score_r")).as("score"))
+  /** a lone leg is returned as it is: the kernel already emits one row per
+    * doc, and an aggregate over it would hide a driver-side LocalRelation
+    * from [[page]] */
   private def orCombine(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_.unionByName(_))
+    if (dfs.size == 1) dfs.head
+    else dfs.reduce(_.unionByName(_))
       .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
 
   /** groonga sort-key string syntax: "-_score, +_id" → (col, asc) pairs;

@@ -219,7 +219,7 @@ object IncrementalIndex {
     * a decode-merge at query time until the next compact; untouched buckets
     * keep the streaming fast path. Corpus stats (nDocs/avgdl) are exact at
     * commit time, and per-term df/idf are recomputed exactly at resolve
-    * time while tombstones exist (GraftIndex.exactTermStats) — so TF and
+    * time while tombstones exist (GraftIndex.termStats) — so TF and
     * BM25 both match a from-scratch rebuild without waiting for compact. */
   def upsert(
       spark: SparkSession,

@@ -120,33 +120,45 @@ class HttpApiSpec extends AnyFunSuite {
     assert(body.contains("[[3],") && body.contains("[2,1]") && !body.contains("[1,1]"))
   }
 
-  test("a driver-path select launches one scan job, plus the resolve when its terms are cold") {
+  test("a driver-path select is one Spark job, cold or warm, for every plain-term shape") {
     withCap(defaultCap) {
-      // a clean index and a handle nothing else uses
-      val server = serve()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      def jobsOf(server: GraftHttpServer, pathAndQuery: String): Int = {
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        jobs.set(0)
+        val r = getFrom(server, pathAndQuery)
+        assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        jobs.get()
+      }
+      val clean = freshDir()
+      graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", clean,
+        graft.index.IndexConfig(tokenizer = "TokenBigram"))
+      val tombstoned = freshDir()
+      graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", tombstoned,
+        graft.index.IndexConfig(tokenizer = "TokenBigram"))
+      graft.streaming.IncrementalIndex.delete(spark, tombstoned, Seq(4L))
+      val shapes = Seq("spark+fast", "spark+OR+fast", "spark+OR+fast+OR+columnar",
+        "%22spark+fulltext%22")
+      spark.sparkContext.addSparkListener(listener)
       try {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
+        for (dir <- Seq(clean, tombstoned); q <- shapes) {
+          // a handle nothing else uses, so the shape's terms are cold
+          val server = new GraftHttpServer(spark,
+            Map("docs" -> graft.index.GraftIndex(spark, dir)), Map("docs" -> docs)).start()
+          try {
+            // pays the handle's one-time jobs (parquet schemas, tombstones)
+            jobsOf(server, "/d/select?table=docs&query=window&limit=10")
+            val path = s"/d/select?table=docs&query=$q&limit=10"
+            assert(jobsOf(server, path) == 1, s"cold terms, $q on $dir: the block scan")
+            assert(jobsOf(server, path) == 1, s"warm terms, $q on $dir: the block scan")
+          } finally server.stop()
         }
-        def jobsOf(pathAndQuery: String): Int = {
-          org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-          jobs.set(0)
-          val r = getFrom(server, pathAndQuery)
-          assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
-          org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-          jobs.get()
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          // pays the handle's one-time jobs (parquet schemas, manifest)
-          jobsOf("/d/select?table=docs&query=window&limit=10")
-          val q = "/d/select?table=docs&query=spark+fast&limit=10"
-          assert(jobsOf(q) == 2, "cold terms: the dictionary resolve and one scan")
-          assert(jobsOf(q) == 1, "warm terms: the scan alone")
-        } finally spark.sparkContext.removeSparkListener(listener)
-      } finally server.stop()
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -99,6 +99,18 @@ class SelectPageSpec extends AnyFunSuite {
     assert(viaPage(path, defaultCap) == want)
   }
 
+  test("under the default cap AND, OR, phrase and empty queries give nHits for free") {
+    for (path <- Seq(cleanPath, mutatedPath)) withCap(defaultCap) {
+      val idx = GraftIndex(spark, path)
+      val free = queries.map { case (q, score) =>
+        val req = Select.Request(q, score)
+        q -> Select.page(Select.matches(idx, req), req)._2.isDefined
+      }
+      // the mixed OR still combines its legs through an aggregate
+      assert(free == queries.map { case (q, _) => q -> (q != queries.last._1) }, path)
+    }
+  }
+
   test("page + nHits equal select(limit = -1) + count() on a clean index") {
     checkBothCaps(cleanPath)
   }
