@@ -103,18 +103,15 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * stages (pruned scan → bucket shuffle → kernel) — on a warm index
     * that is ~200 ms of scheduling for milliseconds of kernel work
     * (groonga answers the same query in-process, lib/ii.cpp's
-    * grn_ii_select runs on the caller's thread). So the terms' pruned
-    * block scan is collected by [[scanBlocks]], bounded by
-    * `smallQueryCap` postings, and the SAME kernel runs per bucket on the
-    * driver against the driver tombstone arrays. That one job also yields
-    * the stats of every cold term, so a select under the cap is exactly
-    * one Spark job, and its result is a LocalRelation: downstream top-k
-    * never launches another stage. With every term warm, the cached df
-    * decide up front whether the scan can fit the cap (on a clean index
-    * their sum is exactly the scan's postings). At web scale a
-    * common term blows the cap and the batch takes the distributed path;
-    * the cap makes driver memory a constant, not a function of corpus
-    * size.
+    * grn_ii_select runs on the caller's thread). So when the terms' pruned
+    * block scan fits `smallQueryCap` postings it is collected, and the
+    * SAME kernel runs per bucket on the driver against the driver
+    * tombstone arrays; the result is a LocalRelation, so downstream top-k
+    * never launches another stage. With cold terms the collect is the one
+    * that resolved them ([[resolveTerms]]), so a select under the cap is
+    * exactly one Spark job, cold or warm. At web scale a common term blows
+    * the cap and the batch takes the distributed path; the cap makes
+    * driver memory a constant, not a function of corpus size.
     *
     * DISTRIBUTED path: per bucket, the kernel runs every query of a chunk
     * over the bucket's shared in-memory blocks (a query's cursors only
@@ -126,17 +123,15 @@ final case class GraftIndex(spark: SparkSession, path: String,
   private def runKernels(terms: Seq[String])(
       plan: Map[String, TermStatRow] => Seq[(Int, ResolvedQuery)]): DataFrame = {
     val ts = terms.distinct
-    val missing = ts.filterNot(termStatCache.containsKey)
     val cap = smallQueryCap
-    val coldBlocks =
-      if (missing.isEmpty) None else scanBlocks(if (cap > 0) ts else missing, missing, cap)
-    val stats = cachedStats(ts)
-    val queries = plan(stats)
+    val collected = resolveTerms(ts, cap)
+    val queries = plan(cachedStats(ts))
     if (queries.isEmpty)
       return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
-    val blocks =
-      if (missing.nonEmpty || cap <= 0 || stats.valuesIterator.map(_.df).sum > cap) coldBlocks
-      else scanBlocks(ts, Nil, cap)
+    val blocks = collected.orElse(
+      if (cap > 0 && ts.iterator.map(termStatCache.get(_).scanned).sum <= cap)
+        Some(blockScan(ts).collect()) // counted exactly: ≤ cap postings
+      else None)
     blocks match {
       case Some(bs) =>
         val tset = tombstones.set
@@ -179,64 +174,63 @@ final case class GraftIndex(spark: SparkSession, path: String,
   private def blockScan(terms: Seq[String]): Dataset[PostingBlockRow] =
     postings.where($"term".isin(terms: _*)).as[PostingBlockRow]
 
-  /** ONE bounded collect of the block scan of `terms` — the one Spark job
-    * of a small select. Each scan task returns its blocks when their Σcnt
-    * fits `cap`, else only per-term partial stats (Σcnt, Σtf_sum,
-    * max max_tf); the driver keeps blocks while the running Σcnt fits and
-    * drops them all once it passes the cap. So the driver never holds more
-    * than `cap` postings of payload (cap ≤ 0: none).
+  /** Resolve the cold terms among `ts` into termStatCache. Returns the
+    * blocks of all of `ts` when it collected them on the way.
     *
-    * The stats of the `missing` terms go into termStatCache from the same
-    * rows:
-    *  - clean index: the partials summed, exactly how the segment writer
-    *    builds the dictionary and how its rows sum across segments;
-    *  - tombstones, under the cap: the held blocks decoded under the
-    *    tombstone rule ([[liveStats]]);
-    *  - tombstones, over the cap: the distributed exact aggregate.
-    * A term with no blocks is unknown (cached as None).
+    * Under a positive `cap`, the terms' block scan is collected by
+    * [[GraftIndex.collectWithin]]: ONE job, whose tasks ship at most `cap`
+    * postings in all. When every task fits its share, the cold terms'
+    * stats come from those rows, and runKernels feeds the same rows to the
+    * driver kernel. Otherwise the dictionary counts the scan's postings
+    * exactly: a scan that fits the cap after all is collected whole, and
+    * one past it leaves the stats to the dictionary and the kernel to the
+    * distributed path. A scan whose warm terms alone pass the cap goes
+    * there without trying the collect.
     *
-    * Returns the blocks, in scan order, when the whole scan fit the cap. */
-  private def scanBlocks(terms: Seq[String], missing: Seq[String],
-      cap: Long): Option[Array[PostingBlockRow]] = {
-    val scan = blockScan(terms).rdd
-    val parts = new Array[Array[PostingBlockRow]](scan.getNumPartitions)
-    val partials = scala.collection.mutable.HashMap.empty[String, TermStatRow]
-    var fits = cap > 0
-    var held = 0L
-    def drop(): Unit = {
-      fits = false; held = 0L
-      parts.indices.foreach(parts(_) = null)
+    * The stats of a cold term:
+    *  - clean index: df = Σcnt, total_tf = Σtf_sum and max_tf = max
+    *    max_tf over its blocks — how the segment writer builds each
+    *    dictionary row from the blocks, and how the rows sum across
+    *    segments — or the dictionary's rows summed;
+    *  - tombstones: the blocks decoded under the tombstone rule
+    *    ([[liveStats]]), or the distributed aggregate.
+    * A term with no live posting is unknown. Beside its stats the cache
+    * keeps the term's scanned postings (Σcnt, dead ones included), which
+    * decide a warm query's path. */
+  private def resolveTerms(ts: Seq[String], cap: Long): Option[Array[PostingBlockRow]] = {
+    val cold = ts.filterNot(termStatCache.containsKey)
+    if (cold.isEmpty) return None
+    val warm = ts.iterator.flatMap(t => Option(termStatCache.get(t))).map(_.scanned).sum
+    lazy val dict = dictTermStats(cold)
+    val blocks =
+      if (cap <= 0 || warm > cap) None // the warm terms alone pass the cap
+      else GraftIndex.collectWithin(blockScan(ts).rdd, cap).orElse(
+        if (warm + cold.iterator.flatMap(dict.get).map(_.df).sum <= cap)
+          Some(blockScan(ts).collect())
+        else None)
+    val (counts, stats) = blocks match {
+      case Some(bs) =>
+        val want = cold.toSet
+        val own = bs.filter(b => want(b.term))
+        val sums = GraftIndex.sumStats(own.iterator.map(b =>
+          TermStatRow(b.term, b.cnt.toLong, b.tf_sum, b.max_tf)))
+        (sums, if (tombstones.isEmpty) sums else liveStats(own.iterator))
+      case None =>
+        (dict, if (tombstones.isEmpty) dict else distributedLiveStats(cold))
     }
-    spark.sparkContext.runJob(scan, GraftIndex.scanTask(cap) _,
-      (i: Int, r: Either[Array[PostingBlockRow], Array[TermStatRow]]) => {
-        r match {
-          case Left(bs) =>
-            bs.foreach(b => GraftIndex.foldStat(partials, GraftIndex.blockStat(b)))
-            val n = bs.iterator.map(_.cnt.toLong).sum
-            if (fits && held + n <= cap) { parts(i) = bs; held += n } else drop()
-          case Right(ps) =>
-            ps.foreach(GraftIndex.foldStat(partials, _))
-            drop()
-        }
-        peakHeldPostings = math.max(peakHeldPostings, held)
-      })
-    val blocks = if (fits) Some(parts.flatten) else None
-    if (missing.nonEmpty) {
-      val stats =
-        if (tombstones.isEmpty) partials
-        else {
-          val want = missing.toSet
-          blocks.fold(distributedLiveStats(missing))(bs =>
-            liveStats(bs.iterator.filter(b => want(b.term))))
-        }
-      missing.foreach(t => termStatCache.put(t, stats.get(t)))
-    }
+    cold.foreach(t => termStatCache.put(t,
+      GraftIndex.Resolved(stats.get(t), counts.get(t).fold(0L)(_.df))))
     blocks
   }
 
-  /** the most postings of payload [[scanBlocks]] held on the driver at
-    * once, over this handle's life; never above the cap */
-  @transient @volatile private[graft] var peakHeldPostings: Long = 0L
+  /** the dictionary rows of `ts`, summed across segments: df is the
+    * term's posting count, dead postings included. The term-IN-pruned
+    * scan returns at most |ts| x |segments| rows, so they are summed on
+    * the driver. */
+  private def dictTermStats(ts: Seq[String]): Map[String, TermStatRow] =
+    GraftIndex.sumStats(terms.where($"term".isin(ts: _*))
+      .select($"term", $"df", $"total_tf", $"max_tf")
+      .as[TermStatRow].collect().iterator)
 
   /** exact live stats of `blocks` on the driver, under the tombstone rule:
     * df counts distinct live docs (sectioned payloads repeat a doc per
@@ -279,24 +273,22 @@ final case class GraftIndex(spark: SparkSession, path: String,
   def emptyResult: DataFrame = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
 
   @transient private lazy val termStatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[TermStatRow]]()
+    new java.util.concurrent.ConcurrentHashMap[String, GraftIndex.Resolved]()
 
   private def cachedStats(ts: Seq[String]): Map[String, TermStatRow] =
-    ts.flatMap(t => Option(termStatCache.get(t)).flatten.map(t -> _)).toMap
+    ts.flatMap(t => Option(termStatCache.get(t)).flatMap(_.stat).map(t -> _)).toMap
 
   /** exact per-term stats of a small set of query terms, memoized per
-    * index instance (term stats are immutable per snapshot). They come
-    * from the block scan a search runs ([[scanBlocks]]), so on an index
+    * index instance (term stats are immutable per snapshot). On an index
     * with UNCOMPACTED mutations they are exact too: a deleted doc, or an
-    * upserted doc's old postings, do not count, and BM25 idf over a
-    * mutated index matches a from-scratch rebuild exactly. */
+    * upserted doc's old postings, do not count, so BM25 idf over a mutated
+    * index matches a from-scratch rebuild exactly. A clean index reads
+    * only the dictionary; tombstones decode the terms' blocks, in the one
+    * place a search does ([[resolveTerms]]). */
   def termStats(qterms: Seq[String]): Map[String, TermStatRow] = {
     val ts = qterms.distinct
-    val missing = ts.filterNot(termStatCache.containsKey)
-    // no kernel runs here: a clean index needs only the partial stats,
-    // tombstones need the blocks to decode
-    if (missing.nonEmpty)
-      scanBlocks(missing, missing, if (tombstones.isEmpty) 0L else smallQueryCap)
+    resolveTerms(ts.filterNot(termStatCache.containsKey),
+      if (tombstones.isEmpty) 0L else smallQueryCap)
     cachedStats(ts)
   }
 
@@ -800,32 +792,38 @@ object GraftIndex {
     * postings ≈ single-digit MB of encoded blocks on the driver */
   final val DefaultSmallQueryMaxPostings: Long = 1L << 18
 
-  /** one scan task of `scanBlocks`: its blocks when their Σcnt fits
-    * `cap`, else only their per-term partial stats */
-  private def scanTask(cap: Long)(
-      it: Iterator[PostingBlockRow]): Either[Array[PostingBlockRow], Array[TermStatRow]] = {
-    val held = scala.collection.mutable.ArrayBuffer.empty[PostingBlockRow]
-    var n = 0L
-    while (n <= cap && it.hasNext) { val b = it.next(); held += b; n += b.cnt }
-    if (n <= cap) Left(held.toArray)
-    else {
-      val acc = scala.collection.mutable.HashMap.empty[String, TermStatRow]
-      (held.iterator ++ it).foreach(b => foldStat(acc, blockStat(b)))
-      Right(acc.valuesIterator.toArray)
-    }
+  /** a cold term's resolve, cached per handle: its exact stats (None when
+    * it has no live posting) and the postings its block scan reads, dead
+    * ones included */
+  private[index] final case class Resolved(stat: Option[TermStatRow], scanned: Long)
+
+  /** ONE bounded collect of `scan`: each of its P tasks returns its blocks
+    * when their Σcnt fits cap / P, and otherwise stops reading at the first
+    * block past that share and returns nothing. So what the job ships to
+    * the driver, summed over its tasks, never passes `cap` postings,
+    * however many partitions the scan has. Some(every block, in scan
+    * order) when every task fit its share. */
+  private[graft] def collectWithin(scan: org.apache.spark.rdd.RDD[PostingBlockRow],
+      cap: Long): Option[Array[PostingBlockRow]] = {
+    val share = cap / math.max(1, scan.getNumPartitions)
+    val parts = scan.sparkContext.runJob(scan, (it: Iterator[PostingBlockRow]) => {
+      val held = scala.collection.mutable.ArrayBuffer.empty[PostingBlockRow]
+      var n = 0L
+      while (n <= share && it.hasNext) { val b = it.next(); held += b; n += b.cnt }
+      if (n <= share) Some(held.toArray) else None
+    })
+    if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
   }
 
-  /** a block's share of its term's dictionary row */
-  private def blockStat(b: PostingBlockRow): TermStatRow =
-    TermStatRow(b.term, b.cnt.toLong, b.tf_sum, b.max_tf)
-
-  /** df and total_tf add up, max_tf is the max: how the segment writer
-    * builds the dictionary from the blocks, and how its rows sum across
-    * segments */
-  private def foldStat(acc: scala.collection.mutable.HashMap[String, TermStatRow],
-      s: TermStatRow): Unit =
-    acc.update(s.term, acc.get(s.term).fold(s)(a =>
-      TermStatRow(s.term, a.df + s.df, a.total_tf + s.total_tf, math.max(a.max_tf, s.max_tf))))
+  /** per-term sums of dictionary-shaped rows: df and total_tf add up,
+    * max_tf is the max — how the segment writer builds the dictionary
+    * from the blocks, and how its rows sum across segments */
+  private def sumStats(rows: Iterator[TermStatRow]): Map[String, TermStatRow] = {
+    val acc = scala.collection.mutable.HashMap.empty[String, TermStatRow]
+    rows.foreach(s => acc.update(s.term, acc.get(s.term).fold(s)(a =>
+      TermStatRow(s.term, a.df + s.df, a.total_tf + s.total_tf, math.max(a.max_tf, s.max_tf)))))
+    acc.toMap
+  }
 
   /** Σ-df cap per distributed kernel CHUNK: runKernels materializes, per
     * bucket, the blocks of the UNION of a chunk's terms — so executor

@@ -14,8 +14,10 @@ import graft.streaming.IncrementalIndex
   * segments, deletes with upserts, sectioned) the stats it yields must
   * equal the dictionary's sums on a clean index and the exact live
   * aggregate under tombstones, and pages, scores and nHits must not depend
-  * on the cap: 0 (distributed), a tiny cap the collect crosses partway,
-  * or the default. */
+  * on the cap: 0 (distributed), a tiny cap the scan passes, the scan's
+  * exact size (a task passes its share, the whole scan fits), or the
+  * default. Whatever the cap, the collect ships at most the cap's postings
+  * to the driver, however many partitions the scan has. */
 class OneScanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -117,18 +119,26 @@ class OneScanSpec extends AnyFunSuite {
       .mapPartitions(it => Iterator(it.map(_.getInt(0).toLong).sum)).collect().toSeq
 
   /** the largest single task's postings of the OR's scan: every task fits
-    * it, the whole scan does not, so the collect crosses the cap partway */
+    * it, the whole scan does not */
   private def tinyCap(path: String): Long = {
     val perTask = postingsPerTask(path, orTerms)
     assert(perTask.count(_ > 0) >= 2 && perTask.sum > perTask.max, perTask)
     perTask.max
   }
+  /** the OR scan's postings: the scan fits, but a task passes its share of
+    * it, so the bounded collect gives up and the recount collects it */
+  private def exactCap(path: String): Long = {
+    val perTask = postingsPerTask(path, orTerms)
+    assert(perTask.max > perTask.sum / perTask.size, perTask)
+    perTask.sum
+  }
+  private def caps(path: String): Seq[Long] = Seq(0L, tinyCap(path), exactCap(path), defaultCap)
 
   private type Rows = Seq[(Long, Double)]
   /** (page, nHits) of every query, two pages each, over a fresh handle */
-  private def pages(path: String, cap: Long): (Seq[(Rows, Long)], GraftIndex) = withCap(cap) {
+  private def pages(path: String, cap: Long): Seq[(Rows, Long)] = withCap(cap) {
     val idx = GraftIndex(spark, path) // the cap is read once per handle
-    val out = for {
+    for {
       (q, score) <- queries
       (off, lim) <- Seq((0, 10), (2, -1))
     } yield {
@@ -138,47 +148,77 @@ class OneScanSpec extends AnyFunSuite {
       (page.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
         nHits.getOrElse(matched.count()))
     }
-    (out, idx)
   }
 
   test("term stats from the block scan equal the dictionary's or the exact live ones") {
     for (path <- corpora) {
       val want = reference(path)
       assert(!want.contains("zzznosuchterm") && want.size >= 20, path)
-      for (cap <- Seq(0L, tinyCap(path), defaultCap)) withCap(cap) {
+      for (cap <- caps(path)) withCap(cap) {
         assert(GraftIndex(spark, path).termStats(statTerms) == want, s"$path, cap $cap")
         // the stats a search's own scan leaves in the cache
-        val idx = GraftIndex(spark, path)
-        idx.searchTerms(statTerms, MatchMode.Any)
-        assert(idx.termStats(statTerms) == want, s"$path, cap $cap, after a search")
+        for (ts <- Seq(statTerms, orTerms)) {
+          val idx = GraftIndex(spark, path)
+          idx.searchTerms(ts, MatchMode.Any)
+          assert(idx.termStats(statTerms) == want, s"$path, cap $cap, after a search of $ts")
+        }
       }
     }
   }
 
   test("pages, scores and nHits do not depend on the cap") {
     for (path <- corpora) {
-      val (want, _) = pages(path, 0L)
+      val want = pages(path, 0L)
       assert(want.exists(_._2 > 10L) && want.exists(_._2 == 0L), path)
-      val tiny = tinyCap(path)
-      val (small, smallIdx) = pages(path, tiny)
-      assert(small == want, s"$path, cap $tiny")
-      assert(smallIdx.peakHeldPostings > 0L && smallIdx.peakHeldPostings <= tiny,
-        s"$path: held ${smallIdx.peakHeldPostings} postings under cap $tiny")
-      assert(pages(path, defaultCap)._1 == want, s"$path, default cap")
+      for (cap <- caps(path).tail) assert(pages(path, cap) == want, s"$path, cap $cap")
     }
   }
 
-  test("a scan that crosses the cap drops what it held and runs distributed") {
-    for (path <- corpora) {
-      val tiny = tinyCap(path)
-      withCap(tiny) {
-        val idx = GraftIndex(spark, path)
-        val req = Select.Request(orQuery, ScoreMode.Bm25())
-        val (_, nHits) = Select.page(Select.matches(idx, req), req)
-        assert(nHits.isEmpty, s"$path: the OR paged on the driver past cap $tiny")
-        assert(idx.peakHeldPostings > 0L && idx.peakHeldPostings <= tiny,
-          s"$path: held ${idx.peakHeldPostings} postings under cap $tiny")
-      }
+  test("the OR runs on the driver exactly when its whole scan fits the cap") {
+    def driverPaged(idx: GraftIndex): Boolean = {
+      val req = Select.Request(orQuery, ScoreMode.Bm25())
+      Select.page(Select.matches(idx, req), req)._2.isDefined
     }
+    for (path <- corpora; cap <- Seq(tinyCap(path), exactCap(path))) withCap(cap) {
+      val fits = cap == exactCap(path)
+      val idx = GraftIndex(spark, path)
+      assert(driverPaged(idx) == fits, s"$path, cold, cap $cap")
+      assert(driverPaged(idx) == fits, s"$path, warm, cap $cap")
+    }
+  }
+
+  test("the bounded collect ships at most the cap's postings, however many partitions") {
+    // blocks of 16 postings and 64 KB of payload; partition p holds `sizes(p)`
+    def block(i: Int) = PostingBlockRow(s"t${i % 3}", i % 4, i, i * 16L, i * 16L + 15,
+      16, 1, 1, 1, 16L, 65536, new Array[Byte](65536), 0)
+    def scan(sizes: Seq[Int]) = spark.sparkContext.parallelize(
+      sizes.indices.map(p => (0 until sizes(p)).map(k => block(sizes.take(p).sum + k))),
+      sizes.size).flatMap(identity)
+    val shipped = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) shipped.addAndGet(e.taskMetrics.resultSize)
+    }
+    def run(sizes: Seq[Int], cap: Long): (Option[Seq[Int]], Long) = {
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      shipped.set(0L)
+      val r = GraftIndex.collectWithin(scan(sizes), cap)
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      (r.map(_.map(_.blk).toSeq), shipped.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val even = Seq.fill(16)(4)
+      val (all, full) = run(even, 1024L)
+      assert(all == Some(0 until 64), "every task fits its share of 1024")
+      assert(full > 64 * 65536, full)
+      // every partition (64 postings) fits the cap of 256, all 16 do not:
+      // each task passes its share of 16 and ships no payload
+      val (none, overhead) = run(even, 256L)
+      assert(none.isEmpty && overhead < 65536, s"$overhead bytes shipped for no block")
+      // four one-block partitions fit their share and ship; the rest do not
+      val (uneven, some) = run(Seq.fill(4)(1) ++ Seq.fill(12)(4), 256L)
+      assert(uneven.isEmpty && some > 4 * 65536 && some < (256 / 16) * 65536, some)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
