@@ -194,7 +194,7 @@ object ExtraQueries {
     * SchemaCmdSpec) */
   def objectInspectCmd(spark: SparkSession, dir: String): DataFrame = {
     val idx = Tables.documentsIndex(spark, dir)
-    Seq("postings", "terms", "terms_rev", "docs", "terms.term")
+    (graft.index.SegmentWriter.Tables :+ "terms.term")
       .map(n => Introspect.objectInspect(idx, n))
       .reduce(_ union _)
       .orderBy("name")

@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.DataFrame
 
-import graft.index.GraftIndex
+import graft.index.{GraftIndex, SegmentWriter}
 
 /** `table_list` / `column_list` command analogues — catalog introspection
   * over a committed index directory, in the reference's output column
@@ -12,7 +12,17 @@ import graft.index.GraftIndex
   * the manifest + parquet schemas; ids are deterministic ordinals. */
 object Introspect {
 
-  private val Tables = Seq("postings", "terms", "terms_rev", "docs")
+  private val Tables = SegmentWriter.Tables
+
+  /** the index's view of `table`, over every segment */
+  private def tableDf(idx: GraftIndex, table: String): DataFrame = table match {
+    case "postings" => idx.postings
+    case "terms" => idx.terms
+    case "terms_rev" => idx.termsRev
+    case "docs" => idx.docs
+    case other => throw new IllegalArgumentException(
+      s"unknown index table '$other' (${Tables.mkString(", ")})")
+  }
 
   def tableList(idx: GraftIndex): DataFrame = {
     val spark = idx.spark
@@ -75,13 +85,7 @@ object Introspect {
           s""""command":{"name":"table_create","command_line":"$cmd"}}""")
     }
     val columns = Tables.flatMap { t =>
-      val schema = t match {
-        case "postings" => idx.postings.schema
-        case "terms" => idx.terms.schema
-        case "docs" => idx.docs.schema
-        case "terms_rev" => spark.read.parquet(s"${idx.path}/terms_rev").schema
-      }
-      schema.fields.zipWithIndex.map { case (f, i) =>
+      tableDf(idx, t).schema.fields.zipWithIndex.map { case (f, i) =>
         val ty = CommandFormat.grnType(f.dataType)
         ("columns", s"$t.${f.name}",
           s"""{"id":$i,"name":"${f.name}","table":"$t","type":"$ty",""" +
@@ -104,24 +108,16 @@ object Introspect {
   def objectInspect(idx: GraftIndex, name: String): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
-    def tableDf(t: String) = t match {
-      case "postings" => idx.postings
-      case "terms" => idx.terms
-      case "docs" => idx.docs
-      case "terms_rev" => spark.read.parquet(s"${idx.path}/terms_rev")
-      case other => throw new IllegalArgumentException(
-        s"unknown index table '$other' (${Tables.mkString(", ")})")
-    }
     val body = name.split('.') match {
       case Array(t) =>
         val i = Tables.indexOf(t)
         require(i >= 0, s"unknown object '$name'")
-        val n = tableDf(t).count()
+        val n = tableDf(idx, t).count()
         s"""{"id":$i,"name":"$t","type":{"name":"table:pat_key"},""" +
           s""""key":{"type":{"name":"ShortText","type":{"name":"type"}}},""" +
           s""""n_records":$n}"""
       case Array(t, c) =>
-        val df = tableDf(t)
+        val df = tableDf(idx, t)
         val f = df.schema.fields.zipWithIndex.find(_._1.name == c)
           .getOrElse(throw new IllegalArgumentException(
             s"unknown column '$c' in '$t'"))
@@ -137,15 +133,7 @@ object Introspect {
   def columnList(idx: GraftIndex, table: String = "postings"): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
-    require(Tables.contains(table), s"unknown index table '$table' (${Tables.mkString(", ")})")
-    val schema = table match {
-      case "postings" => idx.postings.schema
-      case "terms" => idx.terms.schema
-      case "docs" => idx.docs.schema
-      case "terms_rev" =>
-        spark.read.parquet(s"${idx.path}/terms_rev").schema
-    }
-    schema.fields.zipWithIndex.map { case (f, i) =>
+    tableDf(idx, table).schema.fields.zipWithIndex.map { case (f, i) =>
       (i.toLong, f.name, s"${idx.path}/$table",
         CommandFormat.grnType(f.dataType), "COLUMN_SCALAR|PERSISTENT",
         table, CommandFormat.grnType(f.dataType), "")

@@ -36,52 +36,57 @@ final case class GraftIndex(spark: SparkSession, path: String,
       SegmentCatalog.snapshotVersion(SegmentCatalog.fileSystem(spark, path), path)
   }
 
-  /** `table` of each data segment: "." is the base build; incremental
-    * appends add seg-N dirs (append-only docIds keep segment doc ranges
-    * disjoint) */
-  private def tablePaths(table: String): Seq[String] =
-    meta.dataSegments.map(s => s"${SegmentCatalog.segmentDir(path, s)}/$table")
+  /** (dir, manifest ordinal) of each data segment: "." is the base build;
+    * incremental appends add seg-N dirs (append-only docIds keep segment
+    * doc ranges disjoint) */
+  private[graft] def segDirs: Seq[(String, Int)] =
+    meta.dataSegments.map(SegmentCatalog.segmentDir(path, _)).zipWithIndex
 
   /** true when the snapshot reads exactly one segment — consumers may then
     * rely on a (term, doc) posting entry appearing at most once globally
     * (sectioned payloads still repeat a doc per sid) */
   def isSingleSegment: Boolean = meta.dataSegments.size == 1
 
-  /** every directory this snapshot reads — existence-checked by
-    * GraftIndex.atVersion so an expired snapshot fails at open time */
+  /** every directory this snapshot must read — existence-checked by
+    * GraftIndex.atVersion so an expired snapshot fails at open time (a
+    * segment written before terms_rev existed has none) */
   private[index] def tableDirsForValidation: Seq[String] =
-    Seq("postings", "terms", "docs").flatMap(tablePaths) ++
+    SegmentWriter.Tables.filterNot(_ == "terms_rev")
+      .flatMap(t => segDirs.map(s => s"${s._1}/$t")) ++
       meta.deleteSegments.map(s => s"$path/$s")
 
-  // lazy handles: file listing + schema resolution happen once per index
-  // instance, not once per query. Postings carry seg_ord (manifest segment
-  // order) so tombstone generations can tell an upserted doc's old
-  // postings from its new ones.
-  lazy val postings: DataFrame = {
-    val cols = Seq("term", "bucket", "blk", "min_doc", "max_doc", "cnt",
-      "max_tf", "max_gtf", "min_dl", "tf_sum", "payload_len", "payload")
-    tablePaths("postings").zipWithIndex.map { case (p, i) =>
-      val raw = spark.read.parquet(p)
-      // pre-v2 segments have no max_gtf column: for a sid-less layout every
-      // doc group is one posting so max_tf IS the group bound; a sectioned
-      // legacy segment gets the -1 sentinel (kernel skips WAND there)
-      val withGtf =
-        if (raw.columns.contains("max_gtf")) raw
-        else raw.withColumn("max_gtf",
-          if (meta.sections.isEmpty) col("max_tf") else lit(-1))
-      withGtf.select(cols.map(col): _*).withColumn("seg_ord", lit(i))
-    }.reduce(_.unionByName(_))
+  // lazy handles: each table is one given-schema scan over every segment
+  // (SegmentWriter.read), planned once per index instance. Postings and
+  // docs carry seg_ord (manifest segment order) so tombstone generations
+  // can tell an upserted doc's old postings from its new ones.
+  lazy val postings: DataFrame = postingsOf(segDirs)
+  lazy val terms: DataFrame = SegmentWriter.read(spark, segDirs, "terms").drop("seg_ord")
+  /** the reversed-term dictionary (rterm, term, df). When a segment was
+    * written before terms_rev existed, the whole snapshot derives it from
+    * `terms` instead, decided once per handle. */
+  lazy val termsRev: DataFrame = {
+    val fs = SegmentCatalog.fileSystem(spark, path)
+    if (segDirs.forall(s => fs.exists(new org.apache.hadoop.fs.Path(s"${s._1}/terms_rev"))))
+      SegmentWriter.read(spark, segDirs, "terms_rev").drop("seg_ord")
+    else terms.select(reverse($"term").as("rterm"), $"term", $"df")
   }
-  lazy val terms: DataFrame = spark.read.parquet(tablePaths("terms"): _*)
   /** doc stats with tombstoned rows filtered out (per-generation), each
-    * row with its segment's seg_ord. The read schema is given: no
-    * schema-inference job per segment. */
-  lazy val segDocs: DataFrame = tombstones.live(
-    tablePaths("docs").zipWithIndex.map { case (p, i) =>
-      spark.read.schema(SegmentWriter.DocsSchema).parquet(p).withColumn("seg_ord", lit(i))
-    }.reduce(_.unionByName(_)))
+    * row with its segment's seg_ord */
+  lazy val segDocs: DataFrame = segDocsOf(segDirs)
   /** doc stats with tombstoned rows filtered out (per-generation) */
   lazy val docs: DataFrame = segDocs.select(col("doc_id"), col("dl"))
+
+  /** the posting blocks of the data segments `segs` ((dir, ordinal)).
+    * A block written before format 2 reads max_gtf null: for a sid-less
+    * layout every doc group is one posting, so max_tf IS the group bound;
+    * a sectioned layout gets the -1 sentinel (the kernel skips WAND there). */
+  private[graft] def postingsOf(segs: Seq[(String, Int)]): DataFrame =
+    SegmentWriter.read(spark, segs, "postings").withColumn("max_gtf",
+      coalesce(col("max_gtf"), if (meta.sections.isEmpty) col("max_tf") else lit(-1)))
+
+  /** the live docs rows of the data segments `segs` ((dir, ordinal)) */
+  private[graft] def segDocsOf(segs: Seq[(String, Int)]): DataFrame =
+    tombstones.live(SegmentWriter.read(spark, segs, "docs"))
 
   /** this snapshot's generation tombstones (empty without deletes) */
   @transient lazy val tombstones: Tombstones =
@@ -490,18 +495,10 @@ final case class GraftIndex(spark: SparkSession, path: String,
 
   /** Suffix expansion via the reversed-term dictionary (terms_rev, sorted
     * by reversed term → parquet row-group pruning on the startsWith filter;
-    * groonga's reversed-key suffix cursor, lib/ii.cpp:10989). Falls back to
-    * a full terms scan for indexes built before terms_rev existed. */
-  def expandSuffix(suffix: String, maxExpansions: Int = 1024): Seq[String] = {
-    val rsuffix = suffix.reverse
-    val revPaths = tablePaths("terms_rev")
-    val fs = SegmentCatalog.fileSystem(spark, path)
-    val haveRev = revPaths.forall(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    val base =
-      if (haveRev) spark.read.parquet(revPaths: _*).where($"rterm".startsWith(rsuffix))
-      else terms.where(reverse($"term").startsWith(rsuffix))
-    dedupTopByDf(base.select(col("term"), col("df")), maxExpansions)
-  }
+    * groonga's reversed-key suffix cursor, lib/ii.cpp:10989). */
+  def expandSuffix(suffix: String, maxExpansions: Int = 1024): Seq[String] =
+    dedupTopByDf(termsRev.where($"rterm".startsWith(suffix.reverse))
+      .select(col("term"), col("df")), maxExpansions)
 
   /** SUFFIX match mode: docs containing any dictionary term ending with
     * `suffix` (GRN_OP_SUFFIX), TF-scored. */
@@ -682,112 +679,51 @@ final case class GraftIndex(spark: SparkSession, path: String,
   def topK(result: DataFrame, k: Int): DataFrame =
     result.orderBy(desc("score"), asc("doc_id")).limit(k)
 
+  /** per-segment stats in manifest order — the MANIFEST's persisted
+    * segment stats when present (zero jobs, zero file IO: the 100-TB
+    * path), else measured once per handle (legacy manifests only: one
+    * postings and one docs query, never a per-segment loop) */
+  @transient private[graft] lazy val segStats: Seq[SegStats] = {
+    val ss = meta.segStats
+    if (ss.nonEmpty && ss.map(_.name) == meta.dataSegments) ss
+    else SegmentWriter.measure(spark,
+      meta.dataSegments.map(s => s -> SegmentCatalog.segmentDir(path, s))).segs
+  }
+
   /** Index-order sort fast path (grn_table_sort_index, lib/sort.c:33,
     * chosen at :1077-1096): ascending `_id` with a limit is served by the
     * STORAGE ORDER instead of a sort of the whole table. Append-only ids
     * keep segment doc ranges disjoint and ascending in manifest order, so
     * the first `limit` ids live entirely in the shortest segment prefix
     * whose cumulative doc count reaches `limit` — only those segments are
-    * scanned (at scale: one segment out of thousands; counts come from
-    * parquet footers, no data read). Upserts break the ascending-range
-    * invariant, but they always leave tombstones, which routes to the
-    * sorted fallback until compact restores the fast path. */
-  /** one docs segment's (minDoc, maxDoc, rowCount) read from its parquet
-    * FOOTER statistics — driver-side metadata IO only, no Spark job, no
-    * data pages touched. None when any row group lacks doc_id stats (then
-    * the fast path is unvalidatable and callers must fall back). */
-  private def footerDocRange(dir: String): Option[(Long, Long, Long)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val fs = SegmentCatalog.fileSystem(spark, dir)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.getPath.getName.startsWith("part-"))
-    GraftIndex.footerReads.addAndGet(files.length)
-    var lo = Long.MaxValue
-    var hi = Long.MinValue
-    var cnt = 0L
-    var statsOk = true
-    var fi = 0
-    while (statsOk && fi < files.length) { // stop footer IO once invalid
-      val st = files(fi)
-      fi += 1
-      val rd = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
-      try {
-        val it = rd.getFooter.getBlocks.iterator()
-        while (statsOk && it.hasNext) {
-          val b = it.next()
-          cnt += b.getRowCount
-          var found = false
-          val cit = b.getColumns.iterator()
-          while (cit.hasNext) {
-            val c = cit.next()
-            if (c.getPath.toDotString == "doc_id") {
-              c.getStatistics match {
-                case s: org.apache.parquet.column.statistics.LongStatistics
-                    if s.hasNonNullValue =>
-                  if (s.genericGetMin < lo) lo = s.genericGetMin
-                  if (s.genericGetMax > hi) hi = s.genericGetMax
-                  found = true
-                case _ =>
-              }
-            }
-          }
-          if (!found && b.getRowCount > 0) statsOk = false
-        }
-      } finally rd.close()
-    }
-    if (statsOk) Some((lo, hi, cnt)) else None
-  }
-
-  /** per-segment (minDoc, maxDoc, count) — from the MANIFEST's persisted
-    * segment stats when present (one manifest read for the whole index, the
-    * 100-TB path), else once per handle from parquet footers (legacy
-    * manifests only: O(segment files) of driver-sequential metadata IO) */
-  @transient private lazy val segDocRanges: Seq[Option[(Long, Long, Long)]] = {
-    val ss = meta.segStats
-    if (ss.nonEmpty && ss.map(_.name) == meta.dataSegments)
-      ss.map(s => Some((s.minDoc, s.maxDoc, s.nDocs)))
-    else tablePaths("docs").map(footerDocRange)
-  }
-
+    * scanned (at scale: one segment out of thousands). Upserts break the
+    * ascending-range invariant, but they always leave tombstones, which
+    * routes to the sorted fallback until compact restores the fast path. */
   def idOrderScan(limit: Int): DataFrame = {
-    if (tombstones.nonEmpty || limit <= 0)
-      return docs.select($"doc_id", $"dl").orderBy($"doc_id").limit(math.max(limit, 0))
+    val sorted = docs.orderBy($"doc_id")
+    if (tombstones.nonEmpty || limit <= 0) return sorted.limit(math.max(limit, 0))
     // The prefix trick REQUIRES strictly ascending disjoint segment ranges.
     // appendSegment documents append-only ids but cannot enforce them
     // (doc_id is a user key) — an out-of-order append would silently return
-    // the wrong first-N, so validate from footer-stat ranges (metadata
-    // only, no data read) and fall back to the sorted scan when the
-    // invariant doesn't hold or stats are unavailable.
-    val ranges = segDocRanges
-    val ascending = ranges.forall(_.isDefined) && {
-      val rs = ranges.flatten.filter(_._3 > 0)
-      rs.sliding(2).forall {
-        case Seq((_, hi, _), (lo2, _, _)) => hi < lo2
-        case _ => true
-      }
+    // the wrong first-N, so validate the segment doc ranges and fall back
+    // to the sorted scan when the invariant doesn't hold.
+    val ascending = segStats.filter(_.nDocs > 0).sliding(2).forall {
+      case Seq(a, b) => a.maxDoc < b.minDoc
+      case _ => true
     }
-    if (!ascending)
-      return docs.select($"doc_id", $"dl").orderBy($"doc_id").limit(limit)
-    val segs = tablePaths("docs")
+    if (!ascending) return sorted.limit(limit)
     var acc = 0L
-    val prefix = segs.zip(ranges).takeWhile { case (_, r) =>
+    val prefix = segDirs.zip(segStats).takeWhile { case (_, st) =>
       val before = acc
-      acc += r.map(_._3).getOrElse(0L)
+      acc += st.nDocs
       before < limit
     }.map(_._1)
-    spark.read.parquet(prefix: _*)
+    SegmentWriter.read(spark, prefix, "docs")
       .select($"doc_id", $"dl").orderBy($"doc_id").limit(limit)
   }
 }
 
 object GraftIndex {
-  /** count of parquet footers opened for doc-range fallbacks — observable
-    * so tests can prove a stats-bearing manifest serves id-order scans and
-    * partial compaction with ZERO per-file metadata IO */
-  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** default Σ-df cap for the driver-side small-query kernel path: ~256k
     * postings ≈ single-digit MB of encoded blocks on the driver */
   final val DefaultSmallQueryMaxPostings: Long = 1L << 18

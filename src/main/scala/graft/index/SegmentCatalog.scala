@@ -68,8 +68,7 @@ object SegmentCatalog {
   /** delete data segment `seg`: the root base's tables, or the seg dir */
   def dropSegment(fs: FileSystem, outPath: String, seg: String): Unit =
     if (seg == ".")
-      Seq("postings", "terms", "terms_rev", "docs")
-        .foreach(t => fs.delete(new Path(outPath, t), true))
+      SegmentWriter.Tables.foreach(t => fs.delete(new Path(outPath, t), true))
     else fs.delete(new Path(outPath, seg), true)
 
   def stageComplete(fs: FileSystem, stagePath: String): Boolean =

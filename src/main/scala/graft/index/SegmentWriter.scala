@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,12 +33,44 @@ final case class Measured(segs: Seq[SegStats], sumDl: Long, blocks: Long) {
   */
 object SegmentWriter {
 
-  /** read schema of a segment's docs table */
-  final val DocsSchema = "doc_id BIGINT, dl INT"
-  /** the postings columns the terms stage reads back */
-  private val TermsInputSchema = "term STRING, cnt INT, max_tf INT, tf_sum BIGINT"
-  /** the terms columns the terms_rev stage reads back */
-  private val TermsRevInputSchema = "term STRING, df BIGINT"
+  /** the tables of a segment dir, in write order */
+  final val Tables: Seq[String] = Seq("postings", "terms", "terms_rev", "docs")
+
+  /** the read schema of each table. A postings table written before
+    * format 2 has no max_gtf column, which then reads as null. */
+  private val Schemas: Map[String, String] = Map(
+    "postings" -> ("term STRING, bucket INT, blk INT, min_doc BIGINT, max_doc BIGINT, " +
+      "cnt INT, max_tf INT, max_gtf INT, min_dl INT, tf_sum BIGINT, payload_len INT, " +
+      "payload BINARY"),
+    "terms" -> "term STRING, df BIGINT, total_tf BIGINT, max_tf INT",
+    "terms_rev" -> "rterm STRING, term STRING, df BIGINT",
+    "docs" -> "doc_id BIGINT, dl INT")
+
+  /** `table` of the segment dirs `segs`, given as (dir, ordinal), in ONE
+    * parquet scan with the table's given schema: no schema-inference job,
+    * and one set of splits over every segment. Each row gets its segment's
+    * ordinal as `seg_ord`, found from the file it was read from. The keys
+    * are raw URI paths on both sides: `_metadata.file_path` spells a local
+    * dir `file:/..`, a qualified Path `file:///..`, and both keep `%20`.
+    * Plain string ops cost per row about a third of a regexp; a single
+    * segment needs no lookup at all. */
+  def read(spark: SparkSession, segs: Seq[(String, Int)], table: String): DataFrame = {
+    val scan = spark.read.schema(Schemas(table)).parquet(segs.map(s => s"${s._1}/$table"): _*)
+    if (segs.size == 1) return scan.withColumn("seg_ord", lit(segs.head._2))
+    val ords: Map[String, Int] = segs.map { case (d, o) =>
+      SegmentCatalog.fileSystem(spark, d).makeQualified(new Path(d)).toUri.getRawPath -> o
+    }.toMap
+    val segOrd = udf { (file: String) =>
+      // <scheme>:[//<authority>]<seg dir>/<table>/<part file>
+      val end = file.lastIndexOf('/', file.lastIndexOf('/') - 1)
+      val c = file.indexOf(':')
+      val s0 = if (c >= 0 && c < file.indexOf('/')) c + 1 else 0
+      val s = if (file.startsWith("//", s0)) file.indexOf('/', s0 + 2) else s0
+      ords.getOrElse(file.substring(s, end),
+        throw new IllegalStateException(s"$file is in none of the segments read"))
+    }
+    scan.withColumn("seg_ord", segOrd(col("_metadata.file_path")))
+  }
 
   /** Write the segment at `dir`. `runs` and `docs` are lazy plans: a stage
     * that already committed never evaluates its input. `cfg` carries the
@@ -65,9 +98,8 @@ object SegmentWriter {
         .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
         .write.mode("overwrite").parquet(s"$dir/postings")
     }
-    // the read-backs give their schema: no schema-inference job per stage
     stage("terms") {
-      spark.read.schema(TermsInputSchema).parquet(s"$dir/postings")
+      read(spark, Seq(dir -> 0), "postings")
         .groupBy($"term")
         .agg(sum($"cnt").as("df"), sum($"tf_sum").as("total_tf"),
           max($"max_tf").cast("int").as("max_tf"))
@@ -76,7 +108,7 @@ object SegmentWriter {
         .write.mode("overwrite").parquet(s"$dir/terms")
     }
     stage("terms_rev") {
-      spark.read.schema(TermsRevInputSchema).parquet(s"$dir/terms")
+      read(spark, Seq(dir -> 0), "terms")
         .select(reverse($"term").as("rterm"), $"term", $"df")
         .repartition(math.max(1, partitions / 4))
         .sortWithinPartitions($"rterm")
@@ -88,21 +120,18 @@ object SegmentWriter {
   }
 
   /** Stats of segment dirs given as (name, dir): ONE postings query and
-    * ONE docs query however many dirs. The read schema is given, so no
-    * per-dir schema-inference job runs either. A dir with no docs or no
-    * postings reads as zero, with the empty doc range (Long.MaxValue,
+    * ONE docs query however many dirs. A dir with no docs or no postings
+    * reads as zero, with the empty doc range (Long.MaxValue,
     * Long.MinValue). */
   def measure(spark: SparkSession, dirs: Seq[(String, String)]): Measured = {
     import spark.implicits._
     if (dirs.isEmpty) return Measured(Nil, 0L, 0L)
-    def byDir(table: String, schema: String) =
-      dirs.zipWithIndex.map { case ((_, d), i) =>
-        spark.read.schema(schema).parquet(s"$d/$table").withColumn("ord", lit(i))
-      }.reduce(_.union(_)).groupBy($"ord")
-    val p = byDir("postings", "cnt INT, payload_len INT")
+    def bySeg(table: String) =
+      read(spark, dirs.map(_._2).zipWithIndex, table).groupBy($"seg_ord")
+    val p = bySeg("postings")
       .agg(sum($"cnt"), count(lit(1)), sum($"payload_len"))
       .as[(Int, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val d = byDir("docs", DocsSchema)
+    val d = bySeg("docs")
       .agg(count(lit(1)), min($"doc_id"), max($"doc_id"), sum($"dl"))
       .as[(Int, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     val segs = dirs.zipWithIndex.map { case ((name, _), i) =>

@@ -30,7 +30,8 @@ final class Tombstones(spark: SparkSession, path: String, deleteSegments: Seq[St
   lazy val set: TombstoneSet =
     if (isEmpty) TombstoneSet.Empty
     else {
-      val rows = spark.read.parquet(deleteSegments.map(s => s"$path/$s"): _*)
+      val rows = spark.read.schema("doc_id BIGINT, gen INT")
+        .parquet(deleteSegments.map(s => s"$path/$s"): _*)
         .groupBy(col("doc_id")).agg(max(col("gen")).cast("int").as("gen"))
         .collect()
       require(rows.length <= Tombstones.MaxDriverTombstones,

@@ -98,12 +98,12 @@ final case class IndexMeta(
     /** per-data-segment statistics, aligned by `name` with
       * `dataSegments`, the NORMALIZED segment list ("." = root base).
       * Persisted at every commit so a reader/compactor gets doc ranges
-      * and footprints from ONE manifest read — at 10k+ segments the
-      * previous per-file parquet-footer loop was minutes of
-      * driver-sequential metadata IO per index open.
-      * Empty on legacy manifests: readers fall back to footer stats /
-      * a stats job (the reference keeps chunk stats inline in the buffer
-      * headers for the same reason, /root/reference/lib/ii.cpp:16200). */
+      * and footprints from ONE manifest read — at 10k+ segments a
+      * per-file parquet-footer loop is minutes of driver-sequential
+      * metadata IO per index open.
+      * Empty on legacy manifests: readers measure the segments instead,
+      * in one stats pass (the reference keeps chunk stats inline in the
+      * buffer headers for the same reason, groonga lib/ii.cpp:16200). */
     segStats: Seq[SegStats] = Nil) {
 
   /** data segment dirs in manifest order, "." = the root base. A base

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -118,7 +118,7 @@ object IncrementalIndex {
     * re-run after a LOST commit finds the name unlisted and resumes. */
   private def stageSegment(base: GraftIndex, docs: DataFrame, idCol: String,
       textCol: String, name: String, cfg: IndexConfig): Option[Measured] = {
-    require(!Set("postings", "terms", "terms_rev", "docs", ".").contains(name) &&
+    require(!(SegmentWriter.Tables :+ ".").contains(name) &&
         !name.contains("/"),
       s"segment name '$name' collides with reserved table/dir names")
     if (base.meta.dataSegments.contains(name)) return None
@@ -302,23 +302,13 @@ object IncrementalIndex {
     * (term, bucket) in the index's own block layout. */
   private def fold(base: GraftIndex, runs: Seq[Seq[Int]], cfg: IndexConfig,
       name: Int => String, metric: String, baseStats: Seq[SegStats] = Nil): GraftIndex = {
-    import base.spark.implicits._
     val fs = SegmentCatalog.fileSystem(base.spark, base.path)
     val segs = base.meta.dataSegments
-    // broadcast, not closure-embedded: shipped once per executor
-    val bc = base.tombstones.broadcastSet
     val dirs = runs.zipWithIndex.map { case (ords, k) =>
       val dir = s"${base.path}/${name(k)}"
       fs.delete(new Path(dir), true)
-      val inRun = $"seg_ord".isin(ords: _*)
-      val blocks = base.postings.where(inRun).as[PostingBlockRow].flatMap { b =>
-        val ts = bc.fold(TombstoneSet.Empty)(_.value)
-        val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
-        live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
-          f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
-      }
-      SegmentWriter.write(base.spark, dir, blocks,
-        base.segDocs.where(inRun).select($"doc_id", $"dl"),
+      val (blocks, docs) = foldInput(base, ords)
+      SegmentWriter.write(base.spark, dir, blocks, docs,
         cfg.copy(withPositions = base.meta.withPositions, blockSize = base.meta.blockSize),
         base.meta.sections.nonEmpty)
       name(k) -> dir
@@ -327,6 +317,24 @@ object IncrementalIndex {
         dirs.map(_._1).zip(runs.map(_.map(segs))).toMap,
         consumesTombstones = true, baseStats = baseStats),
       Map(metric -> dirs.map(_._1).mkString(",")))
+  }
+
+  /** The live runs and docs of one fold: the blocks and docs of the data
+    * segments at manifest ordinals `ords` only, each scan over just those
+    * dirs (a seg_ord filter over the whole index would prune no file).
+    * Blocks are tombstone-filtered block-wise. */
+  private[graft] def foldInput(base: GraftIndex, ords: Seq[Int]): (Dataset[PostingRunRow], DataFrame) = {
+    import base.spark.implicits._
+    val run = ords.map(base.segDirs)
+    // broadcast, not closure-embedded: shipped once per executor
+    val bc = base.tombstones.broadcastSet
+    val blocks = base.postingsOf(run).as[PostingBlockRow].flatMap { b =>
+      val ts = bc.fold(TombstoneSet.Empty)(_.value)
+      val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
+      live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
+        f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
+    }
+    (blocks, base.segDocsOf(run).select($"doc_id", $"dl"))
   }
 
   private case class SegInfo(stats: SegStats, ord: Int, touched: Boolean)
@@ -357,18 +365,10 @@ object IncrementalIndex {
     val base = readBase(spark, indexPath, "compactPartial")
     val meta = base.meta
     val tombs = base.tombstones.set
-    val segs = meta.dataSegments
 
-    // Per-segment footprint + doc range: straight from the MANIFEST when
-    // this index has committed segment stats (zero jobs, zero file IO — the
-    // 100-TB path: a 0.1%-tombstone compaction must not pay a metadata scan
-    // of every segment first). Legacy manifests without stats pay one
-    // measure (one postings + one docs query, never a per-segment driver
-    // loop) and come out of this compaction with stats persisted.
-    val baseStats: Seq[SegStats] =
-      if (meta.segStats.map(_.name) == segs) meta.segStats
-      else SegmentWriter.measure(spark,
-        segs.map(s => s -> SegmentCatalog.segmentDir(indexPath, s))).segs
+    // Per-segment footprint + doc range; a legacy manifest without stats
+    // comes out of this compaction with stats persisted.
+    val baseStats = base.segStats
     val infos: Seq[SegInfo] = baseStats.zipWithIndex.map { case (ss, i) =>
       SegInfo(ss, i, touched = tombs.hidesAnyIn(ss.minDoc, ss.maxDoc, i))
     }

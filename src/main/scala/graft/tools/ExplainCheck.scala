@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   *  - dimension joins in drilldowns broadcast the small side
   *  - a select under the small-query cap pages a LocalRelation (no
   *    Exchange, no Sort)
+  *  - a 3-segment index reads postings and docs in one scan each
   * Run: sbt "runMain graft.tools.ExplainCheck" (exit 1 on any failure);
   * ExplainCheckSpec runs the same checks through [[run]].
   */
@@ -69,8 +70,7 @@ object ExplainCheck {
         !p2.contains("lang"), p2)
 
     // 3. suffix expansion reads terms_rev with a StartsWith pushed filter
-    val revPath = s"${idx.path}/terms_rev"
-    val p3 = plan(spark.read.parquet(revPath).where(col("rterm").startsWith("wo")))
+    val p3 = plan(idx.termsRev.where(col("rterm").startsWith("wo")))
     check("terms_rev suffix pushdown", p3.contains("StringStartsWith(rterm,wo"), p3)
 
     // 4. pure-term AND compiles into ONE posting scan (no per-leg join)
@@ -202,6 +202,27 @@ object ExplainCheck {
     check("driver-path select pages a LocalRelation",
       local15 && !p15.contains("Exchange") && !p15.contains("Sort"),
       s"${q15.queryExecution.optimizedPlan}\n$p15")
+
+    // 16. a mutated index reads each table in ONE scan: on a 3-segment
+    //     index the term-IN postings scan and the docs scan each plan one
+    //     parquet FileScan over every segment, the term IN pushed into it
+    val segPath = java.nio.file.Files.createTempDirectory("graft-segs").toString + "/idx"
+    val docs16 = graft.api.Tables.table(spark, dir, "documents").select("doc_id", "text")
+    val cfg16 = graft.index.IndexConfig(tokenizer = "TokenBigram")
+    graft.index.IndexBuilder.build(spark, docs16.where(col("doc_id") < 200),
+      "doc_id", "text", segPath, cfg16)
+    for ((lo, hi) <- Seq((200, 350), (350, 500)))
+      graft.streaming.IncrementalIndex.appendSegment(spark, segPath,
+        docs16.where(col("doc_id") >= lo && col("doc_id") < hi), "doc_id", "text",
+        s"seg-$lo", cfg16)
+    val idx16 = graft.index.GraftIndex(spark, segPath)
+    def fileScans(p: String) = p.linesIterator.count(_.contains("FileScan parquet"))
+    val p16 = plan(idx16.postings.where(col("term").isin("spark", "join")))
+    val d16 = plan(idx16.docs)
+    check("3-segment index: one postings scan, one docs scan",
+      idx16.meta.dataSegments.size == 3 && fileScans(p16) == 1 &&
+        p16.contains("PushedFilters: [In(term") && fileScans(d16) == 1,
+      s"segments ${idx16.meta.dataSegments}\n$p16\n$d16")
 
     println("EXPLAIN-END")
     results.result()

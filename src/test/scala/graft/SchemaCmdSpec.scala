@@ -70,4 +70,23 @@ class SchemaCmdSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Introspect.objectInspect(idx, "nope"))
     intercept[IllegalArgumentException](Introspect.objectInspect(idx, "docs.nope"))
   }
+
+  test("object_inspect counts terms_rev over every segment, as it counts terms") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString + "/idx3"
+    val docs = Seq((1L, "spark fulltext engine"), (2L, "schema command test"),
+      (3L, "appended segment words"), (4L, "another late document")).toDF("doc_id", "text")
+    IndexBuilder.build(spark, docs.where($"doc_id" <= 2), "doc_id", "text", dir, IndexConfig())
+    for (d <- Seq(3L, 4L))
+      graft.streaming.IncrementalIndex.appendSegment(spark, dir,
+        docs.where($"doc_id" === d), "doc_id", "text", s"seg-$d")
+    val idx3 = GraftIndex(spark, dir)
+    assert(idx3.meta.dataSegments.size == 3)
+    def nRecords(name: String): String = {
+      val body = Introspect.objectInspect(idx3, name).select("body").as[String].head()
+      """"n_records":(\d+)""".r.findFirstMatchIn(body).get.group(1)
+    }
+    assert(nRecords("terms_rev") == nRecords("terms"))
+    assert(nRecords("terms_rev.rterm") == nRecords("terms"))
+    assert(nRecords("terms").toLong == idx3.terms.count() && idx3.terms.count() > idx.terms.count())
+  }
 }

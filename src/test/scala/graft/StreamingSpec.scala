@@ -257,20 +257,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(ss(2).minDoc == nBase + 20 && ss(2).maxDoc == nBase + 39)
 
     // id-order fast path + partial compaction consume the MANIFEST stats:
-    // zero parquet-footer opens (the legacy path was O(segment files) of
-    // driver-sequential metadata IO per handle)
-    val before = GraftIndex.footerReads.get()
-    assert(idx.idOrderScan(10).collect().map(_.getLong(0)).toSeq == (0L until 10L).toSeq)
+    // planning the id-order scan launches no job, on the appended index
+    // and on its partial compaction
+    val first10 = (0L until 10L).toSeq
+    val (scan, scanJobs) = TestSpark.countJobs(idx.idOrderScan(10))
+    assert(scanJobs == 0, s"idOrderScan planned with $scanJobs jobs")
+    assert(scan.collect().map(_.getLong(0)).toSeq == first10)
     IncrementalIndex.delete(spark, p, Seq(nBase + 3L))
     val pc = IncrementalIndex.compactPartial(spark, p, cfg, minKeepPostings = 10000L)
-    assert(GraftIndex.footerReads.get() == before,
-      "stats-bearing manifest must serve doc ranges without footer IO")
+    assert(pc.meta.deleteSegments.isEmpty)
+    val (pcScan, pcJobs) = TestSpark.countJobs(pc.idOrderScan(10))
+    assert(pcJobs == 0, s"idOrderScan after compactPartial planned with $pcJobs jobs")
+    assert(pcScan.collect().map(_.getLong(0)).toSeq == first10)
     assert(pc.meta.segStats.map(_.name) == pc.meta.segments)
     assert(pc.meta.segStats.map(_.nPostings).sum == pc.meta.totalPostings)
     assert(pc.meta.segStats.map(_.nDocs).sum == pc.meta.nDocs)
 
-    // LEGACY manifest (no segStats): reader falls back to parquet footers
-    // and still answers identically
+    // LEGACY manifest (no segStats): the reader measures the segments
+    // instead and still answers identically
     val mf = new java.io.File(p).listFiles()
       .filter(_.getName.matches("manifest-\\d+\\.json")).maxBy(_.getName)
     val j = org.json4s.jackson.JsonMethods.parse(
@@ -282,10 +286,7 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(mf.getParent, s".${mf.getName}.crc").delete()
     val legacy = GraftIndex(spark, p)
     assert(legacy.meta.segStats.isEmpty)
-    val fBefore = GraftIndex.footerReads.get()
-    assert(legacy.idOrderScan(10).collect().map(_.getLong(0)).toSeq == (0L until 10L).toSeq)
-    assert(GraftIndex.footerReads.get() > fBefore,
-      "legacy manifest must validate via footer stats")
+    assert(legacy.idOrderScan(10).collect().map(_.getLong(0)).toSeq == first10)
   }
 
   test("upsert replaces a doc under the SAME id; state survives compact") {
