@@ -42,18 +42,6 @@ object PostingCodec {
   final val FlagSections = 4
   final val DenseThreshold = 16
 
-  /** varbyte-encode one ascending position list as deltas — the per-doc
-    * positions stream unit (map-side pre-encoding for the shuffle). */
-  def encodePositions(positions: Array[Int]): Array[Byte] = {
-    val w = new ByteWriter(positions.length + 4)
-    var prev = 0
-    var i = 0
-    while (i < positions.length) {
-      w.writeVarInt(positions(i) - prev); prev = positions(i); i += 1
-    }
-    w.result()
-  }
-
   /** encode a block whose positions stream is one pre-concatenated blob of
     * per-doc varbyte deltas (map-side RunBuf output); appended verbatim. */
   def encodeWithPosBlob(

@@ -42,11 +42,6 @@ final case class GraftIndex(spark: SparkSession, path: String,
   private[graft] def segDirs: Seq[(String, Int)] =
     meta.dataSegments.map(SegmentCatalog.segmentDir(path, _)).zipWithIndex
 
-  /** true when the snapshot reads exactly one segment — consumers may then
-    * rely on a (term, doc) posting entry appearing at most once globally
-    * (sectioned payloads still repeat a doc per sid) */
-  def isSingleSegment: Boolean = meta.dataSegments.size == 1
-
   /** every directory this snapshot must read — existence-checked by
     * GraftIndex.atVersion so an expired snapshot fails at open time (a
     * segment written before terms_rev existed has none) */
@@ -109,9 +104,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * that is ~200 ms of scheduling for milliseconds of kernel work
     * (groonga answers the same query in-process, lib/ii.cpp's
     * grn_ii_select runs on the caller's thread). So when the terms' pruned
-    * block scan fits `smallQueryCap` postings it is collected, and the
-    * SAME kernel runs per bucket on the driver against the driver
-    * tombstone arrays; the result is a LocalRelation, so downstream top-k
+    * block scan fits `smallQueryCap` postings it is collected, made live
+    * once on the driver ([[Tombstones.liveBlocks]]), and the SAME kernel
+    * runs per bucket; the result is a LocalRelation, so downstream top-k
     * never launches another stage. With cold terms the collect is the one
     * that resolved them ([[resolveTerms]]), so a select under the cap is
     * exactly one Spark job, cold or warm. At web scale a common term blows
@@ -120,8 +115,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     *
     * DISTRIBUTED path: per bucket, the kernel runs every query of a chunk
     * over the bucket's shared in-memory blocks (a query's cursors only
-    * read its own terms); tombstones come from the broadcast inside the
-    * task. Per-bucket memory is the bucket's pruned block set for the
+    * read its own terms); the scan tasks make the blocks live before the
+    * bucket shuffle, so dead postings are never shuffled. Per-bucket
+    * memory is the bucket's pruned block set for the
     * UNION of the chunk's terms, so the batch is split greedily into
     * chunks of Σ df ≤ DefaultBatchMaxPostings, one scan + shuffle each; a
     * single query over that cap runs as its own chunk. */
@@ -135,21 +131,18 @@ final case class GraftIndex(spark: SparkSession, path: String,
       return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
     val blocks = collected.orElse(
       if (cap > 0 && ts.iterator.map(termStatCache.get(_).scanned).sum <= cap)
-        Some(blockScan(ts).collect()) // counted exactly: ≤ cap postings
+        Some(tombstones.liveBlocks(blockScan(ts).collect())) // counted exactly: ≤ cap postings
       else None)
     blocks match {
       case Some(bs) =>
-        val tset = tombstones.set
         val byBucket = bs.groupBy(_.bucket).toSeq.sortBy(_._1)
-        val out = queries.iterator.flatMap { case (qid, q0) =>
-          val q = q0.copy(tombstones = tset)
+        val out = queries.iterator.flatMap { case (qid, q) =>
           byBucket.iterator.flatMap { case (_, rs) =>
             MatchKernel.run(q, rs.iterator).map { case (d, s) => (qid, d, s) }
           }
         }.toSeq
         spark.createDataset(out).toDF("query_id", "doc_id", "score")
       case None =>
-        val bc = tombstones.broadcastSet
         val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Int, ResolvedQuery)])
         var acc = 0L
         queries.foreach { qq =>
@@ -160,12 +153,11 @@ final case class GraftIndex(spark: SparkSession, path: String,
           chunks(chunks.length - 1) :+= qq; acc += qdf
         }
         chunks.iterator.map { chunk =>
-          blockScan(chunk.flatMap(_._2.terms.map(_.term)).distinct)
+          tombstones.liveBlocks(blockScan(chunk.flatMap(_._2.terms.map(_.term)).distinct))
             .groupByKey(_.bucket)
             .flatMapGroups { (_, rows) =>
               val mat = rows.toArray // one bucket's blocks for THIS chunk's terms
-              chunk.iterator.flatMap { case (qid, q0) =>
-                val q = bc.fold(q0)(b => q0.copy(tombstones = b.value))
+              chunk.iterator.flatMap { case (qid, q) =>
                 MatchKernel.run(q, mat.iterator).map { case (d, s) => (qid, d, s) }
               }
             }
@@ -180,7 +172,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     postings.where($"term".isin(terms: _*)).as[PostingBlockRow]
 
   /** Resolve the cold terms among `ts` into termStatCache. Returns the
-    * blocks of all of `ts` when it collected them on the way.
+    * live blocks of all of `ts` when it collected them on the way.
     *
     * Under a positive `cap`, the terms' block scan is collected by
     * [[GraftIndex.collectWithin]]: ONE job, whose tasks ship at most `cap`
@@ -192,16 +184,16 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * distributed path. A scan whose warm terms alone pass the cap goes
     * there without trying the collect.
     *
-    * The stats of a cold term:
-    *  - clean index: df = Σcnt, total_tf = Σtf_sum and max_tf = max
-    *    max_tf over its blocks — how the segment writer builds each
-    *    dictionary row from the blocks, and how the rows sum across
-    *    segments — or the dictionary's rows summed;
-    *  - tombstones: the blocks decoded under the tombstone rule
-    *    ([[liveStats]]), or the distributed aggregate.
-    * A term with no live posting is unknown. Beside its stats the cache
-    * keeps the term's scanned postings (Σcnt, dead ones included), which
-    * decide a warm query's path. */
+    * The stats of a cold term are df = Σcnt, total_tf = Σtf_sum and
+    * max_tf = max max_tf over its LIVE blocks ([[Tombstones.liveBlocks]])
+    * — how the segment writer builds each dictionary row from the blocks,
+    * so a mutated index answers as a rebuild of its live docs would. They
+    * come from the collected blocks, or from the same sums over the
+    * distributed live scan; on a clean index the dictionary's rows,
+    * summed across segments, are the same numbers. A term with no live
+    * posting is unknown. Beside its stats the cache keeps the term's
+    * scanned postings (Σcnt, dead ones included), which decide a warm
+    * query's path. */
   private def resolveTerms(ts: Seq[String], cap: Long): Option[Array[PostingBlockRow]] = {
     val cold = ts.filterNot(termStatCache.containsKey)
     if (cold.isEmpty) return None
@@ -213,19 +205,19 @@ final case class GraftIndex(spark: SparkSession, path: String,
         if (warm + cold.iterator.flatMap(dict.get).map(_.df).sum <= cap)
           Some(blockScan(ts).collect())
         else None)
-    val (counts, stats) = blocks match {
-      case Some(bs) =>
-        val want = cold.toSet
-        val own = bs.filter(b => want(b.term))
-        val sums = GraftIndex.sumStats(own.iterator.map(b =>
-          TermStatRow(b.term, b.cnt.toLong, b.tf_sum, b.max_tf)))
-        (sums, if (tombstones.isEmpty) sums else liveStats(own.iterator))
-      case None =>
-        (dict, if (tombstones.isEmpty) dict else distributedLiveStats(cold))
-    }
+    val want = cold.toSet
+    def coldStats(bs: Array[PostingBlockRow]) =
+      GraftIndex.blockStats(bs.iterator.filter(b => want(b.term)))
+    val live = blocks.map(tombstones.liveBlocks)
+    val counts = blocks.fold(dict)(coldStats)
+    val stats =
+      if (tombstones.isEmpty) counts
+      else live.fold(GraftIndex.sumStats(tombstones.liveBlocks(blockScan(cold))
+        .mapPartitions(bs => GraftIndex.blockStats(bs).valuesIterator)
+        .collect().iterator))(coldStats)
     cold.foreach(t => termStatCache.put(t,
       GraftIndex.Resolved(stats.get(t), counts.get(t).fold(0L)(_.df))))
-    blocks
+    live
   }
 
   /** the dictionary rows of `ts`, summed across segments: df is the
@@ -236,43 +228,6 @@ final case class GraftIndex(spark: SparkSession, path: String,
     GraftIndex.sumStats(terms.where($"term".isin(ts: _*))
       .select($"term", $"df", $"total_tf", $"max_tf")
       .as[TermStatRow].collect().iterator)
-
-  /** exact live stats of `blocks` on the driver, under the tombstone rule:
-    * df counts distinct live docs (sectioned payloads repeat a doc per
-    * sid), total_tf and max_tf range over live postings. A term with no
-    * live posting is absent. */
-  private def liveStats(blocks: Iterator[PostingBlockRow]): Map[String, TermStatRow] = {
-    val tset = tombstones.set
-    val acc = scala.collection.mutable.HashMap
-      .empty[String, (java.util.HashSet[java.lang.Long], Array[Long])]
-    blocks.foreach { b =>
-      val (docSet, sums) = acc.getOrElseUpdate(b.term,
-        (new java.util.HashSet[java.lang.Long](), Array(0L, 0L)))
-      val d = graft.codec.PostingCodec.decode(b.payload)
-      var i = 0
-      while (i < d.count) {
-        if (tset.isLive(d.docIds(i), b.seg_ord)) {
-          docSet.add(d.docIds(i))
-          sums(0) += d.tfs(i)                       // total_tf
-          if (d.tfs(i) > sums(1)) sums(1) = d.tfs(i) // max_tf
-        }
-        i += 1
-      }
-    }
-    acc.iterator.collect { case (t, (docSet, sums)) if !docSet.isEmpty =>
-      t -> TermStatRow(t, docSet.size.toLong, sums(0), sums(1).toInt)
-    }.toMap
-  }
-
-  /** [[liveStats]] as a distributed aggregate, for term sets past the cap */
-  private def distributedLiveStats(terms: Seq[String]): Map[String, TermStatRow] =
-    decodedAlive(blockScan(terms))
-      .groupBy($"term")
-      .agg(countDistinct($"doc_id").as("df"),
-        sum($"tf").cast("long").as("total_tf"),
-        max($"tf").cast("int").as("max_tf"))
-      .as[TermStatRow]
-      .collect().map(t => t.term -> t).toMap
 
   /** empty (doc_id, score) result with the canonical schema */
   def emptyResult: DataFrame = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
@@ -288,8 +243,8 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * with UNCOMPACTED mutations they are exact too: a deleted doc, or an
     * upserted doc's old postings, do not count, so BM25 idf over a mutated
     * index matches a from-scratch rebuild exactly. A clean index reads
-    * only the dictionary; tombstones decode the terms' blocks, in the one
-    * place a search does ([[resolveTerms]]). */
+    * only the dictionary; tombstones sum the terms' live blocks, in the
+    * one place a search does ([[resolveTerms]]). */
   def termStats(qterms: Seq[String]): Map[String, TermStatRow] = {
     val ts = qterms.distinct
     resolveTerms(ts.filterNot(termStatCache.containsKey),
@@ -569,15 +524,13 @@ final case class GraftIndex(spark: SparkSession, path: String,
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("double").as("score"))
 
-  /** decode posting blocks into live (doc_id, term, tf, dl, seg_ord) rows
-    * under the tombstone filter; search, term stats, export and doc
-    * vectors all build on it */
+  /** decode the live blocks of `blocks` into (term, doc_id, tf, dl) rows;
+    * search, export and doc vectors all build on it */
   private[graft] def decodedAlive(blocks: Dataset[PostingBlockRow]): DataFrame =
-    tombstones.live(blocks.flatMap { b =>
+    tombstones.liveBlocks(blocks).flatMap { b =>
       val d = graft.codec.PostingCodec.decode(b.payload)
-      (0 until d.count).iterator.map(i =>
-        (b.term, d.docIds(i), d.tfs(i).toLong, d.dls(i), b.seg_ord))
-    }.toDF("term", "doc_id", "tf", "dl", "seg_ord"))
+      (0 until d.count).iterator.map(i => (b.term, d.docIds(i), d.tfs(i).toLong, d.dls(i)))
+    }.toDF("term", "doc_id", "tf", "dl")
 
   /** Full decoded postings view (term, doc_id, tf): tombstone-filtered,
     * section-summed — the export / consistency-audit surface. Distributed
@@ -750,6 +703,11 @@ object GraftIndex {
     })
     if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
   }
+
+  /** per-term sums of `blocks`' headers: df = Σcnt, total_tf = Σtf_sum,
+    * max_tf = max max_tf */
+  private def blockStats(blocks: Iterator[PostingBlockRow]): Map[String, TermStatRow] =
+    sumStats(blocks.map(b => TermStatRow(b.term, b.cnt.toLong, b.tf_sum, b.max_tf)))
 
   /** per-term sums of dictionary-shaped rows: df and total_tf add up,
     * max_tf is the max — how the segment writer builds the dictionary

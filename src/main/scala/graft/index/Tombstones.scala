@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generation tombstones of one index snapshot — the ONE place the liveness
@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   *
   * The delete segments are read ONCE per snapshot, into the max-gen-per-doc
   * table [[set]]; every form of the rule derives from it, so search, term
-  * stats, export, doc vectors and compaction cannot disagree:
-  *  - [[set]]: sorted driver arrays ([[TombstoneSet.isLive]]), for typed
-  *    and kernel code;
+  * stats, suggest, export, doc vectors and compaction cannot disagree:
+  *  - [[set]]: sorted driver arrays; [[TombstoneSet.liveBlock]] is the
+  *    rule for a posting block, and every postings reader gets its blocks
+  *    through it;
   *  - [[broadcastSet]]: [[set]] shipped once per executor;
-  *  - [[live]]: a DataFrame filter evaluating [[TombstoneSet.isLive]] on
-  *    the broadcast, for Catalyst code (no join, no second read). */
+  *  - [[liveBlocks]]: [[TombstoneSet.liveBlock]] over a block array on
+  *    the driver, or over a block Dataset on the broadcast;
+  *  - [[live]]: a DataFrame filter for `docs` rows, on the broadcast (no
+  *    join, no second read). */
 final class Tombstones(spark: SparkSession, path: String, deleteSegments: Seq[String]) {
   def isEmpty: Boolean = deleteSegments.isEmpty
   def nonEmpty: Boolean = !isEmpty
@@ -45,10 +48,24 @@ final class Tombstones(spark: SparkSession, path: String, deleteSegments: Seq[St
   /** [[set]] shipped ONCE per executor, not serialized into every task
     * closure — at the driver cap (millions of entries) a closure-embedded
     * copy would dominate task dispatch. None when there are no deletes. */
-  lazy val broadcastSet: Option[Broadcast[TombstoneSet]] =
+  private lazy val broadcastSet: Option[Broadcast[TombstoneSet]] =
     if (isEmpty) None else Some(spark.sparkContext.broadcast(set))
 
-  /** the live subset of `rows`, which must carry `doc_id` and `seg_ord` */
+  /** the live form of each of `blocks` ([[TombstoneSet.liveBlock]]) */
+  def liveBlocks(blocks: Array[PostingBlockRow]): Array[PostingBlockRow] =
+    if (isEmpty) blocks else blocks.flatMap(set.liveBlock)
+
+  /** the live form of each of `blocks`, applied in the tasks that read
+    * them, so dead postings never reach a shuffle */
+  def liveBlocks(blocks: Dataset[PostingBlockRow]): Dataset[PostingBlockRow] =
+    broadcastSet match {
+      case None => blocks
+      case Some(bc) =>
+        import spark.implicits._
+        blocks.flatMap(b => bc.value.liveBlock(b))
+    }
+
+  /** the live subset of `docs` rows, which must carry `doc_id` and `seg_ord` */
   def live(rows: DataFrame): DataFrame = broadcastSet match {
     case None => rows
     case Some(bc) =>
@@ -66,19 +83,14 @@ object Tombstones {
 /** Array form of the max-gen table: `docs` ascending, `gens(i)` the max
   * generation of `docs(i)`. */
 final case class TombstoneSet(docs: Array[Long], gens: Array[Int]) {
-  def isEmpty: Boolean = docs.isEmpty
-  def nonEmpty: Boolean = !isEmpty
-
   /** the liveness rule for a posting of `doc` in segment `segOrd` */
   def isLive(doc: Long, segOrd: Int): Boolean = {
     val j = java.util.Arrays.binarySearch(docs, doc)
     j < 0 || segOrd >= gens(j)
   }
 
-  /** true iff some doc in [lo, hi] is dead in segment `segOrd`; the
-    * default segOrd (below every generation) asks whether any doc in the
-    * range has a tombstone at all */
-  def hidesAnyIn(lo: Long, hi: Long, segOrd: Int = Int.MinValue): Boolean = {
+  /** true iff some doc in [lo, hi] is dead in segment `segOrd` */
+  def hidesAnyIn(lo: Long, hi: Long, segOrd: Int): Boolean = {
     var a = 0 // lower bound: first tombstoned doc >= lo
     var b = docs.length
     while (a < b) {
@@ -91,6 +103,14 @@ final case class TombstoneSet(docs: Array[Long], gens: Array[Int]) {
     }
     false
   }
+
+  /** THE liveness rule for a posting block: `b` itself, undecoded, when no
+    * tombstone hides a doc of its range in its segment; else its live
+    * postings re-encoded as one block with recomputed headers
+    * ([[PostingBlockRow.rebuild]]); None when every posting is dead */
+  def liveBlock(b: PostingBlockRow): Option[PostingBlockRow] =
+    if (!hidesAnyIn(b.min_doc, b.max_doc, b.seg_ord)) Some(b)
+    else PostingBlockRow.rebuild(Array(b), isLive(_, b.seg_ord))
 }
 
 object TombstoneSet {

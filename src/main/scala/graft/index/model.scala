@@ -1,22 +1,6 @@
 package graft.index
 
-/** One (doc, term) occurrence row produced by the tokenize stage.
-  * `bucket` = docId >> bucketBits — the docId-range salt that splits a head
-  * term's postings across partitions while preserving global docId order
-  * (bucket-major). This is the explicit skew handling the single-node
-  * reference does not need (cf. head-term skew discussion,
-  * /root/reference/lib/ii.cpp:1262-1284 n-gram frequency commentary).
-  */
-final case class DocTermRow(
-    term: String,
-    bucket: Int,
-    doc_id: Long,
-    tf: Int,
-    dl: Int,
-    /** per-doc position deltas, varbyte-encoded at the map side — the
-      * shuffle carries compact bytes and the blockifier appends them to the
-      * block payload verbatim (no decode/re-encode on the reduce side) */
-    pos_bytes: Array[Byte])
+import graft.codec.{IntVec, LongVec, PostingCodec}
 
 /** A map-side partial posting run: all of one (term, bucket)'s postings seen
   * by one map task between spills, already doc-ordered and block-encoded.
@@ -24,6 +8,8 @@ final case class DocTermRow(
   * — the Spark translation of the reference builder's sorted spill blocks
   * (grn_ii_builder block spill at 0x4000000 values,
   * /root/reference/lib/ii.cpp:15461-15479, 18691-18699).
+  * `bucket` = docId >> bucketBits: the docId-range salt that splits a head
+  * term's postings across partitions while keeping global docId order.
   */
 final case class PostingRunRow(
     term: String,
@@ -70,9 +56,77 @@ final case class PostingBlockRow(
       * /root/reference/lib/grn_ii.h:155). */
     seg_ord: Int = 0)
 
-final case class TermStatRow(term: String, df: Long, total_tf: Long, max_tf: Int)
+object PostingBlockRow {
+  /** Decode `blocks` (one term's, of one bucket), keep the postings whose
+    * doc passes `keep`, (doc, sid)-sort them and re-encode them as ONE
+    * block. Its headers (doc range, cnt, max_tf, max_gtf, min_dl, tf_sum)
+    * are recomputed from the kept postings; term, bucket, blk and seg_ord
+    * are the first block's. None when no posting is kept. */
+  def rebuild(blocks: Array[PostingBlockRow],
+      keep: Long => Boolean = _ => true): Option[PostingBlockRow] = {
+    val docs = new LongVec(16)
+    val tfs = new IntVec(16)
+    val dls = new IntVec(16)
+    val sds = new IntVec(16)
+    val poss = new scala.collection.mutable.ArrayBuffer[Array[Int]](16)
+    var withPos = false
+    var withSids = false
+    blocks.foreach { b =>
+      val d = PostingCodec.decode(b.payload)
+      if (d.positions.nonEmpty) withPos = true
+      if (d.sids.nonEmpty) withSids = true
+      var i = 0
+      var po = 0
+      while (i < d.count) {
+        val doc = d.docIds(i)
+        if (keep(doc)) {
+          docs += doc; tfs += d.tfs(i); dls += d.dls(i)
+          sds += (if (d.sids.isEmpty) 1 else d.sids(i))
+          poss += (if (d.positions.isEmpty) Array.emptyIntArray
+            else java.util.Arrays.copyOfRange(d.positions, po, po + d.tfs(i)))
+        }
+        po += d.tfs(i)
+        i += 1
+      }
+    }
+    val n = docs.length
+    if (n == 0) return None
+    val da = docs.toArray
+    val sa = sds.toArray
+    val order = Array.range(0, n).sortBy(k => (da(k), sa(k)))
+    val od = new Array[Long](n)
+    val ot = new Array[Int](n)
+    val ol = new Array[Int](n)
+    val os = new Array[Int](n)
+    val op = new Array[Array[Int]](n)
+    val ta = tfs.toArray
+    val la = dls.toArray
+    var k = 0
+    var maxTf = 0
+    var maxGtf = 0
+    var curGtf = 0
+    var minDl = Int.MaxValue
+    var tfSum = 0L
+    while (k < n) {
+      val src = order(k)
+      od(k) = da(src); ot(k) = ta(src); ol(k) = la(src); os(k) = sa(src); op(k) = poss(src)
+      if (ot(k) > maxTf) maxTf = ot(k)
+      if (k > 0 && od(k) != od(k - 1)) { if (curGtf > maxGtf) maxGtf = curGtf; curGtf = 0 }
+      curGtf += ot(k)
+      if (ol(k) < minDl) minDl = ol(k)
+      tfSum += ot(k)
+      k += 1
+    }
+    if (curGtf > maxGtf) maxGtf = curGtf
+    val payload = PostingCodec.encode(od, ot, ol,
+      if (withPos) op else null, if (withSids) os else null)
+    val h = blocks(0)
+    Some(PostingBlockRow(h.term, h.bucket, h.blk, od(0), od(n - 1), n,
+      maxTf, maxGtf, minDl, tfSum, payload.length, payload, h.seg_ord))
+  }
+}
 
-final case class DocStatRow(doc_id: Long, dl: Int)
+final case class TermStatRow(term: String, df: Long, total_tf: Long, max_tf: Int)
 
 /** Index-wide constants persisted in the manifest. */
 final case class IndexMeta(

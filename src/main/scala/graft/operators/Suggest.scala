@@ -221,77 +221,69 @@ object Suggest {
     * Scale shape: the postings scan is PRUNED to the matched docs' bucket
     * set with per-bucket doc-range overlap (bucket/min_doc/max_doc are
     * parquet columns with row-group stats, so untouched buckets are never
-    * read) and rows are filtered by a broadcast sorted-id binary search
-    * BEFORE grouping — never a full-index decode. Matched docs are capped
-    * at `maxDocs` (smallest ids first, deterministic). */
+    * read), only live postings count (graft.index.Tombstones), and rows
+    * are filtered by a broadcast sorted-id binary search BEFORE grouping —
+    * never a full-index decode. Matched docs are capped at `maxDocs`
+    * (smallest ids first, deterministic). */
   def suggest(idx: GraftIndex, term: String, k: Int = 10,
       maxDocs: Int = 10000): DataFrame = {
     import idx.spark.implicits._
-    val ids = idx.searchTerms(Seq(term)).select(col("doc_id"))
-      .orderBy(asc("doc_id")).limit(maxDocs).as[Long].collect().sorted
-    if (ids.isEmpty)
+    // the matched docs with the bucket their postings carry: a segment
+    // salts its own ids (its bucketBits are sized from its batch) and a
+    // compaction keeps each block's bucket, so a doc's bucket is read off
+    // its live postings of `term`, not derived from the index's bucketBits.
+    // All of a doc's live postings sit in one segment, under one bucket.
+    val hits = idx.tombstones.liveBlocks(idx.postings.where(col("term") === term)
+        .as[graft.index.PostingBlockRow])
+      .flatMap { b =>
+        val ds = graft.codec.PostingCodec.decode(b.payload).docIds
+        ds.indices.iterator.filter(i => i == 0 || ds(i) != ds(i - 1)).map(i => (ds(i), b.bucket))
+      }.toDF("doc_id", "bucket")
+      .orderBy(asc("doc_id")).limit(maxDocs).as[(Long, Int)].collect()
+    if (hits.isEmpty)
       return idx.spark.emptyDataset[(String, Long)].toDF("co_term", "n_docs")
-    val bits = idx.meta.bucketBits
+    val ids = hits.map(_._1)
     // pushdown stays DATA, not expression shape: one `bucket IN (...)` plus
     // a global doc-range overlap (both parquet row-group prunable) — a
     // per-bucket OR Column chain would be a 10k-node expression tree when
     // 10k docs scatter over 10k buckets. The exact per-bucket [min,max]
     // check rides a broadcast map and runs before any payload decode.
     val byBucket: Map[Int, (Long, Long)] =
-      ids.groupBy(id => (id >> bits).toInt)
-        .map { case (b, ds) => b -> (ds.min, ds.max) }
+      hits.groupBy(_._2).map { case (b, hs) => b -> (hs.head._1, hs.last._1) }
     val prune = col("bucket").isin(byBucket.keys.toSeq: _*) &&
       col("max_doc") >= ids.head && col("min_doc") <= ids.last
     val idsBc = idx.spark.sparkContext.broadcast(ids)
     val rangesBc = idx.spark.sparkContext.broadcast(byBucket)
-    if (idx.meta.sections.isEmpty && idx.isSingleSegment) {
-      // FAST PATH: on an unsectioned single-segment snapshot each
-      // (term, doc) posting entry exists at most once globally, so
-      // countDistinct(doc) == count(entries) and the count can be
-      // PRE-AGGREGATED per partition inside the decode pass (guide §2.3
-      // "aggregate before you shuffle"): the exchange carries one
-      // (term, n) row per distinct term per partition instead of one row
-      // per co-occurrence — on a 10k-doc match that is orders of
-      // magnitude fewer shuffled bytes, and bit-identical output.
-      val co = idx.postings.where(prune).as[graft.index.PostingBlockRow]
-        .mapPartitions { blocks =>
-          val counts = new java.util.HashMap[String, Long]()
-          val set = idsBc.value
-          val ranges = rangesBc.value
-          blocks.foreach { b =>
-            val (lo, hi) = ranges(b.bucket)
-            if (!(b.max_doc < lo || b.min_doc > hi)) {
-              val d = graft.codec.PostingCodec.decode(b.payload)
-              var i = 0; var n = 0L
-              while (i < d.count) {
-                if (java.util.Arrays.binarySearch(set, d.docIds(i)) >= 0) n += 1
-                i += 1
-              }
-              if (n > 0) counts.merge(b.term, n, (a, bn) => a + bn)
-            }
-          }
-          import scala.jdk.CollectionConverters._
-          counts.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue.longValue()))
-        }.toDF("co_term", "n")
-      co.where(col("co_term") =!= term)
-        .groupBy(col("co_term")).agg(sum(col("n")).as("n_docs"))
-        .orderBy(desc("n_docs"), asc("co_term")).limit(k)
-    } else {
-      val co = idx.postings.where(prune).as[graft.index.PostingBlockRow]
-        .flatMap { b =>
-          val (lo, hi) = rangesBc.value(b.bucket)
-          if (b.max_doc < lo || b.min_doc > hi) Iterator.empty
-          else {
-            val set = idsBc.value
+    // the count is PRE-AGGREGATED per partition inside the decode pass
+    // (guide §2.3 "aggregate before you shuffle"): the exchange carries one
+    // (term, n) row per distinct term per partition, not one row per
+    // co-occurrence. A block counts its distinct matched docs: a doc's
+    // section postings are consecutive and never split across blocks, and
+    // a live (term, doc) pair lives in one segment only, so the per-block
+    // counts add up to the distinct docs per term.
+    val co = idx.tombstones.liveBlocks(idx.postings.where(prune).as[graft.index.PostingBlockRow])
+      .mapPartitions { bs =>
+        val counts = new java.util.HashMap[String, Long]()
+        val set = idsBc.value
+        val ranges = rangesBc.value
+        bs.foreach { b =>
+          val (lo, hi) = ranges(b.bucket)
+          if (b.max_doc >= lo && b.min_doc <= hi) {
             val d = graft.codec.PostingCodec.decode(b.payload)
-            (0 until d.count).iterator
-              .filter(i => java.util.Arrays.binarySearch(set, d.docIds(i)) >= 0)
-              .map(i => (b.term, d.docIds(i)))
+            var i = 0; var n = 0L
+            while (i < d.count) {
+              if ((i == 0 || d.docIds(i) != d.docIds(i - 1)) &&
+                  java.util.Arrays.binarySearch(set, d.docIds(i)) >= 0) n += 1
+              i += 1
+            }
+            if (n > 0) counts.merge(b.term, n, (a, bn) => a + bn)
           }
-        }.toDF("co_term", "doc_id")
-      co.where(col("co_term") =!= term)
-        .groupBy(col("co_term")).agg(countDistinct(col("doc_id")).as("n_docs"))
-        .orderBy(desc("n_docs"), asc("co_term")).limit(k)
-    }
+        }
+        import scala.jdk.CollectionConverters._
+        counts.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue.longValue()))
+      }.toDF("co_term", "n")
+    co.where(col("co_term") =!= term)
+      .groupBy(col("co_term")).agg(sum(col("n")).as("n_docs"))
+      .orderBy(desc("n_docs"), asc("co_term")).limit(k)
   }
 }

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.codec.{DecodedBlock, PostingCodec}
-import graft.index.{PostingBlockRow, TombstoneSet}
+import graft.index.PostingBlockRow
 
 import scala.collection.mutable
 
@@ -78,12 +78,6 @@ final case class ResolvedQuery(
       * consecutive entries may share a docId, one per section). WAND still
       * prunes — v2 blocks carry max_gtf, the group-summed tf bound. */
     sectioned: Boolean = false,
-    /** the index's tombstones (graft.index.Tombstones). Buckets touching a
-      * tombstone (or with overlapping segment ranges, i.e. upserts) are
-      * decoded, filtered and re-merged before cursor iteration; untouched
-      * buckets stream as usual. Compact folds tombstones away and restores
-      * the fast path everywhere. */
-    tombstones: TombstoneSet = TombstoneSet.Empty,
     /** corpus doc count, needed only by ScoreMode.TfIdf's query idf */
     nDocs: Long = 0L) {
   def sectionWeight(sid: Int): Double =
@@ -201,9 +195,6 @@ final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
     }
     out
   }
-  /** true while block.positions non-empty */
-  def hasPositions: Boolean = block.positions.length > 0
-
   // ---- Block-Max WAND bounds (Ding & Suel 2011) ----
   // ubBlock(i): score upper bound of block i = idf x weight x bm25(maxTf, minDl).
   // ubSuffix(i): max over blocks i..end — a LIST-remaining bound, valid for
@@ -304,74 +295,8 @@ object MatchKernel {
   /** (blocksSeen, blocksDecoded) since the last resetStats() */
   def readStats(): (Long, Long) = (statBlocksTotal.sum(), statBlocksDecoded.sum())
 
-  /** decode, tombstone-filter, (doc, sid)-sort and re-encode a term's
-    * blocks into ONE block — the slow-but-correct path for buckets touched
-    * by deletes/upserts (overlapping segment ranges). None if every
-    * posting is dead. */
-  private[graft] def filterBlocks(
-      blocks: Array[PostingBlockRow], tombstones: TombstoneSet): Option[PostingBlockRow] = {
-    val docs = new graft.codec.LongVec(16)
-    val tfs = new graft.codec.IntVec(16)
-    val dls = new graft.codec.IntVec(16)
-    val sds = new graft.codec.IntVec(16)
-    val poss = new mutable.ArrayBuffer[Array[Int]](16)
-    var withPos = false
-    var withSids = false
-    blocks.foreach { b =>
-      val d = PostingCodec.decode(b.payload)
-      if (d.positions.nonEmpty) withPos = true
-      if (d.sids.nonEmpty) withSids = true
-      var i = 0
-      var po = 0
-      while (i < d.count) {
-        val doc = d.docIds(i)
-        if (tombstones.isLive(doc, b.seg_ord)) {
-          docs += doc; tfs += d.tfs(i); dls += d.dls(i)
-          sds += (if (d.sids.isEmpty) 1 else d.sids(i))
-          poss += (if (d.positions.isEmpty) Array.emptyIntArray
-            else java.util.Arrays.copyOfRange(d.positions, po, po + d.tfs(i)))
-        }
-        po += d.tfs(i)
-        i += 1
-      }
-    }
-    val n = docs.length
-    if (n == 0) return None
-    val da = docs.toArray
-    val sa = sds.toArray
-    val order = Array.range(0, n).sortBy(k => (da(k), sa(k)))
-    val od = new Array[Long](n)
-    val ot = new Array[Int](n)
-    val ol = new Array[Int](n)
-    val os = new Array[Int](n)
-    val op = new Array[Array[Int]](n)
-    val ta = tfs.toArray
-    val la = dls.toArray
-    var k = 0
-    var maxTf = 0
-    var maxGtf = 0
-    var curGtf = 0
-    var minDl = Int.MaxValue
-    var tfSum = 0L
-    while (k < n) {
-      val src = order(k)
-      od(k) = da(src); ot(k) = ta(src); ol(k) = la(src); os(k) = sa(src); op(k) = poss(src)
-      if (ot(k) > maxTf) maxTf = ot(k)
-      if (k > 0 && od(k) != od(k - 1)) { if (curGtf > maxGtf) maxGtf = curGtf; curGtf = 0 }
-      curGtf += ot(k)
-      if (ol(k) < minDl) minDl = ol(k)
-      tfSum += ot(k)
-      k += 1
-    }
-    if (curGtf > maxGtf) maxGtf = curGtf
-    val payload = PostingCodec.encode(od, ot, ol,
-      if (withPos) op else null, if (withSids) os else null)
-    val h = blocks(0)
-    Some(PostingBlockRow(h.term, h.bucket, 0, od(0), od(n - 1), n,
-      maxTf, maxGtf, minDl, tfSum, payload.length, payload, 0))
-  }
-
-  /** Run the match over one bucket's blocks for all query terms.
+  /** Run the match over one bucket's LIVE blocks (graft.index.Tombstones
+    * already applied) for all query terms.
     * Emits (docId, score) matches (per-bucket top-k if q.topK > 0). */
   def run(q: ResolvedQuery, rows: Iterator[PostingBlockRow]): Iterator[(Long, Double)] = {
     // organize: term -> blocks ordered by blk
@@ -380,8 +305,10 @@ object MatchKernel {
     val cursors: Array[TermCursor] = q.terms.flatMap { rt =>
       // order by doc range (not blk): blocks may come from several segments
       // of an incrementally-appended index; append-only docIds keep segment
-      // ranges disjoint, so (min_doc, blk) restores one ascending stream
-      byTerm.get(rt.term).flatMap { bs =>
+      // ranges disjoint, so (min_doc, blk) restores one ascending stream;
+      // an upserted doc's new postings overlap that stream, and then the
+      // term's blocks are merged into one
+      byTerm.get(rt.term).map { bs =>
         val sorted = bs.sortBy(b => (b.min_doc, b.blk)).toArray
         var overlapping = false
         var i = 1
@@ -389,15 +316,8 @@ object MatchKernel {
           overlapping = sorted(i).min_doc <= sorted(i - 1).max_doc
           i += 1
         }
-        val touched = q.tombstones.nonEmpty && {
-          var hi = Long.MinValue
-          sorted.foreach(b => if (b.max_doc > hi) hi = b.max_doc)
-          q.tombstones.hidesAnyIn(sorted(0).min_doc, hi)
-        }
-        if (touched || overlapping)
-          filterBlocks(sorted, q.tombstones)
-            .map(b => new TermCursor(rt, Array(b)))
-        else Some(new TermCursor(rt, sorted))
+        new TermCursor(rt,
+          if (overlapping) PostingBlockRow.rebuild(sorted).toArray else sorted)
       }
     }
     val results: Iterator[(Long, Double)] = q.mode match {

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.index._
-import graft.query.MatchKernel
 
 /** Incremental index maintenance: new documents land as additional
   * SEGMENTS; readers union segments (docIds are append-only, so segment doc
@@ -322,18 +321,14 @@ object IncrementalIndex {
   /** The live runs and docs of one fold: the blocks and docs of the data
     * segments at manifest ordinals `ords` only, each scan over just those
     * dirs (a seg_ord filter over the whole index would prune no file).
-    * Blocks are tombstone-filtered block-wise. */
+    * Blocks are made live block-wise; a block no tombstone touches is
+    * passed on undecoded. */
   private[graft] def foldInput(base: GraftIndex, ords: Seq[Int]): (Dataset[PostingRunRow], DataFrame) = {
     import base.spark.implicits._
     val run = ords.map(base.segDirs)
-    // broadcast, not closure-embedded: shipped once per executor
-    val bc = base.tombstones.broadcastSet
-    val blocks = base.postingsOf(run).as[PostingBlockRow].flatMap { b =>
-      val ts = bc.fold(TombstoneSet.Empty)(_.value)
-      val live = if (ts.isEmpty) Some(b) else MatchKernel.filterBlocks(Array(b), ts)
-      live.map(f => PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
+    val blocks = base.tombstones.liveBlocks(base.postingsOf(run).as[PostingBlockRow]).map(f =>
+      PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
         f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
-    }
     (blocks, base.segDocsOf(run).select($"doc_id", $"dl"))
   }
 

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   *  - dimension joins in drilldowns broadcast the small side
   *  - a select under the small-query cap pages a LocalRelation (no
   *    Exchange, no Sort)
-  *  - a 3-segment index reads postings and docs in one scan each
+  *  - a 3-segment index reads postings and docs in one scan each, and
+  *    after a delete and an upsert its term-AND plan still scans postings
+  *    once (tombstones ride the broadcast)
   * Run: sbt "runMain graft.tools.ExplainCheck" (exit 1 on any failure);
   * ExplainCheckSpec runs the same checks through [[run]].
   */
@@ -223,6 +225,22 @@ object ExplainCheck {
       idx16.meta.dataSegments.size == 3 && fileScans(p16) == 1 &&
         p16.contains("PushedFilters: [In(term") && fileScans(d16) == 1,
       s"segments ${idx16.meta.dataSegments}\n$p16\n$d16")
+
+    // 17. tombstones ride the broadcast: after a delete and an upsert on
+    //     the same index, the distributed term-AND plan still has ONE
+    //     parquet FileScan, over postings, and reads no delete segment
+    graft.streaming.IncrementalIndex.delete(spark, segPath, Seq(3L, 250L))
+    graft.streaming.IncrementalIndex.upsert(spark, segPath,
+      docs16.where(col("doc_id") === 120L), "doc_id", "text", "seg-ups", cfg16)
+    val idx17 = graft.index.GraftIndex(spark, segPath)
+    val p17 = plan(graft.operators.Select.eval(idx17,
+      graft.query.QueryParser.parse("spark +join"), graft.query.ScoreMode.Tf))
+    val dels17 = idx17.meta.deleteSegments
+    check("tombstoned term-AND: one postings scan, tombstones broadcast",
+      dels17.size == 2 && fileScans(p17) == 1 &&
+        p17.linesIterator.exists(l => l.contains("FileScan parquet") && l.contains("postings")) &&
+        !dels17.exists(p17.contains),
+      s"delete segments $dels17\n$p17")
 
     println("EXPLAIN-END")
     results.result()

@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The physical-plan shape checks of [[graft.tools.ExplainCheck]] — term-IN
   * pushdown, column pruning, single kernel scan, broadcast and zero-shuffle
   * joins, the driver-side select page, one scan per table of a
-  * 3-segment index — run as part of the test suite. */
+  * 3-segment index, one postings scan under tombstones — run as part of
+  * the test suite. */
 class ExplainCheckSpec extends AnyFunSuite {
   test("every ExplainCheck plan check passes") {
     val results = graft.tools.ExplainCheck.run(TestSpark.spark)
-    assert(results.size == 16, results.map(_._1).mkString(", "))
+    assert(results.size == 17, results.map(_._1).mkString(", "))
     val failed = results.filterNot(_._2).map(_._1)
     assert(failed.isEmpty, s"failed plan checks: ${failed.mkString(", ")}")
   }

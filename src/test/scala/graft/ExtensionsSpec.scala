@@ -9,6 +9,16 @@ class ExtensionsSpec extends AnyFunSuite {
     s
   }
 
+  test("the session extension and register() add the same functions") {
+    val viaExtension = org.apache.spark.sql.InjectedFunctions.names(new GraftExtensions())
+    val fresh = TestSpark.spark.newSession()
+    val before = fresh.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    GraftExtensions.register(fresh)
+    val viaRegister = fresh.sessionState.functionRegistry.listFunction().map(_.funcName).toSet -- before
+    assert(viaExtension == Set("graft_tokenize", "poly_hash", "shingle_hash", "graft_match"))
+    assert(viaRegister == viaExtension)
+  }
+
   test("graft_tokenize generator works from SQL (LATERAL VIEW)") {
     import spark.implicits._
     Seq((1L, "spark 日本語 search")).toDF("id", "text")

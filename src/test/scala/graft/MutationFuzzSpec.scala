@@ -10,7 +10,11 @@ import graft.streaming.IncrementalIndex
 /** Seeded fuzz over the mutation surface: random corpus -> delete a batch
   * (including ids later resurrected) -> upsert a batch with new text ->
   * compare EVERY match mode against a naive recomputation of the
-  * post-mutation corpus -> compact -> everything must still agree. */
+  * post-mutation corpus -> compact -> everything must still agree. A
+  * mutated index, plain and sectioned, must also answer exactly as a fresh
+  * build of its live docs: term stats, pages and nHits on both kernel
+  * paths, suggest and the decoded postings, before and after a partial
+  * compact. */
 class MutationFuzzSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -258,6 +262,112 @@ class MutationFuzzSpec extends AnyFunSuite {
       }.sum
       if (s > 0) Some(id -> s) else None
     }
+  }
+
+  // ---- rebuild equivalence: an uncompacted mutated index answers exactly
+  // as a fresh build of its live docs, on a plain and a sectioned corpus --
+
+  private val cfg5 = IndexConfig(tokenizer = "TokenBigram", bucketBits = 5)
+  private val capKey = "spark.graft.smallQueryMaxPostings"
+  private def withCap[A](cap: Long)(f: => A): A = {
+    val old = spark.conf.getOption(capKey)
+    spark.conf.set(capKey, cap.toString)
+    try f finally old match {
+      case Some(v) => spark.conf.set(capKey, v)
+      case None => spark.conf.unset(capKey)
+    }
+  }
+
+  /** `corpus` as index input: (doc_id, text), or sectioned (doc_id, title,
+    * body) with the first two words as the title (every text has >= 3) */
+  private def input(corpus: Map[Long, String], sectioned: Boolean) = {
+    val rows = corpus.toSeq.sortBy(_._1)
+    if (!sectioned) rows.toDF("doc_id", "text")
+    else rows.map { case (id, t) =>
+      val ws = t.split(" ")
+      (id, ws.take(2).mkString(" "), ws.drop(2).mkString(" "))
+    }.toDF("doc_id", "title", "body")
+  }
+  private def buildOf(path: String, corpus: Map[Long, String], sectioned: Boolean): GraftIndex =
+    if (sectioned) IndexBuilder.buildSectioned(spark, input(corpus, sectioned), "doc_id",
+      Seq("title", "body"), path, cfg5)
+    else IndexBuilder.build(spark, input(corpus, sectioned), "doc_id", "text", path, cfg5)
+
+  private val equivQueries = Seq(
+    s"${vocab(0)} ${vocab(1)}" -> ScoreMode.Tf,
+    s"${vocab(2)} OR ${vocab(9)}" -> ScoreMode.Bm25(),
+    s"${vocab(3)} OR ${vocab(4)} OR ${vocab(5)}" -> ScoreMode.Tf,
+    s"${vocab(6)} OR ${vocab(7)}" -> ScoreMode.Bm25(),
+    ("\"" + vocab(0) + " " + vocab(1) + "\"") -> ScoreMode.Bm25())
+
+  /** every answer of `got` equals `want`'s: term stats of every vocab word,
+    * Select pages (two per query) with nHits at cap 0 and the default cap,
+    * suggest and the decoded postings */
+  private def assertRebuildEquivalent(got: String, want: String, label: String): Unit = {
+    for (cap <- Seq(0L, GraftIndex.DefaultSmallQueryMaxPostings)) withCap(cap) {
+      val (g, w) = (GraftIndex(spark, got), GraftIndex(spark, want))
+      assert(g.termStats(vocab) == w.termStats(vocab), s"$label termStats, cap $cap")
+      for ((q, score) <- equivQueries; (off, lim) <- Seq((0, 10), (3, -1))) {
+        def page(idx: GraftIndex) = {
+          val req = graft.operators.Select.Request(q, score, offset = off, limit = lim)
+          val matched = graft.operators.Select.matches(idx, req)
+          val (rows, nHits) = graft.operators.Select.page(matched, req)
+          (rows.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
+            nHits.getOrElse(matched.count()))
+        }
+        val ((gp, gn), (wp, wn)) = (page(g), page(w))
+        val at = s"$label '$q' $score offset $off, cap $cap"
+        assert(gn == wn, s"$at nHits")
+        assert(gp.map(_._1) == wp.map(_._1), s"$at page")
+        gp.zip(wp).foreach { case ((d, a), (_, b)) =>
+          assert(math.abs(a - b) < 1e-9, s"$at score of doc $d: $a vs $b") }
+      }
+    }
+    val (g, w) = (GraftIndex(spark, got), GraftIndex(spark, want))
+    for (t <- Seq(vocab(0), vocab(5), vocab(17)))
+      assert(graft.operators.Suggest.suggest(g, t).collect().toSeq ==
+        graft.operators.Suggest.suggest(w, t).collect().toSeq, s"$label suggest $t")
+    def postings(idx: GraftIndex) = idx.decodedPostings
+      .select($"term", $"doc_id", $"tf".cast("long")).as[(String, Long, Long)].collect().toSet
+    assert(postings(g) == postings(w), s"$label decodedPostings")
+  }
+
+  private def rebuildEquivalence(sectioned: Boolean): Unit = {
+    val kind = if (sectioned) "sectioned" else "plain"
+    val p = s"$tmp/equiv-$kind"
+    buildOf(p, baseCorpus, sectioned)
+    IncrementalIndex.delete(spark, p, deleted.toSeq.sorted)
+    IncrementalIndex.upsert(spark, p, input(upserted, sectioned), "doc_id", "text",
+      "seg-equiv", IndexConfig(tokenizer = "TokenBigram"))
+    assert(GraftIndex(spark, p).meta.sections.nonEmpty == sectioned)
+    val rebuilt = s"$tmp/equiv-$kind-rebuilt"
+    buildOf(rebuilt, effective, sectioned)
+    assertRebuildEquivalent(p, rebuilt, s"$kind mutated")
+    IncrementalIndex.compactPartial(spark, p, cfg5)
+    assert(GraftIndex(spark, p).meta.deleteSegments.isEmpty)
+    assertRebuildEquivalent(p, rebuilt, s"$kind partial-compacted")
+  }
+
+  test("a mutated index answers as a rebuild of its live docs") {
+    rebuildEquivalence(sectioned = false)
+  }
+
+  test("a mutated SECTIONED index answers as a rebuild of its live docs") {
+    rebuildEquivalence(sectioned = true)
+  }
+
+  test("suggest reads each segment's own buckets on an appended index") {
+    // the appended segment salts its ids with bucketBits sized from its
+    // own 30-doc batch, not the base's 5
+    val extra = (nDocs.toLong until nDocs + 30L).map(i =>
+      i -> randTextSeeded(new scala.util.Random(i))).toMap
+    val p = s"$tmp/equiv-appended"
+    buildOf(p, baseCorpus, sectioned = false)
+    IncrementalIndex.appendSegment(spark, p, input(extra, sectioned = false), "doc_id", "text",
+      "seg-app", IndexConfig(tokenizer = "TokenBigram"))
+    val rebuilt = s"$tmp/equiv-appended-rebuilt"
+    buildOf(rebuilt, baseCorpus ++ extra, sectioned = false)
+    assertRebuildEquivalent(p, rebuilt, "appended")
   }
 
   test("compact preserves every result and refreshes stats") {

@@ -255,8 +255,9 @@ class SectionSpec extends AnyFunSuite {
         .map(i => (i, "spark spark upserted", "spark body here")).toDF("doc_id", "title", "body"),
       "doc_id", "title", "seg-mu", IndexConfig(tokenizer = "TokenBigram"))
     val mIdx = GraftIndex(spark, p)
-    // the tombstone-touched bucket takes the filterBlocks path — its merged
-    // block must carry a sound max_gtf for the weighted WAND bound
+    // tombstone-touched blocks are rebuilt from their live postings and an
+    // upserted doc's overlapping blocks are merged — the rebuilt blocks
+    // must carry a sound max_gtf for the weighted WAND bound
     val w = Map("title" -> 10.0)
     val full = mIdx.searchTerms(Seq("spark"), MatchMode.Any, ScoreMode.Bm25(),
         sectionWeights = w)

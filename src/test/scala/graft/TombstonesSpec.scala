@@ -7,10 +7,11 @@ import graft.index.{GraftIndex, IndexBuilder, IndexConfig, PostingBlockRow, Segm
 import graft.query.{MatchMode, ScoreMode}
 import graft.streaming.IncrementalIndex
 
-/** The two forms of the tombstone liveness rule — the array predicate
-  * (TombstoneSet.isLive, typed and kernel code) and the DataFrame filter
-  * (Tombstones.live, Catalyst code) — keep exactly the same postings and
-  * docs on an index with deletes, a resurrected id and replaced docs. The
+/** The forms of the tombstone liveness rule — the array predicate
+  * (TombstoneSet.isLive), the block rule every postings reader goes
+  * through (TombstoneSet.liveBlock) and the DataFrame filter
+  * (Tombstones.live) — keep exactly the same postings and docs on an index
+  * with deletes, a resurrected id and replaced docs. The
   * rule needs each row's segment ordinal, which the one-scan table reads
   * take from the file a row came from; the read rules for legacy segments
   * (no max_gtf column, no terms_rev table) are checked here too. */
@@ -51,6 +52,41 @@ class TombstonesSpec extends AnyFunSuite {
     assert(byArray.filter(_._2 == 40L).forall(_._3 == 1))
     assert(byArray.exists(p => p._1 == "qqback" && p._2 == 40L))
     assert(!byArray.exists(p => p._2 == 60L && p._3 == 0))
+  }
+
+  test("liveBlock keeps exactly the live postings of each block, with exact headers") {
+    val set = idx.tombstones.set
+    val blocks = idx.postings.as[PostingBlockRow].collect()
+    var rebuilt = 0
+    blocks.foreach { b =>
+      val d = graft.codec.PostingCodec.decode(b.payload)
+      val want = d.docIds.indices.filter(i => set.isLive(d.docIds(i), b.seg_ord))
+      set.liveBlock(b) match {
+        case None => assert(want.isEmpty, s"${b.term} blk ${b.blk}")
+        case Some(l) if !set.hidesAnyIn(b.min_doc, b.max_doc, b.seg_ord) =>
+          assert(l.eq(b) && want.size == d.count, s"untouched ${b.term} blk ${b.blk}")
+        case Some(l) =>
+          rebuilt += 1
+          val ld = graft.codec.PostingCodec.decode(l.payload)
+          assert(ld.docIds.toSeq == want.map(d.docIds(_)) && ld.tfs.toSeq == want.map(d.tfs(_)))
+          assert(ld.positions.toSeq == want.flatMap { i =>
+            val from = d.tfs.take(i).sum
+            d.positions.slice(from, from + d.tfs(i)).toSeq
+          })
+          assert((l.term, l.bucket, l.blk, l.seg_ord) == (b.term, b.bucket, b.blk, b.seg_ord))
+          assert((l.min_doc, l.max_doc, l.cnt, l.payload_len) ==
+            (ld.docIds.head, ld.docIds.last, ld.count, l.payload.length))
+          assert((l.max_tf, l.max_gtf, l.tf_sum, l.min_dl) ==
+            (ld.tfs.max, ld.tfs.max, ld.tfs.map(_.toLong).sum, ld.dls.min))
+      }
+    }
+    assert(rebuilt > 0, "some block must be touched by a tombstone")
+    // the Dataset form applies the same rule in the tasks
+    def key(bs: Seq[PostingBlockRow]) =
+      bs.map(b => (b.term, b.seg_ord, b.blk, b.min_doc, b.cnt, b.payload.toSeq))
+        .sortBy(k => (k._1, k._2, k._3, k._4))
+    assert(key(idx.tombstones.liveBlocks(idx.postings.as[PostingBlockRow]).collect().toSeq) ==
+      key(blocks.toSeq.flatMap(set.liveBlock)))
   }
 
   test("array predicate and DataFrame filter keep the same docs") {
