@@ -254,14 +254,11 @@ final case class GraftIndex(spark: SparkSession, path: String,
 
   /** Position-dependent match modes need an index built withPositions —
     * fail with a clear error instead of crashing inside the kernel. */
-  private def requirePositionsFor(mode: MatchMode): Unit = mode match {
-    case MatchMode.Phrase | _: MatchMode.Near | _: MatchMode.NearPhrase
-        if !meta.withPositions =>
+  private def requirePositionsFor(mode: MatchMode): Unit =
+    if (mode.needsPositions && !meta.withPositions)
       throw new IllegalArgumentException(
         s"index at $path was built withPositions=false; $mode needs positions " +
           "(rebuild with IndexConfig(withPositions = true))")
-    case _ =>
-  }
 
   /** Tokenize a raw query string with the index's analyzer (GET mode). */
   def analyzeQuery(raw: String): Seq[(String, Int)] =
@@ -273,28 +270,43 @@ final case class GraftIndex(spark: SparkSession, path: String,
     if (w.isEmpty || meta.sections.isEmpty) Array.emptyDoubleArray
     else meta.sections.map(c => w.getOrElse(c, 1.0)).toArray
 
-  /** a conjunctive mode matches nothing when a term is unknown */
-  private def requiresAll(mode: MatchMode): Boolean = mode match {
-    case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near => true
-    case _ => false
-  }
-
+  /** The kernel query over `groups`: per phrase group its alternatives,
+    * each a list of (term, qpos, weight); every mode but NearPhraseProduct
+    * passes one group of one alternative. When the mode needs every term,
+    * an alternative with a term the index does not know (`stats`) is
+    * dropped, and a group left without one makes the query match nothing
+    * (None). */
   private def resolve(
       stats: Map[String, TermStatRow],
-      termsWithPos: Seq[(String, Int, Double)],
+      groups: Seq[Seq[Seq[(String, Int, Double)]]],
       mode: MatchMode,
       score: ScoreMode,
       topK: Int,
-      sectionWeights: Map[String, Double] = Map.empty): ResolvedQuery = {
-    val rts = termsWithPos.map { case (t, qpos, w) =>
-      val st = stats.get(t)
-      ResolvedTerm(t, st.map(_.df).getOrElse(0L),
-        Bm25.idf(meta.nDocs, st.map(_.df).getOrElse(0L)), w, qpos)
+      sectionWeights: Map[String, Double] = Map.empty): Option[ResolvedQuery] = {
+    val rts = for {
+      (alts, gid) <- groups.zipWithIndex
+      (alt, aid) <- alts.zipWithIndex
+      if !mode.needsEveryTerm || alt.nonEmpty && alt.forall(t => stats.contains(t._1))
+      (t, qpos, w) <- alt
+    } yield {
+      val df = stats.get(t).fold(0L)(_.df)
+      ResolvedTerm(t, df, Bm25.idf(meta.nDocs, df), w, qpos, gid, aid)
     }
-    ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
-      sectionWeights = resolveSectionWeights(sectionWeights),
-      sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs)
+    if (mode.needsEveryTerm && rts.map(_.phraseId).distinct.size < groups.size) None
+    else Some(ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
+      sectionWeights = resolveSectionWeights(sectionWeights), nDocs = meta.nDocs))
   }
+
+  /** one query's (doc_id, score) matches: `groups` as [[resolve]] takes them */
+  private def search(
+      groups: Seq[Seq[Seq[(String, Int, Double)]]],
+      mode: MatchMode,
+      score: ScoreMode,
+      topK: Int,
+      sectionWeights: Map[String, Double] = Map.empty): DataFrame =
+    runKernels(groups.flatten.flatten.map(_._1)) { stats =>
+      resolve(stats, groups, mode, score, topK, sectionWeights).map(0 -> _).toSeq
+    }.drop("query_id")
 
   /** Core search: (doc_id, score) matches for the given terms.
     * `sectionWeights` keys are indexed column names (match_columns
@@ -311,10 +323,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val withPos = qterms.zipWithIndex.map { case (t, i) =>
       (t, i, weights.getOrElse(t, 1.0))
     }
-    runKernels(qterms) { stats =>
-      if (requiresAll(mode) && !qterms.forall(stats.contains)) Nil
-      else Seq(0 -> resolve(stats, withPos, mode, score, topK, sectionWeights))
-    }.drop("query_id")
+    search(Seq(Seq(withPos)), mode, score, topK, sectionWeights)
   }
 
   /** BATCHED multi-query search: N term queries answered through ONE
@@ -343,10 +352,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     val allTerms = batch.flatten.distinct
     if (allTerms.isEmpty) return runKernels(Nil)(_ => Nil)
     runKernels(allTerms) { stats =>
-      batch.zipWithIndex.collect {
-        case (qts, qid) if !requiresAll(mode) || qts.forall(stats.contains) =>
-          val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
-          qid -> resolve(stats, withPos, mode, score, topK, sectionWeights)
+      batch.zipWithIndex.flatMap { case (qts, qid) =>
+        val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
+        resolve(stats, Seq(Seq(withPos)), mode, score, topK, sectionWeights).map(qid -> _)
       }
     }
   }
@@ -365,42 +373,22 @@ final case class GraftIndex(spark: SparkSession, path: String,
     requirePositionsFor(MatchMode.Phrase)
     val toks = analyzeQuery(phrase)
     if (toks.isEmpty) return emptyResult
-    runKernels(toks.map(_._1)) { stats =>
-      if (!toks.forall(t => stats.contains(t._1))) Nil
-      else Seq(0 -> resolve(stats, toks.map { case (t, p) => (t, p, 1.0) },
-        MatchMode.Phrase, score, topK))
-    }.drop("query_id")
+    search(Seq(Seq(toks.map { case (t, p) => (t, p, 1.0) })), MatchMode.Phrase, score, topK)
   }
 
   /** NEAR_PHRASE / ORDERED_NEAR_PHRASE: every phrase occurs and the phrase
     * START positions fit within `maxInterval` (ordered: ascending in query
     * order), inside one section (the *NP and *ONP query syntax,
     * /root/reference/lib/ii.cpp:11210+, 12903). Single-word "phrases" are
-    * allowed and compose with multi-word ones. */
+    * allowed and compose with multi-word ones. It is the product form with
+    * one alternative per group. */
   def searchNearPhrase(
       phrases: Seq[String],
       maxInterval: Int,
       ordered: Boolean = false,
       score: ScoreMode = ScoreMode.Tf,
-      topK: Int = 0): DataFrame = {
-    val mode = MatchMode.NearPhrase(maxInterval, ordered)
-    requirePositionsFor(mode)
-    val toksByPhrase = phrases.map(analyzeQuery)
-    if (toksByPhrase.isEmpty || toksByPhrase.exists(_.isEmpty)) return emptyResult
-    val allTerms = toksByPhrase.flatten.map(_._1).distinct
-    runKernels(allTerms) { stats =>
-      if (!allTerms.forall(stats.contains)) Nil
-      else {
-        val rts = toksByPhrase.zipWithIndex.flatMap { case (toks, pid) =>
-          toks.map { case (t, p) =>
-            ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, pid)
-          }
-        }
-        Seq(0 -> ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
-          sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs))
-      }
-    }.drop("query_id")
-  }
+      topK: Int = 0): DataFrame =
+    searchNearPhraseProduct(phrases.map(Seq(_)), maxInterval, ordered, score, topK)
 
   /** NEAR_PHRASE_PRODUCT / ORDERED_NEAR_PHRASE_PRODUCT: each group is a
     * set of alternative phrases; one alternative per group must occur, all
@@ -414,24 +402,10 @@ final case class GraftIndex(spark: SparkSession, path: String,
       score: ScoreMode = ScoreMode.Tf,
       topK: Int = 0): DataFrame = {
     val mode = MatchMode.NearPhraseProduct(maxInterval, ordered)
-    requirePositionsFor(MatchMode.Phrase)
-    val analyzed: Seq[Seq[Seq[(String, Int)]]] = groups.map(_.map(analyzeQuery))
+    requirePositionsFor(mode)
+    val analyzed = groups.map(_.map(analyzeQuery))
     if (analyzed.isEmpty || analyzed.exists(_.forall(_.isEmpty))) return emptyResult
-    val allTerms = analyzed.flatten.flatten.map(_._1).distinct
-    runKernels(allTerms) { stats =>
-      val rts = analyzed.zipWithIndex.flatMap { case (alts, gid) =>
-        alts.zipWithIndex.flatMap { case (toks, aid) =>
-          // drop alternatives containing unknown terms entirely
-          if (toks.isEmpty || !toks.forall(t => stats.contains(t._1))) Nil
-          else toks.map { case (t, p) =>
-            ResolvedTerm(t, stats(t).df, Bm25.idf(meta.nDocs, stats(t).df), 1.0, p, gid, aid)
-          }
-        }
-      }
-      if (rts.map(_.phraseId).distinct.size < groups.size) Nil
-      else Seq(0 -> ResolvedQuery(rts.toArray, mode, score, meta.avgdl, topK,
-        sectioned = meta.sections.nonEmpty, nDocs = meta.nDocs))
-    }.drop("query_id")
+    search(analyzed.map(_.map(_.map { case (t, p) => (t, p, 1.0) })), mode, score, topK)
   }
 
   /** rank candidate terms by corpus-wide df and cap: a term present in

@@ -437,10 +437,9 @@ object IndexBuilder {
     val tokensAcc = spark.sparkContext.longAccumulator("graft.index.tokens")
     val runsAcc = spark.sparkContext.longAccumulator("graft.index.runs")
 
-    // salt granularity needs the corpus size (hint, or a cheap parquet
-    // row-count metadata job)
-    val nInputDocs = if (cfg.nDocsHint > 0) cfg.nDocsHint else docs.count()
-    val bucketBits = cfg.resolveBucketBits(nInputDocs, cfg.shufflePartitions(spark))
+    // an auto salt granularity needs the corpus size (hint, or a cheap
+    // parquet row-count metadata job)
+    val bucketBits = cfg.resolveBucketBits(docs.count(), cfg.shufflePartitions(spark))
 
     val rawDocs = docs
       .select(col(idCol).cast("long"),

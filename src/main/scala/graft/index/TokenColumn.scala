@@ -92,8 +92,7 @@ object TokenColumn {
     // salt sizing needs only the corpus magnitude: the (doc,section) row
     // count is a cheap parquet-metadata upper bound on nDocs (a distinct
     // count would re-scan the cache before the build even starts)
-    val nDocs = if (cfg.nDocsHint > 0) cfg.nDocsHint else tokens.count()
-    val bucketBits = buildCfg.resolveBucketBits(nDocs, shufflePartitions)
+    val bucketBits = buildCfg.resolveBucketBits(tokens.count(), shufflePartitions)
 
     // group (doc, sid) rows back into per-doc section arrays; range
     // partitioning + sort restores the ascending-unique-per-partition

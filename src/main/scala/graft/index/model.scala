@@ -202,10 +202,13 @@ final case class IndexConfig(
       * used to auto-size the bucket salt */
     nDocsHint: Long = 0L) {
 
-  /** resolve auto bucketBits for a corpus of `nDocs` over `partitions` */
-  def resolveBucketBits(nDocs: Long, partitions: Int): Int =
+  /** bucketBits for a corpus over `partitions`: the configured value, else
+    * auto-sized from the corpus size — `nDocsHint`, else `count`, which is
+    * only run here */
+  def resolveBucketBits(count: => Long, partitions: Int): Int =
     if (bucketBits >= 0) bucketBits
     else {
+      val nDocs = if (nDocsHint > 0) nDocsHint else count
       val targetBuckets = math.max(1L, 4L * partitions)
       val bucketSize = math.max(1L, nDocs / targetBuckets)
       math.max(0, 63 - java.lang.Long.numberOfLeadingZeros(bucketSize))

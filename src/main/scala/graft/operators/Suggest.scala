@@ -228,9 +228,10 @@ object Suggest {
   def suggest(idx: GraftIndex, term: String, k: Int = 10,
       maxDocs: Int = 10000): DataFrame = {
     import idx.spark.implicits._
-    // the matched docs with the bucket their postings carry: a segment
-    // salts its own ids (its bucketBits are sized from its batch) and a
-    // compaction keeps each block's bucket, so a doc's bucket is read off
+    // the matched docs with the bucket their postings carry. Appends salt
+    // ids with the index's bucketBits, but segments appended by older
+    // versions salted them with bits sized from their own batch, and a
+    // compaction keeps each block's bucket; so a doc's bucket is read off
     // its live postings of `term`, not derived from the index's bucketBits.
     // All of a doc's live postings sit in one segment, under one bucket.
     val hits = idx.tombstones.liveBlocks(idx.postings.where(col("term") === term)

@@ -7,7 +7,21 @@ import scala.collection.mutable
 
 /** Match modes, mirroring groonga's operator set executed by grn_ii_select
   * (/root/reference/lib/ii.cpp:14680; dispatch lib/table_selector.c:1171). */
-sealed trait MatchMode extends Serializable
+sealed trait MatchMode extends Serializable {
+  /** a doc matches only when it holds every term of one alternative of
+    * each phrase group — for every mode but NearPhraseProduct, every query
+    * term. So a term the index does not know drops its alternative, and a
+    * group left without one matches nothing. */
+  def needsEveryTerm: Boolean = this match {
+    case MatchMode.Any | _: MatchMode.Quorum => false
+    case _ => true
+  }
+  /** the match reads term positions: the index must be built withPositions */
+  def needsPositions: Boolean = this match {
+    case MatchMode.Phrase | _: MatchMode.Near | _: MatchMode.NearPhraseProduct => true
+    case _ => false
+  }
+}
 object MatchMode {
   /** conjunctive — all terms (GRN_OP_MATCH over AND-merged result set) */
   case object All extends MatchMode
@@ -18,17 +32,15 @@ object MatchMode {
   case object Phrase extends MatchMode
   /** all terms within a window (GRN_OP_NEAR, /root/reference/lib/ii.cpp:13383-13533) */
   final case class Near(maxInterval: Int) extends MatchMode
-  /** all PHRASES (term groups keyed by ResolvedTerm.phraseId) occur, with
-    * phrase start positions within `maxInterval` of each other; `ordered`
-    * additionally requires starts ascending in query-phrase order
-    * (GRN_OP_NEAR_PHRASE / GRN_OP_ORDERED_NEAR_PHRASE,
-    * /root/reference/lib/ii.cpp:11210+, 12903) */
-  final case class NearPhrase(maxInterval: Int, ordered: Boolean) extends MatchMode
-  /** NEAR_PHRASE with ALTERNATIVES: each phrase group is a set of
-    * alternatives (keyed by ResolvedTerm.altId) and a group's occurrence
-    * starts are the union over its alternatives — one alternative per
-    * group must land inside the window
-    * (GRN_OP_NEAR_PHRASE_PRODUCT / ORDERED_*, lib/ii.cpp:12903+) */
+  /** NEAR_PHRASE[_PRODUCT]: every phrase GROUP (terms keyed by
+    * ResolvedTerm.phraseId) occurs, its phrase start positions within
+    * `maxInterval` of the other groups' in one section; `ordered`
+    * additionally requires starts ascending in group order. A group is a
+    * set of alternatives (keyed by ResolvedTerm.altId) whose starts are
+    * the union over its alternatives, so one alternative per group must
+    * land inside the window; plain NEAR_PHRASE has one alternative per
+    * group (GRN_OP_NEAR_PHRASE / GRN_OP_ORDERED_NEAR_PHRASE and their
+    * _PRODUCT forms, /root/reference/lib/ii.cpp:11210+, 12903+) */
   final case class NearPhraseProduct(maxInterval: Int, ordered: Boolean) extends MatchMode
   /** at least `min` distinct terms present (GRN_OP_QUORUM) */
   final case class Quorum(min: Int) extends MatchMode
@@ -54,8 +66,8 @@ object ScoreMode {
 
 final case class ResolvedTerm(
     term: String, df: Long, idf: Double, weight: Double, qpos: Int,
-    /** phrase-group id for NearPhrase composition (0 for everything else);
-      * qpos is then the offset within the phrase */
+    /** phrase-group id for NearPhraseProduct (0 for everything else); qpos
+      * is then the offset within the phrase */
     phraseId: Int = 0,
     /** alternative id within the phrase group (NEAR_PHRASE_PRODUCT: a
       * group's starts are the UNION over its alternatives) */
@@ -74,20 +86,17 @@ final case class ResolvedQuery(
     /** per-section weight, indexed by sid-1 (match_columns "a*10||b" →
       * [10, 1], lib/ii.cpp:13694-13696 column_weight). Empty = 1.0 each. */
     sectionWeights: Array[Double] = Array.emptyDoubleArray,
-    /** true when the index carries a sid stream (multi-column postings:
-      * consecutive entries may share a docId, one per section). WAND still
-      * prunes — v2 blocks carry max_gtf, the group-summed tf bound. */
-    sectioned: Boolean = false,
     /** corpus doc count, needed only by ScoreMode.TfIdf's query idf */
     nDocs: Long = 0L) {
   def sectionWeight(sid: Int): Double =
     if (sectionWeights.isEmpty || sid - 1 >= sectionWeights.length) 1.0
     else sectionWeights(sid - 1)
 
-  /** scorer_tf_idf leg idf over a term set: ln(nDocs / (sum(df)/n)),
-    * 0 when the estimate reaches the corpus (record then scores min 1.0) */
-  def tfIdfLegIdf(terms: Iterable[ResolvedTerm]): Double = {
-    val est = terms.map(_.df).sum.toDouble / terms.size
+  /** scorer_tf_idf leg idf over `n` terms whose df sum to `dfSum`:
+    * ln(nDocs / (dfSum/n)), 0 when the estimate reaches the corpus (the
+    * record then scores min 1.0) */
+  def tfIdfLegIdf(dfSum: Long, n: Int): Double = {
+    val est = dfSum.toDouble / n
     if (est <= 0 || est >= nDocs) 0.0 else math.log(nDocs / est)
   }
 }
@@ -109,12 +118,12 @@ object Bm25 {
   * /root/reference/lib/ii.cpp:16200-16219, cursor skip :8139).
   *
   * Iteration is by DOC GROUP: with a sectioned index consecutive postings
-  * may share a docId (one per section); doc/tf/next/advanceTo treat the
+  * may share a docId (one per section); doc/score/next/advanceTo treat the
   * whole group as one logical posting. The builder never splits a doc's
   * group across blocks. Without sections the group is always one posting
   * (the fast path).
   */
-final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
+final class TermCursor(val rt: ResolvedTerm, q: ResolvedQuery, blocks: Array[PostingBlockRow]) {
   private var bi = 0
   private var block: DecodedBlock = _
   private var i = 0 // group start
@@ -150,18 +159,13 @@ final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
   }
 
   def doc: Long = block.docIds(i)
-  /** unweighted tf summed over the doc's sections */
-  def tf: Int = {
-    if (gEnd == i + 1) block.tfs(i)
-    else {
-      var s = 0; var j = i
-      while (j < gEnd) { s += block.tfs(j); j += 1 }
-      s
-    }
-  }
   def dl: Int = block.dls(i) // whole-doc dl, same for every section posting
+  /** this leg's scorer_tf_idf idf, fixed per query */
+  private val tfIdf = q.tfIdfLegIdf(rt.df, 1)
+  /** the current doc group's score as one leg of the query */
+  def score: Double = MatchKernel.legScore(q, weightedTf, dl, rt.idf, tfIdf, rt.weight)
   /** section-weighted tf of the current doc group (empty weights = 1.0) */
-  def weightedTf(q: ResolvedQuery): Double = {
+  private def weightedTf: Double = {
     if (block.sids.isEmpty && q.sectionWeights.isEmpty) return block.tfs(i).toDouble
     var s = 0.0
     var j = i
@@ -171,15 +175,6 @@ final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
       j += 1
     }
     s
-  }
-  /** positions of the current group, flattened across sections (only valid
-    * for non-sectioned use — phrase/near on sectioned indexes must use
-    * groupPositions) */
-  def positions: Array[Int] = {
-    val n = { var s = 0; var j = i; while (j < gEnd) { s += block.tfs(j); j += 1 }; s }
-    val out = new Array[Int](n)
-    System.arraycopy(block.positions, posBase, out, 0, n)
-    out
   }
   /** per-section positions of the current group: (sid, ascending positions) */
   def groupPositions: Array[(Int, Array[Int])] = {
@@ -211,7 +206,7 @@ final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
     * maxSectionWeight x max_gtf: a doc group's weighted tf is
     * Σ_s w_s·tf_s <= maxW·Σ_s tf_s <= maxW·max_gtf (sid-less blocks have
     * max_gtf == max_tf and maxW == 1, reducing to the classic bound). */
-  def initBounds(q: ResolvedQuery): Unit = {
+  def initBounds(): Unit = {
     ubBlock = new Array[Double](blocks.length)
     ubSuffix = new Array[Double](blocks.length)
     val maxW =
@@ -219,16 +214,7 @@ final class TermCursor(val rt: ResolvedTerm, blocks: Array[PostingBlockRow]) {
     var j = 0
     while (j < blocks.length) {
       val maxTf = math.max(blocks(j).max_gtf, blocks(j).max_tf).toDouble * maxW
-      val ub = q.score match {
-        case ScoreMode.Bm25(k1, b) =>
-          rt.idf * rt.weight *
-            Bm25.weight(maxTf, blocks(j).min_dl.toDouble, q.avgdl, k1, b)
-        case ScoreMode.Tf => maxTf * rt.weight
-        case ScoreMode.TfAtMost(max) => math.min(maxTf, max) * rt.weight
-        case ScoreMode.TfIdf =>
-          val idf = q.tfIdfLegIdf(Seq(rt))
-          (if (idf == 0.0) 1.0 else math.max(maxTf * idf, 1.0)) * rt.weight
-      }
+      val ub = MatchKernel.legScore(q, maxTf, blocks(j).min_dl, rt.idf, tfIdf, rt.weight)
       // A NEGATIVE leg multiplier inverts the max-tf bound into a lower
       // bound (reachable: sectioned df counts (doc,section) postings, so
       // df > nDocs makes the reference BM25 idf ln((N-df+0.5)/(df+0.5)+1)
@@ -297,7 +283,10 @@ object MatchKernel {
 
   /** Run the match over one bucket's LIVE blocks (graft.index.Tombstones
     * already applied) for all query terms.
-    * Emits (docId, score) matches (per-bucket top-k if q.topK > 0). */
+    * Emits (docId, score) matches (per-bucket top-k if q.topK > 0).
+    * A mode that needs every term runs the conjunctive leapfrog, unless a
+    * phrase group of the query has several alternatives: then no one term
+    * is needed, and the doc-at-a-time product walk runs instead. */
   def run(q: ResolvedQuery, rows: Iterator[PostingBlockRow]): Iterator[(Long, Double)] = {
     // organize: term -> blocks ordered by blk
     val byTerm = new mutable.HashMap[String, mutable.ArrayBuffer[PostingBlockRow]]()
@@ -316,32 +305,56 @@ object MatchKernel {
           overlapping = sorted(i).min_doc <= sorted(i - 1).max_doc
           i += 1
         }
-        new TermCursor(rt,
+        new TermCursor(rt, q,
           if (overlapping) PostingBlockRow.rebuild(sorted).toArray else sorted)
       }
     }
     val results: Iterator[(Long, Double)] = q.mode match {
-      case MatchMode.All | MatchMode.Phrase | _: MatchMode.Near | _: MatchMode.NearPhrase =>
-        if (cursors.length < q.terms.length) Iterator.empty // a term missing in bucket
-        else conjunctive(q, cursors)
       case MatchMode.Any => disjunctive(q, cursors, minMatch = 1)
       case MatchMode.Quorum(m) => disjunctive(q, cursors, minMatch = m)
-      case MatchMode.NearPhraseProduct(mi, ord) => productMatch(q, cursors, mi, ord)
+      case MatchMode.NearPhraseProduct(mi, ord) if !oneAlternativePerGroup(q.terms) =>
+        productMatch(q, cursors, mi, ord)
+      case _ =>
+        if (cursors.length < q.terms.length) Iterator.empty // a term missing in bucket
+        else conjunctive(q, cursors)
     }
     if (q.topK > 0) topK(results, q.topK) else results
   }
 
-  private def score1(q: ResolvedQuery, c: TermCursor): Double = {
-    val tf = c.weightedTf(q)
-    q.score match {
-      case ScoreMode.Tf => tf * c.rt.weight
-      case ScoreMode.Bm25(k1, b) =>
-        c.rt.idf * c.rt.weight * Bm25.weight(tf, c.dl.toDouble, q.avgdl, k1, b)
-      case ScoreMode.TfAtMost(max) => math.min(tf, max) * c.rt.weight
-      case ScoreMode.TfIdf =>
-        val idf = q.tfIdfLegIdf(Seq(c.rt))
-        (if (idf == 0.0) 1.0 else math.max(tf * idf, 1.0)) * c.rt.weight
-    }
+  private def oneAlternativePerGroup(terms: Array[ResolvedTerm]): Boolean =
+    terms.forall(t => terms.forall(u => u.phraseId != t.phraseId || u.altId == t.altId))
+
+  /** The score of one leg: a term's doc group, its block bound, or a phrase
+    * unit scored as one term. `tf` is the leg's section-weighted tf, `idf`
+    * its BM25 idf, `tfIdf` its scorer_tf_idf idf (ResolvedQuery.tfIdfLegIdf)
+    * and `weight` its query weight. */
+  private[query] def legScore(q: ResolvedQuery, tf: Double, dl: Int, idf: Double,
+      tfIdf: Double, weight: Double): Double = q.score match {
+    case ScoreMode.Tf => tf * weight
+    case ScoreMode.Bm25(k1, b) => idf * weight * Bm25.weight(tf, dl.toDouble, q.avgdl, k1, b)
+    case ScoreMode.TfAtMost(max) => math.min(tf, max) * weight
+    case ScoreMode.TfIdf => (if (tfIdf == 0.0) 1.0 else math.max(tf * tfIdf, 1.0)) * weight
+  }
+
+  /** the sum of the legs' scores at their current doc */
+  private def legSum(legs: Array[TermCursor]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < legs.length) { s += legs(i).score; i += 1 }
+    s
+  }
+
+  /** A phrase unit's score: `starts` (per section, in order) give its tf,
+    * Σ starts x section weight; it weighs 1, its idf is its rarest
+    * member's and its scorer_tf_idf idf is taken over all `members`. */
+  private def unitScore(q: ResolvedQuery, members: Array[TermCursor],
+      starts: Iterator[(Int, Array[Int])]): Double = {
+    var tf = 0.0
+    starts.foreach { case (sid, st) => tf += st.length * q.sectionWeight(sid) }
+    var idf = Double.NegativeInfinity
+    var dfSum = 0L
+    members.foreach { c => idf = math.max(idf, c.rt.idf); dfSum += c.rt.df }
+    legScore(q, tf, members(0).dl, idf, q.tfIdfLegIdf(dfSum, members.length), 1.0)
   }
 
   /** AND / phrase / near: leapfrog intersection driven by the rarest term
@@ -369,7 +382,7 @@ object MatchKernel {
             i += 1
           }
           if (aligned) {
-            val s = matchedScore(q, order, target)
+            val s = matchedScore(q, order)
             if (s.isDefined) nextHit = (target, s.get)
             order(0).next()
             if (order(0).exhausted) done = true
@@ -387,66 +400,12 @@ object MatchKernel {
 
   /** score a doc where all cursors are aligned; applies phrase/near position
     * checks. Returns None if position constraints reject the doc. */
-  private def matchedScore(
-      q: ResolvedQuery, aligned: Array[TermCursor], doc: Long): Option[Double] = {
+  private def matchedScore(q: ResolvedQuery, aligned: Array[TermCursor]): Option[Double] =
     q.mode match {
-      case MatchMode.All =>
-        var s = 0.0
-        var i = 0
-        while (i < aligned.length) { s += score1(q, aligned(i)); i += 1 }
-        Some(s)
       case MatchMode.Phrase =>
-        // occurrences where every term appears at base + (qpos_i - qpos_0),
-        // within the same section (positions restart per section; a phrase
-        // never crosses a section boundary — EXACT phrase check,
-        // /root/reference/lib/ii.cpp:13538-13605)
-        val base = aligned.minBy(_.rt.qpos)
-        val others = aligned.filter(_ ne base)
-        val otherBySid: Array[Map[Int, Array[Int]]] =
-          others.map(_.groupPositions.toMap)
-        var weighted = 0.0
-        var anyOcc = false
-        for ((sid, basePos) <- base.groupPositions) {
-          var sectionOk = true
-          val oPos = new Array[Array[Int]](others.length)
-          var j = 0
-          while (j < others.length && sectionOk) {
-            otherBySid(j).get(sid) match {
-              case Some(p) => oPos(j) = p
-              case None => sectionOk = false
-            }
-            j += 1
-          }
-          if (sectionOk) {
-            var occ = 0
-            var x = 0
-            while (x < basePos.length) {
-              val p0 = basePos(x)
-              var ok = true
-              j = 0
-              while (j < others.length && ok) {
-                val want = p0 + (others(j).rt.qpos - base.rt.qpos)
-                ok = java.util.Arrays.binarySearch(oPos(j), want) >= 0
-                j += 1
-              }
-              if (ok) occ += 1
-              x += 1
-            }
-            if (occ > 0) { anyOcc = true; weighted += occ * q.sectionWeight(sid) }
-          }
-        }
-        if (!anyOcc) None
-        else Some(q.score match {
-          case ScoreMode.Tf => weighted
-          case ScoreMode.Bm25(k1, b) =>
-            // phrase scored as a unit: idf of the rarest member term
-            val idf = aligned.map(_.rt.idf).max
-            idf * Bm25.weight(weighted, base.dl.toDouble, q.avgdl, k1, b)
-          case ScoreMode.TfAtMost(max) => math.min(weighted, max)
-          case ScoreMode.TfIdf =>
-            val idf = q.tfIdfLegIdf(aligned.map(_.rt).toSeq)
-            if (idf == 0.0) 1.0 else math.max(weighted * idf, 1.0)
-        })
+        // EXACT phrase check, /root/reference/lib/ii.cpp:13538-13605
+        val starts = phraseStartsBySid(aligned)
+        if (starts.isEmpty) None else Some(unitScore(q, aligned, starts.iterator))
       case MatchMode.Near(maxInterval) =>
         // minimal window over all terms' positions within maxInterval,
         // evaluated per shared section (GRN_OP_NEAR,
@@ -457,49 +416,29 @@ object MatchKernel {
         val ok = sharedSids.exists { sid =>
           minWindow(perCursor.map(_(sid))) <= maxInterval
         }
-        if (ok) {
-          var s = 0.0
-          var i = 0
-          while (i < aligned.length) { s += score1(q, aligned(i)); i += 1 }
-          Some(s)
-        } else None
-      case MatchMode.NearPhrase(maxInterval, ordered) =>
-        // compose phrase groups: each group matches like Phrase, yielding
-        // start positions; groups' starts must fit within maxInterval (and
-        // ascend in query order for the ordered variant), within ONE section
-        val pids = aligned.map(_.rt.phraseId).distinct.sorted
-        val groups = pids.map(pid => aligned.filter(_.rt.phraseId == pid))
-        val perPhraseBySid: Array[Map[Int, Array[Int]]] = groups.map(phraseStartsBySid)
-        val sharedSids = perPhraseBySid.map(_.keySet)
-          .foldLeft(null: Set[Int])((a, b) => if (a == null) b else a intersect b)
-        if (sharedSids == null || sharedSids.isEmpty) None
-        else {
-          val okSid = sharedSids.exists { sid =>
-            val starts = perPhraseBySid.map(_(sid))
-            if (ordered) orderedWindowExists(starts, maxInterval)
-            else minWindow(starts) <= maxInterval
-          }
-          if (!okSid) None
-          else {
-            // score = Σ phrase occurrences x section weight (TF semantics)
-            var s = 0.0
-            perPhraseBySid.foreach(_.foreach { case (sid, st) =>
-              s += st.length * q.sectionWeight(sid)
-            })
-            Some(q.score match {
-              case ScoreMode.Tf => s
-              case ScoreMode.Bm25(k1, b) =>
-                val idf = aligned.map(_.rt.idf).max
-                idf * Bm25.weight(s, aligned(0).dl.toDouble, q.avgdl, k1, b)
-              case ScoreMode.TfAtMost(max) => math.min(s, max)
-              case ScoreMode.TfIdf =>
-                val idf = q.tfIdfLegIdf(aligned.map(_.rt).toSeq)
-                if (idf == 0.0) 1.0 else math.max(s * idf, 1.0)
-            })
-          }
-        }
-      case _ => Some(0.0)
+        if (ok) Some(legSum(aligned)) else None
+      case MatchMode.NearPhraseProduct(maxInterval, ordered) =>
+        // one alternative per group: each group matches like Phrase
+        val groups = aligned.map(_.rt.phraseId).distinct.sorted
+          .map(pid => phraseStartsBySid(aligned.filter(_.rt.phraseId == pid)))
+        nearPhraseScore(q, aligned, groups, maxInterval, ordered)
+      case _ => Some(legSum(aligned)) // All
     }
+
+  /** NEAR_PHRASE at one doc: `groups(g)` holds group g's phrase starts per
+    * section. The doc matches when one section that every group occurs in
+    * holds one start per group within `maxInterval` (ascending in group
+    * order when `ordered`); it then scores as ONE phrase unit over all the
+    * groups' starts. */
+  private def nearPhraseScore(q: ResolvedQuery, aligned: Array[TermCursor],
+      groups: Array[Array[(Int, Array[Int])]], maxInterval: Int, ordered: Boolean): Option[Double] = {
+    val inWindow = groups(0).exists { case (sid, _) =>
+      val starts = groups.map(_.collectFirst { case (`sid`, st) => st }.orNull)
+      !starts.contains(null) &&
+        (if (ordered) orderedWindowExists(starts, maxInterval)
+         else minWindow(starts) <= maxInterval)
+    }
+    if (inWindow) Some(unitScore(q, aligned, groups.iterator.flatten)) else None
   }
 
   /** NEAR_PHRASE_PRODUCT: doc-at-a-time walk (a group matches via ANY of
@@ -523,42 +462,17 @@ object MatchKernel {
           var minDoc = Long.MaxValue
           live.foreach(c => if (c.doc < minDoc) minDoc = c.doc)
           val aligned = live.filter(_.doc == minDoc).toArray
-          // group -> sid -> union of alternative starts
-          val groupStarts: Array[Map[Int, Array[Int]]] = groupIds.map { g =>
-            val bySid = new mutable.HashMap[Int, mutable.ArrayBuffer[Int]]()
-            aligned.filter(_.rt.phraseId == g).groupBy(_.rt.altId).foreach { case (a, cs) =>
-              if (cs.length == expected((g, a)))
-                phraseStartsBySid(cs).foreach { case (sid, st) =>
-                  bySid.getOrElseUpdate(sid, new mutable.ArrayBuffer[Int]()) ++= st
-                }
-            }
-            bySid.map { case (sid, buf) => sid -> buf.distinct.sorted.toArray }.toMap
-          }
-          if (groupStarts.forall(_.nonEmpty)) {
-            val sharedSids = groupStarts.map(_.keySet).reduce(_ intersect _)
-            val okSid = sharedSids.exists { sid =>
-              val starts = groupStarts.map(_(sid))
-              if (ordered) orderedWindowExists(starts, maxInterval)
-              else minWindow(starts) <= maxInterval
-            }
-            if (okSid) {
-              var s = 0.0
-              groupStarts.foreach(_.foreach { case (sid, st) =>
-                s += st.length * q.sectionWeight(sid)
-              })
-              val score = q.score match {
-                case ScoreMode.Tf => s
-                case ScoreMode.Bm25(k1, b) =>
-                  val idf = aligned.map(_.rt.idf).max
-                  idf * Bm25.weight(s, aligned(0).dl.toDouble, q.avgdl, k1, b)
-                case ScoreMode.TfAtMost(max) => math.min(s, max)
-                case ScoreMode.TfIdf =>
-                  val idf = q.tfIdfLegIdf(aligned.map(_.rt).toSeq)
-                  if (idf == 0.0) 1.0 else math.max(s * idf, 1.0)
+          // group -> (sid, union of alternative starts), sids ascending
+          val groups = groupIds.map { g =>
+            aligned.filter(_.rt.phraseId == g).groupBy(_.rt.altId).toArray
+              .flatMap { case (a, cs) =>
+                if (cs.length == expected((g, a))) phraseStartsBySid(cs) else Array.empty[(Int, Array[Int])]
               }
-              pending = (minDoc, score)
-            }
+              .groupBy(_._1).toArray.sortBy(_._1)
+              .map { case (sid, st) => sid -> st.flatMap(_._2).distinct.sorted }
           }
+          if (groups.forall(_.nonEmpty))
+            nearPhraseScore(q, aligned, groups, maxInterval, ordered).foreach(s => pending = (minDoc, s))
           aligned.foreach(_.next())
           live.filterInPlace(!_.exhausted)
         }
@@ -569,14 +483,17 @@ object MatchKernel {
     }
   }
 
-  /** one phrase group's occurrence START positions per section: position p
+  /** one phrase group's occurrence START positions per section, sections
+    * in the base term's order, those without a start left out: position p
     * counts iff every member term of the group occurs at p + (qpos - min
-    * qpos). A single-term group's starts are just its positions. */
-  private def phraseStartsBySid(group: Array[TermCursor]): Map[Int, Array[Int]] = {
+    * qpos) in the same section (positions restart per section, so a phrase
+    * never crosses a section boundary). A single-term group's starts are
+    * just its positions. */
+  private def phraseStartsBySid(group: Array[TermCursor]): Array[(Int, Array[Int])] = {
     val base = group.minBy(_.rt.qpos)
     val others = group.filter(_ ne base)
     val otherBySid = others.map(_.groupPositions.toMap)
-    val out = Map.newBuilder[Int, Array[Int]]
+    val out = Array.newBuilder[(Int, Array[Int])]
     for ((sid, basePos) <- base.groupPositions) {
       var sectionOk = true
       val oPos = new Array[Array[Int]](others.length)
@@ -681,7 +598,7 @@ object MatchKernel {
           i = 0
           while (i < live.length) {
             if (live(i).doc == minDoc) {
-              s += score1(q, live(i)); nMatched += 1
+              s += live(i).score; nMatched += 1
               live(i).next()
             }
             i += 1
@@ -721,7 +638,7 @@ object MatchKernel {
     */
   private def wand(q: ResolvedQuery, cursors: Array[TermCursor]): Iterator[(Long, Double)] = {
     val k = q.topK
-    cursors.foreach(_.initBounds(q))
+    cursors.foreach(_.initBounds())
     // min-heap of (score, docId): worst of the current top-k on top.
     val heap = mutable.PriorityQueue.empty[(Double, Long)](evictOrder)
     def threshold: Double = if (heap.size < k) Double.NegativeInfinity else heap.head._1
@@ -752,9 +669,8 @@ object MatchKernel {
           // fully evaluate pivotDoc across the aligned group
           var s = 0.0
           j = 0
-          while (j < g) { s += score1(q, sorted(j)); sorted(j).next(); j += 1 }
-          if (heap.size < k) heap.enqueue((s, pivotDoc))
-          else if (s > heap.head._1) { heap.dequeue(); heap.enqueue((s, pivotDoc)) }
+          while (j < g) { s += sorted(j).score; sorted(j).next(); j += 1 }
+          offer(heap, k, s, pivotDoc)
         } else {
           // skip: docs up to min(group block boundary, next cursor's doc)
           // are scored only by the group's current blocks, whose bound sum
@@ -784,16 +700,19 @@ object MatchKernel {
 
   private def safeInc(x: Long): Long = if (x == Long.MaxValue) x else x + 1
 
+  /** keep (score, doc) in a top-`k` heap: a later doc with an equal score
+    * loses, as docs arrive in ascending docId */
+  private def offer(heap: mutable.PriorityQueue[(Double, Long)], k: Int, s: Double, doc: Long): Unit =
+    if (heap.size < k) heap.enqueue((s, doc))
+    else if (s > heap.head._1) { heap.dequeue(); heap.enqueue((s, doc)) }
+
   private def heapResults(heap: mutable.PriorityQueue[(Double, Long)]): Iterator[(Long, Double)] =
     heap.toArray.iterator.map { case (s, d) => (d, s) }
 
   /** exact streaming top-k over ascending-docId matches (ties -> earlier doc) */
   private def topK(it: Iterator[(Long, Double)], k: Int): Iterator[(Long, Double)] = {
     val heap = mutable.PriorityQueue.empty[(Double, Long)](evictOrder)
-    it.foreach { case (d, s) =>
-      if (heap.size < k) heap.enqueue((s, d))
-      else if (s > heap.head._1) { heap.dequeue(); heap.enqueue((s, d)) }
-    }
+    it.foreach { case (d, s) => offer(heap, k, s, d) }
     heapResults(heap)
   }
 }

@@ -122,12 +122,15 @@ object IncrementalIndex {
       s"segment name '$name' collides with reserved table/dir names")
     if (base.meta.dataSegments.contains(name)) return None
     // a sectioned base appends with the SAME section columns (docs must
-    // expose them); single-column bases use textCol. The segment's
-    // bucketBits are sized from the batch, as for a fresh build.
+    // expose them); single-column bases use textCol. The segment takes the
+    // base's layout (tokenizer, positions, block size, bucket space), so
+    // a compaction re-merges its blocks with the base's by (term, bucket).
     val textCols = if (base.meta.sections.nonEmpty) base.meta.sections else Seq(textCol)
     val dir = s"${base.path}/$name"
+    val m = base.meta
     IndexBuilder.writeTextSegment(base.spark, docs, idCol, textCols, dir,
-      cfg.copy(tokenizer = base.meta.tokenizer, withPositions = base.meta.withPositions))
+      cfg.copy(tokenizer = m.tokenizer, withPositions = m.withPositions,
+        blockSize = m.blockSize, bucketBits = m.bucketBits))
     Some(SegmentWriter.measure(base.spark, Seq(name -> dir)))
   }
 

@@ -7,8 +7,8 @@ import graft.index.{GraftIndex, IndexBuilder, IndexConfig}
 import graft.query.{MatchMode, ScoreMode}
 
 /** searchTermsBatch ≡ per-query searchTerms, across match/score modes,
-  * unknown-term edge cases, and both kernel paths (distributed + the
-  * driver small-query fast path). */
+  * unknown-term and empty-query edge cases, and both kernel paths
+  * (distributed + the driver small-query fast path). */
 class BatchSearchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,7 +21,7 @@ class BatchSearchSpec extends AnyFunSuite {
 
   private val batch = Seq(
     Seq("spark", "fulltext"), Seq("crawl"), Seq("zzznosuchterm"),
-    Seq("spark", "zzznosuchterm"), Seq("spark", "spark"))
+    Seq("spark", "zzznosuchterm"), Seq("spark", "spark"), Seq.empty)
 
   private def collectBatch(ix: GraftIndex, mode: MatchMode, score: ScoreMode) =
     ix.searchTermsBatch(batch, mode, score)

@@ -182,6 +182,9 @@ class IndexSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       idx.searchTerms(Seq(headTerm(0), headTerm(1)), MatchMode.Near(3)))
     assert(e2.getMessage.contains("withPositions"))
+    val e3 = intercept[IllegalArgumentException](
+      idx.searchNearPhraseProduct(Seq(Seq("spark fulltext"), Seq("search")), 5))
+    assert(e3.getMessage.contains("withPositions") && e3.getMessage.contains("NearPhraseProduct"))
     // AND/OR still fine without positions
     assert(idx.searchTerms(Seq(headTerm(0)), MatchMode.Any).count() > 0)
   }

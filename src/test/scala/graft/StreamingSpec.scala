@@ -422,6 +422,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(up.meta.nDocs == 100 && hits(up, "zzzonce") == Set(5L))
   }
 
+  test("appends and upserts take the bucket space and block size of the manifest") {
+    val base = IndexConfig(bucketBits = 5, blockSize = 16)
+    val p = s"$tmp/layout"
+    val fresh = s"$tmp/layout-fresh"
+    val upIds = (7L until 400L by 13).take(31)
+    val upText = upIds.map(i => i -> WebCorpus.text(i, 7L)._1).toMap
+    val live = (0L until 400L).map(i => i -> upText.getOrElse(i, WebCorpus.text(i, 42L)._1))
+    IndexBuilder.build(spark, WebCorpus.generate(spark, 400, 4), "doc_id", "text", p, base)
+    // the caller's config asks for an auto salt and 128-posting blocks
+    IncrementalIndex.upsert(spark, p, upIds.map(i => i -> upText(i)).toDF("doc_id", "text")
+      .coalesce(1), "doc_id", "text", "seg-up", IndexConfig())
+    val compacted = IncrementalIndex.compactPartial(spark, p)
+    val rebuilt = IndexBuilder.build(spark, live.toDF("doc_id", "text")
+      .repartitionByRange(4, $"doc_id").sortWithinPartitions("doc_id"), "doc_id", "text", fresh, base)
+    def layout(idx: GraftIndex) =
+      idx.postings.select("bucket", "min_doc", "cnt").as[(Int, Long, Int)].collect()
+    val got = layout(compacted)
+    val want = layout(rebuilt)
+    assert(got.forall { case (b, lo, cnt) => b == lo >> 5 && cnt <= 16 })
+    assert(got.length == want.length)
+    assert(got.map(_._1).toSet == want.map(_._1).toSet)
+    // the salt comes from the manifest, so an append counts no batch: it
+    // launches as many jobs as one whose config hints the batch size
+    def batch(lo: Long) = (lo until lo + 31).map(i => i -> WebCorpus.text(i, 42L)._1)
+      .toDF("doc_id", "text").coalesce(1)
+    val (_, counted) = TestSpark.countJobs(IncrementalIndex.appendSegment(spark, p,
+      batch(400), "doc_id", "text", "seg-a", IndexConfig()))
+    val (_, hinted) = TestSpark.countJobs(IncrementalIndex.appendSegment(spark, p,
+      batch(431), "doc_id", "text", "seg-b", IndexConfig(nDocsHint = 31)))
+    assert(counted == hinted)
+  }
+
   test("a commit staged on a stale base throws and leaves the head unchanged") {
     val p = s"$tmp/stale"
     small(p)
