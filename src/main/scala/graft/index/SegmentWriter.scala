@@ -96,6 +96,7 @@ object SegmentWriter {
       runs.repartition(partitions, $"term", $"bucket")
         .sortWithinPartitions($"term", $"bucket", $"min_doc")
         .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
+        .drop("seg_ord") // read assigns it from the file's segment
         .write.mode("overwrite").parquet(s"$dir/postings")
     }
     stage("terms") {

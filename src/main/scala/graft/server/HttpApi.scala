@@ -3,6 +3,8 @@ package graft.server
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,8 +50,13 @@ final class GraftHttpServer(
   }
   private val loadLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private val server = com.sun.net.httpserver.HttpServer.create(
-    new InetSocketAddress("127.0.0.1", port), 0)
+  /** wall ms of the last [[GraftHttpServer.SelectRing]] selects */
+  private val selectMs = new LatencyRing(GraftHttpServer.SelectRing)
+
+  private val server = {
+    GraftHttpServer.noDelayByDefault()
+    com.sun.net.httpserver.HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
   // daemon workers + explicit shutdown in stop(): the server must never
   // keep the driver JVM alive after close
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
@@ -179,9 +186,12 @@ final class GraftHttpServer(
     try command match {
       case "status" =>
         val up = (System.currentTimeMillis() - startedAtMs) / 1000
+        val snapshots = live.asScala.toSeq.sortBy(_._1)
+          .map { case (t, idx) => s"${jsonStr(t)}:${jsonStr(idx.snapshotId)}" }
         val body =
           s"""[[0,$startSec,$elapsed],{"version":"graft/0.6","uptime":$up,""" +
-          s""""n_queries":${nQueries.get()},"start_time":${startedAtMs / 1000}}]"""
+          s""""n_queries":${nQueries.get()},"start_time":${startedAtMs / 1000},""" +
+          s""""select_ms":${selectMs.json},"snapshots":{${snapshots.mkString(",")}}}]"""
         send(ex, 200, contentTypeOf("json"), body.getBytes(UTF_8))
 
       case "select" =>
@@ -225,6 +235,7 @@ final class GraftHttpServer(
           Seq((grouped.limit(10), grouped.count()))
         }
         reply(page.select(renamed: _*), nHits, dds)
+        selectMs.add((System.nanoTime() - t0) / 1e6)
 
       case "load" =>
         require(ex.getRequestMethod == "POST", "[load] POST only")
@@ -304,5 +315,44 @@ final class GraftHttpServer(
     } catch {
       case e: Exception => sendError(ex, outputType, version, e.getMessage)
     }
+  }
+}
+
+object GraftHttpServer {
+  /** how many of the latest selects `status` reports `select_ms` over */
+  private final val SelectRing = 1024
+
+  /** The JDK server leaves TCP_NODELAY off. A reply's headers leave as one
+    * segment, and Nagle then holds the body back until the client ACKs
+    * them, which a Linux client delays by about 40 ms: every reply would
+    * wait for that timer. The server has no per-socket option; its one
+    * switch is this property, read once, when the JVM's first JDK
+    * HttpServer is made. So it is turned on before each create, unless
+    * it was set explicitly (-Dsun.net.httpserver.nodelay=...). */
+  private def noDelayByDefault(): Unit = {
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    ()
+  }
+}
+
+/** The last `capacity` samples, the newest overwriting the oldest. */
+private final class LatencyRing(capacity: Int) {
+  private val samples = new Array[Double](capacity)
+  private var added = 0L
+
+  def add(ms: Double): Unit = synchronized {
+    samples((added % capacity).toInt) = ms
+    added += 1
+  }
+
+  /** `{"n":…,"p50":…,"p95":…,"p99":…}`, nearest-rank percentiles of the
+    * samples held; null percentiles while it is empty */
+  def json: String = {
+    val held = synchronized(samples.take(math.min(added, capacity.toLong).toInt)).sorted
+    def pct(q: Double): String =
+      if (held.isEmpty) "null"
+      else "%.3f".formatLocal(java.util.Locale.ROOT,
+        held(math.max(0, math.ceil(q * held.length).toInt - 1)))
+    s"""{"n":${held.length},"p50":${pct(0.50)},"p95":${pct(0.95)},"p99":${pct(0.99)}}"""
   }
 }

@@ -175,6 +175,51 @@ class HttpApiSpec extends AnyFunSuite {
     assert(sch.contains("tables"))
   }
 
+  test("a reply is not held back on the wire: nodelay is on, status round trips are fast") {
+    srv
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    get("/d/status") // open the keep-alive connection
+    val ms = (1 to 30).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/d/status").statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    // a body held back until the client's delayed ACK waits about 40 ms
+    assert(ms(15) < 15.0, s"median ${ms(15)} ms of ${ms.mkString(", ")}")
+  }
+
+  test("status reports the server's own select times and each table's snapshot") {
+    import org.json4s._
+    val dir = freshDir()
+    val s = serve(dir)
+    try {
+      def status(): JObject = org.json4s.jackson.JsonMethods.parse(
+        new String(getFrom(s, "/d/status").body(), "UTF-8")) match {
+        case JArray(List(_, o: JObject)) => o
+        case other => fail(s"not a status envelope: $other")
+      }
+      val empty = status()
+      assert((empty \ "select_ms") == JObject("n" -> JInt(0), "p50" -> JNull,
+        "p95" -> JNull, "p99" -> JNull))
+      for (q <- Seq("spark", "columnar", "window", "joins"))
+        assert(getFrom(s, s"/d/select?table=docs&query=$q").statusCode() == 200)
+      getFrom(s, "/d/select?query=spark") // a failed select is not timed
+      val st = status()
+      val keys = st.obj.map(_._1)
+      assert(keys == Seq("version", "uptime", "n_queries", "start_time", "select_ms", "snapshots"))
+      assert((st \ "n_queries") == JInt(7)) // both statuses count
+      val sel = st \ "select_ms"
+      assert((sel \ "n") == JInt(4))
+      val Seq(p50, p95, p99) = Seq("p50", "p95", "p99").map(k => (sel \ k) match {
+        case JDouble(v) => v
+        case other => fail(s"$k: $other")
+      })
+      assert(0.0 < p50 && p50 <= p95 && p95 <= p99)
+      assert((st \ "snapshots") ==
+        JObject("docs" -> JString(graft.index.GraftIndex(spark, dir).snapshotId)))
+    } finally s.stop()
+  }
+
   test("errors return the reference error envelope with HTTP 400") {
     val bad = get("/d/select?query=spark") // no table
     assert(bad.statusCode() == 400)

@@ -2,6 +2,8 @@ package graft
 
 import java.io.File
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -232,6 +234,57 @@ class SegmentWriterSpec extends AnyFunSuite {
     assert(pc.meta.segments.length == 2 && pc.meta.segments.head == ".")
     assert(pc.meta.nDocs == nBase + 39)
     assertExactStats(pc)
+  }
+
+  /** the column names in the parquet footer of each part file of `dir` */
+  private def footerColumns(dir: String): Seq[Seq[String]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+      finally r.close()
+    }
+  }
+
+  test("postings files hold no seg_ord; segments that still hold one read the same") {
+    val p = s"$tmp/no-seg-ord"
+    val all = WebCorpus.generate(spark, 240, 4)
+    IndexBuilder.build(spark, all.where($"doc_id" < 200), "doc_id", "text", p, cfg)
+    IncrementalIndex.appendSegment(spark, p, all.where($"doc_id".between(200, 219)),
+      "doc_id", "text", "seg-a", cfg)
+    IncrementalIndex.appendSegment(spark, p, all.where($"doc_id" >= 220),
+      "doc_id", "text", "seg-b", cfg)
+    val pc = IncrementalIndex.compactPartial(spark, p, cfg, minKeepPostings = 1L << 40)
+    assert(pc.meta.segments.exists(_.startsWith("fold-m")), pc.meta.segments)
+    // an upsert: its segment's postings are live only because its seg_ord
+    // is above the tombstone's generation
+    val victim = 7L
+    val up = IncrementalIndex.upsert(spark, p, Seq((victim, "zzqnew spark")).toDF("doc_id", "text"),
+      "doc_id", "text", "seg-up", cfg)
+    val dirs = up.meta.dataSegments.map(SegmentCatalog.segmentDir(p, _))
+    assert(up.meta.dataSegments.last == "seg-up", up.meta.dataSegments)
+    for (d <- dirs; cols <- footerColumns(s"$d/postings")) {
+      assert(cols.nonEmpty && !cols.contains("seg_ord"), s"$d: $cols")
+    }
+    def answers(idx: GraftIndex) = Seq("spark", "zzqnew", "crawl").map(t =>
+      idx.searchTerms(Seq(t), MatchMode.Any, ScoreMode.Bm25()).collect().toSet)
+    val before = answers(GraftIndex(spark, p))
+    assert(before(1).map(_.getLong(0)) == Set(victim))
+    assert(before(0).map(_.getLong(0)).contains(victim))
+
+    // the layout every segment had before: each postings file carries a
+    // stored seg_ord of 0, whatever the segment's place in the manifest
+    for (d <- dirs) {
+      val old = s"$d/postings-old"
+      spark.read.parquet(s"$d/postings").withColumn("seg_ord", lit(0))
+        .write.parquet(old)
+      deleteDir(new File(s"$d/postings"))
+      assert(new File(old).renameTo(new File(s"$d/postings")))
+      assert(footerColumns(s"$d/postings").forall(_.contains("seg_ord")))
+    }
+    assert(answers(GraftIndex(spark, p)) == before)
   }
 
   test("measure spends the same Spark jobs on one dir as on many") {
