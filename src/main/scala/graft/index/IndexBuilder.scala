@@ -25,9 +25,12 @@ import scala.collection.mutable
   *            (the shuffle moves ~|vocab| x tasks encoded runs, NOT one row
   *             per (doc, term) — measured 40x fewer rows, the difference
   *             between a 90M-row sort and an 800k-row sort per 1M docs)
-  *   stage 2  term stats: aggregation over block rows (postings/128 rows)
-  *   stage 3  doc stats: map-only tokenize-count pass
-  *   stage 4  manifest commit (atomic rename)
+  *   stage 2  term stats: aggregation over block rows (postings/128 rows),
+  *            then terms_rev sorted from them with no exchange
+  *   stage 3  doc stats: map-only tokenize-count pass. It reads only the
+  *            input, so its job runs beside stages 1 and 2, not after them
+  *   stage 4  one stats query over postings and docs, then the manifest
+  *            commit (atomic rename)
   *
   * This object owns the text front (the map side of stage 1, the
   * tokenize-count pass of stage 3) and the run merge. The shuffle, the

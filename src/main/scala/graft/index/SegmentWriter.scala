@@ -20,20 +20,25 @@ final case class Measured(segs: Seq[SegStats], sumDl: Long, blocks: Long) {
   * runs and doc lengths come from. A fresh base commits through
   * [[commitBase]], every other write through IncrementalIndex.commit.
   *
-  * A segment dir holds four tables, written in this order, each behind
-  * its own _SUCCESS marker so a re-run skips what already committed:
+  * A segment dir holds four tables, each behind its own _SUCCESS marker
+  * so a re-run skips what already committed. They are written as a
+  * dependency graph, not a chain: `docs` reads only the caller's input, so
+  * its job runs on a second thread beside the postings → terms → terms_rev
+  * chain, each of which reads the table before it.
   *
   *   postings   runs shuffled by (term, bucket), sorted by min_doc and
   *              merged into fixed-size blocks (IndexBuilder.mergeRuns)
-  *   terms      df/total_tf/max_tf per term, term-sorted for prefix
-  *              row-group pruning
-  *   terms_rev  terms by reversed term: the role of groonga's
-  *              reversed-key patricia trie (lib/ii.cpp:10989 suffix cursor)
+  *   terms      df/total_tf/max_tf per term, term-sorted within each file
+  *              for prefix row-group pruning; the groupBy is its one
+  *              exchange
+  *   terms_rev  terms by reversed term, sorted within each file of terms
+  *              with no exchange: the role of groonga's reversed-key
+  *              patricia trie (lib/ii.cpp:10989 suffix cursor)
   *   docs       (doc_id, dl)
   */
 object SegmentWriter {
 
-  /** the tables of a segment dir, in write order */
+  /** the tables of a segment dir */
   final val Tables: Seq[String] = Seq("postings", "terms", "terms_rev", "docs")
 
   /** the read schema of each table. A postings table written before
@@ -92,55 +97,89 @@ object SegmentWriter {
         System.err.println(f"[graft-build] $table: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
 
-    stage("postings") {
-      runs.repartition(partitions, $"term", $"bucket")
-        .sortWithinPartitions($"term", $"bucket", $"min_doc")
-        .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
-        .drop("seg_ord") // read assigns it from the file's segment
-        .write.mode("overwrite").parquet(s"$dir/postings")
-    }
-    stage("terms") {
-      read(spark, Seq(dir -> 0), "postings")
-        .groupBy($"term")
-        .agg(sum($"cnt").as("df"), sum($"tf_sum").as("total_tf"),
-          max($"max_tf").cast("int").as("max_tf"))
-        .repartition(math.max(1, partitions / 4))
-        .sortWithinPartitions($"term")
-        .write.mode("overwrite").parquet(s"$dir/terms")
-    }
-    stage("terms_rev") {
-      read(spark, Seq(dir -> 0), "terms")
-        .select(reverse($"term").as("rterm"), $"term", $"df")
-        .repartition(math.max(1, partitions / 4))
-        .sortWithinPartitions($"rterm")
-        .write.mode("overwrite").parquet(s"$dir/terms_rev")
-    }
-    stage("docs") {
-      docs.write.mode("overwrite").parquet(s"$dir/docs")
+    // docs reads only the caller's input: its job runs beside the chain
+    beside(stage("docs") { docs.write.mode("overwrite").parquet(s"$dir/docs") }) {
+      stage("postings") {
+        runs.repartition(partitions, $"term", $"bucket")
+          .sortWithinPartitions($"term", $"bucket", $"min_doc")
+          .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
+          .drop("seg_ord") // read assigns it from the file's segment
+          .write.mode("overwrite").parquet(s"$dir/postings")
+      }
+      stage("terms") {
+        termsOf(read(spark, Seq(dir -> 0), "postings"), partitions)
+          .write.mode("overwrite").parquet(s"$dir/terms")
+      }
+      stage("terms_rev") {
+        termsRevOf(read(spark, Seq(dir -> 0), "terms"))
+          .write.mode("overwrite").parquet(s"$dir/terms_rev")
+      }
     }
   }
 
-  /** Stats of segment dirs given as (name, dir): ONE postings query and
-    * ONE docs query however many dirs. A dir with no docs or no postings
+  /** Run `side` on a new thread while `main` runs on this one, and return
+    * once both have finished. The thread inherits this thread's Spark
+    * local properties, so its jobs keep the caller's job group and pool.
+    * Neither branch cancels the other: a stage either one commits stays
+    * committed for a re-run to skip. The first failure is rethrown, with
+    * the other branch's failure, if any, attached as suppressed. */
+  private def beside(side: => Unit)(main: => Unit): Unit = {
+    var sideError: Throwable = null
+    val thread = new Thread(() => try side catch { case e: Throwable => sideError = e },
+      "graft-segment-docs")
+    thread.start()
+    val mainError = try { main; null } catch { case e: Throwable => e }
+    thread.join()
+    (Option(mainError), Option(sideError)) match {
+      case (Some(m), s) => s.foreach(m.addSuppressed); throw m
+      case (None, Some(s)) => throw s
+      case _ =>
+    }
+  }
+
+  /** the terms table of a segment's `postings`: the groupBy is its one
+    * exchange, and a narrow coalesce keeps it to partitions / 4 files */
+  private[graft] def termsOf(postings: DataFrame, partitions: Int): DataFrame =
+    postings.groupBy(col("term"))
+      .agg(sum(col("cnt")).as("df"), sum(col("tf_sum")).as("total_tf"),
+        max(col("max_tf")).cast("int").as("max_tf"))
+      .coalesce(math.max(1, partitions / 4))
+      .sortWithinPartitions(col("term"))
+
+  /** the terms_rev table of a segment's `terms`, sorted by rterm within
+    * each of its files: no exchange */
+  private[graft] def termsRevOf(terms: DataFrame): DataFrame =
+    terms.select(reverse(col("term")).as("rterm"), col("term"), col("df"))
+      .sortWithinPartitions(col("rterm"))
+
+  /** Stats of segment dirs given as (name, dir): ONE query however many
+    * dirs, an aggregate by segment over the rows of both the postings and
+    * the docs tables, so one exchange. A dir with no docs or no postings
     * reads as zero, with the empty doc range (Long.MaxValue,
     * Long.MinValue). */
   def measure(spark: SparkSession, dirs: Seq[(String, String)]): Measured = {
     import spark.implicits._
     if (dirs.isEmpty) return Measured(Nil, 0L, 0L)
-    def bySeg(table: String) =
-      read(spark, dirs.map(_._2).zipWithIndex, table).groupBy($"seg_ord")
-    val p = bySeg("postings")
-      .agg(sum($"cnt"), count(lit(1)), sum($"payload_len"))
-      .as[(Int, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val d = bySeg("docs")
-      .agg(count(lit(1)), min($"doc_id"), max($"doc_id"), sum($"dl"))
-      .as[(Int, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val segs = dirs.zipWithIndex.map { case ((name, _), i) =>
-      val (_, np, _, pb) = p.getOrElse(i, (i, 0L, 0L, 0L))
-      val (_, nd, lo, hi, _) = d.getOrElse(i, (i, 0L, Long.MaxValue, Long.MinValue, 0L))
-      SegStats(name, nd, lo, hi, np, pb)
+    val segs = dirs.map(_._2).zipWithIndex
+    val zero = lit(0L)
+    val postings = read(spark, segs, "postings").select($"seg_ord",
+      zero.as("docs"), lit(null).cast("long").as("doc_id"), zero.as("dl"),
+      $"cnt".cast("long").as("postings"), $"payload_len".cast("long").as("bytes"),
+      lit(1L).as("blocks"))
+    val docs = read(spark, segs, "docs").select($"seg_ord",
+      lit(1L), $"doc_id", $"dl".cast("long"), zero, zero, zero)
+    val bySeg = postings.union(docs).groupBy($"seg_ord")
+      .agg(sum($"docs"), min($"doc_id"), max($"doc_id"), sum($"dl"),
+        sum($"postings"), sum($"bytes"), sum($"blocks"))
+      .as[(Int, Long, Option[Long], Option[Long], Long, Long, Long, Long)]
+      .collect().map(r => r._1 -> r).toMap
+    val stats = dirs.zipWithIndex.map { case ((name, _), i) =>
+      bySeg.get(i).fold(SegStats(name, 0L, Long.MaxValue, Long.MinValue, 0L, 0L)) {
+        case (_, nd, lo, hi, _, np, pb, _) =>
+          SegStats(name, nd, lo.getOrElse(Long.MaxValue), hi.getOrElse(Long.MinValue), np, pb)
+      }
     }
-    Measured(segs, d.values.map(_._5).sum, p.values.map(_._3).sum)
+    Measured(stats, bySeg.values.map(_._5).sum, bySeg.values.map(_._8).sum)
   }
 
   /** Measure the segment written at `dir` and commit it as a fresh

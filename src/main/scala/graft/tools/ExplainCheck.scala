@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
   *  - a 3-segment index reads postings and docs in one scan each, and
   *    after a delete and an upsert its term-AND plan still scans postings
   *    once (tombstones ride the broadcast)
+  *  - a segment write plans one exchange for terms and none for terms_rev
   * Run: sbt "runMain graft.tools.ExplainCheck" (exit 1 on any failure);
   * ExplainCheckSpec runs the same checks through [[run]].
   */
@@ -241,6 +242,16 @@ object ExplainCheck {
         p17.linesIterator.exists(l => l.contains("FileScan parquet") && l.contains("postings")) &&
         !dels17.exists(p17.contains),
       s"delete segments $dels17\n$p17")
+
+    // 18. the build writes terms with one exchange, its groupBy, and
+    //     terms_rev with none: it sorts the terms files it reads back
+    def exchanges(p: String) = p.linesIterator.count(_.contains("Exchange"))
+    val p18 = plan(graft.index.SegmentWriter.termsOf(
+      graft.index.SegmentWriter.read(spark, Seq(segPath -> 0), "postings"), 4))
+    val r18 = plan(graft.index.SegmentWriter.termsRevOf(
+      graft.index.SegmentWriter.read(spark, Seq(segPath -> 0), "terms")))
+    check("segment write: terms one exchange, terms_rev none",
+      exchanges(p18) == 1 && exchanges(r18) == 0, s"$p18\n$r18")
 
     println("EXPLAIN-END")
     results.result()

@@ -17,8 +17,10 @@ import graft.streaming.IncrementalIndex
 
 /** The one segment writer and its stats pass, through the five writes that
   * use them: build, token-column build, append, compact, partial compact.
-  * Covers input without tokens, listener cleanup on a failed build,
-  * stage-granular resume, and stats that equal a fresh count of each dir. */
+  * Covers input without tokens, listener and job cleanup on a failed
+  * build, the caller's job group on every build job, stage-granular resume
+  * in any state the concurrent docs stage leaves, and stats that equal a
+  * fresh count of each dir. */
 class SegmentWriterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -116,13 +118,40 @@ class SegmentWriterSpec extends AnyFunSuite {
       ListenerBusDrain.listeners[BuildListener](sc).size
     }
     val before = registered
-    // descending ids in one partition break the builder's precondition
-    val desc = Seq((3L, "spark search"), (2L, "fulltext engine")).toDF("doc_id", "text")
-      .coalesce(1)
+    // descending ids in one partition break the builder's precondition at
+    // the second doc, while the docs branch, which runs beside postings,
+    // still has every doc to count: the build must not return before it
+    val n = 100000L
+    val desc = spark.range(0, n, 1, 1)
+      .select((lit(n) - $"id").as("doc_id"),
+        repeat(lit("spark search fulltext engine "), 10).as("text"))
     intercept[Exception] {
       IndexBuilder.build(spark, desc, "doc_id", "text", s"$tmp/failed", cfg)
     }
     assert(registered == before)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "a Spark job outlived the failed build")
+  }
+
+  test("every job a build launches keeps the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "a build under the caller's job group")
+    try {
+      IndexBuilder.build(spark, WebCorpus.generate(spark, 200, 4), "doc_id", "text",
+        s"$tmp/grouped", cfg)
+      ListenerBusDrain.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == "g"), seen)
   }
 
   test("a base build resumes from its committed stages") {
@@ -131,12 +160,16 @@ class SegmentWriterSpec extends AnyFunSuite {
     val first = IndexBuilder.build(spark, docs, "doc_id", "text", p, cfg)
     val answer = (first.meta.copy(), searchIds(first, "spark"),
       first.searchTerms(Seq("spark", "crawl"), MatchMode.Any, ScoreMode.Bm25()).collect().toSet)
-    val postings = fileStamps(s"$p/postings")
-    for (lost <- Seq(Seq("docs"), Seq("docs", "terms", "terms_rev"))) {
+    // docs runs beside the other three, so it can commit before any of them
+    for (lost <- Seq(Seq("docs"), Seq("docs", "terms", "terms_rev"),
+        Seq("postings", "terms", "terms_rev"))) {
+      val kept = SegmentWriter.Tables.filterNot(lost.contains)
+      val stamps = kept.map(t => t -> fileStamps(s"$p/$t")).toMap
       dropManifests(p)
       lost.foreach(t => deleteDir(new File(s"$p/$t")))
       val again = IndexBuilder.build(spark, docs, "doc_id", "text", p, cfg)
-      assert(fileStamps(s"$p/postings") == postings, s"postings rewritten after losing $lost")
+      kept.foreach(t =>
+        assert(fileStamps(s"$p/$t") == stamps(t), s"$t rewritten after losing $lost"))
       lost.foreach(t => assert(new File(s"$p/$t/_SUCCESS").exists(), t))
       assert(again.meta == answer._1)
       assert(searchIds(again, "spark") == answer._2)
@@ -317,9 +350,9 @@ class SegmentWriterSpec extends AnyFunSuite {
       val (one, m1) = jobsOf(dirs.take(1))
       val (many, mAll) = jobsOf(dirs)
       assert(dirs.length == 4 && one == many, s"1 dir: $one jobs, ${dirs.length} dirs: $many")
-      // a postings query and a docs query, each at most a shuffle-map job
-      // and a result job
-      assert(many <= 4, s"$many jobs")
+      // one query over both tables: at most a shuffle-map job and a
+      // result job
+      assert(many <= 2, s"$many jobs")
       assert(m1.segs == mAll.segs.take(1))
       assert(mAll.segs.map(_.name) == dirs.map(_._1))
     } finally spark.sparkContext.removeSparkListener(listener)
