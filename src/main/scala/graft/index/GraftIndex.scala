@@ -1,7 +1,14 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.analyzer.{Analyzers, TokenizeMode}
 import graft.query._
@@ -106,8 +113,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * grn_ii_select runs on the caller's thread). So when the terms' pruned
     * block scan fits `smallQueryCap` postings it is collected, made live
     * once on the driver ([[Tombstones.liveBlocks]]), and the SAME kernel
-    * runs per bucket; the result is a LocalRelation, so downstream top-k
-    * never launches another stage. With cold terms the collect is the one
+    * runs per bucket; its rows become a LocalRelation directly
+    * ([[GraftIndex.driverHits]]), so downstream top-k never launches
+    * another stage. With cold terms the collect is the one
     * that resolved them ([[resolveTerms]]), so a select under the cap is
     * exactly one Spark job, cold or warm. At web scale a common term blows
     * the cap and the batch takes the distributed path; the cap makes
@@ -120,28 +128,32 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * memory is the bucket's pruned block set for the
     * UNION of the chunk's terms, so the batch is split greedily into
     * chunks of Σ df ≤ DefaultBatchMaxPostings, one scan + shuffle each; a
-    * single query over that cap runs as its own chunk. */
-  private def runKernels(terms: Seq[String])(
+    * single query over that cap runs as its own chunk.
+    *
+    * The rows are (query_id, doc_id, score), or (doc_id, score) when
+    * `queryIds` is false. */
+  private def runKernels(terms: Seq[String], queryIds: Boolean)(
       plan: Map[String, TermStatRow] => Seq[(Int, ResolvedQuery)]): DataFrame = {
     val ts = terms.distinct
     val cap = smallQueryCap
     val collected = resolveTerms(ts, cap)
     val queries = plan(cachedStats(ts))
-    if (queries.isEmpty)
-      return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
+    if (queries.isEmpty) return GraftIndex.driverHits(spark, Nil, queryIds)
     val blocks = collected.orElse(
       if (cap > 0 && ts.iterator.map(termStatCache.get(_).scanned).sum <= cap)
-        Some(tombstones.liveBlocks(blockScan(ts).collect())) // counted exactly: ≤ cap postings
+        collectBlocks(ts, Long.MaxValue).map(tombstones.liveBlocks) // counted: ≤ cap postings
       else None)
     blocks match {
       case Some(bs) =>
         val byBucket = bs.groupBy(_.bucket).toSeq.sortBy(_._1)
         val out = queries.iterator.flatMap { case (qid, q) =>
           byBucket.iterator.flatMap { case (_, rs) =>
-            MatchKernel.run(q, rs.iterator).map { case (d, s) => (qid, d, s) }
+            MatchKernel.run(q, rs.iterator).map { case (d, s) =>
+              if (queryIds) InternalRow(qid, d, s) else InternalRow(d, s)
+            }
           }
         }.toSeq
-        spark.createDataset(out).toDF("query_id", "doc_id", "score")
+        GraftIndex.driverHits(spark, out, queryIds)
       case None =>
         val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(Int, ResolvedQuery)])
         var acc = 0L
@@ -152,7 +164,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
           }
           chunks(chunks.length - 1) :+= qq; acc += qdf
         }
-        chunks.iterator.map { chunk =>
+        val hits = chunks.iterator.map { chunk =>
           tombstones.liveBlocks(blockScan(chunk.flatMap(_._2.terms.map(_.term)).distinct))
             .groupByKey(_.bucket)
             .flatMapGroups { (_, rows) =>
@@ -160,16 +172,33 @@ final case class GraftIndex(spark: SparkSession, path: String,
               chunk.iterator.flatMap { case (qid, q) =>
                 MatchKernel.run(q, mat.iterator).map { case (d, s) => (qid, d, s) }
               }
-            }
+            }(GraftIndex.hitEncoder)
             .toDF("query_id", "doc_id", "score")
         }.reduce(_ union _)
+        if (queryIds) hits else hits.drop("query_id")
     }
   }
 
   /** the term-IN-pruned posting block scan: parquet row-group stats prune
-    * everything but the terms' blocks */
+    * everything but the terms' blocks. Every kernel read, driver or
+    * distributed, plans this scan. */
+  private[graft] def blockRows(terms: Seq[String]): DataFrame =
+    postings.where($"term".isin(terms: _*))
+
   private def blockScan(terms: Seq[String]): Dataset[PostingBlockRow] =
-    postings.where($"term".isin(terms: _*)).as[PostingBlockRow]
+    blockRows(terms).as[PostingBlockRow](GraftIndex.blockEncoder)
+
+  /** the block encoder resolved and bound to the postings' columns, once
+    * per handle: a term filter keeps the scan's output, so it decodes
+    * every [[blockRows]] row */
+  @transient private lazy val blockDecoder: ExpressionEncoder[PostingBlockRow] =
+    GraftIndex.blockEncoder.resolveAndBind(postings.queryExecution.analyzed.output)
+
+  /** the blocks of `terms`' pruned scan, in one job that ships at most
+    * `cap` postings ([[GraftIndex.collectWithin]]); a scan already counted
+    * to fit passes Long.MaxValue */
+  private def collectBlocks(terms: Seq[String], cap: Long): Option[Array[PostingBlockRow]] =
+    GraftIndex.collectWithin(blockRows(terms).queryExecution.toRdd, blockDecoder, cap)
 
   /** Resolve the cold terms among `ts` into termStatCache. Returns the
     * live blocks of all of `ts` when it collected them on the way.
@@ -201,9 +230,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
     lazy val dict = dictTermStats(cold)
     val blocks =
       if (cap <= 0 || warm > cap) None // the warm terms alone pass the cap
-      else GraftIndex.collectWithin(blockScan(ts).rdd, cap).orElse(
+      else collectBlocks(ts, cap).orElse(
         if (warm + cold.iterator.flatMap(dict.get).map(_.df).sum <= cap)
-          Some(blockScan(ts).collect())
+          collectBlocks(ts, Long.MaxValue)
         else None)
     val want = cold.toSet
     def coldStats(bs: Array[PostingBlockRow]) =
@@ -230,7 +259,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
       .as[TermStatRow].collect().iterator)
 
   /** empty (doc_id, score) result with the canonical schema */
-  def emptyResult: DataFrame = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
+  def emptyResult: DataFrame = GraftIndex.driverHits(spark, Nil, queryIds = false)
 
   @transient private lazy val termStatCache =
     new java.util.concurrent.ConcurrentHashMap[String, GraftIndex.Resolved]()
@@ -304,9 +333,9 @@ final case class GraftIndex(spark: SparkSession, path: String,
       score: ScoreMode,
       topK: Int,
       sectionWeights: Map[String, Double] = Map.empty): DataFrame =
-    runKernels(groups.flatten.flatten.map(_._1)) { stats =>
+    runKernels(groups.flatten.flatten.map(_._1), queryIds = false) { stats =>
       resolve(stats, groups, mode, score, topK, sectionWeights).map(0 -> _).toSeq
-    }.drop("query_id")
+    }
 
   /** Core search: (doc_id, score) matches for the given terms.
     * `sectionWeights` keys are indexed column names (match_columns
@@ -350,8 +379,8 @@ final case class GraftIndex(spark: SparkSession, path: String,
       sectionWeights: Map[String, Double] = Map.empty): DataFrame = {
     requirePositionsFor(mode)
     val allTerms = batch.flatten.distinct
-    if (allTerms.isEmpty) return runKernels(Nil)(_ => Nil)
-    runKernels(allTerms) { stats =>
+    if (allTerms.isEmpty) return GraftIndex.driverHits(spark, Nil, queryIds = true)
+    runKernels(allTerms, queryIds = true) { stats =>
       batch.zipWithIndex.flatMap { case (qts, qid) =>
         val withPos = qts.zipWithIndex.map { case (t, i) => (t, i, 1.0) }
         resolve(stats, Seq(Seq(withPos)), mode, score, topK, sectionWeights).map(qid -> _)
@@ -493,7 +522,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
   def searchTermsTfByJoin(matching: DataFrame): DataFrame =
     decodedAlive(postings
         .join(matching.select(col("term").as("term")).distinct(), Seq("term"))
-        .as[PostingBlockRow])
+        .as[PostingBlockRow](GraftIndex.blockEncoder))
       .drop("term") // keep the groupBy exchange to fixed-width rows
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("double").as("score"))
@@ -510,7 +539,7 @@ final case class GraftIndex(spark: SparkSession, path: String,
     * section-summed — the export / consistency-audit surface. Distributed
     * end to end (block decode is a flatMap over the postings scan). */
   def decodedPostings: DataFrame =
-    decodedAlive(postings.as[PostingBlockRow])
+    decodedAlive(postings.as[PostingBlockRow](GraftIndex.blockEncoder))
       .groupBy(col("term"), col("doc_id")).agg(sum(col("tf")).as("tf"))
 
   /** index↔source consistency audit (the `index_column_diff` command,
@@ -660,22 +689,62 @@ object GraftIndex {
     * ones included */
   private[index] final case class Resolved(stat: Option[TermStatRow], scanned: Long)
 
-  /** ONE bounded collect of `scan`: each of its P tasks returns its blocks
-    * when their Σcnt fits cap / P, and otherwise stops reading at the first
-    * block past that share and returns nothing. So what the job ships to
-    * the driver, summed over its tasks, never passes `cap` postings,
-    * however many partitions the scan has. Some(every block, in scan
-    * order) when every task fit its share. */
-  private[graft] def collectWithin(scan: org.apache.spark.rdd.RDD[PostingBlockRow],
-      cap: Long): Option[Array[PostingBlockRow]] = {
-    val share = cap / math.max(1, scan.getNumPartitions)
-    val parts = scan.sparkContext.runJob(scan, (it: Iterator[PostingBlockRow]) => {
+  /** the encoder of a posting block row and of a (query_id, doc_id,
+    * score) hit, each derived once, on first use (a build never needs
+    * them): Spark's implicit product encoders re-derive theirs by Scala
+    * reflection on every call */
+  private[graft] lazy val blockEncoder: ExpressionEncoder[PostingBlockRow] =
+    ExpressionEncoder[PostingBlockRow]()
+  private[graft] lazy val hitEncoder: ExpressionEncoder[(Int, Long, Double)] =
+    ExpressionEncoder[(Int, Long, Double)]()
+
+  /** driver-side kernel rows, (query_id, doc_id, score) or (doc_id,
+    * score), as a LocalRelation. Its attributes are new on every call, so
+    * two results joined, unioned or anti-joined in one plan never share an
+    * exprId. */
+  private[graft] def driverHits(spark: SparkSession, rows: Seq[InternalRow],
+      queryIds: Boolean): DataFrame = {
+    val hit = Seq(AttributeReference("doc_id", LongType, nullable = false)(),
+      AttributeReference("score", DoubleType, nullable = false)())
+    val output =
+      if (queryIds) AttributeReference("query_id", IntegerType, nullable = false)() +: hit
+      else hit
+    GraftColumnBridge.ofRows(spark, LocalRelation(output, rows))
+  }
+
+  /** ONE bounded collect of `scan`, rows of the postings table that
+    * `decoder` (the block encoder, bound to them) decodes: each of its P
+    * tasks returns its blocks when their Σcnt fits cap / P, and otherwise
+    * stops reading at the first block past that share and returns nothing.
+    * So what the job ships to the driver, summed over its tasks, never
+    * passes `cap` postings, however many partitions the scan has.
+    * Some(every block, in scan order) when every task fit its share. */
+  private[graft] def collectWithin(scan: RDD[InternalRow],
+      decoder: ExpressionEncoder[PostingBlockRow], cap: Long): Option[Array[PostingBlockRow]] = {
+    val n = scan.getNumPartitions
+    val parts = scan.sparkContext.runJob(scan,
+      new HoldWithin(decoder, cap / math.max(1, n)), 0 until n)
+    if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+  }
+
+  /** The task of [[collectWithin]]: one partition's blocks when their
+    * Σcnt fits `share`. It is a named class, not a lambda, because
+    * SparkContext.runJob hands its function to the ClosureCleaner, which
+    * re-reads the bytecode of a lambda's enclosing class (here GraftIndex$)
+    * with ASM on every job, but returns at once for an object that is not
+    * a closure. For the same reason collectWithin calls the runJob that
+    * takes (TaskContext, Iterator) and the partitions: the one that takes
+    * a bare Iterator wraps it in a closure of its own. */
+  private final class HoldWithin(decoder: ExpressionEncoder[PostingBlockRow], share: Long)
+      extends ((TaskContext, Iterator[InternalRow]) => Option[Array[PostingBlockRow]])
+      with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Array[PostingBlockRow]] = {
+      val decode = decoder.createDeserializer()
       val held = scala.collection.mutable.ArrayBuffer.empty[PostingBlockRow]
       var n = 0L
-      while (n <= share && it.hasNext) { val b = it.next(); held += b; n += b.cnt }
+      while (n <= share && rows.hasNext) { val b = decode(rows.next()); held += b; n += b.cnt }
       if (n <= share) Some(held.toArray) else None
-    })
-    if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+    }
   }
 
   /** per-term sums of `blocks`' headers: df = Σcnt, total_tf = Σtf_sum,

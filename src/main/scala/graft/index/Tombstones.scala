@@ -60,9 +60,7 @@ final class Tombstones(spark: SparkSession, path: String, deleteSegments: Seq[St
   def liveBlocks(blocks: Dataset[PostingBlockRow]): Dataset[PostingBlockRow] =
     broadcastSet match {
       case None => blocks
-      case Some(bc) =>
-        import spark.implicits._
-        blocks.flatMap(b => bc.value.liveBlock(b))
+      case Some(bc) => blocks.flatMap(b => bc.value.liveBlock(b))(GraftIndex.blockEncoder)
     }
 
   /** the live subset of `docs` rows, which must carry `doc_id` and `seg_ord` */

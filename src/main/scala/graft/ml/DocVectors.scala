@@ -17,12 +17,10 @@ object DocVectors {
 
   /** (doc_id, term, tf, dl) rows decoded from posting blocks, tombstones
     * applied, section tf aggregated to doc level */
-  private def postingRows(idx: GraftIndex): DataFrame = {
-    import idx.spark.implicits._
-    idx.decodedAlive(idx.postings.as[PostingBlockRow])
+  private def postingRows(idx: GraftIndex): DataFrame =
+    idx.decodedAlive(idx.postings.as[PostingBlockRow](GraftIndex.blockEncoder))
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(sum(col("tf")).cast("int").as("tf"))
-  }
 
   private def idfCol(nDocs: Long): org.apache.spark.sql.Column =
     log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)

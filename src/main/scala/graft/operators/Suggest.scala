@@ -235,7 +235,7 @@ object Suggest {
     // its live postings of `term`, not derived from the index's bucketBits.
     // All of a doc's live postings sit in one segment, under one bucket.
     val hits = idx.tombstones.liveBlocks(idx.postings.where(col("term") === term)
-        .as[graft.index.PostingBlockRow])
+        .as[graft.index.PostingBlockRow](GraftIndex.blockEncoder))
       .flatMap { b =>
         val ds = graft.codec.PostingCodec.decode(b.payload).docIds
         ds.indices.iterator.filter(i => i == 0 || ds(i) != ds(i - 1)).map(i => (ds(i), b.bucket))
@@ -262,7 +262,8 @@ object Suggest {
     // section postings are consecutive and never split across blocks, and
     // a live (term, doc) pair lives in one segment only, so the per-block
     // counts add up to the distinct docs per term.
-    val co = idx.tombstones.liveBlocks(idx.postings.where(prune).as[graft.index.PostingBlockRow])
+    val co = idx.tombstones.liveBlocks(idx.postings.where(prune)
+        .as[graft.index.PostingBlockRow](GraftIndex.blockEncoder))
       .mapPartitions { bs =>
         val counts = new java.util.HashMap[String, Long]()
         val set = idsBc.value

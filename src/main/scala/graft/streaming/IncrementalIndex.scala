@@ -329,7 +329,8 @@ object IncrementalIndex {
   private[graft] def foldInput(base: GraftIndex, ords: Seq[Int]): (Dataset[PostingRunRow], DataFrame) = {
     import base.spark.implicits._
     val run = ords.map(base.segDirs)
-    val blocks = base.tombstones.liveBlocks(base.postingsOf(run).as[PostingBlockRow]).map(f =>
+    val blocks = base.tombstones.liveBlocks(
+      base.postingsOf(run).as[PostingBlockRow](GraftIndex.blockEncoder)).map(f =>
       PostingRunRow(f.term, f.bucket, f.min_doc, f.max_doc,
         f.cnt, f.max_tf, f.max_gtf, f.min_dl, f.tf_sum, f.payload))
     (blocks, base.segDocsOf(run).select($"doc_id", $"dl"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Plan sanity asserts — fails loudly if a core path loses its expected
   * physical shape:
-  *  - posting scans push the term IN filter into parquet + prune columns
+  *  - the kernel's posting block scan pushes its term IN filter into parquet
   *  - document scans prune to the selected columns
   *  - suffix expansion scans terms_rev with a StartsWith pushed filter
   *  - `Select.eval` on a pure-term conjunction plans ONE posting scan
@@ -60,9 +60,8 @@ object ExplainCheck {
     val idx = graft.api.Tables.documentsIndex(spark, dir)
     println("EXPLAIN-START")
 
-    // 1. term IN pushdown + column pruning on the postings scan
-    val p1 = plan(idx.postings.where(col("term").isin("spark", "join"))
-      .select("term", "bucket", "payload"))
+    // 1. the kernel's own block scan pushes its term IN into parquet
+    val p1 = plan(idx.blockRows(Seq("spark", "join")))
     check("postings term-IN pushdown", p1.contains("PushedFilters: [In(term"), p1)
 
     // 2. documents scan prunes columns + pushes the id filter
@@ -220,7 +219,7 @@ object ExplainCheck {
         s"seg-$lo", cfg16)
     val idx16 = graft.index.GraftIndex(spark, segPath)
     def fileScans(p: String) = p.linesIterator.count(_.contains("FileScan parquet"))
-    val p16 = plan(idx16.postings.where(col("term").isin("spark", "join")))
+    val p16 = plan(idx16.blockRows(Seq("spark", "join")))
     val d16 = plan(idx16.docs)
     check("3-segment index: one postings scan, one docs scan",
       idx16.meta.dataSegments.size == 3 && fileScans(p16) == 1 &&

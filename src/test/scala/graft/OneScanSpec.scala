@@ -93,7 +93,12 @@ class OneScanSpec extends AnyFunSuite {
     orQuery -> ScoreMode.Bm25(),
     s"${w(2)} OR ${w(30)}" -> ScoreMode.Bm25(),
     ("\"" + w(0) + " " + w(1) + "\"") -> ScoreMode.Bm25(),
-    s"${w(0)} zzznosuchterm" -> ScoreMode.Tf)
+    s"${w(0)} zzznosuchterm" -> ScoreMode.Tf,
+    // mixed trees: under a cap two driver results are joined, unioned and
+    // anti-joined in one plan
+    (s"${w(2)} " + "\"" + w(0) + " " + w(1) + "\"") -> ScoreMode.Bm25(),
+    ("\"" + w(0) + " " + w(1) + "\" OR " + w(5)) -> ScoreMode.Tf,
+    s"${w(0)} -${w(1)}" -> ScoreMode.Bm25())
 
   /** the stats the dictionary gives on a clean index (Σ df, Σ total_tf and
     * max max_tf over the segments' rows), and the exact live aggregate of
@@ -192,9 +197,15 @@ class OneScanSpec extends AnyFunSuite {
     // blocks of 16 postings and 64 KB of payload; partition p holds `sizes(p)`
     def block(i: Int) = PostingBlockRow(s"t${i % 3}", i % 4, i, i * 16L, i * 16L + 15,
       16, 1, 1, 1, 16L, 65536, new Array[Byte](65536), 0)
+    // the blocks as the postings scan's rows, and the decoder bound to them
+    val enc = GraftIndex.blockEncoder
+    val decoder = enc.resolveAndBind()
     def scan(sizes: Seq[Int]) = spark.sparkContext.parallelize(
       sizes.indices.map(p => (0 until sizes(p)).map(k => block(sizes.take(p).sum + k))),
-      sizes.size).flatMap(identity)
+      sizes.size).flatMap(identity).mapPartitions { bs =>
+        val toRow = enc.createSerializer()
+        bs.map(b => toRow(b).copy())
+      }
     val shipped = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -203,7 +214,7 @@ class OneScanSpec extends AnyFunSuite {
     def run(sizes: Seq[Int], cap: Long): (Option[Seq[Int]], Long) = {
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       shipped.set(0L)
-      val r = GraftIndex.collectWithin(scan(sizes), cap)
+      val r = GraftIndex.collectWithin(scan(sizes), decoder, cap)
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       (r.map(_.map(_.blk).toSeq), shipped.get())
     }
