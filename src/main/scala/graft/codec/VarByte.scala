@@ -51,8 +51,6 @@ final class LongVec(initial: Int = 8) {
     a(length) = v; length += 1
   }
   def apply(i: Int): Long = a(i)
-  def head: Long = a(0)
-  def last: Long = a(length - 1)
   def toArray: Array[Long] = java.util.Arrays.copyOf(a, length)
   def clear(): Unit = { length = 0 }
 }
@@ -66,9 +64,6 @@ final class IntVec(initial: Int = 8) {
     a(length) = v; length += 1
   }
   def apply(i: Int): Int = a(i)
-  def max: Int = { var m = Int.MinValue; var i = 0; while (i < length) { if (a(i) > m) m = a(i); i += 1 }; m }
-  def min: Int = { var m = Int.MaxValue; var i = 0; while (i < length) { if (a(i) < m) m = a(i); i += 1 }; m }
-  def sumLong: Long = { var s = 0L; var i = 0; while (i < length) { s += a(i); i += 1 }; s }
   def toArray: Array[Int] = java.util.Arrays.copyOf(a, length)
   def clear(): Unit = { length = 0 }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 import graft.analyzer.{Analyzers, Tokenizer}
-import graft.codec.{DecodedBlock, PostingCodec}
+import graft.codec.PostingCodec
 
 import scala.collection.mutable
 
@@ -21,7 +21,10 @@ import scala.collection.mutable
   *   stage 1  docs --map: tokenize + buffer per (term, bucket) + spill
   *            doc-ordered encoded RUNS at a posting threshold--> shuffle by
   *            (term, bucket) --sort by (term, bucket, min_doc)--> merge runs
-  *            into fixed-size posting blocks --> parquet
+  *            into fixed-size posting blocks --> parquet. Run and block
+  *            headers and every re-encoded block come from the one
+  *            builder, BlockBuilder (model.scala), which the liveness
+  *            filter and the query kernel's block merge also call
   *            (the shuffle moves ~|vocab| x tasks encoded runs, NOT one row
   *             per (doc, term) — measured 40x fewer rows, the difference
   *             between a 90M-row sort and an 800k-row sort per 1M docs)
@@ -59,22 +62,6 @@ object IndexBuilder {
     * GraftIndex.postings get max_gtf synthesized (= max_tf sid-less, -1 =
     * "unknown, no pruning" sectioned). */
   final val CurrentFormatVersion = 2
-
-  /** max over doc groups of the summed tf; a doc's (per-section) postings
-    * are consecutive, so one linear walk suffices. Sid-less input (every
-    * group a single posting) degenerates to max(tf). */
-  private def maxGroupTf(docs: graft.codec.LongVec, tfs: graft.codec.IntVec): Int = {
-    var best = 0
-    var cur = 0
-    var i = 0
-    while (i < docs.length) {
-      if (i > 0 && docs(i) != docs(i - 1)) { if (cur > best) best = cur; cur = 0 }
-      cur += tfs(i)
-      i += 1
-    }
-    if (cur > best) best = cur
-    best
-  }
 
   /** mutable per-term posting accumulator on the map side — primitive
     * buffers only (boxing on this path measured as ~2500 CPU-s per 1M docs),
@@ -140,13 +127,13 @@ object IndexBuilder {
           while (eit.hasNext) {
             val e = eit.next()
             val b = e.getValue
-            val payload = PostingCodec.encodeWithPosBlob(
-              b.docs.toArray, b.tfs.toArray, b.dls.toArray,
+            val docs = b.docs.toArray
+            val tfs = b.tfs.toArray
+            val dls = b.dls.toArray
+            val payload = PostingCodec.encodeWithPosBlob(docs, tfs, dls,
               if (withPositions) b.posW.result() else null,
               if (sectioned) b.sids.toArray else null)
-            out.enqueue(PostingRunRow(e.getKey, bucket, b.docs.head, b.docs.last,
-              b.docs.length, b.tfs.max, maxGroupTf(b.docs, b.tfs),
-              b.dls.min, b.tfs.sumLong, payload))
+            out.enqueue(PostingRunRow(e.getKey, bucket, BlockBuilder.header(docs, tfs, dls), payload))
           }
           runsAcc.foreach(_.add(bufs.size.toLong))
           bufs.clear()
@@ -241,84 +228,13 @@ object IndexBuilder {
   }
 
   /** Reduce side: consume runs sorted by (term, bucket, min_doc); per
-    * (term, bucket) group decode all runs (bounded by the bucket's 2^bits
-    * docs), merge into global doc order, and re-chunk into fixed-size
-    * blocks. */
-  def mergeRuns(cfg: IndexConfig, sectioned: Boolean = false)(
-      it: Iterator[PostingRunRow]): Iterator[PostingBlockRow] =
+    * (term, bucket) group merge all runs (bounded by the bucket's 2^bits
+    * docs) into global (doc, sid) order and re-chunk them into blocks of
+    * `cfg.blockSize` postings ([[BlockBuilder.blocks]]). */
+  def mergeRuns(cfg: IndexConfig)(it: Iterator[PostingRunRow]): Iterator[PostingBlockRow] =
     new Iterator[PostingBlockRow] {
       private val in = it.buffered
       private val out = new mutable.Queue[PostingBlockRow]()
-
-      private def emitGroup(term: String, bucket: Int,
-          runs: mutable.ArrayBuffer[DecodedBlock]): Unit = {
-        // runs are min_doc-ordered and (from doc-ordered map tasks) usually
-        // disjoint; merge defensively when ranges interleave
-        val n = runs.iterator.map(_.count).sum
-        val docs = new Array[Long](n)
-        val tfs = new Array[Int](n)
-        val dls = new Array[Int](n)
-        val sds = new Array[Int](n)
-        val poss = new Array[Array[Int]](n)
-        var o = 0
-        runs.foreach { d =>
-          var i = 0
-          var po = 0
-          while (i < d.count) {
-            docs(o) = d.docIds(i); tfs(o) = d.tfs(i); dls(o) = d.dls(i)
-            sds(o) = if (d.sids.isEmpty) 1 else d.sids(i)
-            if (d.positions.nonEmpty) {
-              poss(o) = java.util.Arrays.copyOfRange(d.positions, po, po + d.tfs(i))
-              po += d.tfs(i)
-            } else poss(o) = Array.emptyIntArray
-            i += 1; o += 1
-          }
-        }
-        // sort by (docId, sid) if interleaved (cheap index sort; groups are small)
-        var sorted = true
-        var i = 1
-        while (sorted && i < n) {
-          sorted = docs(i - 1) < docs(i) ||
-            (docs(i - 1) == docs(i) && sds(i - 1) < sds(i))
-          i += 1
-        }
-        val order: Array[Int] =
-          if (sorted) null
-          else Array.range(0, n).sortBy(k => (docs(k), sds(k)))
-        def at[T](arr: Array[T], k: Int): T = if (order == null) arr(k) else arr(order(k))
-        var s = 0
-        var blk = 0
-        while (s < n) {
-          var len = math.min(cfg.blockSize, n - s)
-          // a doc's (sid) group must never split across blocks: the query
-          // cursor aggregates a doc's sections within one block
-          if (sectioned)
-            while (s + len < n && at(docs, s + len) == at(docs, s + len - 1)) len += 1
-          val bd = new Array[Long](len)
-          val bt = new Array[Int](len)
-          val bl = new Array[Int](len)
-          val bs = new Array[Int](len)
-          val bp = new Array[Array[Int]](len)
-          var j = 0
-          var maxGtf = 0
-          var curGtf = 0
-          while (j < len) {
-            bd(j) = at(docs, s + j); bt(j) = at(tfs, s + j)
-            bl(j) = at(dls, s + j); bs(j) = at(sds, s + j); bp(j) = at(poss, s + j)
-            if (j > 0 && bd(j) != bd(j - 1)) { if (curGtf > maxGtf) maxGtf = curGtf; curGtf = 0 }
-            curGtf += bt(j)
-            j += 1
-          }
-          if (curGtf > maxGtf) maxGtf = curGtf
-          val payload = PostingCodec.encode(bd, bt, bl,
-            if (cfg.withPositions) bp else null,
-            if (sectioned) bs else null)
-          out.enqueue(PostingBlockRow(term, bucket, blk, bd(0), bd(len - 1), len,
-            bt.max, maxGtf, bl.min, bt.foldLeft(0L)(_ + _), payload.length, payload))
-          blk += 1
-          s += len
-        }
-      }
 
       private def fill(): Unit = {
         while (out.isEmpty && in.hasNext) {
@@ -340,7 +256,10 @@ object IndexBuilder {
             out.enqueue(PostingBlockRow(r.term, r.bucket, 0, r.min_doc, r.max_doc,
               r.cnt, r.max_tf, r.max_gtf, r.min_dl, r.tf_sum, r.payload.length, r.payload))
           } else {
-            emitGroup(term, bucket, rows.map(r => PostingCodec.decode(r.payload)))
+            BlockBuilder.blocks(rows.map(_.payload), _ => true, cfg.blockSize)
+              .iterator.zipWithIndex.foreach { case ((h, payload), blk) =>
+                out.enqueue(PostingBlockRow(term, bucket, blk, h, payload, 0))
+              }
           }
         }
       }
@@ -440,8 +359,9 @@ object IndexBuilder {
     val tokensAcc = spark.sparkContext.longAccumulator("graft.index.tokens")
     val runsAcc = spark.sparkContext.longAccumulator("graft.index.runs")
 
-    // an auto salt granularity needs the corpus size (hint, or a cheap
-    // parquet row-count metadata job)
+    // an auto salt granularity needs the corpus size: IndexConfig.nDocsHint,
+    // else a count of the input — not free: under AQE 2 Spark jobs, plus a
+    // schema job for a parquet input (3 of a warm 16k-doc build's 11 jobs)
     val bucketBits = cfg.resolveBucketBits(docs.count(), cfg.shufflePartitions(spark))
 
     val rawDocs = docs
@@ -465,7 +385,7 @@ object IndexBuilder {
     }.toDF("doc_id", "dl")
     SegmentWriter.write(spark, dir,
       tokenizeToRuns(counted, cfg, bucketBits, sectioned, Some(tokensAcc), Some(runsAcc)),
-      lengths, cfg, sectioned)
+      lengths, cfg)
     (bucketBits, Map(
       "docsRead" -> docsAcc.value.toString,
       "tokens" -> tokensAcc.value.toString,

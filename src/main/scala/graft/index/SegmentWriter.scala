@@ -79,14 +79,14 @@ object SegmentWriter {
 
   /** Write the segment at `dir`. `runs` and `docs` are lazy plans: a stage
     * that already committed never evaluates its input. `cfg` carries the
-    * block layout (blockSize, withPositions) and the shuffle width. */
+    * block size and the shuffle width; the blocks carry positions and sids
+    * when the runs do. */
   def write(
       spark: SparkSession,
       dir: String,
       runs: Dataset[PostingRunRow],
       docs: DataFrame,
-      cfg: IndexConfig,
-      sectioned: Boolean): Unit = {
+      cfg: IndexConfig): Unit = {
     import spark.implicits._
     val fs = SegmentCatalog.fileSystem(spark, dir)
     val partitions = cfg.shufflePartitions(spark)
@@ -102,7 +102,7 @@ object SegmentWriter {
       stage("postings") {
         runs.repartition(partitions, $"term", $"bucket")
           .sortWithinPartitions($"term", $"bucket", $"min_doc")
-          .mapPartitions(IndexBuilder.mergeRuns(cfg, sectioned))
+          .mapPartitions(IndexBuilder.mergeRuns(cfg))
           .drop("seg_ord") // read assigns it from the file's segment
           .write.mode("overwrite").parquet(s"$dir/postings")
       }

@@ -90,8 +90,9 @@ object TokenColumn {
 
     val tokens = spark.read.parquet(s"$tokenPath/tokens")
     // salt sizing needs only the corpus magnitude: the (doc,section) row
-    // count is a cheap parquet-metadata upper bound on nDocs (a distinct
-    // count would re-scan the cache before the build even starts)
+    // count is an upper bound on nDocs (a distinct count would re-scan the
+    // cache). It is not free — under AQE 2 Spark jobs, plus a schema job
+    // for the parquet read; IndexConfig.nDocsHint skips it
     val bucketBits = buildCfg.resolveBucketBits(tokens.count(), shufflePartitions)
 
     // group (doc, sid) rows back into per-doc section arrays; range
@@ -138,7 +139,7 @@ object TokenColumn {
     val lengths = tokens.groupBy($"doc_id")
       .agg(sum(size($"terms")).cast("int").as("dl"))
       .where($"dl" > 0)
-    SegmentWriter.write(spark, outPath, runs, lengths, buildCfg, sectioned)
+    SegmentWriter.write(spark, outPath, runs, lengths, buildCfg)
     SegmentWriter.commitBase(spark, outPath, buildCfg, bucketBits, sections,
       Map("builtFromTokenColumn" -> tokenPath))
   }

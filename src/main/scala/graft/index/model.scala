@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.codec.{IntVec, LongVec, PostingCodec}
+import graft.codec.PostingCodec
 
 /** A map-side partial posting run: all of one (term, bucket)'s postings seen
   * by one map task between spills, already doc-ordered and block-encoded.
@@ -24,6 +24,13 @@ final case class PostingRunRow(
     min_dl: Int,
     tf_sum: Long,
     payload: Array[Byte])
+
+object PostingRunRow {
+  /** the run of `payload`, whose headers are `h` */
+  def apply(term: String, bucket: Int, h: BlockHeader, payload: Array[Byte]): PostingRunRow =
+    PostingRunRow(term, bucket, h.minDoc, h.maxDoc, h.cnt, h.maxTf, h.maxGtf, h.minDl,
+      h.tfSum, payload)
+}
 
 /** One encoded posting block — a row of the postings table. Parquet min/max
   * column stats on (term, bucket, min_doc, max_doc) are our skip pointers
@@ -57,72 +64,147 @@ final case class PostingBlockRow(
     seg_ord: Int = 0)
 
 object PostingBlockRow {
-  /** Decode `blocks` (one term's, of one bucket), keep the postings whose
-    * doc passes `keep`, (doc, sid)-sort them and re-encode them as ONE
-    * block. Its headers (doc range, cnt, max_tf, max_gtf, min_dl, tf_sum)
-    * are recomputed from the kept postings; term, bucket, blk and seg_ord
-    * are the first block's. None when no posting is kept. */
+  /** the row of `payload`, whose headers are `h` */
+  def apply(term: String, bucket: Int, blk: Int, h: BlockHeader, payload: Array[Byte],
+      segOrd: Int): PostingBlockRow =
+    PostingBlockRow(term, bucket, blk, h.minDoc, h.maxDoc, h.cnt, h.maxTf, h.maxGtf,
+      h.minDl, h.tfSum, payload.length, payload, segOrd)
+
+  /** `blocks` (one term's, of one bucket) merged into ONE block of the
+    * postings whose doc passes `keep` ([[BlockBuilder.blocks]], unbounded);
+    * term, bucket, blk and seg_ord are the first block's. None when no
+    * posting is kept. */
   def rebuild(blocks: Array[PostingBlockRow],
       keep: Long => Boolean = _ => true): Option[PostingBlockRow] = {
-    val docs = new LongVec(16)
-    val tfs = new IntVec(16)
-    val dls = new IntVec(16)
-    val sds = new IntVec(16)
-    val poss = new scala.collection.mutable.ArrayBuffer[Array[Int]](16)
-    var withPos = false
-    var withSids = false
-    blocks.foreach { b =>
-      val d = PostingCodec.decode(b.payload)
-      if (d.positions.nonEmpty) withPos = true
-      if (d.sids.nonEmpty) withSids = true
-      var i = 0
-      var po = 0
-      while (i < d.count) {
-        val doc = d.docIds(i)
-        if (keep(doc)) {
-          docs += doc; tfs += d.tfs(i); dls += d.dls(i)
-          sds += (if (d.sids.isEmpty) 1 else d.sids(i))
-          poss += (if (d.positions.isEmpty) Array.emptyIntArray
-            else java.util.Arrays.copyOfRange(d.positions, po, po + d.tfs(i)))
-        }
-        po += d.tfs(i)
-        i += 1
-      }
+    val b = blocks(0)
+    BlockBuilder.blocks(blocks.map(_.payload), keep, Int.MaxValue).headOption.map {
+      case (h, payload) => PostingBlockRow(b.term, b.bucket, b.blk, h, payload, b.seg_ord)
     }
-    val n = docs.length
-    if (n == 0) return None
-    val da = docs.toArray
-    val sa = sds.toArray
-    val order = Array.range(0, n).sortBy(k => (da(k), sa(k)))
-    val od = new Array[Long](n)
-    val ot = new Array[Int](n)
-    val ol = new Array[Int](n)
-    val os = new Array[Int](n)
-    val op = new Array[Array[Int]](n)
-    val ta = tfs.toArray
-    val la = dls.toArray
-    var k = 0
+  }
+}
+
+/** The headers of one posting run or block — the role of groonga's chunk
+  * headers (lib/ii.cpp:16200-16219). */
+final case class BlockHeader(minDoc: Long, maxDoc: Long, cnt: Int, maxTf: Int, maxGtf: Int,
+    minDl: Int, tfSum: Long)
+
+/** The one posting-block builder: every run and block header and every
+  * re-encoded block of the index comes from here — the spill's runs, the
+  * run merge of a build or compaction, the liveness filter and the query
+  * kernel's merge of overlapping blocks (groonga builds a chunk and its
+  * header in one place too, grn_ii_builder, lib/ii.cpp:18608-18674). */
+object BlockBuilder {
+  /** The headers of (doc, sid)-ordered postings. max_gtf is the max over
+    * doc groups of the summed tf: a doc's (per-section) postings are
+    * consecutive, so sid-less postings (every group one posting) give
+    * max_gtf = max_tf. */
+  def header(docs: Array[Long], tfs: Array[Int], dls: Array[Int]): BlockHeader = {
     var maxTf = 0
     var maxGtf = 0
     var curGtf = 0
     var minDl = Int.MaxValue
     var tfSum = 0L
-    while (k < n) {
-      val src = order(k)
-      od(k) = da(src); ot(k) = ta(src); ol(k) = la(src); os(k) = sa(src); op(k) = poss(src)
-      if (ot(k) > maxTf) maxTf = ot(k)
-      if (k > 0 && od(k) != od(k - 1)) { if (curGtf > maxGtf) maxGtf = curGtf; curGtf = 0 }
-      curGtf += ot(k)
-      if (ol(k) < minDl) minDl = ol(k)
-      tfSum += ot(k)
-      k += 1
+    var i = 0
+    while (i < docs.length) {
+      if (tfs(i) > maxTf) maxTf = tfs(i)
+      if (i > 0 && docs(i) != docs(i - 1)) { if (curGtf > maxGtf) maxGtf = curGtf; curGtf = 0 }
+      curGtf += tfs(i)
+      if (dls(i) < minDl) minDl = dls(i)
+      tfSum += tfs(i)
+      i += 1
     }
     if (curGtf > maxGtf) maxGtf = curGtf
-    val payload = PostingCodec.encode(od, ot, ol,
-      if (withPos) op else null, if (withSids) os else null)
-    val h = blocks(0)
-    Some(PostingBlockRow(h.term, h.bucket, h.blk, od(0), od(n - 1), n,
-      maxTf, maxGtf, minDl, tfSum, payload.length, payload, h.seg_ord))
+    BlockHeader(docs(0), docs(docs.length - 1), docs.length, maxTf, maxGtf, minDl, tfSum)
+  }
+
+  /** Decode `payloads` (each (doc, sid)-ordered, as every run and block
+    * is), keep the postings whose doc passes `keep`, order them by
+    * (doc, sid) and encode them as blocks of `blockSize` postings, in
+    * order. A block grows past `blockSize` rather than split a doc's
+    * section group: the query cursor aggregates a doc's sections within
+    * one block. Positions and sids are written when the payloads carry
+    * them. Empty when no posting is kept. */
+  def blocks(payloads: collection.Seq[Array[Byte]], keep: Long => Boolean,
+      blockSize: Int): Seq[(BlockHeader, Array[Byte])] = {
+    val decoded = payloads.map(PostingCodec.decode)
+    val withPos = decoded.exists(_.positions.nonEmpty)
+    val withSids = decoded.exists(_.sids.nonEmpty)
+    val total = decoded.iterator.map(_.count).sum
+    val docs = new Array[Long](total)
+    val tfs = new Array[Int](total)
+    val dls = new Array[Int](total)
+    val sids = new Array[Int](total)
+    val poss = new Array[Array[Int]](total)
+    var n = 0
+    decoded.foreach { d =>
+      var i = 0
+      var po = 0
+      while (i < d.count) {
+        if (keep(d.docIds(i))) {
+          docs(n) = d.docIds(i); tfs(n) = d.tfs(i); dls(n) = d.dls(i)
+          sids(n) = if (d.sids.isEmpty) 1 else d.sids(i)
+          poss(n) = if (d.positions.isEmpty) Array.emptyIntArray
+            else java.util.Arrays.copyOfRange(d.positions, po, po + d.tfs(i))
+          n += 1
+        }
+        po += d.tfs(i)
+        i += 1
+      }
+    }
+    def before(a: Int, b: Int): Boolean =
+      docs(a) < docs(b) || (docs(a) == docs(b) && sids(a) < sids(b))
+    var ordered = true
+    var i = 1
+    while (ordered && i < n) { ordered = before(i - 1, i); i += 1 }
+    val order = if (ordered) null else sortedOrder(n, before)
+    def at(k: Int): Int = if (order == null) k else order(k)
+    val out = new scala.collection.mutable.ArrayBuffer[(BlockHeader, Array[Byte])]()
+    var s = 0
+    while (s < n) {
+      var len = math.min(blockSize, n - s)
+      while (s + len < n && docs(at(s + len)) == docs(at(s + len - 1))) len += 1
+      val bd = new Array[Long](len)
+      val bt = new Array[Int](len)
+      val bl = new Array[Int](len)
+      val bs = new Array[Int](len)
+      val bp = new Array[Array[Int]](len)
+      var j = 0
+      while (j < len) {
+        val k = at(s + j)
+        bd(j) = docs(k); bt(j) = tfs(k); bl(j) = dls(k); bs(j) = sids(k); bp(j) = poss(k)
+        j += 1
+      }
+      out += header(bd, bt, bl) ->
+        PostingCodec.encode(bd, bt, bl, if (withPos) bp else null, if (withSids) bs else null)
+      s += len
+    }
+    out.toSeq
+  }
+
+  /** 0 until n, stably merge-sorted by `before` — no boxed key per posting */
+  private def sortedOrder(n: Int, before: (Int, Int) => Boolean): Array[Int] = {
+    var a = Array.range(0, n)
+    var b = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var l = lo
+        var r = mid
+        var o = lo
+        while (o < hi) {
+          if (r < hi && (l >= mid || before(a(r), a(l)))) { b(o) = a(r); r += 1 }
+          else { b(o) = a(l); l += 1 }
+          o += 1
+        }
+        lo = hi
+      }
+      val t = a; a = b; b = t
+      width *= 2
+    }
+    a
   }
 }
 

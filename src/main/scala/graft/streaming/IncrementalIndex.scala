@@ -310,9 +310,7 @@ object IncrementalIndex {
       val dir = s"${base.path}/${name(k)}"
       fs.delete(new Path(dir), true)
       val (blocks, docs) = foldInput(base, ords)
-      SegmentWriter.write(base.spark, dir, blocks, docs,
-        cfg.copy(withPositions = base.meta.withPositions, blockSize = base.meta.blockSize),
-        base.meta.sections.nonEmpty)
+      SegmentWriter.write(base.spark, dir, blocks, docs, cfg.copy(blockSize = base.meta.blockSize))
       name(k) -> dir
     }
     commit(base, Delta(SegmentWriter.measure(base.spark, dirs),
