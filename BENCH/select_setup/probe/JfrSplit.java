@@ -15,7 +15,12 @@ import jdk.jfr.consumer.RecordingFile;
  * its stack; a sample with none is "other". Prints one JSON object: the
  * sample count and each category's count and share.
  *
- * Run: java JfrSplit.java <recording.jfr>
+ * With --call-site, each sample goes instead to the frame that
+ * GraftHttpServer.respond called on its way to the sample (the method the
+ * sample spent its time under, one level below respond), or to "respond"
+ * when respond itself was on top, or to "outside respond".
+ *
+ * Run: java JfrSplit.java [--call-site] <recording.jfr>
  */
 public class JfrSplit {
     /** category name, then the frame-name prefixes that put a sample in it */
@@ -44,7 +49,7 @@ public class JfrSplit {
         List<RecordedFrame> frames = st.getFrames();
         for (String[] c : CATEGORIES) {
             for (RecordedFrame f : frames) {
-                String name = f.getMethod().getType().getName() + "." + f.getMethod().getName();
+                String name = frameName(f);
                 for (int i = 1; i < c.length; i++) {
                     if (name.startsWith(c[i])) return c[0];
                 }
@@ -53,12 +58,38 @@ public class JfrSplit {
         return "other";
     }
 
+    /** respond is private and called from the server's handler class, so
+     *  scalac may emit it under the expanded name ...$$respond */
+    static boolean isRespond(RecordedFrame f) {
+        String m = f.getMethod().getName();
+        return f.getMethod().getType().getName().equals("graft.server.GraftHttpServer")
+            && (m.equals("respond") || m.endsWith("$$respond"));
+    }
+
+    static String frameName(RecordedFrame f) {
+        return f.getMethod().getType().getName() + "." + f.getMethod().getName();
+    }
+
+    static String callSite(RecordedStackTrace st) {
+        List<RecordedFrame> frames = st.getFrames(); // the top frame first
+        for (int i = 0; i < frames.size(); i++) {
+            if (isRespond(frames.get(i))) {
+                return i == 0 ? "respond" : frameName(frames.get(i - 1));
+            }
+        }
+        return "outside respond";
+    }
+
     public static void main(String[] args) throws Exception {
+        boolean bySite = args[0].equals("--call-site");
+        String file = args[args.length - 1];
         Map<String, Long> counts = new LinkedHashMap<>();
-        for (String[] c : CATEGORIES) counts.put(c[0], 0L);
-        counts.put("other", 0L);
+        if (!bySite) {
+            for (String[] c : CATEGORIES) counts.put(c[0], 0L);
+            counts.put("other", 0L);
+        }
         long total = 0, truncated = 0;
-        try (RecordingFile rf = new RecordingFile(Path.of(args[0]))) {
+        try (RecordingFile rf = new RecordingFile(Path.of(file))) {
             while (rf.hasMoreEvents()) {
                 RecordedEvent e = rf.readEvent();
                 if (!e.getEventType().getName().equals("jdk.ExecutionSample")) continue;
@@ -67,13 +98,15 @@ public class JfrSplit {
                 RecordedStackTrace st = e.getStackTrace();
                 if (st == null) continue;
                 if (st.isTruncated()) truncated++;
-                counts.merge(category(st), 1L, Long::sum);
+                counts.merge(bySite ? callSite(st) : category(st), 1L, Long::sum);
                 total++;
             }
         }
         StringBuilder out = new StringBuilder();
         out.append("{\"samples\":").append(total).append(",\"truncated\":").append(truncated);
-        for (Map.Entry<String, Long> c : counts.entrySet()) {
+        List<Map.Entry<String, Long>> entries = new java.util.ArrayList<>(counts.entrySet());
+        if (bySite) entries.sort(Map.Entry.<String, Long>comparingByValue().reversed());
+        for (Map.Entry<String, Long> c : entries) {
             out.append(String.format(",\"%s\":{\"n\":%d,\"share\":%.4f}", c.getKey(), c.getValue(),
                 total == 0 ? 0.0 : c.getValue() / (double) total));
         }

@@ -3,9 +3,10 @@
 #
 # Puts SelectCpuProbe.scala into the copy's perfbench sources, builds them
 # the way perfbench/run.py does, records [selects] (default 1200) HTTP
-# selects with JFR, and splits the recording with JfrSplit.java. Give it a
-# copy, not the checkout itself: the probe file changes perfbench/src, which
-# would make the next perfbench run rebuild.
+# selects with JFR, and splits the recording with JfrSplit.java: by category
+# (split.json) and by the call GraftHttpServer.respond made (sites.json).
+# Give it a copy, not the checkout itself: the probe file changes
+# perfbench/src, which would make the next perfbench run rebuild.
 set -e
 here=$(cd "$(dirname "$0")" && pwd)
 copy=$(cd "$1" && pwd)
@@ -25,4 +26,5 @@ java -Xms2g -Xmx2g -XX:+UseParallelGC -XX:FlightRecorderOptions:stackdepth=1024 
   -Djava.io.tmpdir="$work/tmp" -cp "$cp" perfbench.SelectCpuProbe "$work" "$n" \
   2>"$work/stderr.log" | tail -1 >"$work/probe.json"
 java "$here/JfrSplit.java" "$work/select.jfr" >"$work/split.json"
-cat "$work/probe.json" "$work/split.json"
+java "$here/JfrSplit.java" --call-site "$work/select.jfr" >"$work/sites.json"
+cat "$work/probe.json" "$work/split.json" "$work/sites.json"

@@ -37,11 +37,12 @@ object ArrowFormat {
     case _ => ArrowType.Utf8.INSTANCE // strings + anything else via text
   }
 
-  def arrow(df: DataFrame, nHits: Long, maxRows: Int = 10000): Array[Byte] = {
-    val rows = df.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
-    val sparkFields = df.schema.fields
+  def arrow(df: DataFrame, nHits: Long, maxRows: Int = 10000): Array[Byte] =
+    arrow(CommandFormat.ResultSet.of(df, maxRows), nHits)
+
+  def arrow(rs: CommandFormat.ResultSet, nHits: Long): Array[Byte] = {
+    val rows = rs.rows.toIndexedSeq
+    val sparkFields = rs.schema.fields
     val fields = sparkFields.map { f =>
       new Field(f.name, FieldType.nullable(arrowType(f.dataType)), null)
     }

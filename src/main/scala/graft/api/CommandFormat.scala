@@ -12,12 +12,27 @@ import org.apache.spark.sql.types._
   *     [ [[n_hits], [[col,type], ...], row, row, ...],
   *       DRILLDOWN_RESULT..., | {"label": DRILLDOWN_RESULT, ...} ] ]
   *
-  * The engine half (this object) renders result DataFrames into bodies and
+  * The engine half (this object) renders result sets into bodies and
   * wraps them; the HTTP layer the reference carries around this is out of
-  * scope (SURVEY §2.1 output formats row). Rows are collected — a select
-  * body is bounded by the command's offset/limit by construction, and
-  * `maxRows` guards against formatting an unlimited result by mistake. */
+  * scope (SURVEY §2.1 output formats row). Every formatter takes a
+  * [[ResultSet]]: a schema and rows already on the driver — a select body
+  * is bounded by the command's offset/limit by construction. Each also
+  * takes a DataFrame, collected by [[ResultSet.of]], whose `maxRows` guards
+  * against formatting an unlimited result by mistake. */
 object CommandFormat {
+
+  /** One result set to format: its schema and its rows, in order. */
+  final case class ResultSet(schema: StructType, rows: Seq[Row])
+
+  object ResultSet {
+    /** `df`'s rows, collected, refusing a result of more than `maxRows` */
+    def of(df: DataFrame, maxRows: Int = 10000): ResultSet = {
+      val rows = df.take(maxRows + 1)
+      require(rows.length <= maxRows,
+        s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
+      ResultSet(df.schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
+    }
+  }
 
   /** Spark → groonga type names (include/groonga/groonga.h builtin types) */
   def grnType(dt: DataType): String = dt match {
@@ -74,19 +89,18 @@ object CommandFormat {
   /** one result body: [[n_hits], [[name,type]...], rows...]. `nHits` is
     * the pre-limit match count (the reference reports total hits even when
     * limit trims the rows). */
-  def body(df: DataFrame, nHits: Long, maxRows: Int = 10000): String = {
-    val schema = df.schema
-    val rows = df.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
-    val cols = schema.fields
+  def body(rs: ResultSet, nHits: Long): String = {
+    val cols = rs.schema.fields
       .map(f => s"""["${esc(f.name)}","${grnType(f.dataType)}"]""")
       .mkString("[", ",", "]")
-    val rowsJson = rows.map { (r: Row) =>
+    val rowsJson = rs.rows.map { (r: Row) =>
       (0 until r.length).map(i => jsonValue(r.get(i))).mkString("[", ",", "]")
     }
     (Seq(s"[$nHits]", cols) ++ rowsJson).mkString("[", ",", "]")
   }
+
+  def body(df: DataFrame, nHits: Long, maxRows: Int = 10000): String =
+    body(ResultSet.of(df, maxRows), nHits)
 
   /** full envelope; drilldowns render positionally, labeled drilldowns as
     * an object — exactly the two select.rst output shapes */
@@ -107,19 +121,18 @@ object CommandFormat {
   // test/command/suite/select/drilldown/plain/command_version/3) ----
 
   /** v3 result body: {"n_hits":N,"columns":[{"name","type"}...],"records":[...]} */
-  def bodyV3(df: DataFrame, nHits: Long, maxRows: Int = 10000): String = {
-    val schema = df.schema
-    val rows = df.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
-    val cols = schema.fields
+  def bodyV3(rs: ResultSet, nHits: Long): String = {
+    val cols = rs.schema.fields
       .map(f => s"""{"name":"${esc(f.name)}","type":"${grnType(f.dataType)}"}""")
       .mkString("[", ",", "]")
-    val recs = rows.map { (r: Row) =>
+    val recs = rs.rows.map { (r: Row) =>
       (0 until r.length).map(i => jsonValue(r.get(i))).mkString("[", ",", "]")
     }.mkString("[", ",", "]")
     s"""{"n_hits":$nHits,"columns":$cols,"records":$recs}"""
   }
+
+  def bodyV3(df: DataFrame, nHits: Long, maxRows: Int = 10000): String =
+    bodyV3(ResultSet.of(df, maxRows), nHits)
 
   // ---- XML output (output_type=xml). The reference produces it by
   // transforming the JSON-ish intermediate through transform_xml
@@ -176,23 +189,20 @@ object CommandFormat {
     (off, lim)
   }
 
-  /** full select result as the reference XML page. `df` carries the
+  /** full select result as the reference XML page. `rs` carries the
     * already-offset/limited rows; `offset`/`limit` are the COMMAND's raw
     * values (they only shape the header attributes and HIT numbering,
     * exactly like the reference, where the rows were windowed upstream). */
-  def xml(df: DataFrame, nHits: Long, offset: Int = 0, limit: Int = 10,
-      drilldowns: Seq[(DataFrame, Long)] = Nil, maxRows: Int = 10000): String = {
+  def xml(rs: ResultSet, nHits: Long, offset: Int, limit: Int,
+      drilldowns: Seq[(ResultSet, Long)]): String = {
     val (off, lim) = rangeNormalize(nHits.toInt, offset, limit)
-    val rows = df.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
     val sb = new java.lang.StringBuilder
     sb.append("<?xml version=\"1.0\" encoding=\"utf-8\"?>\n")
       .append("<SEGMENTS>\n<SEGMENT>\n<RESULTPAGE>\n")
       .append(s"""<RESULTSET OFFSET="$off" LIMIT="$lim" NHITS="$nHits">\n""")
-    val names = df.schema.fieldNames
+    val names = rs.schema.fieldNames
     var i = 0
-    rows.foreach { r =>
+    rs.rows.foreach { r =>
       sb.append(s"""<HIT NO="${off + 1 + i}">\n""")
       var c = 0
       while (c < names.length) {
@@ -207,10 +217,7 @@ object CommandFormat {
       sb.append("<NAVIGATIONENTRY>\n")
         .append(s"""<NAVIGATIONELEMENTS COUNT="$n">\n""")
       val dnames = dd.schema.fieldNames
-      val drows = dd.take(maxRows + 1)
-      require(drows.length <= maxRows,
-        s"drilldown exceeds maxRows=$maxRows — apply its limit before formatting")
-      drows.foreach { r =>
+      dd.rows.foreach { r =>
         sb.append("<NAVIGATIONELEMENT ")
         var c = 0
         while (c < dnames.length) {
@@ -225,6 +232,11 @@ object CommandFormat {
     sb.toString
   }
 
+  def xml(df: DataFrame, nHits: Long, offset: Int = 0, limit: Int = 10,
+      drilldowns: Seq[(DataFrame, Long)] = Nil, maxRows: Int = 10000): String =
+    xml(ResultSet.of(df, maxRows), nHits, offset, limit,
+      drilldowns.map { case (dd, n) => (ResultSet.of(dd, maxRows), n) })
+
   // ---- msgpack output (output_type=msgpack). The reference packs the SAME
   // v1 envelope tree through the MessagePack packers (lib/msgpack.c wiring,
   // lib/output.c:293-1161) instead of the JSON printer; typed scalars keep
@@ -233,14 +245,14 @@ object CommandFormat {
 
   /** v1 body as a value tree: [[n_hits], [[name,type]...], rows...].
     * Rows pack as arrays (Msgpack handles Row/Seq/Map nesting). */
-  def bodyTree(df: DataFrame, nHits: Long, maxRows: Int = 10000): Vector[Any] = {
-    val rows = df.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
+  def bodyTree(rs: ResultSet, nHits: Long): Vector[Any] = {
     val cols: Vector[Any] =
-      df.schema.fields.map(f => Vector(f.name, grnType(f.dataType)): Any).toVector
-    Vector(Vector(nHits): Any, cols) ++ rows.map(r => r: Any)
+      rs.schema.fields.map(f => Vector(f.name, grnType(f.dataType)): Any).toVector
+    Vector(Vector(nHits): Any, cols) ++ rs.rows.map(r => r: Any)
   }
+
+  def bodyTree(df: DataFrame, nHits: Long, maxRows: Int = 10000): Vector[Any] =
+    bodyTree(ResultSet.of(df, maxRows), nHits)
 
   /** full v1 envelope as msgpack bytes; positional drilldowns append as
     * sibling result sets, labeled drilldowns as one trailing map — the

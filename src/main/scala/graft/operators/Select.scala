@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, InterpretedOrdering}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending,
+  InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.index.GraftIndex
@@ -295,43 +297,67 @@ object Select {
     }
   }
 
-  /** sort, offset and limit over `matched`; the second value is nHits,
-    * the size of `matched` before offset/limit, when it came for free.
-    * Otherwise the caller counts `matched` itself. nHits is never a
+  /** A page sorted and sliced on the driver: `rows`, in page order, bind to
+    * `output`; `nHits` is the size of the match set before offset/limit. */
+  final case class DriverPage(output: Seq[Attribute], rows: Seq[InternalRow], nHits: Long)
+
+  /** [[pageRows]] as a DataFrame, with nHits when it came for free:
+    * otherwise the caller counts `matched` itself. nHits is never a
     * `Dataset.observe` metric on the page: under `orderBy` the
     * range-partition sort samples its child in a job of its own, which runs
     * the child a second time, and the observed `count(1)` of a 2-row frame
-    * read 4.
+    * read 4. */
+  private[graft] def page(matched: DataFrame, req: Request): (DataFrame, Option[Long]) =
+    pageRows(matched, req) match {
+      case Right(p) =>
+        (GraftColumnBridge.ofRows(matched.sparkSession, LocalRelation(p.output, p.rows)),
+          Some(p.nHits))
+      case Left(df) => (df, None)
+    }
+
+  /** sort, offset and limit over `matched`: the page's rows when `matched`
+    * is rows in driver memory, else the page's plan.
     *
     * A term query under the small-query cap evaluates on the driver: its
-    * match set is a LocalRelation whose row count the cap bounds. Spark
-    * folds projections and limits over such a relation but not a sort, so
-    * `orderBy` would plan a range-partition sort (sample + map + result
-    * jobs) over rows already in driver memory. Those rows are sorted here
-    * instead, by Catalyst's own ordering bound to the SortOrders `orderBy`
-    * resolves to, so NaN, -0.0, null and string order are Spark's. */
-  private[graft] def page(matched: DataFrame, req: Request): (DataFrame, Option[Long]) = {
-    val sorted = matched.orderBy(
-      req.sortKeys.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }: _*)
-    // only a plan over driver rows alone can fold to a LocalRelation; any
-    // other plan is left to the optimizer run of the page's own action
-    val driverRows =
-      if (matched.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
-        Some(matched.queryExecution.optimizedPlan)
-      else None
-    (driverRows, sorted.queryExecution.analyzed) match {
-      case (Some(rel: LocalRelation), Sort(order, true, _, _))
-          if AttributeSet(order.flatMap(_.references)).subsetOf(rel.outputSet) =>
+    * match set is a LocalRelation whose row count the cap bounds. `orderBy`
+    * would plan a range-partition sort (sample + map + result jobs) over
+    * rows already in driver memory, and even a local sort would cost a
+    * Dataset's analysis, optimization and execution. Those rows are sorted
+    * here instead, by Catalyst's own ordering over the attributes the sort
+    * keys resolve to with the session's resolver, so NaN, -0.0, null and
+    * string order are Spark's. Any other plan over driver rows alone (a
+    * post_filter or scorer over them) is first folded by the optimizer. A
+    * sort key that does not resolve to a column of the rows takes the
+    * `orderBy` path, which raises Spark's own error for it. */
+  private[graft] def pageRows(matched: DataFrame, req: Request): Either[DataFrame, DriverPage] = {
+    val qe = matched.queryExecution
+    val local = qe.analyzed match {
+      case rel: LocalRelation => Some(rel)
+      case plan if plan.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
+        Some(qe.optimizedPlan).collect { case rel: LocalRelation => rel }
+      case _ => None
+    }
+    val resolver = matched.sparkSession.sessionState.conf.resolver
+    val sorted = local.flatMap { rel =>
+      val order = req.sortKeys.map { case (c, asc) =>
+        rel.resolveQuoted(c, resolver).collect { case a: Attribute =>
+          SortOrder(a, if (asc) Ascending else Descending)
+        }
+      }
+      if (order.forall(_.isDefined)) Some((rel, order.flatten)) else None
+    }
+    sorted match {
+      case Some((rel, order)) =>
         val rows = rel.data.sorted(new InterpretedOrdering(order, rel.output))
           .drop(math.max(req.offset, 0))
-        val sliced = if (req.limit >= 0) rows.take(req.limit) else rows
-        (GraftColumnBridge.ofRows(matched.sparkSession, rel.copy(data = sliced)),
-          Some(rel.data.length.toLong))
-      case _ =>
-        var out = sorted
+        Right(DriverPage(rel.output, if (req.limit >= 0) rows.take(req.limit) else rows,
+          rel.data.length.toLong))
+      case None =>
+        var out = matched.orderBy(
+          req.sortKeys.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }: _*)
         if (req.offset > 0) out = out.offset(req.offset)
         if (req.limit >= 0) out = out.limit(req.limit)
-        (out, None)
+        Left(out)
     }
   }
 

@@ -5,10 +5,16 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Cast, EvalMode,
+  NamedExpression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.api.{CommandFormat, Introspect, Msgpack}
+import graft.api.CommandFormat.ResultSet
 import graft.index.GraftIndex
 
 /** The reference's HTTP front re-expressed over the JDK's built-in
@@ -21,12 +27,18 @@ import graft.index.GraftIndex
   * the same envelopes the format specs golden-match.
   *
   * Architecture note (the 100-TB story): this server is the CONTROL
-  * plane. It listens on the Spark DRIVER; every command body executes as
-  * the same distributed DataFrame plan the library API produces, so the
-  * HTTP layer adds no data-plane hop and no new scaling ceiling — it is
-  * the groonga daemon's admin/query socket, not a shard router. Result
-  * pages are bounded by the command's offset/limit exactly like the
-  * reference (unbounded dumps refuse via CommandFormat's maxRows guard).
+  * plane. It listens on the Spark DRIVER and answers through the same
+  * library calls the API offers (`Select.matches`, `Select.pageRows`,
+  * the CommandFormat formatters), so the HTTP layer adds no data-plane
+  * hop and no new scaling ceiling — it is the groonga daemon's
+  * admin/query socket, not a shard router. A select whose match set fits
+  * the small-query cap is one Spark job (the block scan); its page is
+  * sorted, projected and formatted from the rows the job returned to the
+  * driver, with no further Dataset. Above the cap the match set, its
+  * count and its page are distributed DataFrame plans. Result pages are
+  * bounded by the command's offset/limit exactly like the reference
+  * (unbounded dumps refuse via the maxRows guard of
+  * `CommandFormat.ResultSet.of`).
   *
   * Errors return the reference error-envelope shape
   * `[[rc, start, elapsed, "message"], ...]` with HTTP 400 and
@@ -152,33 +164,33 @@ final class GraftHttpServer(
 
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
 
-    /** one result-set command: (df, nHits, positional drilldowns) */
-    def reply(df: DataFrame, nHits: Long,
-        drilldowns: Seq[(DataFrame, Long)] = Nil): Unit = {
+    /** one result-set command: (result set, nHits, positional drilldowns) */
+    def reply(rs: ResultSet, nHits: Long, drilldowns: Seq[(ResultSet, Long)] = Nil): Unit = {
       val body: Array[Byte] = outputType match {
         case "xml" =>
-          CommandFormat.xml(df, nHits,
+          CommandFormat.xml(rs, nHits,
             offset = args.get("offset").map(_.toInt).getOrElse(0),
             limit = args.get("limit").map(_.toInt).getOrElse(10),
             drilldowns = drilldowns).getBytes(UTF_8)
         case "msgpack" =>
-          CommandFormat.msgpack(CommandFormat.bodyTree(df, nHits),
+          CommandFormat.msgpack(CommandFormat.bodyTree(rs, nHits),
             drilldowns.map { case (dd, n) => CommandFormat.bodyTree(dd, n) },
             returnCode = 0, startSec = startSec, elapsedSec = elapsed)
         case "arrow" | "apache-arrow" =>
           // the reference streams the result set itself (header/drilldowns
           // travel as separate metadata streams); main result set here
-          graft.api.ArrowFormat.arrow(df, nHits)
+          graft.api.ArrowFormat.arrow(rs, nHits)
         case _ if version == 3 =>
-          CommandFormat.envelopeV3(CommandFormat.bodyV3(df, nHits),
+          CommandFormat.envelopeV3(CommandFormat.bodyV3(rs, nHits),
             startSec = startSec, elapsedSec = elapsed).getBytes(UTF_8)
         case _ =>
-          CommandFormat.envelope(CommandFormat.body(df, nHits),
+          CommandFormat.envelope(CommandFormat.body(rs, nHits),
             drilldowns = drilldowns.map { case (dd, n) => CommandFormat.body(dd, n) },
             startSec = startSec, elapsedSec = elapsed).getBytes(UTF_8)
       }
       send(ex, 200, contentTypeOf(outputType), body)
     }
+    def replyDf(df: DataFrame, nHits: Long): Unit = reply(ResultSet.of(df), nHits)
 
     def index(name: String): GraftIndex = Option(live.get(name)).getOrElse(
       throw new IllegalArgumentException(s"[table][select] unknown table: <$name>"))
@@ -210,20 +222,13 @@ final class GraftHttpServer(
             .getOrElse(Seq(("score", false), ("doc_id", true))),
           offset = args.get("offset").map(_.toInt).getOrElse(0),
           limit = args.get("limit").map(_.toInt).getOrElse(10))
+        // reference default output_columns: _id, _score (ints in TF mode)
+        val outCols = GraftHttpServer.outputColumns(spark,
+          args.getOrElse("output_columns", "_id, _score"))
         // one match set for nHits, the page and the drilldowns; evaluated
         // once under the small-query cap, re-run per action above it
         val matched = graft.operators.Select.matches(idx, req)
-        val (page, freeHits) = graft.operators.Select.page(matched, req)
-        val nHits = freeHits.getOrElse(matched.count())
-        // reference default output_columns: _id, _score (ints in TF mode)
-        val outCols = args.getOrElse("output_columns", "_id, _score")
-          .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val renamed = outCols.map {
-          case "_id" => col("doc_id").as("_id")
-          case "_score" => col("score").cast("long").as("_score")
-          case other => throw new IllegalArgumentException(
-            s"[select] unsupported output column: <$other>")
-        }
+        val (page, nHits) = GraftHttpServer.selectPage(spark, matched, req, outCols)
         val dds = args.get("drilldown").toSeq.flatMap { dcol =>
           val src = tables.getOrElse(table, throw new IllegalArgumentException(
             s"[select][drilldown] no source table registered for <$table>"))
@@ -232,9 +237,9 @@ final class GraftHttpServer(
             .groupBy(col(dcol).as("_key"))
             .agg(count(lit(1)).as("_nsubrecs"))
             .orderBy(desc("_nsubrecs"), asc("_key"))
-          Seq((grouped.limit(10), grouped.count()))
+          Seq((ResultSet.of(grouped.limit(10)), grouped.count()))
         }
-        reply(page.select(renamed: _*), nHits, dds)
+        reply(page, nHits, dds)
         selectMs.add((System.nanoTime() - t0) / 1e6)
 
       case "load" =>
@@ -266,26 +271,26 @@ final class GraftHttpServer(
         import spark.implicits._
         val df = indexes.keys.toSeq.sorted.zipWithIndex
           .map { case (n, i) => (i.toLong + 256L, n) }.toDF("id", "name")
-        reply(df, df.count())
+        replyDf(df, df.count())
 
       case "column_list" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[column_list] table is missing"))
         val df = Introspect.columnList(index(table), "postings").orderBy("id")
-        reply(df, df.count())
+        replyDf(df, df.count())
 
       case "schema" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[schema] table is missing"))
         val df = Introspect.schemaCmd(index(table)).orderBy("section", "name")
-        reply(df, df.count())
+        replyDf(df, df.count())
 
       case "object_inspect" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[object_inspect] table is missing"))
         val df = Introspect.objectInspect(index(table),
           args.getOrElse("name", "postings"))
-        reply(df, df.count())
+        replyDf(df, df.count())
 
       case "tokenize" =>
         val tokenizer = args.getOrElse("tokenizer", "TokenBigram")
@@ -299,7 +304,7 @@ final class GraftHttpServer(
           .map(t => (t.term, t.pos,
             (t.status & graft.analyzer.TokenStatus.ForcePrefix) != 0))
           .toSeq.toDF("value", "position", "force_prefix")
-        reply(toks, toks.count())
+        replyDf(toks, toks.count())
 
       case "normalize" =>
         val normalizer = args.getOrElse("normalizer", "NormalizerAuto")
@@ -308,7 +313,7 @@ final class GraftHttpServer(
         import spark.implicits._
         val df = Seq(graft.analyzer.Normalizer.byName(normalizer)(string))
           .toDF("normalized")
-        reply(df, 1L)
+        replyDf(df, 1L)
 
       case other =>
         throw new IllegalArgumentException(s"invalid command name: <$other>")
@@ -319,6 +324,43 @@ final class GraftHttpServer(
 }
 
 object GraftHttpServer {
+  /** `output_columns` as expressions over the match set's columns by name:
+    * `_id` is `doc_id`, `_score` is `score` cast to a long under the
+    * session's eval mode (ANSI by default), as `col(...).cast("long")`
+    * would be */
+  private[graft] def outputColumns(spark: SparkSession, spec: String): Seq[NamedExpression] = {
+    val conf = spark.sessionState.conf
+    spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map {
+      case "_id" => Alias(UnresolvedAttribute.quoted("doc_id"), "_id")()
+      case "_score" => Alias(Cast(UnresolvedAttribute.quoted("score"), LongType,
+        Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf)), "_score")()
+      case other => throw new IllegalArgumentException(
+        s"[select] unsupported output column: <$other>")
+    }
+  }
+
+  /** the select's page, projected to `outCols`, and nHits. A page of
+    * driver rows is projected row by row, by the expressions bound to its
+    * attributes and evaluated interpretively: no Dataset is built, and the
+    * select posts no SQL execution. Any other page is a plan, projected and
+    * collected by Spark, and nHits is a count of `matched`. */
+  private[graft] def selectPage(spark: SparkSession, matched: DataFrame,
+      req: graft.operators.Select.Request, outCols: Seq[NamedExpression]): (ResultSet, Long) =
+    graft.operators.Select.pageRows(matched, req) match {
+      case Right(p) =>
+        val exprs = outCols.map(_.transformUp { case u: UnresolvedAttribute =>
+          p.output.find(_.name == u.name).getOrElse(throw new IllegalArgumentException(
+            s"[select] no column ${u.name} in ${p.output.map(_.name).mkString(", ")}"))
+        }.asInstanceOf[NamedExpression])
+        val schema = StructType(exprs.map(e => StructField(e.name, e.dataType, e.nullable)))
+        val bound = exprs.map(BindReferences.bindReference(_, p.output))
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        val rows = p.rows.map(r => toRow(InternalRow.fromSeq(bound.map(_.eval(r)))).asInstanceOf[Row])
+        (ResultSet(schema, rows), p.nHits)
+      case Left(page) =>
+        (ResultSet.of(page.select(outCols.map(GraftColumnBridge.column): _*)), matched.count())
+    }
+
   /** how many of the latest selects `status` reports `select_ms` over */
   private final val SelectRing = 1024
 

@@ -123,17 +123,26 @@ class HttpApiSpec extends AnyFunSuite {
   test("a driver-path select is one Spark job, cold or warm, for every plain-term shape") {
     withCap(defaultCap) {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
+        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+          e match {
+            case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+              sqlExecutions.incrementAndGet()
+            case _ =>
+          }
       }
-      def jobsOf(server: GraftHttpServer, pathAndQuery: String): Int = {
+      /** (Spark jobs, SQL executions) the GET posts */
+      def jobsOf(server: GraftHttpServer, pathAndQuery: String): (Int, Int) = {
         org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         jobs.set(0)
+        sqlExecutions.set(0)
         val r = getFrom(server, pathAndQuery)
         assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
         org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-        jobs.get()
+        (jobs.get(), sqlExecutions.get())
       }
       val clean = freshDir()
       graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", clean,
@@ -154,11 +163,92 @@ class HttpApiSpec extends AnyFunSuite {
             // pays the handle's one-time jobs (parquet schemas, tombstones)
             jobsOf(server, "/d/select?table=docs&query=window&limit=10")
             val path = s"/d/select?table=docs&query=$q&limit=10"
-            assert(jobsOf(server, path) == 1, s"cold terms, $q on $dir: the block scan")
-            assert(jobsOf(server, path) == 1, s"warm terms, $q on $dir: the block scan")
+            // the block scan, and no Dataset action: the page is formatted
+            // from the rows the scan returned
+            assert(jobsOf(server, path) == ((1, 0)), s"cold terms, $q on $dir")
+            assert(jobsOf(server, path) == ((1, 0)), s"warm terms, $q on $dir")
           } finally server.stop()
         }
       } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a select's bytes are the same on the driver path and the distributed path") {
+    import spark.implicits._
+    val corpus = graft.corpus.WebCorpus.generate(spark, 600, 4)
+    def build(dir: String) = graft.index.IndexBuilder.build(spark, corpus, "doc_id", "text",
+      dir, graft.index.IndexConfig(bucketBits = 6))
+    val clean = freshDir()
+    build(clean)
+    // deletes, a resurrected id and replaced docs: two data segments and
+    // two tombstone segments
+    val tombstoned = freshDir()
+    build(tombstoned)
+    graft.streaming.IncrementalIndex.delete(spark, tombstoned, Seq(3L, 77L, 500L, 540L))
+    graft.streaming.IncrementalIndex.upsert(spark, tombstoned,
+      Seq(77L -> "spark fulltext qqresurrected", 120L -> "spark crawl",
+        590L -> "index crawl spark").toDF("doc_id", "text"),
+      "doc_id", "text", "ups-1")
+    val queries = Seq(
+      "spark fulltext" -> "tf", // AND
+      "spark OR crawl OR index" -> "bm25", // OR
+      "\"spark fulltext search engine\"" -> "tf", // phrase
+      "spark zzznosuchterm" -> "tf", // empty
+      "spark OR \"fulltext search\"" -> "bm25") // mixed OR: a plan on both paths
+    val sortKeys = Seq("-_score, +_id", "_id", "-_id")
+    /** (offset, limit): a page, a middle page, past the end, empty, unbounded */
+    val pages = Seq((0, 10), (3, 5), (100000, 10), (0, 0), (2, -1))
+    val outputs = Seq("json" -> 1, "json" -> 3, "xml" -> 1, "msgpack" -> 1, "apache-arrow" -> 1)
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val paths = for {
+      (q, score) <- queries
+      sk <- sortKeys
+      (off, lim) <- pages
+      (ty, version) <- outputs
+    } yield s"/d/select.$ty?table=docs&query=${enc(q)}&score=$score&sort_keys=${enc(sk)}" +
+      s"&offset=$off&limit=$lim&command_version=$version"
+    val errors = for {
+      (ty, version) <- outputs
+      bad <- Seq("sort_keys=nosuchcol", "output_columns=_id,title")
+    } yield s"/d/select.$ty?table=docs&query=spark&$bad&command_version=$version"
+    /** the v1 header's start and elapsed: JSON text, or two msgpack float64s */
+    def masked(b: Array[Byte]): Seq[Byte] = {
+      val text = new String(b, "UTF-8")
+      if (b.length > 21 && (b(0) & 0xff) == 0x92 && (b(1) & 0xff) == 0x93 &&
+          (b(3) & 0xff) == 0xcb && (b(12) & 0xff) == 0xcb)
+        b.take(4).toSeq ++ b.drop(21)
+      else """^\[\[(-?\d+),[^,\]]+,[^,\]]+\]|"start_time":[^,]+,"elapsed_time":[^,}]+"""
+        .r.replaceAllIn(text, "MASKED").getBytes("UTF-8").toSeq
+    }
+    /** an error's message without the analyzed plan Spark appends to it,
+      * whose shape and expression ids differ from one path to the other */
+    def message(b: Array[Byte]): Seq[Byte] =
+      """\[UNRESOLVED_COLUMN[^;]*|\[select\] unsupported output column: <[^>]*>""".r
+        .findFirstIn(new String(b, "UTF-8")).getOrElse("no error message").getBytes("UTF-8").toSeq
+    /** (status, content type, masked body) of every path, then of every error */
+    def replies(dir: String, cap: String): Seq[(Int, String, Seq[Byte])] = withCap(cap) {
+      val server = new GraftHttpServer(spark,
+        Map("docs" -> graft.index.GraftIndex(spark, dir))).start()
+      def reply(p: String, body: Array[Byte] => Seq[Byte]) = {
+        val r = getFrom(server, p)
+        (r.statusCode(), r.headers().firstValue("Content-Type").get(), body(r.body()))
+      }
+      try paths.map(reply(_, masked)) ++ errors.map(reply(_, message))
+      finally server.stop()
+    }
+    for (dir <- Seq(clean, tombstoned)) {
+      val distributed = replies(dir, "0")
+      val statuses = distributed.map(_._1)
+      assert(statuses.take(paths.size).forall(_ == 200) && statuses.drop(paths.size).forall(_ == 400))
+      val texts = distributed.map(r => new String(r._3.toArray, "UTF-8"))
+      val v1 = texts.filter(_.startsWith("MASKED,"))
+      assert(v1.exists(_.contains("[[0],")) && v1.exists(_.matches(""".*\[\[\d\d+\],.*""")))
+      assert(!texts.drop(paths.size).contains("no error message"))
+      val driver = replies(dir, defaultCap)
+      (paths ++ errors).zip(distributed.zip(driver)).foreach { case (p, (d, f)) =>
+        assert(f == d, s"$p on $dir:\n${new String(f._3.toArray, "UTF-8")}\n" +
+          s"vs\n${new String(d._3.toArray, "UTF-8")}")
+      }
     }
   }
 
