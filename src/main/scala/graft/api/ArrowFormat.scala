@@ -37,7 +37,8 @@ object ArrowFormat {
     case _ => ArrowType.Utf8.INSTANCE // strings + anything else via text
   }
 
-  def arrow(df: DataFrame, nHits: Long, maxRows: Int = 10000): Array[Byte] =
+  def arrow(df: DataFrame, nHits: Long,
+      maxRows: Int = CommandFormat.ResultSet.MaxRows): Array[Byte] =
     arrow(CommandFormat.ResultSet.of(df, maxRows), nHits)
 
   def arrow(rs: CommandFormat.ResultSet, nHits: Long): Array[Byte] = {

@@ -15,21 +15,28 @@ import org.apache.spark.sql.types._
   * The engine half (this object) renders result sets into bodies and
   * wraps them; the HTTP layer the reference carries around this is out of
   * scope (SURVEY §2.1 output formats row). Every formatter takes a
-  * [[ResultSet]]: a schema and rows already on the driver — a select body
-  * is bounded by the command's offset/limit by construction. Each also
-  * takes a DataFrame, collected by [[ResultSet.of]], whose `maxRows` guards
-  * against formatting an unlimited result by mistake. */
+  * [[ResultSet]]: a schema and rows already on the driver. A result set
+  * holds at most [[ResultSet.MaxRows]] rows, so an unlimited result is
+  * refused however it was made, and a select body is bounded by the
+  * command's offset/limit. A DataFrame becomes one by [[ResultSet.of]];
+  * the DataFrame overloads of the formatters only call it. */
 object CommandFormat {
 
   /** One result set to format: its schema and its rows, in order. */
-  final case class ResultSet(schema: StructType, rows: Seq[Row])
+  final case class ResultSet(schema: StructType, rows: Seq[Row]) {
+    require(rows.length <= ResultSet.MaxRows, ResultSet.exceeds(ResultSet.MaxRows))
+  }
 
   object ResultSet {
+    final val MaxRows = 10000
+
+    private def exceeds(maxRows: Int): String =
+      s"result exceeds maxRows=$maxRows — apply the command's limit before formatting"
+
     /** `df`'s rows, collected, refusing a result of more than `maxRows` */
-    def of(df: DataFrame, maxRows: Int = 10000): ResultSet = {
+    def of(df: DataFrame, maxRows: Int = MaxRows): ResultSet = {
       val rows = df.take(maxRows + 1)
-      require(rows.length <= maxRows,
-        s"result exceeds maxRows=$maxRows — apply the command's limit before formatting")
+      require(rows.length <= maxRows, exceeds(maxRows))
       ResultSet(df.schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
     }
   }
@@ -99,7 +106,7 @@ object CommandFormat {
     (Seq(s"[$nHits]", cols) ++ rowsJson).mkString("[", ",", "]")
   }
 
-  def body(df: DataFrame, nHits: Long, maxRows: Int = 10000): String =
+  def body(df: DataFrame, nHits: Long, maxRows: Int = ResultSet.MaxRows): String =
     body(ResultSet.of(df, maxRows), nHits)
 
   /** full envelope; drilldowns render positionally, labeled drilldowns as
@@ -131,8 +138,7 @@ object CommandFormat {
     s"""{"n_hits":$nHits,"columns":$cols,"records":$recs}"""
   }
 
-  def bodyV3(df: DataFrame, nHits: Long, maxRows: Int = 10000): String =
-    bodyV3(ResultSet.of(df, maxRows), nHits)
+  def bodyV3(df: DataFrame, nHits: Long): String = bodyV3(ResultSet.of(df), nHits)
 
   // ---- XML output (output_type=xml). The reference produces it by
   // transforming the JSON-ish intermediate through transform_xml
@@ -232,10 +238,10 @@ object CommandFormat {
     sb.toString
   }
 
-  def xml(df: DataFrame, nHits: Long, offset: Int = 0, limit: Int = 10,
-      drilldowns: Seq[(DataFrame, Long)] = Nil, maxRows: Int = 10000): String =
-    xml(ResultSet.of(df, maxRows), nHits, offset, limit,
-      drilldowns.map { case (dd, n) => (ResultSet.of(dd, maxRows), n) })
+  def xml(df: DataFrame, nHits: Long, offset: Int, limit: Int,
+      drilldowns: Seq[(DataFrame, Long)] = Nil): String =
+    xml(ResultSet.of(df), nHits, offset, limit,
+      drilldowns.map { case (dd, n) => (ResultSet.of(dd), n) })
 
   // ---- msgpack output (output_type=msgpack). The reference packs the SAME
   // v1 envelope tree through the MessagePack packers (lib/msgpack.c wiring,
@@ -251,7 +257,7 @@ object CommandFormat {
     Vector(Vector(nHits): Any, cols) ++ rs.rows.map(r => r: Any)
   }
 
-  def bodyTree(df: DataFrame, nHits: Long, maxRows: Int = 10000): Vector[Any] =
+  def bodyTree(df: DataFrame, nHits: Long, maxRows: Int = ResultSet.MaxRows): Vector[Any] =
     bodyTree(ResultSet.of(df, maxRows), nHits)
 
   /** full v1 envelope as msgpack bytes; positional drilldowns append as

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending,
   InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -340,9 +341,7 @@ object Select {
     val resolver = matched.sparkSession.sessionState.conf.resolver
     val sorted = local.flatMap { rel =>
       val order = req.sortKeys.map { case (c, asc) =>
-        rel.resolveQuoted(c, resolver).collect { case a: Attribute =>
-          SortOrder(a, if (asc) Ascending else Descending)
-        }
+        resolveColumn(rel.output, c, resolver).map(SortOrder(_, if (asc) Ascending else Descending))
       }
       if (order.forall(_.isDefined)) Some((rel, order.flatten)) else None
     }
@@ -360,6 +359,12 @@ object Select {
         Left(out)
     }
   }
+
+  /** the attribute of `output` that the column name `name` resolves to
+    * with `resolver`, as the analyzer would resolve it over those columns */
+  private[graft] def resolveColumn(output: Seq[Attribute], name: String,
+      resolver: Resolver): Option[Attribute] =
+    LocalRelation(output).resolveQuoted(name, resolver).collect { case a: Attribute => a }
 
   /** drilldown over a match result joined with its source table */
   def drilldown(matched: DataFrame, source: DataFrame, keys: Seq[String],

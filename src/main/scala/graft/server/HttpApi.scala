@@ -37,8 +37,8 @@ import graft.index.GraftIndex
   * driver, with no further Dataset. Above the cap the match set, its
   * count and its page are distributed DataFrame plans. Result pages are
   * bounded by the command's offset/limit exactly like the reference
-  * (unbounded dumps refuse via the maxRows guard of
-  * `CommandFormat.ResultSet.of`).
+  * (an unbounded dump is refused on either path: a
+  * `CommandFormat.ResultSet` holds at most `MaxRows` rows).
   *
   * Errors return the reference error-envelope shape
   * `[[rc, start, elapsed, "message"], ...]` with HTTP 400 and
@@ -164,17 +164,19 @@ final class GraftHttpServer(
 
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
 
-    /** one result-set command: (result set, nHits, positional drilldowns) */
-    def reply(rs: ResultSet, nHits: Long, drilldowns: Seq[(ResultSet, Long)] = Nil): Unit = {
+    /** one result-set command: (result set, nHits, positional drilldowns);
+      * the drilldowns are collected only by the output types that carry them */
+    def reply(rs: ResultSet, nHits: Long, drilldowns: Seq[(DataFrame, Long)] = Nil): Unit = {
+      lazy val dds = drilldowns.map { case (dd, n) => (ResultSet.of(dd), n) }
       val body: Array[Byte] = outputType match {
         case "xml" =>
           CommandFormat.xml(rs, nHits,
             offset = args.get("offset").map(_.toInt).getOrElse(0),
             limit = args.get("limit").map(_.toInt).getOrElse(10),
-            drilldowns = drilldowns).getBytes(UTF_8)
+            drilldowns = dds).getBytes(UTF_8)
         case "msgpack" =>
           CommandFormat.msgpack(CommandFormat.bodyTree(rs, nHits),
-            drilldowns.map { case (dd, n) => CommandFormat.bodyTree(dd, n) },
+            dds.map { case (dd, n) => CommandFormat.bodyTree(dd, n) },
             returnCode = 0, startSec = startSec, elapsedSec = elapsed)
         case "arrow" | "apache-arrow" =>
           // the reference streams the result set itself (header/drilldowns
@@ -185,12 +187,11 @@ final class GraftHttpServer(
             startSec = startSec, elapsedSec = elapsed).getBytes(UTF_8)
         case _ =>
           CommandFormat.envelope(CommandFormat.body(rs, nHits),
-            drilldowns = drilldowns.map { case (dd, n) => CommandFormat.body(dd, n) },
+            drilldowns = dds.map { case (dd, n) => CommandFormat.body(dd, n) },
             startSec = startSec, elapsedSec = elapsed).getBytes(UTF_8)
       }
       send(ex, 200, contentTypeOf(outputType), body)
     }
-    def replyDf(df: DataFrame, nHits: Long): Unit = reply(ResultSet.of(df), nHits)
 
     def index(name: String): GraftIndex = Option(live.get(name)).getOrElse(
       throw new IllegalArgumentException(s"[table][select] unknown table: <$name>"))
@@ -237,7 +238,7 @@ final class GraftHttpServer(
             .groupBy(col(dcol).as("_key"))
             .agg(count(lit(1)).as("_nsubrecs"))
             .orderBy(desc("_nsubrecs"), asc("_key"))
-          Seq((ResultSet.of(grouped.limit(10)), grouped.count()))
+          Seq((grouped.limit(10), grouped.count()))
         }
         reply(page, nHits, dds)
         selectMs.add((System.nanoTime() - t0) / 1e6)
@@ -271,26 +272,26 @@ final class GraftHttpServer(
         import spark.implicits._
         val df = indexes.keys.toSeq.sorted.zipWithIndex
           .map { case (n, i) => (i.toLong + 256L, n) }.toDF("id", "name")
-        replyDf(df, df.count())
+        reply(ResultSet.of(df), df.count())
 
       case "column_list" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[column_list] table is missing"))
         val df = Introspect.columnList(index(table), "postings").orderBy("id")
-        replyDf(df, df.count())
+        reply(ResultSet.of(df), df.count())
 
       case "schema" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[schema] table is missing"))
         val df = Introspect.schemaCmd(index(table)).orderBy("section", "name")
-        replyDf(df, df.count())
+        reply(ResultSet.of(df), df.count())
 
       case "object_inspect" =>
         val table = args.getOrElse("table",
           throw new IllegalArgumentException("[object_inspect] table is missing"))
         val df = Introspect.objectInspect(index(table),
           args.getOrElse("name", "postings"))
-        replyDf(df, df.count())
+        reply(ResultSet.of(df), df.count())
 
       case "tokenize" =>
         val tokenizer = args.getOrElse("tokenizer", "TokenBigram")
@@ -304,7 +305,7 @@ final class GraftHttpServer(
           .map(t => (t.term, t.pos,
             (t.status & graft.analyzer.TokenStatus.ForcePrefix) != 0))
           .toSeq.toDF("value", "position", "force_prefix")
-        replyDf(toks, toks.count())
+        reply(ResultSet.of(toks), toks.count())
 
       case "normalize" =>
         val normalizer = args.getOrElse("normalizer", "NormalizerAuto")
@@ -313,7 +314,7 @@ final class GraftHttpServer(
         import spark.implicits._
         val df = Seq(graft.analyzer.Normalizer.byName(normalizer)(string))
           .toDF("normalized")
-        replyDf(df, 1L)
+        reply(ResultSet.of(df), 1L)
 
       case other =>
         throw new IllegalArgumentException(s"invalid command name: <$other>")
@@ -348,9 +349,11 @@ object GraftHttpServer {
       req: graft.operators.Select.Request, outCols: Seq[NamedExpression]): (ResultSet, Long) =
     graft.operators.Select.pageRows(matched, req) match {
       case Right(p) =>
+        val resolver = spark.sessionState.conf.resolver
         val exprs = outCols.map(_.transformUp { case u: UnresolvedAttribute =>
-          p.output.find(_.name == u.name).getOrElse(throw new IllegalArgumentException(
-            s"[select] no column ${u.name} in ${p.output.map(_.name).mkString(", ")}"))
+          graft.operators.Select.resolveColumn(p.output, u.name, resolver).getOrElse(
+            throw new IllegalArgumentException(s"[select] no column ${u.name} in " +
+              p.output.map(_.name).mkString(", ")))
         }.asInstanceOf[NamedExpression])
         val schema = StructType(exprs.map(e => StructField(e.name, e.dataType, e.nullable)))
         val bound = exprs.map(BindReferences.bindReference(_, p.output))

@@ -200,13 +200,22 @@ class HttpApiSpec extends AnyFunSuite {
     val pages = Seq((0, 10), (3, 5), (100000, 10), (0, 0), (2, -1))
     val outputs = Seq("json" -> 1, "json" -> 3, "xml" -> 1, "msgpack" -> 1, "apache-arrow" -> 1)
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    val paths = for {
+    def select(ty: String, version: Int, q: String, score: String, sk: String,
+        off: Int, lim: Int) =
+      s"/d/select.$ty?table=docs&query=${enc(q)}&score=$score&sort_keys=${enc(sk)}" +
+        s"&offset=$off&limit=$lim&command_version=$version"
+    // once it holds a result set, a formatter is the same code on both
+    // paths: every query, sort key and page goes through JSON v1, and each
+    // other output type through a middle and an unbounded page of each query
+    val paths = (for {
       (q, score) <- queries
       sk <- sortKeys
       (off, lim) <- pages
-      (ty, version) <- outputs
-    } yield s"/d/select.$ty?table=docs&query=${enc(q)}&score=$score&sort_keys=${enc(sk)}" +
-      s"&offset=$off&limit=$lim&command_version=$version"
+    } yield select("json", 1, q, score, sk, off, lim)) ++ (for {
+      (ty, version) <- outputs.tail
+      (q, score) <- queries
+      (off, lim) <- Seq(pages(1), pages(4))
+    } yield select(ty, version, q, score, sortKeys.head, off, lim))
     val errors = for {
       (ty, version) <- outputs
       bad <- Seq("sort_keys=nosuchcol", "output_columns=_id,title")
@@ -250,6 +259,40 @@ class HttpApiSpec extends AnyFunSuite {
           s"vs\n${new String(d._3.toArray, "UTF-8")}")
       }
     }
+  }
+
+  test("a page over maxRows is refused with the same error on both paths") {
+    import spark.implicits._
+    val maxRows = graft.api.CommandFormat.ResultSet.MaxRows
+    val dir = freshDir()
+    graft.index.IndexBuilder.build(spark,
+      (1L to maxRows + 1L).map(_ -> "spark").toDF("doc_id", "text"), "doc_id", "text", dir,
+      graft.index.IndexConfig(tokenizer = "TokenBigram"))
+    // a handle of its own for each cap: one that has run a term under the
+    // cap keeps its rows
+    def isDriverPage(cap: String): Boolean = withCap(cap) {
+      val req = graft.operators.Select.Request("spark", limit = -1)
+      val matched = graft.operators.Select.matches(graft.index.GraftIndex(spark, dir), req)
+      graft.operators.Select.pageRows(matched, req).isRight
+    }
+    assert(isDriverPage(defaultCap) && !isDriverPage("0"))
+    /** pages of maxRows + 1, of maxRows + 1 under a larger limit, and of maxRows */
+    val pages = Seq("limit=-1", s"limit=${maxRows * 5}", "offset=1&limit=-1")
+    /** (status, body with the start and elapsed of a success masked) */
+    def replies(cap: String): Seq[(Int, String)] = withCap(cap) {
+      val server = new GraftHttpServer(spark,
+        Map("docs" -> graft.index.GraftIndex(spark, dir))).start()
+      try pages.map { p =>
+        val r = getFrom(server, s"/d/select?table=docs&query=spark&sort_keys=_id&$p")
+        val body = new String(r.body(), "UTF-8")
+        (r.statusCode(), """^\[\[0,[^\]]*\]""".r.replaceFirstIn(body, "[[0]"))
+      } finally server.stop()
+    }
+    val distributed = replies("0")
+    assert(distributed.map(_._1) == Seq(400, 400, 200))
+    assert(distributed.head._2 == s"[[-22,0.0,0.0,\"requirement failed: result exceeds " +
+      s"maxRows=$maxRows — apply the command's limit before formatting\"]]")
+    assert(replies(defaultCap) == distributed)
   }
 
   test("status, tokenize, normalize, schema answer") {
