@@ -180,25 +180,24 @@ final case class GraftIndex(spark: SparkSession, path: String,
   }
 
   /** the term-IN-pruned posting block scan: parquet row-group stats prune
-    * everything but the terms' blocks. Every kernel read, driver or
-    * distributed, plans this scan. */
+    * everything but the terms' blocks. The distributed kernel plans this
+    * scan; the driver's collect reads the same rows ([[collectBlocks]]). */
   private[graft] def blockRows(terms: Seq[String]): DataFrame =
     postings.where($"term".isin(terms: _*))
 
   private def blockScan(terms: Seq[String]): Dataset[PostingBlockRow] =
     blockRows(terms).as[PostingBlockRow](GraftIndex.blockEncoder)
 
-  /** the block encoder resolved and bound to the postings' columns, once
-    * per handle: a term filter keeps the scan's output, so it decodes
-    * every [[blockRows]] row */
-  @transient private lazy val blockDecoder: ExpressionEncoder[PostingBlockRow] =
-    GraftIndex.blockEncoder.resolveAndBind(postings.queryExecution.analyzed.output)
+  /** the handle's block reader, made on its first collect */
+  @transient private lazy val postingsReader: PostingsReader =
+    PostingsReader(spark, postings, segDirs, sectioned = meta.sections.nonEmpty)
 
-  /** the blocks of `terms`' pruned scan, in one job that ships at most
-    * `cap` postings ([[GraftIndex.collectWithin]]); a scan already counted
-    * to fit passes Long.MaxValue */
-  private def collectBlocks(terms: Seq[String], cap: Long): Option[Array[PostingBlockRow]] =
-    GraftIndex.collectWithin(blockRows(terms).queryExecution.toRdd, blockDecoder, cap)
+  /** the blocks of `terms` ([[blockRows]]' rows), in one job that ships at
+    * most `cap` postings ([[GraftIndex.collectWithin]]) and plans no scan
+    * ([[PostingsReader]]); a scan already counted to fit passes
+    * Long.MaxValue */
+  private[graft] def collectBlocks(terms: Seq[String], cap: Long): Option[Array[PostingBlockRow]] =
+    postingsReader.collect(terms, cap)
 
   /** Resolve the cold terms among `ts` into termStatCache. Returns the
     * live blocks of all of `ts` when it collected them on the way.
@@ -712,18 +711,18 @@ object GraftIndex {
     GraftColumnBridge.ofRows(spark, LocalRelation(output, rows))
   }
 
-  /** ONE bounded collect of `scan`, rows of the postings table that
-    * `decoder` (the block encoder, bound to them) decodes: each of its P
-    * tasks returns its blocks when their Σcnt fits cap / P, and otherwise
-    * stops reading at the first block past that share and returns nothing.
-    * So what the job ships to the driver, summed over its tasks, never
-    * passes `cap` postings, however many partitions the scan has.
-    * Some(every block, in scan order) when every task fit its share. */
-  private[graft] def collectWithin(scan: RDD[InternalRow],
-      decoder: ExpressionEncoder[PostingBlockRow], cap: Long): Option[Array[PostingBlockRow]] = {
-    val n = scan.getNumPartitions
-    val parts = scan.sparkContext.runJob(scan,
-      new HoldWithin(decoder, cap / math.max(1, n)), 0 until n)
+  /** ONE bounded collect of the blocks that `read` gives for the items of
+    * `splits`: each of its P tasks returns its blocks when their Σcnt fits
+    * cap / P, and otherwise stops reading at the first block past that
+    * share and returns nothing. So what the job ships to the driver, summed
+    * over its tasks, never passes `cap` postings, however many partitions
+    * `splits` has. Some(every block, in partition order) when every task
+    * fit its share. */
+  private[graft] def collectWithin[T](splits: RDD[T],
+      read: Iterator[T] => Iterator[PostingBlockRow], cap: Long): Option[Array[PostingBlockRow]] = {
+    val n = splits.getNumPartitions
+    val parts = splits.sparkContext.runJob(splits,
+      new HoldWithin(read, cap / math.max(1, n)), 0 until n)
     if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
   }
 
@@ -735,14 +734,14 @@ object GraftIndex {
     * a closure. For the same reason collectWithin calls the runJob that
     * takes (TaskContext, Iterator) and the partitions: the one that takes
     * a bare Iterator wraps it in a closure of its own. */
-  private final class HoldWithin(decoder: ExpressionEncoder[PostingBlockRow], share: Long)
-      extends ((TaskContext, Iterator[InternalRow]) => Option[Array[PostingBlockRow]])
+  private final class HoldWithin[T](read: Iterator[T] => Iterator[PostingBlockRow], share: Long)
+      extends ((TaskContext, Iterator[T]) => Option[Array[PostingBlockRow]])
       with Serializable {
-    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Array[PostingBlockRow]] = {
-      val decode = decoder.createDeserializer()
+    def apply(ctx: TaskContext, splits: Iterator[T]): Option[Array[PostingBlockRow]] = {
+      val blocks = read(splits)
       val held = scala.collection.mutable.ArrayBuffer.empty[PostingBlockRow]
       var n = 0L
-      while (n <= share && rows.hasNext) { val b = decode(rows.next()); held += b; n += b.cnt }
+      while (n <= share && blocks.hasNext) { val b = blocks.next(); held += b; n += b.cnt }
       if (n <= share) Some(held.toArray) else None
     }
   }

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-dir stats from [[SegmentWriter.measure]]: one SegStats per dir, in
   * the order asked, plus the Σdl behind avgdl and the block count the
@@ -51,21 +52,31 @@ object SegmentWriter {
     "terms_rev" -> "rterm STRING, term STRING, df BIGINT",
     "docs" -> "doc_id BIGINT, dl INT")
 
+  /** the read schema of `table` */
+  private[graft] def schema(table: String): StructType = StructType.fromDDL(Schemas(table))
+
   /** `table` of the segment dirs `segs`, given as (dir, ordinal), in ONE
     * parquet scan with the table's given schema: no schema-inference job,
     * and one set of splits over every segment. Each row gets its segment's
-    * ordinal as `seg_ord`, found from the file it was read from. The keys
-    * are raw URI paths on both sides: `_metadata.file_path` spells a local
-    * dir `file:/..`, a qualified Path `file:///..`, and both keep `%20`.
-    * Plain string ops cost per row about a third of a regexp; a single
-    * segment needs no lookup at all. */
+    * ordinal as `seg_ord`, found from the file it was read from
+    * ([[segOrdOf]]); a single segment needs no lookup at all. */
   def read(spark: SparkSession, segs: Seq[(String, Int)], table: String): DataFrame = {
     val scan = spark.read.schema(Schemas(table)).parquet(segs.map(s => s"${s._1}/$table"): _*)
     if (segs.size == 1) return scan.withColumn("seg_ord", lit(segs.head._2))
+    scan.withColumn("seg_ord", udf(segOrdOf(spark, segs)).apply(col("_metadata.file_path")))
+  }
+
+  /** The rule that maps a data file of the segment dirs `segs` ((dir,
+    * ordinal)) to its segment's ordinal, given the file as a raw URI path
+    * (`_metadata.file_path`, or a `PartitionedFile`'s `urlEncodedPath`).
+    * The keys are raw URI paths on both sides: such a path spells a local
+    * dir `file:/..`, a qualified Path `file:///..`, and both keep `%20`.
+    * Plain string ops cost per file about a third of a regexp. */
+  private[graft] def segOrdOf(spark: SparkSession, segs: Seq[(String, Int)]): String => Int = {
     val ords: Map[String, Int] = segs.map { case (d, o) =>
       SegmentCatalog.fileSystem(spark, d).makeQualified(new Path(d)).toUri.getRawPath -> o
     }.toMap
-    val segOrd = udf { (file: String) =>
+    file => {
       // <scheme>:[//<authority>]<seg dir>/<table>/<part file>
       val end = file.lastIndexOf('/', file.lastIndexOf('/') - 1)
       val c = file.indexOf(':')
@@ -74,7 +85,6 @@ object SegmentWriter {
       ords.getOrElse(file.substring(s, end),
         throw new IllegalStateException(s"$file is in none of the segments read"))
     }
-    scan.withColumn("seg_ord", segOrd(col("_metadata.file_path")))
   }
 
   /** Write the segment at `dir`. `runs` and `docs` are lazy plans: a stage

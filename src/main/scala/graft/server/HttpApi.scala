@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Cast, EvalMode,
@@ -85,7 +85,7 @@ final class GraftHttpServer(
     override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit =
       try respond(ex) catch {
         case t: Throwable => // handler must never leak an exception
-          try sendError(ex, "json", 1, t.getMessage) catch { case _: Throwable => () }
+          try sendError(ex, "json", 1, t) catch { case _: Throwable => () }
       } finally ex.close()
   })
 
@@ -120,9 +120,15 @@ final class GraftHttpServer(
     case _ => "application/json"
   }
 
+  /** the error envelope of `error`, with HTTP 400. Its message is one
+    * line, as groonga's are: an AnalysisException's message without the
+    * analyzed plan Spark appends to it. */
   private def sendError(ex: com.sun.net.httpserver.HttpExchange,
-      outputType: String, version: Int, message: String): Unit = {
-    val msg = Option(message).getOrElse("error")
+      outputType: String, version: Int, error: Throwable): Unit = {
+    val msg = Option(error match {
+      case e: AnalysisException => e.getSimpleMessage
+      case e => e.getMessage
+    }).getOrElse("error")
     val body: Array[Byte] = outputType match {
       case "msgpack" =>
         Msgpack.pack(Vector(Vector[Any](-22, 0.0, 0.0, msg)))
@@ -319,7 +325,7 @@ final class GraftHttpServer(
       case other =>
         throw new IllegalArgumentException(s"invalid command name: <$other>")
     } catch {
-      case e: Exception => sendError(ex, outputType, version, e.getMessage)
+      case e: Exception => sendError(ex, outputType, version, e)
     }
   }
 }

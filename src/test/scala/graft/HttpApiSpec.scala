@@ -144,6 +144,16 @@ class HttpApiSpec extends AnyFunSuite {
         org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         (jobs.get(), sqlExecutions.get())
       }
+      /** the broadcast ids the GET takes, between two of this spec's own */
+      def broadcastsOf(server: GraftHttpServer, pathAndQuery: String): Long = {
+        val before = spark.sparkContext.broadcast(0)
+        val r = getFrom(server, pathAndQuery)
+        val after = spark.sparkContext.broadcast(0)
+        before.destroy()
+        after.destroy()
+        assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+        after.id - before.id - 1
+      }
       val clean = freshDir()
       graft.index.IndexBuilder.build(spark, docs, "doc_id", "text", clean,
         graft.index.IndexConfig(tokenizer = "TokenBigram"))
@@ -167,6 +177,9 @@ class HttpApiSpec extends AnyFunSuite {
             // from the rows the scan returned
             assert(jobsOf(server, path) == ((1, 0)), s"cold terms, $q on $dir")
             assert(jobsOf(server, path) == ((1, 0)), s"warm terms, $q on $dir")
+            // and one broadcast, its stage's task binary: the block read
+            // shares the handle's Hadoop conf
+            assert(broadcastsOf(server, path) == 1L, s"warm terms, $q on $dir")
           } finally server.stop()
         }
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -229,11 +242,6 @@ class HttpApiSpec extends AnyFunSuite {
       else """^\[\[(-?\d+),[^,\]]+,[^,\]]+\]|"start_time":[^,]+,"elapsed_time":[^,}]+"""
         .r.replaceAllIn(text, "MASKED").getBytes("UTF-8").toSeq
     }
-    /** an error's message without the analyzed plan Spark appends to it,
-      * whose shape and expression ids differ from one path to the other */
-    def message(b: Array[Byte]): Seq[Byte] =
-      """\[UNRESOLVED_COLUMN[^;]*|\[select\] unsupported output column: <[^>]*>""".r
-        .findFirstIn(new String(b, "UTF-8")).getOrElse("no error message").getBytes("UTF-8").toSeq
     /** (status, content type, masked body) of every path, then of every error */
     def replies(dir: String, cap: String): Seq[(Int, String, Seq[Byte])] = withCap(cap) {
       val server = new GraftHttpServer(spark,
@@ -242,7 +250,7 @@ class HttpApiSpec extends AnyFunSuite {
         val r = getFrom(server, p)
         (r.statusCode(), r.headers().firstValue("Content-Type").get(), body(r.body()))
       }
-      try paths.map(reply(_, masked)) ++ errors.map(reply(_, message))
+      try paths.map(reply(_, masked)) ++ errors.map(reply(_, _.toSeq))
       finally server.stop()
     }
     for (dir <- Seq(clean, tombstoned)) {
@@ -252,12 +260,29 @@ class HttpApiSpec extends AnyFunSuite {
       val texts = distributed.map(r => new String(r._3.toArray, "UTF-8"))
       val v1 = texts.filter(_.startsWith("MASKED,"))
       assert(v1.exists(_.contains("[[0],")) && v1.exists(_.matches(""".*\[\[\d\d+\],.*""")))
-      assert(!texts.drop(paths.size).contains("no error message"))
+      // an error is the one-line message, without the analyzed plan Spark
+      // appends to an AnalysisException's (the kernel's on one path, a
+      // LocalRelation on the other)
+      assert(texts.drop(paths.size).forall(t => !t.contains("\n") && !t.contains("\\n") &&
+        (t.contains("[UNRESOLVED_COLUMN") || t.contains("unsupported output column"))))
       val driver = replies(dir, defaultCap)
       (paths ++ errors).zip(distributed.zip(driver)).foreach { case (p, (d, f)) =>
         assert(f == d, s"$p on $dir:\n${new String(f._3.toArray, "UTF-8")}\n" +
           s"vs\n${new String(d._3.toArray, "UTF-8")}")
       }
+    }
+  }
+
+  test("an unknown sort key gives the same error bytes on both paths") {
+    for (ty <- Seq("json", "msgpack"); version <- Seq(1, 3)) {
+      val path = s"/d/select.$ty?table=docs&query=spark&sort_keys=nosuchcol&command_version=$version"
+      val distributed = get(path)
+      val driver = withCap(defaultCap)(getFrom(fastSrv, path))
+      assert(distributed.statusCode() == 400 && driver.statusCode() == 400)
+      assert(driver.body().toSeq == distributed.body().toSeq, new String(driver.body(), "UTF-8"))
+      val text = new String(distributed.body(), "UTF-8")
+      assert(text.contains("[UNRESOLVED_COLUMN") && !text.contains("\n") && !text.contains("\\n"),
+        text)
     }
   }
 

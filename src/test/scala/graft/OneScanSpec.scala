@@ -197,15 +197,11 @@ class OneScanSpec extends AnyFunSuite {
     // blocks of 16 postings and 64 KB of payload; partition p holds `sizes(p)`
     def block(i: Int) = PostingBlockRow(s"t${i % 3}", i % 4, i, i * 16L, i * 16L + 15,
       16, 1, 1, 1, 16L, 65536, new Array[Byte](65536), 0)
-    // the blocks as the postings scan's rows, and the decoder bound to them
-    val enc = GraftIndex.blockEncoder
-    val decoder = enc.resolveAndBind()
+    // partition p's blocks, read as they are
     def scan(sizes: Seq[Int]) = spark.sparkContext.parallelize(
       sizes.indices.map(p => (0 until sizes(p)).map(k => block(sizes.take(p).sum + k))),
-      sizes.size).flatMap(identity).mapPartitions { bs =>
-        val toRow = enc.createSerializer()
-        bs.map(b => toRow(b).copy())
-      }
+      sizes.size).flatMap(identity)
+    val read = (bs: Iterator[PostingBlockRow]) => bs
     val shipped = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -214,7 +210,7 @@ class OneScanSpec extends AnyFunSuite {
     def run(sizes: Seq[Int], cap: Long): (Option[Seq[Int]], Long) = {
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       shipped.set(0L)
-      val r = GraftIndex.collectWithin(scan(sizes), decoder, cap)
+      val r = GraftIndex.collectWithin(scan(sizes), read, cap)
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       (r.map(_.map(_.blk).toSeq), shipped.get())
     }
